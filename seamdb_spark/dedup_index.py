@@ -43,6 +43,7 @@ from .operators.hashing import (
     md5_prefix_long,
     minhash_value,
 )
+from .session import local_frame
 from .snapshots import TableSnapshots
 
 # Target input bytes per written index-state file (see _derive_of): a
@@ -258,15 +259,12 @@ class _IncrementalTextIndex:
         return None if self.state.current_version() > 0 else []
 
     def _state_schema(self):
-        spark = self._spark
-        return self._derive(
-            spark.createDataFrame([], self._source_schema())
-        ).schema
+        return self._derive(local_frame(self._spark, [], self._source_schema())).schema
 
     def _derive_of(self, files: list[str]) -> DataFrame:
         spark = self._spark
         if not files:
-            return self._derive(spark.createDataFrame([], self._source_schema()))
+            return self._derive(local_frame(spark, [], self._source_schema()))
         in_bytes = 0
         for f in files:
             try:

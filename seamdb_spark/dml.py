@@ -31,6 +31,7 @@ from pyspark.sql import types as T
 
 from .catalog import Metastore
 from .errors import NullViolationError, TypeMismatchError, UniqueIndexError
+from .session import local_frame
 from .snapshots import TableSnapshots
 from .types import TableDescriptor, spark_type
 
@@ -152,7 +153,8 @@ def assign_serials(
     n = acc
     if n == 0:
         return df
-    odf = spark.createDataFrame(
+    odf = local_frame(
+        spark,
         offsets,
         T.StructType(
             [

@@ -16,6 +16,10 @@ Query lifecycle (≙ SURVEY.md §3.1):
     └─ query → dialect normalization (::casts, session functions,
        Postgres NULL ordering) → register current table snapshots as
        temp views → spark.sql  [Catalyst = DataFusion's role]
+
+Catalog and DML results (SHOW, DESCRIBE, information_schema, the
+``result``/``count`` rows) are JVM local relations (``local_frame``):
+collecting them runs no Spark job.
 """
 
 from __future__ import annotations
@@ -29,6 +33,7 @@ from . import sqlparse
 from .catalog import DEFAULT_SCHEMA, Metastore
 from .dml import execute_insert
 from .errors import DatabaseNotFoundError, InvalidArgumentError, TableNotFoundError
+from .session import local_frame
 from .snapshots import TableSnapshots
 
 _RESULT_SCHEMA = T.StructType([T.StructField("result", T.StringType(), False)])
@@ -148,10 +153,10 @@ class Engine:
                 raise DatabaseNotFoundError(f"database {db} not found")
 
     def _result(self, result: str) -> DataFrame:
-        return self.spark.createDataFrame([(result,)], _RESULT_SCHEMA)
+        return local_frame(self.spark, [(result,)], _RESULT_SCHEMA)
 
     def _count(self, n: int) -> DataFrame:
-        return self.spark.createDataFrame([(n,)], _COUNT_SCHEMA)
+        return local_frame(self.spark, [(n,)], _COUNT_SCHEMA)
 
     def _insert(self, stmt: str) -> DataFrame:
         parsed = sqlparse.parse_insert(stmt)
@@ -209,13 +214,14 @@ class Engine:
         low = s.lower()
         if re.match(r"show\s+tables\s*$", low):
             rows = [(t,) for t in self.store.list_tables(self.database)]
-            return self.spark.createDataFrame(
-                rows, T.StructType([T.StructField("table_name", T.StringType(), False)])
+            return local_frame(
+                self.spark, rows,
+                T.StructType([T.StructField("table_name", T.StringType(), False)]),
             )
         if re.match(r"show\s+databases\s*$", low):
             rows = [(d,) for d in self.store.list_databases()]
-            return self.spark.createDataFrame(
-                rows,
+            return local_frame(
+                self.spark, rows,
                 T.StructType([T.StructField("database_name", T.StringType(), False)]),
             )
         if "information_schema." in low:
@@ -240,7 +246,7 @@ class Engine:
                     T.StructField("serial", T.BooleanType(), False),
                 ]
             )
-            return self.spark.createDataFrame(rows, schema)
+            return local_frame(self.spark, rows, schema)
         self._check_query_databases(s)
         self._register_views()
         try:
@@ -258,19 +264,33 @@ class Engine:
         "tables", "columns", "schemata", "views", "df_settings",
         "routines", "parameters",
     )
+    _INFO_SCHEMA_RE = re.compile(
+        r"\binformation_schema\.(" + "|".join(_INFO_SCHEMA_VIEWS) + r")\b",
+        re.IGNORECASE,
+    )
 
     def _information_schema_query(self, stmt: str) -> DataFrame:
         """Full information_schema emulation (the reference enables
         DataFusion's entire information_schema,
         reference: src/sql/mod.rs:82): tables / columns / schemata /
         views / df_settings / routines / parameters, spanning every
-        database in the metastore. Registers metastore-backed temp
-        views, then runs the query unchanged."""
-
-        def reg(name: str, rows: list, schema: T.StructType) -> None:
-            self.spark.createDataFrame(rows, schema).createOrReplaceTempView(
+        database in the metastore. Registers a metastore-backed temp
+        view for each relation the statement names, then runs the query
+        with those names rewritten."""
+        for name in {m.lower() for m in self._INFO_SCHEMA_RE.findall(stmt)}:
+            rows, schema = self._information_schema_relation(name)
+            local_frame(self.spark, rows, schema).createOrReplaceTempView(
                 f"information_schema__{name}"
             )
+        rewritten = self._INFO_SCHEMA_RE.sub(
+            lambda m: f"information_schema__{m.group(1).lower()}", stmt
+        )
+        return self.spark.sql(
+            sqlparse.normalize_query(rewritten, self.database, self.user)
+        )
+
+    def _information_schema_relation(self, name: str) -> tuple[list, T.StructType]:
+        """The rows and schema of one information_schema relation."""
 
         def s(*fields: str) -> T.StructType:
             return T.StructType(
@@ -278,23 +298,24 @@ class Engine:
             )
 
         dbs = self.store.list_databases()
-        tables_rows, col_rows = [], []
-        for db in dbs:
-            for t in self.store.list_tables(db):
-                tables_rows.append((db, "public", t, "BASE TABLE"))
-                desc = self.store.get_table(db, t)
-                for i, c in enumerate(desc.columns, start=1):
-                    col_rows.append(
-                        (db, "public", t, c.name, i, c.kind,
-                         "YES" if c.nullable else "NO")
-                    )
-        reg(
-            "tables", tables_rows,
-            s("table_catalog", "table_schema", "table_name", "table_type"),
-        )
-        reg(
-            "columns", col_rows,
-            T.StructType(
+        if name == "tables":
+            rows = [
+                (db, "public", t, "BASE TABLE")
+                for db in dbs
+                for t in self.store.list_tables(db)
+            ]
+            return rows, s("table_catalog", "table_schema", "table_name", "table_type")
+        if name == "columns":
+            rows = []
+            for db in dbs:
+                for t in self.store.list_tables(db):
+                    desc = self.store.get_table(db, t)
+                    for i, c in enumerate(desc.columns, start=1):
+                        rows.append(
+                            (db, "public", t, c.name, i, c.kind,
+                             "YES" if c.nullable else "NO")
+                        )
+            return rows, T.StructType(
                 [
                     T.StructField("table_catalog", T.StringType(), False),
                     T.StructField("table_schema", T.StringType(), False),
@@ -304,68 +325,45 @@ class Engine:
                     T.StructField("data_type", T.StringType(), False),
                     T.StructField("is_nullable", T.StringType(), False),
                 ]
-            ),
-        )
-        # One "public" schema per database plus information_schema itself
-        # (matches the reference: MemorySchemaProvider registered at
-        # database creation, src/sql/context.rs:47-49).
-        schemata_rows = [(db, "public", self.user) for db in dbs] + [
-            (db, "information_schema", self.user) for db in dbs
-        ]
-        reg(
-            "schemata", schemata_rows,
-            s("catalog_name", "schema_name", "schema_owner"),
-        )
-        # CREATE VIEW is rejected at parse time (sqlparse unsupported
-        # list) — the relation exists and is always empty, like a fresh
-        # DataFusion context.
-        reg("views", [], s("table_catalog", "table_schema", "table_name", "definition"))
-        # DataFusion's df_settings ≙ the session's SQL configuration.
-        try:
-            all_conf = dict(self.spark.conf.getAll)
-        except Exception:  # getAll is a property of Dict in pyspark 4
-            all_conf = {
-                k: self.spark.conf.get(k)
-                for k in (
-                    "spark.sql.session.timeZone",
-                    "spark.sql.shuffle.partitions",
-                    "spark.sql.adaptive.enabled",
-                )
-            }
-        settings = [
-            (k, str(v)) for k, v in sorted(all_conf.items())
-            if k.startswith("spark.sql.")
-        ]
-        reg("df_settings", settings, s("name", "value"))
-        # Session scalar functions (≙ A12-A15) — the registerable-UDF
-        # surface; Spark built-ins are not enumerated, like DataFusion
-        # lists only registered functions.
-        routines, params = [], []
-        for fname, rtype in (
-            ("current_catalog", "utf8"),
-            ("current_schema", "utf8"),
-            ("current_user", "utf8"),
-            ("inet_client_port", "int32"),
-        ):
-            routines.append(
-                (self.database, "public", fname, "FUNCTION", rtype, "SCALAR")
             )
-        reg(
-            "routines", routines,
-            s("routine_catalog", "routine_schema", "routine_name",
-              "routine_type", "data_type", "function_type"),
-        )
-        reg(
-            "parameters", params,
-            s("specific_catalog", "specific_schema", "specific_name",
-              "ordinal_position", "parameter_mode", "data_type"),
-        )
-        rewritten = re.sub(
-            r"\binformation_schema\.(" + "|".join(self._INFO_SCHEMA_VIEWS) + r")\b",
-            lambda m: f"information_schema__{m.group(1).lower()}",
-            stmt,
-            flags=re.IGNORECASE,
-        )
-        return self.spark.sql(
-            sqlparse.normalize_query(rewritten, self.database, self.user)
+        if name == "schemata":
+            # One "public" schema per database plus information_schema
+            # itself (matches the reference: MemorySchemaProvider
+            # registered at database creation, src/sql/context.rs:47-49).
+            rows = [(db, "public", self.user) for db in dbs] + [
+                (db, "information_schema", self.user) for db in dbs
+            ]
+            return rows, s("catalog_name", "schema_name", "schema_owner")
+        if name == "views":
+            # CREATE VIEW is rejected at parse time (sqlparse unsupported
+            # list) — the relation exists and is always empty, like a
+            # fresh DataFusion context.
+            return [], s("table_catalog", "table_schema", "table_name", "definition")
+        if name == "df_settings":
+            # DataFusion's df_settings ≙ the session's SQL configuration.
+            rows = [
+                (k, str(v)) for k, v in sorted(self.spark.conf.getAll.items())
+                if k.startswith("spark.sql.")
+            ]
+            return rows, s("name", "value")
+        if name == "routines":
+            # Session scalar functions (≙ A12-A15) — the registerable-UDF
+            # surface; Spark built-ins are not enumerated, like DataFusion
+            # lists only registered functions.
+            rows = [
+                (self.database, "public", fname, "FUNCTION", rtype, "SCALAR")
+                for fname, rtype in (
+                    ("current_catalog", "utf8"),
+                    ("current_schema", "utf8"),
+                    ("current_user", "utf8"),
+                    ("inet_client_port", "int32"),
+                )
+            ]
+            return rows, s(
+                "routine_catalog", "routine_schema", "routine_name",
+                "routine_type", "data_type", "function_type",
+            )
+        return [], s(
+            "specific_catalog", "specific_schema", "specific_name",
+            "ordinal_position", "parameter_mode", "data_type",
         )

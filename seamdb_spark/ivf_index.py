@@ -65,6 +65,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .dedup_index import SEG_TARGET_BYTES
+from .session import local_frame
 from .snapshots import TableSnapshots
 
 # Re-center when >50% of indexed vectors would change cells under the
@@ -80,6 +81,19 @@ _STATE_SCHEMA = T.StructType(
         T.StructField("vec_id", T.LongType()),
         T.StructField("cid", T.IntegerType()),
         T.StructField("q", T.ArrayType(T.LongType())),
+    ]
+)
+_CENTROID_SCHEMA = T.StructType(
+    [
+        T.StructField("cid", T.IntegerType()),
+        T.StructField("cvec", T.ArrayType(T.LongType())),
+    ]
+)
+_CELL_STATS_SCHEMA = T.StructType(
+    [
+        T.StructField("cid", T.IntegerType()),
+        T.StructField("sums", T.ArrayType(T.LongType())),
+        T.StructField("n", T.LongType()),
     ]
 )
 
@@ -146,13 +160,12 @@ class IncrementalIVFIndex:
 
     def _cdf(self, centroids: list) -> DataFrame:
         # K×64 int64 driver literal — always broadcast-sized
-        spark = self._spark
-        return F.broadcast(
-            spark.createDataFrame(
-                [(int(c), [int(x) for x in v]) for c, v in centroids],
-                "cid int, cvec array<bigint>",
-            )
+        cdf = local_frame(
+            self._spark,
+            [(int(c), [int(x) for x in v]) for c, v in centroids],
+            _CENTROID_SCHEMA,
         )
+        return F.broadcast(cdf)
 
     def centroids(self) -> list[tuple[int, list[int]]]:
         return [
@@ -177,14 +190,10 @@ class IncrementalIVFIndex:
             if int(extra["cell_counts"][cid]) > 0
         ]
         # K rows of driver state — always broadcast-sized
-        spark = self._spark
-        return F.broadcast(
-            spark.createDataFrame(
-                rows, "cid int, sums array<bigint>, n bigint"
-            ).select(
-                "cid", F.expr("transform(sums, s -> s div n)").alias("cvec")
-            )
+        cdf = local_frame(self._spark, rows, _CELL_STATS_SCHEMA).select(
+            "cid", F.expr("transform(sums, s -> s div n)").alias("cvec")
         )
+        return F.broadcast(cdf)
 
     def drift_report(self) -> DataFrame:
         """(cid, n_vecs, n_moved) per current cell: how many of its

@@ -32,6 +32,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .session import local_frame
 from .snapshots import TableSnapshots
 
 
@@ -116,7 +117,7 @@ class ContinuousRollup:
             # still commit (empty state, processed=[]) so readers stop
             # seeing aggregates for data that no longer exists.
             full = spark.read.schema(self._source_schema()).parquet(*current) \
-                if current else spark.createDataFrame([], self._source_schema())
+                if current else local_frame(spark, [], self._source_schema())
             self.state.commit(
                 self._partials(full), mode="overwrite",
                 extra={"processed": current},
@@ -148,9 +149,7 @@ class ContinuousRollup:
     def read(self) -> DataFrame:
         """Finalized rollup: keys, row count, sums, and derived averages."""
         spark = self.engine.spark
-        probe = self._partials(
-            spark.createDataFrame([], self._source_schema())
-        )
+        probe = self._partials(local_frame(spark, [], self._source_schema()))
         state = self.state.read(spark, self._state_schema(probe))
         return state.select(
             *[a for a, _ in self.keys],

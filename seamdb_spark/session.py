@@ -22,7 +22,35 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+
+
+def local_frame(spark: SparkSession, rows: list, schema: T.StructType) -> DataFrame:
+    """A DataFrame over driver-held ``rows`` (tuples in ``schema``'s field
+    order), built as a JVM local relation.
+
+    ``createDataFrame(<list>)`` parallelizes a pickled RDD, so reading a
+    three-row catalog answer runs a Spark job (~150 ms at local[2]). An
+    Arrow table goes through ``PythonSQLUtils.toDataFrame`` instead: the
+    rows live in the plan, so reading them, or broadcasting them, runs
+    no job. That path ignores the Arrow conf, so it works on a vanilla
+    session too. Rows get the same checks as ``verifySchema``: a wrong
+    Python type or a ``None`` in a non-nullable field raises here."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _make_type_verifier
+
+    verify = _make_type_verifier(schema)
+    for row in rows:
+        verify(row)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def default_parallelism() -> int:

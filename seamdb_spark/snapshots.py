@@ -32,6 +32,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from .session import local_frame
+
 MANIFEST = "manifest.json"
 KEEP_MANIFESTS = 3
 # Rotate a bucketed segment's output file once a single bucket exceeds
@@ -110,7 +112,7 @@ class TableSnapshots:
             entries = [(p, b) for p, b in entries if b is None or b in buckets]
         files = [p for p, _ in entries]
         if not files:
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
         return spark.read.schema(schema).parquet(*files)
 
     def _version_files(self, version: int) -> list[str]:

@@ -325,6 +325,87 @@ def test_explicit_null_serial_rejected(engine):
     assert engine.sql("SELECT id FROM t").collect()[0].id == 1
 
 
+
+def _collect_counting_jobs(spark, df):
+    """``df.collect()`` and the number of Spark jobs it ran, read from
+    the status store under a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"collect-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        rows = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_statement_results_run_no_spark_job(engine, spark):
+    # Catalog and DML results are built on the driver; reading them
+    # must not schedule a job (they are local relations, not RDDs).
+    from pyspark.sql import types as T
+
+    def field(name, dtype):
+        return T.StructField(name, dtype, False)
+
+    result = T.StructType([field("result", T.StringType())])
+    cases = [
+        ("CREATE TABLE t (id serial PRIMARY KEY, v text)", result, [("created",)]),
+        ("INSERT INTO t (v) VALUES ('a'), ('b')",
+         T.StructType([field("count", T.LongType())]), [(2,)]),
+        ("SHOW TABLES", T.StructType([field("table_name", T.StringType())]),
+         [("t",)]),
+        ("SHOW DATABASES", T.StructType([field("database_name", T.StringType())]),
+         [("db1",)]),
+        ("DESCRIBE t", T.StructType([
+            field("column_name", T.StringType()),
+            field("data_type", T.StringType()),
+            field("nullable", T.BooleanType()),
+            field("serial", T.BooleanType()),
+        ]), [("id", "int32", False, True), ("v", "string", True, False)]),
+    ]
+    for stmt, schema, expected in cases:
+        df = engine.sql(stmt)
+        rows, jobs = _collect_counting_jobs(spark, df)
+        assert jobs == 0, stmt
+        # the JVM-side schema (a fresh projection), not the cached one
+        assert df.select("*").schema == schema, stmt
+        assert [tuple(r) for r in rows] == expected, stmt
+
+
+def test_local_frame_keeps_row_checks(spark):
+    from pyspark.sql import types as T
+
+    from seamdb_spark.session import local_frame
+
+    schema = T.StructType([
+        T.StructField("k", T.LongType(), False),
+        T.StructField("name", T.StringType(), True),
+        T.StructField("vec", T.ArrayType(T.LongType()), True),
+    ])
+    with pytest.raises(ValueError):
+        local_frame(spark, [(None, "a", None)], schema)
+    for bad in [("1", "a", None), (1, 2, None), (1.5, "a", None), (1, "a", ["x"])]:
+        with pytest.raises(TypeError):
+            local_frame(spark, [bad], schema)
+    empty = local_frame(spark, [], schema)
+    assert empty.select("*").schema == schema
+    assert empty.collect() == []
+    # A vanilla session (no build_session confs) has the Arrow conf off.
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        df = local_frame(spark, [(1, "a", [1, 2]), (2, None, None)], schema)
+        rows, jobs = _collect_counting_jobs(spark, df)
+    finally:
+        spark.conf.set(key, before)
+    assert [tuple(r) for r in rows] == [(1, "a", [1, 2]), (2, None, None)]
+    assert jobs == 0
+    assert df.select("*").schema == schema
+
 def test_bench_trajectory_gate():
     """bench.py's regression gate (round-8): a query slower than
     max(2x, +2s) of its own last clean-run time fails; new queries,
