@@ -145,10 +145,10 @@ class Metastore:
         kind: str,
         count: int = 1,
         schema: str = DEFAULT_SCHEMA,
-    ) -> list[int]:
+    ) -> range:
         """Allocate ``count`` consecutive serial values (≙ KV increment,
         reference: src/sql/client.rs:276-307) with per-kind overflow
-        checks."""
+        checks. A ``range``, so a huge batch costs O(1) memory."""
         key = f"{database}.{schema}.{table}.{column}"
         current = self._data["serials"].get(key, 0)
         top = current + count
@@ -158,4 +158,4 @@ class Metastore:
             )
         self._data["serials"][key] = top
         self._save()
-        return list(range(current + 1, top + 1))
+        return range(current + 1, top + 1)

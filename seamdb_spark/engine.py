@@ -12,10 +12,18 @@ Query lifecycle (≙ SURVEY.md §3.1):
   sql text → single-statement check → classify
     ├─ CREATE DATABASE/TABLE, DROP TABLE → metastore ops
     │    → 1-row ``result`` DataFrame ("created"/"already exists")
-    ├─ INSERT → dml.execute_insert → 1-row ``count`` DataFrame
-    └─ query → dialect normalization (::casts, session functions,
-       Postgres NULL ordering) → register current table snapshots as
-       temp views → spark.sql  [Catalyst = DataFusion's role]
+    ├─ INSERT → [… SELECT: pin snapshots, spark.sql] → dml.execute_insert
+    │    → 1-row ``count`` DataFrame
+    └─ query, information_schema included → pin the current table
+       snapshots as temp views → dialect normalization (::casts,
+       session functions, Postgres NULL ordering) → spark.sql
+       [Catalyst = DataFusion's role]
+
+Pinning (``_register_views``) reads each table's manifest once per
+statement. A view is re-pointed only when its table's snapshot
+identity (table dir, schema, manifest file list) changed, or when the
+session's temp view of that name no longer holds the engine's plan;
+an unchanged table keeps its parquet relation across statements.
 
 Catalog and DML results (SHOW, DESCRIBE, information_schema, the
 ``result``/``count`` rows) are JVM local relations (``local_frame``):
@@ -25,6 +33,7 @@ collecting them runs no Spark job.
 from __future__ import annotations
 
 import re
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -40,6 +49,16 @@ _RESULT_SCHEMA = T.StructType([T.StructField("result", T.StringType(), False)])
 _COUNT_SCHEMA = T.StructType([T.StructField("count", T.LongType(), False)])
 
 
+class _View(NamedTuple):
+    """An engine temp view: the snapshot identity it shows, its frame,
+    and the session's view relation right after the engine registered
+    it (a JVM ``Option[TemporaryViewRelation]``)."""
+
+    identity: tuple
+    frame: DataFrame
+    plan: object
+
+
 class Engine:
     def __init__(
         self,
@@ -52,12 +71,13 @@ class Engine:
         self.store = Metastore(warehouse_dir)
         self.database = database
         self.user = user
-        # Engine-registered temp view names, shared across all Engine
-        # instances on the same session so a dropped table's view stops
-        # resolving even for a different Engine object.
+        # Engine-registered temp views: name -> _View, shared across all
+        # Engine instances on the same session (temp views are
+        # session-wide), so a dropped table's view stops resolving and a
+        # view another Engine re-pointed is re-pointed back.
         if not hasattr(spark, "_seamdb_engine_views"):
-            spark._seamdb_engine_views = set()
-        self._registered: set[str] = spark._seamdb_engine_views
+            spark._seamdb_engine_views = {}
+        self._views: dict[str, _View] = spark._seamdb_engine_views
         if not self.store.database_exists(database):
             self.store.create_database(database, if_not_exists=True)
         spark.conf.set("spark.sql.session.timeZone", "UTC")
@@ -185,29 +205,53 @@ class Engine:
 
     def _register_views(self) -> None:
         """Pin the statement's read snapshot: every table in every
-        database is registered under its mangled ``db__public__t`` name,
+        database is visible under its mangled ``db__public__t`` name,
         and tables of the session database additionally under their bare
         name, over the file list named by its manifest *now*
         (≙ Snapshot-semantics catalog reads, reference:
-        src/sql/mod.rs:60-75). Views for dropped tables are removed so
-        they stop resolving."""
+        src/sql/mod.rs:60-75).
+
+        Each table's manifest is read once; its identity is (table dir,
+        Spark schema, manifest file entries). A parquet relation is
+        built only for an identity no view holds yet, and a view is
+        re-pointed only when its identity changed (a commit, compaction,
+        DROP + CREATE, another warehouse, another session database for a
+        bare name) or the session's temp view no longer holds the plan
+        the engine registered (other code replaced or dropped it).
+        Views for dropped tables are removed so they stop resolving."""
         wanted: dict[str, tuple[str, str]] = {}
         for db in self.store.list_databases():
             for name in self.store.list_tables(db):
                 wanted[sqlparse.mangle_view_name(db, name)] = (db, name)
                 if db == self.database:
                     wanted[name] = (db, name)
-        for stale in self._registered - set(wanted):
+        for stale in self._views.keys() - wanted.keys():
             self.spark.catalog.dropTempView(stale)
-            self._registered.discard(stale)
-        dfs: dict[tuple[str, str], DataFrame] = {}
+            del self._views[stale]
+        frames = {v.identity: v.frame for v in self._views.values()}
+        identities: dict[tuple[str, str], tuple] = {}
+        catalog = self.spark._jsparkSession.sessionState().catalog()
         for view, key in wanted.items():
-            if key not in dfs:
-                desc = self.store.get_table(*key)
+            if key not in identities:
+                schema = self.store.get_table(*key).spark_schema()
                 snaps = TableSnapshots(self.store.table_dir(*key))
-                dfs[key] = snaps.read(self.spark, desc.spark_schema())
-            dfs[key].createOrReplaceTempView(view)
-            self._registered.add(view)
+                entries = snaps.current_file_entries()
+                identity = (snaps.table_dir, schema.json(), tuple(entries))
+                if identity not in frames:
+                    frames[identity] = snaps.read(self.spark, schema, entries=entries)
+                identities[key] = identity
+            identity = identities[key]
+            held = self._views.get(view)
+            if (
+                held is not None
+                and held.identity == identity
+                and catalog.getRawTempView(view).equals(held.plan)
+            ):
+                continue
+            frames[identity].createOrReplaceTempView(view)
+            self._views[view] = _View(
+                identity, frames[identity], catalog.getRawTempView(view)
+            )
 
     def _query(self, stmt: str) -> DataFrame:
         s = stmt.strip()
@@ -224,10 +268,9 @@ class Engine:
                 self.spark, rows,
                 T.StructType([T.StructField("database_name", T.StringType(), False)]),
             )
-        if "information_schema." in low:
-            return self._information_schema_query(s)
+        info_schema = "information_schema." in sqlparse._mask_literals(low)[0]
         m = re.match(r"describe\s+(table\s+)?([A-Za-z_][\w$.]*)\s*$", low)
-        if m:
+        if m and not info_schema:
             desc = self.store.get_table(*self._resolve_table(m.group(2)))
             rows = [
                 (
@@ -249,6 +292,8 @@ class Engine:
             return local_frame(self.spark, rows, schema)
         self._check_query_databases(s)
         self._register_views()
+        if info_schema:
+            s = self._register_information_schema(s)
         try:
             return self.spark.sql(
                 sqlparse.normalize_query(s, self.database, self.user)
@@ -269,24 +314,24 @@ class Engine:
         re.IGNORECASE,
     )
 
-    def _information_schema_query(self, stmt: str) -> DataFrame:
+    def _register_information_schema(self, stmt: str) -> str:
         """Full information_schema emulation (the reference enables
         DataFusion's entire information_schema,
         reference: src/sql/mod.rs:82): tables / columns / schemata /
         views / df_settings / routines / parameters, spanning every
         database in the metastore. Registers a metastore-backed temp
-        view for each relation the statement names, then runs the query
-        with those names rewritten."""
-        for name in {m.lower() for m in self._INFO_SCHEMA_RE.findall(stmt)}:
+        view for each relation the statement names outside string
+        literals and returns the statement with those names rewritten."""
+        masked, _ = sqlparse._mask_literals(stmt)
+        for name in {m.lower() for m in self._INFO_SCHEMA_RE.findall(masked)}:
             rows, schema = self._information_schema_relation(name)
             local_frame(self.spark, rows, schema).createOrReplaceTempView(
                 f"information_schema__{name}"
             )
-        rewritten = self._INFO_SCHEMA_RE.sub(
-            lambda m: f"information_schema__{m.group(1).lower()}", stmt
-        )
-        return self.spark.sql(
-            sqlparse.normalize_query(rewritten, self.database, self.user)
+        return sqlparse._sub_outside_literals(
+            self._INFO_SCHEMA_RE,
+            lambda m: f"information_schema__{m.group(1).lower()}",
+            stmt,
         )
 
     def _information_schema_relation(self, name: str) -> tuple[list, T.StructType]:

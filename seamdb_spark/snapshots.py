@@ -92,6 +92,7 @@ class TableSnapshots:
         schema: T.StructType,
         version: int | None = None,
         buckets: set[int] | None = None,
+        entries: list[tuple[str, int | None]] | None = None,
     ) -> DataFrame:
         """Read the snapshot current *now* (or a retained historical
         ``version`` — time travel, ≙ the reference's read-at-timestamp
@@ -103,11 +104,16 @@ class TableSnapshots:
         any key). This is the partition-pruned path of the bucketed
         unique-index design (SCALING.md Engine §): the scan cost of a
         key-membership check becomes O(touched buckets), not O(table).
+
+        ``entries``: the current manifest's file entries, already read
+        by the caller (``current_file_entries``), so a caller that keys
+        on the file list builds its frame from the same manifest read.
         """
-        if version is None:
-            entries = self.current_file_entries()
-        else:
-            entries = self._entries(self._version_files(version))
+        if entries is None:
+            entries = (
+                self.current_file_entries() if version is None
+                else self._entries(self._version_files(version))
+            )
         if buckets is not None:
             entries = [(p, b) for p, b in entries if b is None or b in buckets]
         files = [p for p, _ in entries]

@@ -406,6 +406,134 @@ def test_local_frame_keeps_row_checks(spark):
     assert jobs == 0
     assert df.select("*").schema == schema
 
+
+def test_information_schema_statement_pins_snapshots(engine, spark, tmp_path):
+    # A query joining information_schema with a user table reads the
+    # table's current snapshot, not whichever view was registered last.
+    from seamdb_spark.engine import Engine
+
+    q = (
+        "SELECT count(*) AS n FROM t WHERE EXISTS"
+        " (SELECT 1 FROM information_schema.tables WHERE table_name = 't')"
+    )
+    engine.sql("CREATE TABLE t (id serial PRIMARY KEY, v text)")
+    engine.sql("INSERT INTO t (v) VALUES ('a')")
+    assert engine.sql("SELECT count(*) AS n FROM t").collect()[0].n == 1
+    engine.sql("INSERT INTO t (v) VALUES ('b')")
+    assert engine.sql(q).collect()[0].n == 2
+    other = Engine(spark, str(tmp_path / "warehouse2"), database="db1")
+    other.sql("CREATE TABLE t (id serial PRIMARY KEY, v text)")
+    assert other.sql(q).collect()[0].n == 0
+
+
+def test_information_schema_name_inside_literal_unchanged(engine):
+    row = engine.sql(
+        "SELECT 'information_schema.tables' AS s, 'x' AS information_schema"
+    ).collect()[0]
+    assert (row.s, row.information_schema) == ("information_schema.tables", "x")
+
+
+def _count_view_work(monkeypatch, spark):
+    """Counters of ``spark.read.parquet`` calls and temp-view
+    registrations, patched for the rest of the test."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    calls = {"parquet": 0, "views": 0}
+
+    def counting(key, orig):
+        def wrapped(*args, **kwargs):
+            calls[key] += 1
+            return orig(*args, **kwargs)
+        return wrapped
+
+    reader = type(spark.read)
+    monkeypatch.setattr(reader, "parquet", counting("parquet", reader.parquet))
+    monkeypatch.setattr(
+        DataFrame, "createOrReplaceTempView",
+        counting("views", DataFrame.createOrReplaceTempView),
+    )
+    return calls
+
+
+def test_unchanged_tables_keep_their_views(engine, spark, monkeypatch):
+    engine.sql("CREATE TABLE t (id serial PRIMARY KEY, v text)")
+    engine.sql("CREATE TABLE u (k bigint PRIMARY KEY)")
+    engine.sql("INSERT INTO t (v) VALUES ('a'), ('b')")
+    engine.sql("INSERT INTO u VALUES (1)")
+    q = "SELECT count(*) AS n FROM t JOIN db1.public.u u ON t.id = u.k"
+    assert engine.sql(q).collect()[0].n == 1
+    calls = _count_view_work(monkeypatch, spark)
+    assert engine.sql(q).collect()[0].n == 1
+    assert calls == {"parquet": 0, "views": 0}
+    # a commit re-points only the changed table's two views
+    engine.sql("INSERT INTO u VALUES (2)")
+    calls.update(parquet=0, views=0)  # the INSERT's own clash scan
+    assert engine.sql(q).collect()[0].n == 2
+    assert calls == {"parquet": 1, "views": 2}
+
+
+def _files_read(engine, table):
+    from urllib.parse import urlparse
+
+    return {
+        urlparse(r.f).path
+        for r in engine.sql(f"SELECT DISTINCT input_file_name() AS f FROM {table}")
+        .collect()
+    }
+
+
+def test_views_follow_every_snapshot_change(engine, spark, tmp_path):
+    from seamdb_spark.engine import Engine
+    from seamdb_spark.snapshots import TableSnapshots
+
+    def n(eng, table="t"):
+        return eng.sql(f"SELECT count(*) AS n FROM {table}").collect()[0].n
+
+    engine.sql("CREATE TABLE t (id serial PRIMARY KEY, v text)")
+    engine.sql("INSERT INTO t (v) VALUES ('a')")
+    assert n(engine) == 1
+    engine.sql("INSERT INTO t (v) VALUES ('b'), ('c')")
+    assert n(engine) == 3
+    # compaction: same rows, new files; the view reads the new ones
+    engine.compact("t")
+    snaps = TableSnapshots(engine.store.table_dir("db1", "t"))
+    assert _files_read(engine, "t") == set(snaps.current_files())
+    assert n(engine) == 3
+    # DROP then CREATE of the same name
+    engine.sql("DROP TABLE t")
+    engine.sql("CREATE TABLE t (id serial PRIMARY KEY, v text)")
+    assert n(engine) == 0
+    engine.sql("INSERT INTO t (v) VALUES ('d')")
+    assert n(engine) == 1
+    # another warehouse with the same database and table name
+    other = Engine(spark, str(tmp_path / "warehouse2"), database="db1")
+    other.sql("CREATE TABLE t (id serial PRIMARY KEY, v text)")
+    other.sql("INSERT INTO t (v) VALUES ('x'), ('y')")
+    assert n(other) == 2 and n(other, "db1.public.t") == 2
+    assert n(engine) == 1 and n(engine, "db1.public.t") == 1
+    # another session database: bare names re-point to its tables
+    engine.sql("CREATE DATABASE db2")
+    engine.sql("CREATE TABLE db2.public.t (id serial PRIMARY KEY, v text)")
+    engine.sql("INSERT INTO db2.public.t (v) VALUES ('p'), ('q'), ('r')")
+    in_db2 = Engine(spark, str(tmp_path / "warehouse"), database="db2")
+    assert n(in_db2) == 3 and n(in_db2, "db1.public.t") == 1
+    assert n(engine) == 1 and n(engine, "db2.public.t") == 3
+
+
+def test_foreign_view_replacement_is_repaired(engine, spark):
+    # Engine view names share the session's temp-view namespace; a view
+    # that other code replaced is re-pointed on the next statement.
+    engine.sql("CREATE TABLE t (id serial PRIMARY KEY, v text)")
+    engine.sql("INSERT INTO t (v) VALUES ('a'), ('b')")
+    assert engine.sql("SELECT count(*) AS n FROM t").collect()[0].n == 2
+    spark.range(5).createOrReplaceTempView("t")
+    spark.range(7).createOrReplaceTempView("db1__public__t")
+    assert engine.sql("SELECT count(*) AS n FROM t").collect()[0].n == 2
+    assert engine.sql("SELECT count(*) AS n FROM db1.public.t").collect()[0].n == 2
+    spark.catalog.dropTempView("t")
+    assert engine.sql("SELECT count(*) AS n FROM t").collect()[0].n == 2
+
+
 def test_bench_trajectory_gate():
     """bench.py's regression gate (round-8): a query slower than
     max(2x, +2s) of its own last clean-run time fails; new queries,

@@ -81,6 +81,22 @@ def test_smallserial_overflow(engine):
         engine.sql("INSERT INTO t (v) VALUES ('boom')")
 
 
+def test_next_serial_allocates_a_range(tmp_path):
+    # A batch's serials are a range, not a list: an n-row INSERT holds
+    # its ids in O(1) memory.
+    from seamdb_spark.catalog import Metastore
+
+    store = Metastore(str(tmp_path / "warehouse"))
+    store._data["serials"]["db1.public.t.id"] = 5
+    ids = store.next_serial("db1", "t", "id", "int64", count=1000)
+    assert isinstance(ids, range)
+    assert (ids[0], ids[-1], len(ids)) == (6, 1005, 1000)
+    assert store.next_serial("db1", "t", "id", "int64")[0] == 1006
+    store.next_serial("db1", "s", "id", "int16", count=2**15 - 1)
+    with pytest.raises(SerialOverflowError):
+        store.next_serial("db1", "s", "id", "int16")
+
+
 def test_type_mismatch_and_nullability(engine):
     # ≙ reference: src/sql/client.rs:247-264
     engine.sql("CREATE TABLE t (id bigint PRIMARY KEY, v bigint NOT NULL)")
