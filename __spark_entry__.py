@@ -16,747 +16,14 @@ from seamdb_spark.operators import ORACLE_SQL, QUERIES
 
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
-# Queries with a hash-green row in CORRECTNESS_r01.json (round 1) or
-# CORRECTNESS_r02.json (round 2, the 50 names in _R2_GREEN below).
-# The driver's gate samples the FIRST 50 entries of queries(), so order
-# everything still lacking a green row (or whose oracle changed) first;
-# previously-green queries fill the remaining slots for regression cover.
-_R1_HASH_GREEN = {
-    "d01_dedup_exact", "d02_dedup_minhash_lsh", "d03_dedup_simhash",
-    "d04_dedup_ngram_jaccard", "d07_dedup_jaccard_prefix_filtered",
-    "d08_dedup_jaccard_blocked", "e01_hourly_rollup", "e02_sessionization",
-    "e03_json_props", "x02_percentile", "x04_array_agg", "e04_asof_join",
-    "e05_range_join", "q50_window_time_range", "e06_gapfill_rollup",
-    "m01_binary_metadata", "m03_frame_sample",
-    "q01_pricing_summary", "q02_filter_predicates", "q03_shipping_priority",
-    "q04_order_priority", "q05_local_supplier_volume", "q06_forecast_revenue",
-    "q07_left_join_nulls", "q08_full_outer_join", "q09_anti_join",
-    "q10_semi_join", "q11_theta_band_join", "q12_having_distinct",
-    "q13_stats_aggregates", "q14_rollup", "q15_cube", "q16_grouping_sets",
-    "q17_window_rank", "q18_window_running", "q19_window_range_frame",
-    "q20_set_operations", "q21_scalar_subquery", "q22_correlated_subquery",
-    "q23_cte_max_revenue", "q24_string_functions", "q26_datetime_functions",
-    "q27_date_diff_interval", "q28_case_cast", "q29_distinct",
-}
-
-
-# Round-2 driver window — all 50 went green in CORRECTNESS_r02.json.
-_R2_GREEN = [
-    "d09_dedup_clusters", "d10_decontaminate", "x01_approx_distinct",
-    "x03_percentile_approx", "e07_funnel_steps", "e08_retention_cohorts",
-    "e09_conversion_lag", "m02_media_features", "m04_image_resize",
-    "q25_math_functions", "q30_topk_per_group", "q31_pivot",
-    "q32_sort_limit_offset", "q33_in_subquery", "q34_union_all_agg",
-    "q35_market_share", "q36_returned_items", "q37_unpivot",
-    "q38_filtered_agg", "q39_null_functions", "q40_exists_inequality",
-    "q41_recursive_cte", "q42_right_join", "q43_cross_join",
-    "q44_window_distribution", "q45_pattern_matching",
-    "q46_below_avg_quantity", "q47_supplier_share", "q48_multiset_ops",
-    "q49_lateral_join", "x05_histogram", "s01_ann_bruteforce_topk",
-    "d05_embedding_neardup", "s02_ann_lsh_topk", "s03_ann_ivf_topk",
-    "d06_embedding_neardup_blocked", "s04_ann_quantized_topk",
-    "s05_ann_range_search", "t01_token_count", "t02_quality_score",
-    "t03_lang_id", "t04_fingerprint", "t05_wordcount",
-    "t06_tfidf_top_terms", "t07_heavy_hitters_salted", "t08_train_split",
-    "t09_stratified_sample", "t10_deterministic_shuffle",
-    "t11_repetition_signals", "t12_lm_quality_score",
-]
-
-
-# Round-3 window (the driver's first-50 check): the 50 queries
-# registered after the round-2 window froze — every one locally
-# hash-green at sf0.01 (scripts/parity_check.py) but without a driver
-# row yet — exactly fill the window, PINNED explicitly so that any
-# query registered after this list froze cannot displace a window
-# entry. (No regression slots this round; rotation resumes in round 4
-# when all 50 below have rows.)
-#
-# ROUND-4 PROCEDURE: after CORRECTNESS_r03 lands, pin (a) any queries
-# registered after _R3_WINDOW froze (they have only local parity runs)
-# and any query whose plan/oracle changed this round, then (b) fill to
-# 50 with the queries whose last green row is OLDEST (r1 greens not
-# re-checked since, then r2 greens, then the r3 window), registration
-# order within a tier.
-_R3_WINDOW = [
-    "d15_bloom_prefilter", "t13_sequence_pack", "t14_pii_redact",
-    "t15_domain_mixture", "t16_bigram_lm_score", "t17_doc_chunking",
-    "t18_ngram_novelty", "t19_vocab_profile", "t20_rule_filter",
-    "t21_weighted_sample", "t22_safe_split", "t23_bpe_pair_stats",
-    "x07_cms_heavy_hitters", "d11_canonical_keeper", "d12_duplicated_spans",
-    "d13_cross_source_audit", "g01_neardup_pagerank", "d14_dedup_profile",
-    "d16_boilerplate_strip", "e10_last_touch_attribution",
-    "x06_sketch_merge_rollup", "e11_event_transitions", "e12_trending_types",
-    "e13_rolling_active_users", "e14_hourly_anomalies", "e15_rfm_segments",
-    "e16_hopping_windows", "e17_session_paths", "m05_binary_windows",
-    "m06_bmp_decode", "m07_wav_decode", "m08_audio_frame_energy",
-    "m09_image_ahash", "p01_curation_pipeline", "s06_ann_filtered_topk",
-    "s07_ann_rerank_topk", "s08_ann_pq_topk", "s09_knn_graph",
-    "s10_mips_topk", "d17_semantic_dedup", "p02_semantic_dedup",
-    "q51_suppliers_kept_waiting", "q52_dormant_customers",
-    "q53_argmax_aggregates", "q54_bitwise_aggregates", "q55_ntile_deciles",
-    "q56_relational_division", "q57_ordered_set_aggs",
-    "q58_null_aware_not_in", "q59_min_cost_supplier",
-]
-
-
-# Round-4 window, built per the ROUND-4 PROCEDURE above:
-# (a) slots 1-12: the queries registered after _R3_WINDOW froze (only
-#     local parity runs so far);
-# (b) slots 13-15: registered THIS round (d19/t25/s13);
-# (c) slots 16-20: plan or oracle changed this round (q55/e15/t21 moved
-#     off the single-partition global window; s08's ADC join was
-#     re-aliased; d12 switched to the one-shuffle window popularity) —
-#     re-verify under the driver even though all were r3-green;
-# (d) slots 21-50: the 30 OLDEST r1 greens (no driver row since round
-#     1, two-plus rounds of code churn ago), registration order.
-#
-# ROUND-5 PROCEDURE: after CORRECTNESS_r04 lands, pin (a) the 19
-# queries registered after _R4_WINDOW froze (all locally hash-green at
-# sf0.001/0.01 — most also spot-checked at sf0.1):
-#   d20_cdc_chunk_dedup, d21_editdist_verified_neardup,
-#   d22_cosine_tfidf_neardup, d23_eval_contamination_report,
-#   d24_frequency_downsample, t27_dsir_importance,
-#   t28_temperature_sampling, g02_triangle_count,
-#   m12_bmp_channel_stats, m13_silence_runs, m14_modality_router,
-#   e19_interarrival_profile, e20_cooccurrence_lift, e21_sax_motifs,
-#   e22_markov_attribution, q61_order_streaks, p04_selection_pipeline,
-#   s14_ann_recall_audit, s15_mmr_diversified_topk
-# plus (b) any query whose plan or oracle changes in round 5, then
-# fill to 50 oldest-green-first: the 18 remaining r1 greens (q11/q12/
-# q13 + the q14-q29 block), then the r2 greens in _R2_GREEN order,
-# then _R3_WINDOW, then _R4_WINDOW.
-_R4_WINDOW = [
-    # (a) rowless after r3 freeze
-    "e18_session_duration_bands", "q60_column_profile", "m10_wav_resample",
-    "m11_bmp_downsample", "x08_bitmap_distinct_rollup",
-    "x09_sketch_intersection", "s11_knn_graph_descent", "s12_ann_ivfpq_topk",
-    "t24_frequency_spectrum", "p03_dedup_decision_record",
-    "d18_minhash_estimate_audit", "j01_salted_skew_join",
-    # (b) new in round 4
-    "d19_substring_runs", "t25_bpe_apply", "s13_graph_beam_search",
-    "x10_kmv_distinct", "x11_kmv_set_ops", "t26_trigram_backoff_score",
-    # (c) plan/oracle changed in round 4
-    "q55_ntile_deciles", "e15_rfm_segments", "t21_weighted_sample",
-    "s08_ann_pq_topk", "d12_duplicated_spans",
-    # (d) oldest r1 greens, registration order
-    "d01_dedup_exact", "d02_dedup_minhash_lsh", "d03_dedup_simhash",
-    "d04_dedup_ngram_jaccard", "d07_dedup_jaccard_prefix_filtered",
-    "d08_dedup_jaccard_blocked", "e01_hourly_rollup", "e02_sessionization",
-    "e03_json_props", "x02_percentile", "x04_array_agg", "e04_asof_join",
-    "e05_range_join", "q50_window_time_range", "e06_gapfill_rollup",
-    "m01_binary_metadata", "m03_frame_sample", "q01_pricing_summary",
-    "q02_filter_predicates", "q03_shipping_priority", "q04_order_priority",
-    "q05_local_supplier_volume", "q06_forecast_revenue",
-    "q07_left_join_nulls", "q08_full_outer_join", "q09_anti_join",
-    "q10_semi_join",
-]
-
-
-# Round-5 window, built per the ROUND-5 PROCEDURE above:
-# (a) slots 1-19: the queries registered after _R4_WINDOW froze (all
-#     19 locally hash-green, no driver row yet) — driver-green 182/182
-#     becomes true when these land;
-# (b) slots 20-32: registered in round 5, or plan changed in round 5
-#     (s13: the memoized symmetrized-edge list; d20/d21/d22 are
-#     already in (a));
-# (c) slots 33-50: the REST of round 5's registrations — also without
-#     any driver row ever. Never-checked queries outrank regression
-#     re-checks of r1 greens (the round-4 verdict's own ranking:
-#     "rowless" is residual #1, "stale regression evidence" #2), so
-#     the 18 r1 re-green slots moved to the round-6 fill tier.
-#
-# ROUND-6 PROCEDURE: after CORRECTNESS_r05 lands, pin (a) the 21
-# queries registered after _R5_WINDOW froze (all locally hash-green in
-# FULL 233/233 sweeps at sf0.001 AND sf0.01, and hash-green at sf0.1;
-# no driver row yet):
-#   t37_oov_rate_audit, e28_session_concurrency,
-#   s19_ivf_probe_recall_curve, d29_threshold_sensitivity,
-#   g04_component_size_distribution, p07_attrition_funnel,
-#   m20_image_neardup_pairs, e29_conversion_survival,
-#   e31_adjusted_anomalies, t38_kneser_ney_score,
-#   e30_cusum_changepoints, g05_kcore_peel, s20_ivf_purity_audit,
-#   e32_bot_screening, m21_image_flatness, q63_robust_outliers,
-#   x13_decayed_popularity, t39_k_anonymity_audit,
-#   e33_stickiness_ratio, s21_label_separability,
-#   q64_yearly_price_drift
-# plus (b) any whose plan/oracle changes in round 6, then fill to 50
-# oldest-green-first: the 18 r1 greens with no driver row since round
-# 1 (the q11-q29 block, displaced in round 5), then the r2 greens in
-# _R2_GREEN order, then _R3_WINDOW, then _R4_WINDOW, then _R5_WINDOW.
-_R5_WINDOW = [
-    # (a) rowless after r4 freeze — locally hash-green only
-    "d20_cdc_chunk_dedup", "d21_editdist_verified_neardup",
-    "d22_cosine_tfidf_neardup", "d23_eval_contamination_report",
-    "d24_frequency_downsample", "t27_dsir_importance",
-    "t28_temperature_sampling", "g02_triangle_count",
-    "m12_bmp_channel_stats", "m13_silence_runs", "m14_modality_router",
-    "e19_interarrival_profile", "e20_cooccurrence_lift", "e21_sax_motifs",
-    "e22_markov_attribution", "q61_order_streaks", "p04_selection_pipeline",
-    "s14_ann_recall_audit", "s15_mmr_diversified_topk",
-    # (b) registered in round 5, or plan changed in round 5
-    "s16_hnsw_layered_search", "t29_hashed_classifier_score",
-    "d25_paragraph_neardup", "p05_model_curation_report",
-    "d26_containment_neardup", "m15_jpeg_roundtrip",
-    "m16_jpeg_ahash_stability",
-    "s13_graph_beam_search", "t30_perplexity_buckets",
-    "g03_degree_assortativity", "d27_weighted_simhash",
-    "t31_heldout_lm_eval", "d28_cluster_quality_audit",
-    # (c) round-5 late batch + second batch — no driver row ever
-    "e23_hourly_seasonality", "m17_frame_motion_profile",
-    "s17_ivf_drift_monitor", "t32_source_vocab_divergence",
-    "e24_attribution_comparison", "p06_corpus_report_card",
-    "e25_user_concentration", "t33_lexical_diversity",
-    "s18_embedding_norm_screen", "m18_wav_peak_normalize",
-    "e26_transition_predictability",
-    "t34_langid_confusion", "q62_monotone_value_streaks",
-    "e27_type_cross_correlation", "t35_code_prose_profile",
-    "x12_uniform_group_sample", "m19_clipping_runs",
-    "t36_zipf_doubling_ratio",
-]
-
-
-# Round-6 window, built per the ROUND-6 PROCEDURE above:
-# (a) slots 1-21: the 21 queries registered after _R5_WINDOW froze
-#     (all locally hash-green at sf0.001/sf0.01; no driver row yet);
-# (b) slots 22-25: plan changed in round 6 — the Hamming-blocking
-#     rework (d03/d27 moved to exclude-2-of-8 block-permuted tables;
-#     m20, already in (a), moved to a 64-bit hash with wide chunks)
-#     plus d22 whose candidate stage was factored out for the new
-#     candidate-volume gate (outputs unchanged, re-verify anyway; d25's
-#     identical factoring stays in the round-7 fill tier — the window
-#     ran out of slots and its plan is bit-identical)
-#     and s16, whose linear n/16 entry scan became a fixed 64-node
-#     hash sample + walk-restricted layer 2 (output changed);
-# (c) slots 26-43: the 18 r1 greens with no driver row since round 1
-#     (the q11-q29 block displaced in rounds 4-5) — clears the entire
-#     r1-stale backlog;
-# (d) slots 44-50: the head of _R2_GREEN (oldest r2 regression cover).
-#
-# ROUND-7 PROCEDURE: after CORRECTNESS_r06 lands, pin (a) the 29
-# queries registered after _R6_WINDOW froze —
-#   p08, s22, e34, t42, e35, q65, d31, m24, x15, t43, s23, e38,
-#   d32, t44, p09, m25, g08, p10, m26, d33, e36, m27, j02, t45,
-#   s24, p11, m28, q66, q67, x16, e37, g09, m29, d34, t46, e39
-# (all locally hash-green in FULL 269/269 sweeps at sf0.001 AND
-# sf0.01) plus the round-6 late plan-changed refactors
-# (e02: session labeling factored for e38; d20: CDC flat builder
-# factored for t43; d25: candidate stage factored, displaced from the
-# r6 window; s03: seed hash gained a no-op empty-salt concat for s23;
-# p10: allocation frame factored for p11 (plan unchanged); the GIF
-# LZW encoder's tail-width fix left m25/m26 outputs bit-identical —
-# every one re-verified locally after its refactor), then (b) any
-# whose plan/oracle changes in round 7, then fill the remaining ~17
-# slots oldest-green-first: the remaining _R2_GREEN entries from
-# d10_decontaminate onward, then _R3_WINDOW, then _R4_WINDOW, then
-# _R5_WINDOW, then _R6_WINDOW.
-_R6_WINDOW = [
-    # (a) rowless after r5 freeze — locally hash-green only
-    "t37_oov_rate_audit", "e28_session_concurrency",
-    "s19_ivf_probe_recall_curve", "d29_threshold_sensitivity",
-    "g04_component_size_distribution", "p07_attrition_funnel",
-    "m20_image_neardup_pairs", "e29_conversion_survival",
-    "e31_adjusted_anomalies", "t38_kneser_ney_score",
-    "e30_cusum_changepoints", "g05_kcore_peel", "s20_ivf_purity_audit",
-    "e32_bot_screening", "m21_image_flatness", "q63_robust_outliers",
-    "x13_decayed_popularity", "t39_k_anonymity_audit",
-    "e33_stickiness_ratio", "s21_label_separability",
-    "q64_yearly_price_drift",
-    # (b) plan changed in round 6 (blocking rework / candidate-stage
-    # factoring; m20 is already pinned in (a)), plus queries REGISTERED
-    # in round 6 (never driver-checked)
-    "d03_dedup_simhash", "d27_weighted_simhash",
-    "d22_cosine_tfidf_neardup",
-    "s16_hnsw_layered_search", "m22_png_roundtrip", "t40_bpe_train",
-    "g06_label_propagation", "t41_bpe_compression_eval",
-    "m23_cross_codec_consistency", "g07_modularity_audit",
-    "x14_log2_histogram_quantiles",
-    # (c) r1 greens with no driver row since round 1
-    "q11_theta_band_join", "q12_having_distinct", "q13_stats_aggregates",
-    "q14_rollup", "q15_cube", "q16_grouping_sets", "q17_window_rank",
-    "q18_window_running", "q19_window_range_frame", "q20_set_operations",
-    "q21_scalar_subquery", "q22_correlated_subquery", "q23_cte_max_revenue",
-    "q24_string_functions", "q26_datetime_functions",
-    "q27_date_diff_interval", "q28_case_cast", "q29_distinct",
-]
-
-
-# Round-7 window, built per the ROUND-7 PROCEDURE above:
-# (a) slots 1-39: every query WITHOUT a driver-green row in
-#     CORRECTNESS_r01..r06 — the 36 registered after the round-6
-#     window froze, plus the 3 round-6 hash-reds (m21/t41/g07, whose
-#     oracles emitted HUGEINT columns; CAST-fixed this round along
-#     with the 5 latent ones already in this list: t44/t45/t46/x15/p08);
-# (b) slots 40-41: plan/oracle changed in round 7 — t40 (trainer moved
-#     to the word-frequency char-BPE formulation; t41/p08, whose plans
-#     changed with it, are in (a)) and g06 (oracle rebuilt from the
-#     shared _g06_chain_ctes builder; d34/g07's identical rebuilds are
-#     in (a); j02's bucketed path was namespaced by applicationId —
-#     output unaffected, already in (a));
-# (c) slots 42-43: the round-6 late plan-changed refactors carried per
-#     the procedure (e02 session labeling factored for e38; d20 CDC
-#     flat builder factored for t43); the bit-identical s03 (no-op
-#     empty-salt concat) and d25 (candidate-stage factoring, plan
-#     bit-identical per the r6 notes) were displaced by m32/p12 when
-#     the window filled;
-# (d) slots 44-49: registered in round 7, never driver-checked
-#     (t47/j03/m30/m31/m32/p12);
-# (e) slot 50: d02, representing the round-7 LSH-candidate
-#     memoization plan change.
-#
-# ROUND-8 PROCEDURE: after CORRECTNESS_r07 lands, pin (a) any queries
-# registered after _R7_WINDOW froze and any whose plan/oracle changes
-# in round 8, then (b) the deferred plan changes with bit-identical
-# outputs: d18/d21/d26/d29 (LSH-candidate memoization, same one-line
-# change d02 verifies this round), s03 (no-op empty-salt concat) and
-# d25 (r6 candidate-stage factoring), then fill to 50
-# oldest-green-first: the
-# remaining _R2_GREEN entries from d09_dedup_clusters onward, then
-# _R3_WINDOW, then _R4_WINDOW, then _R5_WINDOW, then _R6_WINDOW.
-_R7_WINDOW = [
-    # (a) no driver row ever (rowless post-r6-freeze + the 3 CAST-fixed
-    # r6 reds), registration order
-    "m21_image_flatness", "t41_bpe_compression_eval",
-    "g07_modularity_audit",
-    "p08_tokenizer_readiness", "s22_pq_distortion_audit",
-    "e34_periodicity_autocorrelation", "t42_mixture_independence_audit",
-    "e35_anomaly_incidents", "q65_distinct_on", "d31_neardup_explanations",
-    "m24_ahash_invariance", "x15_frequency_cap_sample",
-    "t43_intra_doc_repetition", "s23_kmeans_stability_audit",
-    "e38_session_funnel", "d32_normalized_exact_dedup",
-    "t44_chars_per_token_profile", "p09_dedup_invariants",
-    "m25_gif_roundtrip", "g08_transitive_candidates",
-    "p10_mixture_quota_allocation", "m26_gif_frame_extract",
-    "d33_bbit_minhash_audit", "e36_type_burstiness", "m27_mp4_probe",
-    "j02_bucketed_colocated_join", "t45_gopher_repetition",
-    "s24_prepost_filter_audit", "p11_quota_sampler",
-    "m28_audio_fingerprint_dedup", "q66_ordered_string_agg",
-    "q67_locf_forward_fill", "x16_kmv_anotb", "e37_transition_latency",
-    "g09_edge_embeddedness", "m29_image_patches",
-    "d34_detector_disagreement", "t46_vocab_coverage_curve",
-    "e39_time_decay_attribution",
-    # (b) plan/oracle changed in round 7
-    "t40_bpe_train", "g06_label_propagation",
-    # (c) round-6 late plan-changed refactors (s03's no-op empty-salt
-    # concat — output bit-identical — was displaced by m32 when the
-    # window filled; it joins the round-8 head queue with d18/d21/
-    # d26/d29)
-    "e02_sessionization", "d20_cdc_chunk_dedup",
-    # (d) registered in round 7 (never checked — outrank regression
-    # fill per the established rule)
-    "t47_bpe_fertility_by_lang", "j03_partition_pruned_join",
-    "m30_mp4_sample_extract", "m31_progressive_jpeg_consistency",
-    "m32_jpeg_420_roundtrip", "p12_cluster_balanced_sample",
-    # (e) d02, representing the round-7 LSH-candidate memoization (the
-    # shared banding stage now materializes once per session; outputs
-    # bit-identical, verified in full local sweeps). Its co-consumers
-    # d18/d21/d26/d29 carry the SAME single-line plan change but the
-    # window is full — they are the d25-precedent deferral, queued
-    # FIRST for the round-8 window along with the oldest regression
-    # fills (the remaining _R2_GREEN entries from d09/d10 onward).
-    "d02_dedup_minhash_lsh",
-]
-
-
-# Round-8 window, built per the ROUND-8 PROCEDURE above (round 7's
-# gate came back 50/50 green, closing the cumulative evidence gap —
-# every one of the 282 then-registered queries has a driver-green row
-# in the r1–r7 union with no latest-row red):
-# (a) slots 1-8: registered in round 8 — m33 keyframe selection, m34
-#     EXIF metadata, m35 scene segmentation, m36 orientation
-#     normalization, q68 GROUPS-frame emulation, p13 orientation-
-#     robust dedup, q69 EXCLUDE-clause emulation, m37 FFT pitch
-#     detection, e41 native session_window, m38 Adam7 interlaced PNG,
-#     m39 interlaced GIF, e42 conversion-window funnel, t48 NFC
-#     normalization dedup, x17 KMV intersection, m40 EXIF GPS
-#     sub-IFD extraction, j04 bucket-pruned lookup, p14 snapshot
-#     time-travel diff, p15 incremental rollup (each hash-green at
-#     sf0.001+sf0.01+sf0.1 locally on registration — q69's
-#     NULL-on-empty-exclusion semantics were caught BY the sf0.001
-#     sweep, where isolated ±2-day frames actually occur); then
-#     code-path-touched in round 8 — m31
-#     (the progressive decoder gained DRI/RSTn handling; marker-free
-#     payloads decode through the same merged-scan path, outputs
-#     bit-identical) and j02/j03 (their /tmp warehouse dirs are now
-#     reserved/reclaimed via materialize.session_external_dir; same
-#     paths, same layout, outputs unaffected);
-# (b) next six slots: the deferred bit-identical refactors queued by
-#     the procedure — d18/d21/d26/d29 (round-7 LSH-candidate
-#     memoization, the one-line change d02 verified green in r7), s03
-#     (r6 no-op empty-salt concat), d25 (r6 candidate-stage
-#     factoring); all green in every local sweep since, plus sf0.01
-#     re-runs during round-7 judging;
-# (c) remaining slots: regression fill, oldest-green-first — the
-#     first 23 _R2_GREEN entries (latest driver row r2, five rounds
-#     of churn ago) in _R2_GREEN list order from d09/d10 onward,
-#     skipping s03 (already in (b)).
-#
-# ROUND-9 PROCEDURE: after CORRECTNESS_r08 lands, pin (a) any queries
-# registered after _R8_WINDOW froze and any whose plan/oracle changes
-# in round 9, then (b) regression fill oldest-green-first: the 26
-# remaining latest-row-r2 queries (q43-q49/x05/s01/s02/s04/s05/d05/
-# d06 — displaced from this window as new round-8 registrations
-# arrived — plus the _R2_GREEN tail t01–t12), then the latest-row-r3
-# queries in _R3_WINDOW order, then r4, r5, r6, r7 — recompute
-# "latest green row" from the r1–r8 union rather than trusting list
-# memory.
-_R8_WINDOW = [
-    # (a) round-8 registrations + code-path-touched
-    "m33_keyframe_selection", "m34_exif_metadata",
-    "m35_scene_segmentation", "m36_orientation_normalize",
-    "q68_groups_frame", "p13_orientation_robust_dedup",
-    "q69_window_exclude", "m37_pitch_detection",
-    "e41_native_session_window", "m38_png_adam7_roundtrip",
-    "m39_gif_interlaced_roundtrip", "e42_conversion_window_funnel",
-    "t48_nfc_normalization_dedup", "x17_kmv_intersection",
-    "m40_exif_gps_extract", "j04_bucket_pruned_lookup",
-    "p14_snapshot_diff", "p15_incremental_rollup",
-    "m31_progressive_jpeg_consistency",
-    "j02_bucketed_colocated_join", "j03_partition_pruned_join",
-    # (b) deferred bit-identical refactors (d25-precedent queue)
-    "d18_minhash_estimate_audit", "d21_editdist_verified_neardup",
-    "d26_containment_neardup", "d29_threshold_sensitivity",
-    "s03_ann_ivf_topk", "d25_paragraph_neardup",
-    # (c) oldest-green regression fill: _R2_GREEN order from d09,
-    # skipping s03 (above); these 23 names (the first 23 _R2_GREEN
-    # entries whose only driver row was r2 at the time)
-    "d09_dedup_clusters", "d10_decontaminate", "x01_approx_distinct",
-    "x03_percentile_approx", "e07_funnel_steps", "e08_retention_cohorts",
-    "e09_conversion_lag", "m02_media_features", "m04_image_resize",
-    "q25_math_functions", "q30_topk_per_group", "q31_pivot",
-    "q32_sort_limit_offset", "q33_in_subquery", "q34_union_all_agg",
-    "q35_market_share", "q36_returned_items", "q37_unpivot",
-    "q38_filtered_agg", "q39_null_functions", "q40_exists_inequality",
-    "q41_recursive_cte", "q42_right_join",
-]
-
-
-# Round-9 window, built per the ROUND-9 PROCEDURE above (round 8's
-# gate came back 50/50 green; the r1–r8 union covers all 300
-# then-registered queries with no latest-row red — recomputed from
-# the CORRECTNESS_r*.json files, latest-row histogram r2:26 r3:45
-# r4:45 r5:43 r6:44 r7:47 r8:50):
-# (a) slots 1-17: registered in round 9 — p16 incremental LSH index
-#     maintenance (the p14/p15 move applied to dedup_index.py), p17
-#     per-batch candidate lookup (new_candidate_pairs vs the
-#     batch-blind full-rebanding replay, sharing p16's memoized
-#     layout), m41 Motion-JPEG scene selection (real decoded frames,
-#     no external codec), q70 DISTINCT window aggregates (Spark lacks
-#     them; collect-distinct emulation vs DuckDB's NATIVE distinct
-#     windows), m42 audio resampling (decimate + midpoint upsample
-#     over real WAV round-trips at three stages), t49 normalized
-#     decontamination (uppercased-train perturbation makes the
-#     caught-by-norm-only property a checked result), p18 compaction
-#     equivalence (OPTIMIZE + history retention across the rewrite),
-#     p19 retention GC (manifest pruning + segment deletion + pinned
-#     retained-version reads across expiry), e43 daily periodicity
-#     (exact lag-24 vs lag-13 autocorrelation via hour-index
-#     self-joins on the collapsed hourly table), q71 window FILTER
-#     clause (4th window-surface gap; CASE-guard emulation vs
-#     DuckDB's NATIVE FILTER), m43 palette PNG round-trip (color
-#     type 3, bpp=1 filters, PLTE expansion, both interlace methods),
-#     m44 grayscale PNG round-trip (color type 0, sample->RGB
-#     expansion, closing the 8-bit PNG forms), s26 hybrid
-#     lexical+vector retrieval with Reciprocal Rank Fusion (both
-#     constituent ranks gate-checked, fusion arithmetic exact)
-#     — then plan/oracle changed in round 9: p13/m34/m36/m40
-#     now derive orientation / byte order / hemisphere from
-#     doc_id // 8 (coprime to the % 8 == 0 sample filter) so the gate
-#     exercises all 8 TIFF orientations and both endians instead of
-#     the degenerate orientation-1/little-endian row the old
-#     d % 8 / d % 2 formulas produced (round-8 ADVICE medium item);
-#     each hash-green at sf0.001+sf0.01+sf0.1 locally on registration;
-# (b) slots 18-43: regression fill, oldest-green-first — ALL 26
-#     queries whose latest driver row is round 2 (five-plus rounds of
-#     churn ago), in registry order: the t01-t12 text-analysis block,
-#     the s01/s02/s04/s05 ANN block, d05/d06 embedding near-dup,
-#     q43-q49, x05;
-# (c) slots 44-50: the first 7 latest-row-r3 queries in registry
-#     order (d15, t13-t18; t19/t20/t22/t23/x07/d11/d13/g01/d14/d16/
-#     e10 were displaced as round-9 registrations arrived and rejoin
-#     the r3 remainder).
-#
-# _R10_WINDOW rationale (round 10, executing the pinned procedure
-# below):
-# (a) slots 1-12: round-10 registrations + plan/oracle-changed —
-#     p20/s27 (incremental IVF index maintenance: snapshot-backed
-#     centroids+assignments, O(batch×K) append refresh, running-stat
-#     monoids, drift decision — oracle is the batch-blind DuckDB full
-#     replay trained on the even-vec_id seed snapshot), e44 (the
-#     lsh_candidates_stream==batch identity through the gate: the
-#     actual Structured Streaming pipeline runs inside the query body,
-#     equality pinned as a checked column — the last family with no
-#     driver row), j05 (zipf skew-stress salted join: harmonic-boundary
-#     integer inverse-CDF key, shuffle_hash-pinned salted join, plan-
-#     asserted in tests/test_bucketing.py); s03 (plan refactored to the
-#     shared assign_cells/_ivf_topk kernels), m41+m33 (mdat body offset
-#     now box-walked, not rfind — round-9 ADVICE), p16 (banding
-#     shared-definition refactor: band_rows unchanged semantically,
-#     re-pinned out of caution; p17's kernel is separately covered by
-#     p21's new_candidate_pairs row, so e45 — the stream-STREAM join
-#     parity row, e44's move applied to the watermarked interval join
-#     — takes its slot). Each hash-green at sf0.001+sf0.01
-#     locally on registration.
-# (b) slots 13-50: regression fill, oldest-green-first — ALL 38
-#     queries whose latest driver row is round 3 (recomputed from the
-#     r1-r9 union), in their r3 window order.
-# _R11_WINDOW (active, round 11): 50 slots.
-# (a) slots 1-5: the four queries with NO driver row ever —
-#     m45_raw_video_temporal, p24_incremental_eval_decontam,
-#     e46_stream_sessionization_parity, e47_stateful_totals_parity
-#     (registered after _R10_WINDOW froze; each green in the local
-#     325/325 sweep) — plus p17_incremental_batch_candidates (last
-#     driver row r9; displaced from the r10 window by e45, its kernel
-#     covered transitively by p16+p21 but not itself re-verified).
-# (b) slots 6-50: regression fill, oldest-green-first — ALL 45
-#     queries whose latest driver row is round 4 (recomputed from the
-#     r1-r10 union; the histogram after r10 is r10:50 r9:48 r7:47
-#     r4:45 r6:44 r8:44 r5:43), in their r4 window order. This
-#     advances the oldest-evidence tier from r4 to r5.
-_R11_WINDOW = [
-    # (a) rowless + displaced pins + round-11 registrations (e48
-    # checkpoint-restart parity — displaces q10_semi_join, which keeps
-    # its r4 row and rejoins the fill tier in round 12)
-    "m45_raw_video_temporal", "p24_incremental_eval_decontam",
-    "e46_stream_sessionization_parity", "e47_stateful_totals_parity",
-    "p17_incremental_batch_candidates", "e48_checkpoint_restart_parity",
-    "p25_index_compaction_rebuild", "p26_incremental_simhash_index",
-    "p27_simhash_batch_candidates", "p28_ivf_compaction_rebuild",
-    "p29_dual_detector_admission",
-    # (b) 39 of the 45 latest-row-r4 queries, r4 window order
-    # (q05-q10 displaced by the six round-11 registrations
-    # e48/p25-p29; they keep their r4 rows and refill in round 12)
-    "e18_session_duration_bands", "q60_column_profile",
-    "m10_wav_resample", "m11_bmp_downsample",
-    "x08_bitmap_distinct_rollup", "x09_sketch_intersection",
-    "s11_knn_graph_descent", "s12_ann_ivfpq_topk",
-    "t24_frequency_spectrum", "p03_dedup_decision_record",
-    "j01_salted_skew_join", "d19_substring_runs", "t25_bpe_apply",
-    "x10_kmv_distinct", "x11_kmv_set_ops",
-    "t26_trigram_backoff_score", "q55_ntile_deciles",
-    "e15_rfm_segments", "t21_weighted_sample", "s08_ann_pq_topk",
-    "d12_duplicated_spans", "d01_dedup_exact", "d04_dedup_ngram_jaccard",
-    "d07_dedup_jaccard_prefix_filtered", "d08_dedup_jaccard_blocked",
-    "e01_hourly_rollup", "e03_json_props", "x02_percentile",
-    "x04_array_agg", "e04_asof_join", "e05_range_join",
-    "q50_window_time_range", "e06_gapfill_rollup",
-    "m01_binary_metadata", "m03_frame_sample", "q01_pricing_summary",
-    "q02_filter_predicates", "q03_shipping_priority",
-    "q04_order_priority",
-]
-
-# ROUND-12 PROCEDURE: after CORRECTNESS_r11 lands, pin (a) any queries
-# registered after _R11_WINDOW froze and any whose plan/oracle changes
-# in round 12, then (b) regression fill oldest-green-first: the
-# latest-row-r5 queries (recompute from the r1-r11 union — 43 as of
-# the r11 freeze), then r6, r7, r8, r9, r10 in their window orders.
-_R10_WINDOW = [
-    # (a) round-10 registrations + plan-changed
-    "p20_incremental_ivf_index", "s27_ann_incremental_index_topk",
-    "e44_lsh_stream_batch_parity", "j05_zipf_salted_join",
-    "p21_incremental_admission", "p22_ivf_drift_retrain",
-    "p23_incremental_vector_neardup",
-    "s03_ann_ivf_topk", "m41_mjpeg_scene_select",
-    "m33_keyframe_selection", "p16_incremental_lsh_index",
-    "e45_stream_stream_join_parity",
-    # (b) all 38 latest-row-r3 queries, r3 window order
-    "t19_vocab_profile", "t20_rule_filter", "t22_safe_split",
-    "t23_bpe_pair_stats", "x07_cms_heavy_hitters",
-    "d11_canonical_keeper", "d13_cross_source_audit",
-    "g01_neardup_pagerank", "d14_dedup_profile", "d16_boilerplate_strip",
-    "e10_last_touch_attribution", "x06_sketch_merge_rollup",
-    "e11_event_transitions", "e12_trending_types",
-    "e13_rolling_active_users", "e14_hourly_anomalies",
-    "e16_hopping_windows", "e17_session_paths", "m05_binary_windows",
-    "m06_bmp_decode", "m07_wav_decode", "m08_audio_frame_energy",
-    "m09_image_ahash", "p01_curation_pipeline", "s06_ann_filtered_topk",
-    "s07_ann_rerank_topk", "s09_knn_graph", "s10_mips_topk",
-    "d17_semantic_dedup", "p02_semantic_dedup",
-    "q51_suppliers_kept_waiting", "q52_dormant_customers",
-    "q53_argmax_aggregates", "q54_bitwise_aggregates",
-    "q56_relational_division", "q57_ordered_set_aggs",
-    "q58_null_aware_not_in", "q59_min_cost_supplier",
-]
-
-# ROUND-11 PROCEDURE: after CORRECTNESS_r10 lands, pin (a) the
-# round-10 registrations that did not fit the frozen window —
-# m45_raw_video_temporal, p24_incremental_eval_decontam,
-# e46_stream_sessionization_parity, e47_stateful_totals_parity
-# (each hash-green locally at sf0.001+sf0.01 — p24/e46/e47 also at
-# sf0.1 — on registration) and p17_incremental_batch_candidates (displaced
-# by e45, its kernel covered by p16/p21 rows) — plus any queries
-# registered after _R10_WINDOW froze and any whose plan/oracle changes
-# in round 11, then (b) regression fill oldest-green-first: the
-# remaining latest-row-r4 queries (recompute from the r1-r10 union —
-# ~45 as of the r10 freeze: e18/q60/m10 onward in r4 window order),
-# then r5, r6, r7, r8, r9 in their window orders.
-#
-# ROUND-10 PROCEDURE (executed above): after CORRECTNESS_r09 lands, pin (a) any
-# queries registered after _R9_WINDOW froze and any whose plan/oracle
-# changes in round 10, then (b) regression fill oldest-green-first:
-# the 38 remaining latest-row-r3 queries (as of the r9 freeze:
-# t19/t20/t22/t23/x07/d11/d13/g01/d14/d16/e10 — displaced as round-9
-# registrations arrived — e11/e12/e13/e14/e16/e17, m05-m09, p01,
-# s06/s07/s09/s10, d17, p02, x06, and the q51-q59 block — but recompute the latest-green rows
-# from the r1–r9 union rather than trusting this list), then r4, r5,
-# r6, r7, r8 in their window orders.
-_R9_WINDOW = [
-    # (a) round-9 registrations + plan-changed
-    "p16_incremental_lsh_index", "p17_incremental_batch_candidates",
-    "m41_mjpeg_scene_select", "q70_distinct_window_count",
-    "m42_audio_resample", "t49_normalized_decontaminate",
-    "p18_compaction_equivalence", "p19_retention_gc",
-    "e43_daily_periodicity", "q71_window_filter_clause",
-    "m43_png_palette_roundtrip", "m44_png_grayscale_roundtrip",
-    "s26_hybrid_rrf_fusion",
-    "p13_orientation_robust_dedup", "m34_exif_metadata",
-    "m36_orientation_normalize", "m40_exif_gps_extract",
-    # (b) all 26 latest-row-r2 queries (oldest driver evidence)
-    "t01_token_count", "t02_quality_score", "t03_lang_id",
-    "t04_fingerprint", "t05_wordcount", "t06_tfidf_top_terms",
-    "t07_heavy_hitters_salted", "t08_train_split",
-    "t09_stratified_sample", "t10_deterministic_shuffle",
-    "t11_repetition_signals", "t12_lm_quality_score",
-    "s01_ann_bruteforce_topk", "d05_embedding_neardup",
-    "s02_ann_lsh_topk", "d06_embedding_neardup_blocked",
-    "s04_ann_quantized_topk", "s05_ann_range_search",
-    "q43_cross_join", "q44_window_distribution",
-    "q45_pattern_matching", "q46_below_avg_quantity",
-    "q47_supplier_share", "q48_multiset_ops", "q49_lateral_join",
-    "x05_histogram",
-    # (c) latest-row-r3 fill, registry order
-    "d15_bloom_prefilter", "t13_sequence_pack", "t14_pii_redact",
-    "t15_domain_mixture", "t16_bigram_lm_score", "t17_doc_chunking",
-    "t18_ngram_novelty",
-]
-
-
-# ROUND-13 PROCEDURE: after CORRECTNESS_r12 lands, pin (a) any queries
-# registered after _R12_WINDOW froze (as of the round-12 close:
-# p31_legacy_bucket_migration, locally hash-green at both SFs, plus
-# t36_zipf_doubling_ratio displaced by e49) and any whose plan/oracle
-# changes in round 13, then (b) regression fill
-# oldest-driver-evidence-first:
-# recompute the latest-round-per-query union from CORRECTNESS_r1-r12
-# (after r12 the oldest tier is the 44 latest-row-r6 queries), filling
-# tiers r6, r7, r8, ... in their original window orders.
-# _R12_WINDOW (round 12): 50 slots.
-# (a) slots 1-8: the six queries whose latest driver row is ROUND 4
-#     (q05-q10 — displaced from the r11 window by the round-11
-#     registrations, seven rounds since their last driver check;
-#     VERDICT r11 "Next round" #3) plus p30_bucket_pruned_unique_clash
-#     (new this round: the bucket-pruned unique-clash engine branch,
-#     previously pytest-only — VERDICT r11 "Next round" #5; locally
-#     hash-green at sf0.001 + sf0.01 on registration) and
-#     e49_streaming_admission_parity (new this round: p29's
-#     dual-detector admission as a foreachBatch consumer of a real
-#     readStream — VERDICT r11 "Next round" #7; locally hash-green at
-#     both SFs on registration).
-# (b) slots 9-50: regression fill, oldest-green-first — 42 of the 43
-#     queries whose latest driver row is round 5 (recomputed from the
-#     r1-r11 union; histogram after r11 is r11:50 r10:50 r9:47 r7:47
-#     r6:44 r8:44 r5:43 r4:6), in their r5 window order. This
-#     advances the oldest-evidence tier from r4/r5 to r6
-#     (t36_zipf_doubling_ratio, the tier's tail slot, is displaced by
-#     e49 — it keeps its r5 row and refills first in round 13).
-_R12_WINDOW = [
-    # (a) stale-r4 pins + the round-12 registration
-    "q05_local_supplier_volume", "q06_forecast_revenue",
-    "q07_left_join_nulls", "q08_full_outer_join", "q09_anti_join",
-    "q10_semi_join", "p30_bucket_pruned_unique_clash",
-    "e49_streaming_admission_parity",
-    # (b) 42 of the 43 latest-row-r5 queries, r5 window order (t36
-    # displaced by e49; it refills first in round 13)
-    "d23_eval_contamination_report", "d24_frequency_downsample",
-    "t27_dsir_importance", "t28_temperature_sampling",
-    "g02_triangle_count", "m12_bmp_channel_stats", "m13_silence_runs",
-    "m14_modality_router", "e19_interarrival_profile",
-    "e20_cooccurrence_lift", "e21_sax_motifs", "e22_markov_attribution",
-    "q61_order_streaks", "p04_selection_pipeline", "s14_ann_recall_audit",
-    "s15_mmr_diversified_topk", "t29_hashed_classifier_score",
-    "p05_model_curation_report", "m15_jpeg_roundtrip",
-    "m16_jpeg_ahash_stability", "s13_graph_beam_search",
-    "t30_perplexity_buckets", "g03_degree_assortativity",
-    "t31_heldout_lm_eval", "d28_cluster_quality_audit",
-    "e23_hourly_seasonality", "m17_frame_motion_profile",
-    "s17_ivf_drift_monitor", "t32_source_vocab_divergence",
-    "e24_attribution_comparison", "p06_corpus_report_card",
-    "e25_user_concentration", "t33_lexical_diversity",
-    "s18_embedding_norm_screen", "m18_wav_peak_normalize",
-    "e26_transition_predictability", "t34_langid_confusion",
-    "q62_monotone_value_streaks", "e27_type_cross_correlation",
-    "t35_code_prose_profile", "x12_uniform_group_sample",
-    "m19_clipping_runs",
-]
-
-
-# ROUND-14 PROCEDURE: after CORRECTNESS_r13 lands, pin (a) any queries
-# registered after _R13_WINDOW froze (as of the round-13 close:
-# d35_cosine_prefix_filtered, the lossless prefix-filter audit —
-# locally hash-green at both SFs, twice) and any whose plan/oracle
-# changes in round 14, then (b) regression fill
-# oldest-driver-evidence-first:
-# recompute the latest-round-per-query union from CORRECTNESS_r1-r13
-# (after r13 the oldest tier is the 44 remaining latest-row-r7
-# queries — m21/t41/g07 advance to r13 with this window), filling
-# tiers r7, r8, r9, ... in their original window orders.
-# _R13_WINDOW (active, round 13): 50 slots.
-# (a) slots 1-3: p31_legacy_bucket_migration (registered at the
-#     round-12 close, no driver row yet — VERDICT r12 "Next round" #1),
-#     t36_zipf_doubling_ratio (the lone r5-evidence straggler,
-#     displaced from the r12 window by e49), and
-#     e50_outoforder_admission (new this round: out-of-order streaming
-#     ingest admission — per-batch pair logging + finalization sweep
-#     over a deliberately interleaved two-file source; VERDICT r12
-#     "Next round" #5).
-# (b) slots 4-47: all 44 queries whose latest driver row is round 6
-#     (recomputed from the r1-r12 union; histogram after r12 is
-#     r12:50 r11:50 r10:50 r9:47 r8:44 r7:47 r6:44 r5:1), in their r6
-#     window order. This includes s16_hnsw_layered_search, whose plan
-#     changed this round (closure-edge builds prefilter the self-join
-#     inputs by the layer hash — VERDICT r12 "Next round" #2).
-# (c) slots 48-50: the first 3 latest-row-r7 queries in r7 window
-#     order (m21/t41/g07); the remaining 44 r7 rows refill in round 14.
-_R13_WINDOW = [
-    # (a) rowless / new / displaced straggler
-    "p31_legacy_bucket_migration", "t36_zipf_doubling_ratio",
-    "e50_outoforder_admission",
-    # (b) all 44 latest-row-r6 queries, r6 window order
-    "t37_oov_rate_audit", "e28_session_concurrency",
-    "s19_ivf_probe_recall_curve", "g04_component_size_distribution",
-    "p07_attrition_funnel", "m20_image_neardup_pairs",
-    "e29_conversion_survival", "e31_adjusted_anomalies",
-    "t38_kneser_ney_score", "e30_cusum_changepoints",
-    "g05_kcore_peel", "s20_ivf_purity_audit", "e32_bot_screening",
-    "q63_robust_outliers", "x13_decayed_popularity",
-    "t39_k_anonymity_audit", "e33_stickiness_ratio",
-    "s21_label_separability", "q64_yearly_price_drift",
-    "d03_dedup_simhash", "d27_weighted_simhash",
-    "d22_cosine_tfidf_neardup", "s16_hnsw_layered_search",
-    "m22_png_roundtrip", "m23_cross_codec_consistency",
-    "x14_log2_histogram_quantiles", "q11_theta_band_join",
-    "q12_having_distinct", "q13_stats_aggregates", "q14_rollup",
-    "q15_cube", "q16_grouping_sets", "q17_window_rank",
-    "q18_window_running", "q19_window_range_frame",
-    "q20_set_operations", "q21_scalar_subquery",
-    "q22_correlated_subquery", "q23_cte_max_revenue",
-    "q24_string_functions", "q26_datetime_functions",
-    "q27_date_diff_interval", "q28_case_cast", "q29_distinct",
-    # (c) r7-tier head, r7 window order
-    "m21_image_flatness", "t41_bpe_compression_eval",
-    "g07_modularity_audit",
-]
-
-
-# ROUND-15 PROCEDURE: after CORRECTNESS_r14 lands, pin (a) any queries
-# registered after _R14_WINDOW froze (as of the round-14 close:
-# e52_compaction_during_ingest, the online-compaction-during-ingest
-# composition — locally hash-green at both SFs on registration) and
-# any whose plan/oracle changes in round 15, then (b) regression fill
-# oldest-driver-evidence-first:
-# recompute the latest-round-per-query union from CORRECTNESS_r1-r14
-# (after r14 the oldest tier is the 40 remaining latest-row-r8
-# queries — m35/q68/q69/m37 advance to r14 with this window), filling
-# tiers r8, r9, r10, ... in their original window orders.
+# The correctness gate samples the FIRST 50 entries of queries(), so the
+# current window's names lead (in window order) and every other
+# registered query follows in registration order. Only _R14_WINDOW is
+# read; the earlier rounds' windows live in version control. The next
+# window pins queries registered or changed since this one froze (e.g.
+# e52_compaction_during_ingest), then fills oldest-gate-evidence-
+# first from the CORRECTNESS_r* union (after r14: the 40 remaining
+# latest-row-r8 queries).
 # _R14_WINDOW (active, round 14): 50 slots.
 # (a) slots 1-2: d35_cosine_prefix_filtered (registered at the
 #     round-13 close, the only query without a driver row — VERDICT

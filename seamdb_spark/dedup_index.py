@@ -44,12 +44,7 @@ from .operators.hashing import (
     minhash_value,
 )
 from .session import local_frame
-from .snapshots import TableSnapshots
-
-# Target input bytes per written index-state file (see _derive_of): a
-# micro-batch lands as one file; a full-corpus (re)build writes
-# ~bytes/64MB files in parallel. Constant, corpus-independent.
-SEG_TARGET_BYTES = 64 * 1024 * 1024
+from .snapshots import TableSnapshots, recorded_bytes, segment_files
 
 # _derive_of only force-broadcasts a new segment set's id list while
 # the SOURCE input stays under this constant — the id projection of
@@ -261,17 +256,18 @@ class _IncrementalTextIndex:
     def _state_schema(self):
         return self._derive(local_frame(self._spark, [], self._source_schema())).schema
 
-    def _derive_of(self, files: list[str]) -> DataFrame:
+    def _derive_of(self, files: list[str], in_bytes: int | None) -> DataFrame:
+        """This index's rows for the given source segments, whose
+        manifest entries record ``in_bytes`` in total (``None``: a
+        legacy entry without a size, so the layout is left alone).
+
+        Both branches leave core-count near-empty partitions (measured
+        32 files / ~5-231 KiB per state segment at sf0.1), so the rows
+        are repartitioned to ``segment_files(in_bytes)``; a coalesce
+        would fold the derivation itself into that many tasks."""
         spark = self._spark
         if not files:
             return self._derive(local_frame(spark, [], self._source_schema()))
-        in_bytes = 0
-        for f in files:
-            try:
-                in_bytes += os.path.getsize(f)
-            except OSError:
-                in_bytes = -1
-                break
         if self._derive_hint is not None:
             # The caller provided the derivation of a superset corpus
             # (session-memoized, localCheckpointed): slice it by the new
@@ -280,70 +276,39 @@ class _IncrementalTextIndex:
             # replaces the shingle/md5/minhash pass (measured
             # ~1.5-3 s -> ~0.3 s per refresh at sf0.1, and the e52
             # compaction rebuild re-derives the whole table).
-            ids = (
+            seg_ids = (
                 spark.read.schema(self._source_schema())
                 .parquet(*files)
                 .select(F.col(self.id_col).alias("doc_id"))
                 .distinct()
             )
-            if 0 <= in_bytes <= HINT_IDS_BROADCAST_MAX_BYTES:
-                # A micro-batch-sized segment set: its id list is a
-                # fraction of the CONSTANT input-byte bound, so the
-                # broadcast is scale-safe and keeps the hint side
-                # exchange-free. The slice INHERITS the memoized hint's
-                # checkpoint partitioning (the session core budget), so
-                # without re-clustering every micro-batch commit wrote
-                # ~core-count near-empty state files (measured 32 files
-                # / ~5 KB each, 96 files per stream-gate state at
-                # sf0.1) — the round-14 byte-targeted sizing below only
-                # covered the non-hint branch. One cheap exchange of
-                # the (bounded, index-sized) slice buys size-targeted
-                # segment files while the hint probe stays parallel;
-                # same formula as the direct-derivation branch.
-                from .session import default_parallelism
+            if in_bytes is None or in_bytes > HINT_IDS_BROADCAST_MAX_BYTES:
+                # Rebuild-sized (e.g. compaction rewrote the whole
+                # table) or unmeasured input: the id set grows with the
+                # corpus — no forced broadcast; the planner/AQE picks
+                # the join from actual sizes.
+                return self._derive_hint().join(seg_ids, "doc_id")
+            # A micro-batch-sized segment set: its id list is a fraction
+            # of the CONSTANT input-byte bound, so the broadcast is
+            # scale-safe and keeps the hint side exchange-free.
+            derived = self._derive_hint().join(F.broadcast(seg_ids), "doc_id")
+        else:
+            # Spread the new segments across cores BEFORE deriving: a
+            # small append batch is often one parquet file = one scan
+            # partition, and the expensive per-row work (shingle explode
+            # + md5 + minhash) sits UPSTREAM of the derivation's first
+            # shuffle, so without this it runs single-threaded (measured
+            # 5.5s -> ~1s per p16 refresh at sf0.1). The count tracks
+            # the session's core budget.
+            from .session import default_parallelism
 
-                sliced = self._derive_hint().join(F.broadcast(ids), "doc_id")
-                n_out = max(1, min(
-                    default_parallelism(), in_bytes // SEG_TARGET_BYTES + 1
-                ))
-                return sliced.repartition(int(n_out))
-            # Rebuild-sized input (e.g. compaction rewrote the whole
-            # table): the id set grows with the corpus — no forced
-            # broadcast; the planner/AQE picks the join from actual
-            # sizes.
-            return self._derive_hint().join(ids, "doc_id")
-        # Spread the new segments across cores BEFORE deriving: a small
-        # append batch is often one parquet file = one scan partition,
-        # and the expensive per-row work (shingle explode + md5 +
-        # minhash) sits UPSTREAM of the derivation's first shuffle, so
-        # without this it runs single-threaded (measured 5.5s -> ~1s
-        # per p16 refresh at sf0.1). One cheap shuffle of the raw batch
-        # text buys full parallelism; on a cluster it also spreads a
-        # hot append file across executors. The count tracks the
-        # session's core budget instead of a hard-coded 32.
-        from .session import default_parallelism
-
-        df = (
-            spark.read.schema(self._source_schema())
-            .parquet(*files)
-            .repartition(default_parallelism(), self.id_col)
-        )
-        derived = self._derive(df)
-        # Cluster the derivation's OUTPUT into size-targeted segment
-        # files before the snapshot write: the derive parallelism above
-        # leaves ~core-count near-empty output partitions (measured 32
-        # files / 231 KiB per LSH state segment at sf0.1), and every
-        # downstream index() read, candidate lookup, and manifest GC
-        # then pays per-file listing+open cost times segments. One
-        # cheap extra shuffle of the (tiny vs source text) index rows
-        # buys segments of ~SEG_TARGET_BYTES files — derived from the
-        # INPUT byte size, so a 100 TB rebuild still writes thousands
-        # of full files in parallel while a micro-batch writes one.
-        if in_bytes >= 0:
-            n_out = max(1, min(
-                default_parallelism(), in_bytes // SEG_TARGET_BYTES + 1
-            ))
-            derived = derived.repartition(int(n_out))
+            derived = self._derive(
+                spark.read.schema(self._source_schema())
+                .parquet(*files)
+                .repartition(default_parallelism(), self.id_col)
+            )
+        if in_bytes is not None:
+            derived = derived.repartition(segment_files(in_bytes))
         return derived
 
     def _rows_per_doc(self) -> int | None:
@@ -378,12 +343,15 @@ class _IncrementalTextIndex:
             .count()
         )
 
-    def _commit_counted(self, files: list[str], mode: str, extra: dict) -> int:
-        """Derive ``files``, commit the result, and return the number of
-        documents the commit indexed — via the observe metric when the
-        fan-out is fixed (no extra job), else via the post-write scan."""
+    def _commit_counted(
+        self, files: list[str], in_bytes: int | None, mode: str, extra: dict
+    ) -> int:
+        """Derive ``files`` (``in_bytes`` recorded, see _derive_of),
+        commit the result, and return the number of documents the
+        commit indexed — via the observe metric when the fan-out is
+        fixed (no extra job), else via the post-write scan."""
         rows_per_doc = self._rows_per_doc()
-        derived = self._derive_of(files)
+        derived = self._derive_of(files, in_bytes)
         if rows_per_doc:
             obs = Observation()
             derived = derived.observe(obs, F.count(F.lit(1)).alias("rows"))
@@ -401,8 +369,8 @@ class _IncrementalTextIndex:
                  "files_read": <segments derived this refresh>,
                  "n_new_docs": <documents indexed this refresh>}.
         """
-        snaps = self._source_snaps()
-        current = snaps.current_files()
+        sizes = self._source_snaps().current_file_bytes()
+        current = list(sizes)
         processed_list = self._processed()
         processed = set(processed_list or [])
         unsound = processed_list is None
@@ -411,7 +379,8 @@ class _IncrementalTextIndex:
 
         if vanished or unsound:
             n = self._commit_counted(
-                current, mode="overwrite", extra={"processed": current}
+                current, recorded_bytes(sizes.values()),
+                mode="overwrite", extra={"processed": current},
             )
             return {"mode": "rebuild", "files_read": len(current), "n_new_docs": n}
 
@@ -419,7 +388,8 @@ class _IncrementalTextIndex:
             return {"mode": "noop", "files_read": 0, "n_new_docs": 0}
 
         n = self._commit_counted(
-            new_files, mode="append", extra={"processed": current}
+            new_files, recorded_bytes(sizes[f] for f in new_files),
+            mode="append", extra={"processed": current},
         )
         return {"mode": "incremental", "files_read": len(new_files), "n_new_docs": n}
 

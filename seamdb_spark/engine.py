@@ -43,7 +43,7 @@ from .catalog import DEFAULT_SCHEMA, Metastore
 from .dml import execute_insert
 from .errors import DatabaseNotFoundError, InvalidArgumentError, TableNotFoundError
 from .session import local_frame
-from .snapshots import TableSnapshots
+from .snapshots import TableSnapshots, recorded_bytes, segment_files
 
 _RESULT_SCHEMA = T.StructType([T.StructField("result", T.StringType(), False)])
 _COUNT_SCHEMA = T.StructType([T.StructField("count", T.LongType(), False)])
@@ -116,22 +116,20 @@ class Engine:
         return snaps.read(self.spark, desc.spark_schema(), version=version)
 
     def compact(self, name: str) -> int:
-        """Rewrite the table's current snapshot as one fresh segment
-        (OPTIMIZE): appends accumulate small files; compaction folds
-        them into a single overwrite commit. Readers pinned to older
+        """Rewrite the table's current snapshot (OPTIMIZE): appends
+        accumulate small files; compaction coalesces the scan (no
+        exchange) into ``segment_files`` of the manifest-recorded bytes
+        (an unmeasured legacy snapshot keeps the scan's layout) and
+        commits it as one overwrite. Readers pinned to older
         manifests are unaffected (their files are retained until GC).
         On a bucketed table the rewrite is hash-clustered, so compaction
         doubles as the migration that makes ALL segments prunable."""
-        import os as _os
-
         desc = self.store.get_table(self.database, name)
         snaps = TableSnapshots(self.store.table_dir(self.database, name))
-        total_bytes = sum(
-            _os.path.getsize(f) for f in snaps.current_files() if _os.path.exists(f)
-        )
-        # target ~128 MB output files (matches maxPartitionBytes)
-        target = max(1, total_bytes // (128 * 1024 * 1024))
-        current = snaps.read(self.spark, desc.spark_schema()).coalesce(int(target))
+        in_bytes = recorded_bytes(snaps.current_file_bytes().values())
+        current = snaps.read(self.spark, desc.spark_schema())
+        if in_bytes is not None:
+            current = current.coalesce(segment_files(in_bytes))
         return snaps.commit(
             current, mode="overwrite",
             bucketing=snaps.current_extra().get("bucketing"),

@@ -58,15 +58,12 @@ both retrieval families (LSH: dedup_index.py, IVF: here).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .dedup_index import SEG_TARGET_BYTES
 from .session import local_frame
-from .snapshots import TableSnapshots
+from .snapshots import TableSnapshots, recorded_bytes, segment_files
 
 # Re-center when >50% of indexed vectors would change cells under the
 # one-step re-centered centroids. Deliberately high: appends drawn from
@@ -123,7 +120,9 @@ class IncrementalIVFIndex:
         cores first: an append batch is often ONE parquet file = one
         scan partition, and the per-row quantize+assign work sits
         upstream of the first shuffle (the dedup_index._derive_of
-        lesson)."""
+        lesson). Each state commit then coalesces its pinned batch to
+        ``segment_files`` of the input's manifest-recorded bytes (no
+        shuffle, no recompute); unmeasured input keeps the spread."""
         from .operators.similarity import _qemb
         from .session import default_parallelism
 
@@ -133,30 +132,6 @@ class IncrementalIVFIndex:
             .repartition(default_parallelism(), "vec_id")
         )
         return _qemb(df)
-
-    def _sized_for_commit(self, assigned: DataFrame, files: list[str]) -> DataFrame:
-        """Cluster a pinned (localCheckpointed) assignment batch into
-        size-targeted segment files before the snapshot commit — the
-        dedup_index._derive_of discipline: the pin inherits _quant_of's
-        core-budget partitioning, so without this every commit wrote
-        ~core-count near-empty files (measured 32 files per segment at
-        sf0.1) and every index() read + drift scan + manifest GC paid
-        per-file open cost times segments. coalesce (not repartition):
-        the input is an already-checkpointed bounded batch, so merging
-        read groups costs no shuffle and no recompute; a 100 TB rebuild
-        still writes ~bytes/64 MB files in parallel."""
-        from .session import default_parallelism
-
-        in_bytes = 0
-        for f in files:
-            try:
-                in_bytes += os.path.getsize(f)
-            except OSError:
-                return assigned  # unmeasurable input: leave the layout alone
-        n_out = max(1, min(
-            default_parallelism(), in_bytes // SEG_TARGET_BYTES + 1
-        ))
-        return assigned.coalesce(int(n_out))
 
     def _cdf(self, centroids: list) -> DataFrame:
         # K×64 int64 driver literal — always broadcast-sized
@@ -265,24 +240,29 @@ class IncrementalIVFIndex:
                 merged_s[cid] = sums[cid]
         return {"cell_counts": merged_c, "cell_sums": merged_s}
 
-    def _train_commit(self, files: list[str], processed: list[str]) -> int:
-        """Train Lloyd on the given segments, assign them, overwrite the
-        index state (one derivation: the assigned batch is pinned, then
-        both the stats aggregate and the commit read the pin). Returns
-        the number of indexed vectors."""
+    def _train_commit(self, sizes: dict[str, int | None]) -> int:
+        """Train Lloyd on the given source segments (path -> recorded
+        bytes), assign them, overwrite the index state with them as the
+        processed list (one derivation: the assigned batch is pinned,
+        then both the stats aggregate and the commit read the pin).
+        Returns the number of indexed vectors."""
         from .operators.similarity import _centroid_rows, assign_cells
 
+        files = list(sizes)
         quant = self._quant_of(files).localCheckpoint(eager=True)
         centroids = _centroid_rows(quant)
         assigned = assign_cells(quant, self._cdf(centroids)).localCheckpoint(
             eager=True
         )
         n, counts, sums = self._stats_of(assigned)
+        in_bytes = recorded_bytes(sizes.values())
+        if in_bytes is not None:
+            assigned = assigned.coalesce(segment_files(in_bytes))
         self.state.commit(
-            self._sized_for_commit(assigned, files),
+            assigned,
             mode="overwrite",
             extra={
-                "processed": processed,
+                "processed": files,
                 "centroids": centroids,
                 **self._merge_stats({}, counts, sums),
             },
@@ -298,7 +278,8 @@ class IncrementalIVFIndex:
         """
         from .operators.similarity import assign_cells
 
-        current = self.source.current_files()
+        sizes = self.source.current_file_bytes()
+        current = list(sizes)
         extra = self.state.current_extra()
         processed_list = extra.get("processed")
         unsound = processed_list is None and self.state.current_version() > 0
@@ -307,13 +288,13 @@ class IncrementalIVFIndex:
         new_files = [f for f in current if f not in processed]
 
         if unsound or vanished:
-            n = self._train_commit(current, current)
+            n = self._train_commit(sizes)
             return {
                 "mode": "rebuild", "files_read": len(current),
                 "n_new_vecs": n, "n_indexed": n, "n_moved": 0,
             }
         if not extra.get("centroids"):
-            n = self._train_commit(current, current)
+            n = self._train_commit(sizes)
             return {
                 "mode": "train", "files_read": len(current),
                 "n_new_vecs": n, "n_indexed": n, "n_moved": 0,
@@ -332,13 +313,16 @@ class IncrementalIVFIndex:
             self._quant_of(new_files), self._cdf(self.centroids())
         ).localCheckpoint(eager=True)
         n_new, counts, sums = self._stats_of(assigned)
+        in_bytes = recorded_bytes(sizes[f] for f in new_files)
+        if in_bytes is not None:
+            assigned = assigned.coalesce(segment_files(in_bytes))
         new_extra = {
             "processed": current,
             "centroids": extra["centroids"],
             **self._merge_stats(extra, counts, sums),
         }
         self.state.commit(
-            self._sized_for_commit(assigned, new_files),
+            assigned,
             mode="append",
             extra=new_extra,
         )
@@ -354,13 +338,15 @@ class IncrementalIVFIndex:
             centroids = sorted(
                 (int(r.cid), [int(x) for x in r.cvec]) for r in cand
             )
-            state_files = self.state.current_files()
+            state_bytes = recorded_bytes(self.state.current_file_bytes().values())
             reassigned = assign_cells(
                 self.index().select("vec_id", "q"), self._cdf(centroids)
             ).localCheckpoint(eager=True)
             _, counts, sums = self._stats_of(reassigned)
+            if state_bytes is not None:
+                reassigned = reassigned.coalesce(segment_files(state_bytes))
             self.state.commit(
-                self._sized_for_commit(reassigned, state_files),
+                reassigned,
                 mode="overwrite",
                 extra={
                     "processed": current,

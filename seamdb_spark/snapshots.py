@@ -17,6 +17,13 @@ an INSERT is a true append: old segments are never rewritten. A crash
 before the manifest swap leaves the previous snapshot intact
 (write-manifest-last).
 
+As in Delta and Iceberg, each file entry records its ``bytes`` (from
+the listing ``commit`` makes of the files it wrote), so consumers size
+input from the manifest they already read, never by a filesystem call.
+``segment_files`` is the one rule mapping input bytes to an index or
+compaction commit's file count. Legacy plain-path entries have no size:
+a file set holding one is unmeasured and keeps its layout.
+
 Scale notes (100 TB): appends add files, never rewrite; the commit
 point is one rename regardless of table size. Old manifests are kept
 for KEEP_MANIFESTS versions (time travel / debugging); segment files
@@ -28,6 +35,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -44,6 +52,23 @@ KEEP_MANIFESTS = 3
 # that grow with n go quadratic where you least expect it); 1M rows
 # x O(100B) rows ≈ a parquet file in the 100 MB class.
 SEG_MAX_RECORDS_PER_FILE = 1_000_000
+# Recorded input bytes per written segment file (segment_files).
+# Constant, corpus-independent.
+SEG_TARGET_BYTES = 64 * 1024 * 1024
+
+
+def segment_files(in_bytes: int) -> int:
+    """Output files for a commit of ``in_bytes`` recorded input bytes:
+    a micro-batch lands as one file; with no core-count cap, a 100 TB
+    rebuild writes ~bytes/64 MB files in parallel."""
+    return in_bytes // SEG_TARGET_BYTES + 1
+
+
+def recorded_bytes(sizes: Iterable[int | None]) -> int | None:
+    """Total of recorded file sizes (values of ``current_file_bytes``);
+    ``None`` when any file is a legacy entry with no recorded size."""
+    sizes = list(sizes)
+    return None if None in sizes else sum(sizes)
 
 
 class TableSnapshots:
@@ -67,10 +92,11 @@ class TableSnapshots:
 
     @staticmethod
     def _entries(files: list) -> list[tuple[str, int | None]]:
-        """Normalize manifest file entries: legacy plain paths carry no
-        bucket (always scanned); bucketed segments record
-        {"path", "bucket"} so readers can prune at the FILE-LIST level
-        (Iceberg-style partition pruning without reading a byte)."""
+        """Normalize manifest file entries to (path, bucket): legacy
+        plain paths carry no bucket (always scanned); entries record
+        {"path", "bytes"} plus, for bucketed segments, "bucket", so
+        readers can prune at the FILE-LIST level (Iceberg-style
+        partition pruning without reading a byte)."""
         out = []
         for f in files:
             if isinstance(f, str):
@@ -84,6 +110,15 @@ class TableSnapshots:
 
     def current_file_entries(self) -> list[tuple[str, int | None]]:
         return self._entries(self._read_manifest()["files"])
+
+    def current_file_bytes(self) -> dict[str, int | None]:
+        """Path -> recorded bytes of every current file, in manifest
+        order; ``None`` for a legacy plain-path entry (no size)."""
+        files = self._read_manifest()["files"]
+        return {
+            p: None if isinstance(f, str) else f.get("bytes")
+            for f, (p, _) in zip(files, self._entries(files))
+        }
 
     # ---------------------------------------------------------- read
     def read(
@@ -162,6 +197,8 @@ class TableSnapshots:
         the __bucket column lives only in the directory name, never in
         the stored schema) and record each file's bucket id in the
         manifest so readers can prune by key.
+        Every new entry records its file's ``bytes``; output sizing is
+        the caller's (``segment_files``).
         """
         from pyspark.sql import functions as F
 
@@ -210,17 +247,11 @@ class TableSnapshots:
                     continue
                 b = int(sub.split("=", 1)[1])
                 new_files.extend(
-                    {"path": os.path.join(subdir, f), "bucket": b}
-                    for f in sorted(os.listdir(subdir))
-                    if f.endswith(".parquet")
+                    {**f, "bucket": b} for f in _listed_parquet(subdir)
                 )
         else:
             df.write.mode("overwrite").parquet(seg_dir)
-            new_files = sorted(
-                os.path.join(seg_dir, f)
-                for f in os.listdir(seg_dir)
-                if f.endswith(".parquet")
-            )
+            new_files = _listed_parquet(seg_dir)
         files = (manifest["files"] if mode == "append" else []) + new_files
         if extra is None and mode == "append":
             extra = manifest.get("extra")
@@ -314,6 +345,16 @@ class TableSnapshots:
 
     def drop(self) -> None:
         shutil.rmtree(self.table_dir, ignore_errors=True)
+
+
+def _listed_parquet(directory: str) -> list[dict]:
+    """Sorted {"path", "bytes"} entries of the parquet files in ``directory``."""
+    with os.scandir(directory) as it:
+        return [
+            {"path": e.path, "bytes": e.stat().st_size}
+            for e in sorted(it, key=lambda e: e.name)
+            if e.name.endswith(".parquet")
+        ]
 
 
 def _rewrite_paths(obj, src: str, dst: str):

@@ -19,6 +19,7 @@ a file-source micro-batch stream.
 
 from __future__ import annotations
 
+import logging
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
@@ -26,6 +27,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 SESSION_GAP = "30 minutes"
+
+_log = logging.getLogger(__name__)
 
 
 def stream_state_partitions(
@@ -46,16 +49,16 @@ def stream_state_partitions(
     budget — the cap wins when the two conflict) is the scale-adaptive
     form: a 100 TB stream saturates the cap and keeps today's behavior,
     while a MB-scale replay stops paying hundreds of empty store
-    round-trips. Env override SPARK_GRAFT_STREAM_PARTITIONS pins a
-    production value explicitly.
+    round-trips.
 
     Returns ``None`` — "don't override; keep the session's core-count
     default" — when the input's size cannot be measured (no session to
     reach the filesystem with and the path is not driver-local, or the
     path is missing/empty): the pre-r14 behavior, never a
-    silently-pinned floor (ADVICE r14). With a ``spark`` handle the
-    size comes from the Hadoop FileSystem of the path's own scheme
-    (``getContentSummary`` — recursive, works for s3a/hdfs/local
+    silently-pinned floor (ADVICE r14). Either way only ``*.parquet``
+    bytes count (never ``.crc`` or ``_SUCCESS``). With a ``spark``
+    handle the size comes from the Hadoop FileSystem of the path's own
+    scheme (a recursive ``listFiles`` — works for s3a/hdfs/local
     alike); without one, a recursive local walk covers the fixture
     layouts."""
     import math
@@ -63,28 +66,20 @@ def stream_state_partitions(
 
     from ..session import default_parallelism
 
-    env = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS")
-    if env:
-        try:
-            n = int(env)
-        except ValueError:
-            n = 0
-        if n <= 0:
-            raise ValueError(
-                "SPARK_GRAFT_STREAM_PARTITIONS must be a positive integer, "
-                f"got {env!r}"
-            )
-        return n
     path = os.path.join(sf_dir, f"{table}.parquet")
     size = 0
     if spark is not None:
         try:
-            jvm = spark._jvm
-            hpath = jvm.org.apache.hadoop.fs.Path(path)
+            hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
             fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
             if fs.exists(hpath):
-                size = int(fs.getContentSummary(hpath).getLength())
+                it = fs.listFiles(hpath, True)
+                while it.hasNext():
+                    st = it.next()
+                    if st.getPath().getName().endswith(".parquet"):
+                        size += int(st.getLen())
         except Exception:  # noqa: BLE001 — estimation must never kill a gate
+            _log.warning("cannot size %s via Hadoop FS", path, exc_info=True)
             size = 0
     if size <= 0 and "://" not in sf_dir:
         if os.path.isdir(path):
@@ -133,14 +128,20 @@ class _shuffle_partitions_during:
                     "_shuffle_partitions_during scopes would clobber the "
                     "session-global spark.sql.shuffle.partitions"
                 )
-            self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-            self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
+            try:
+                self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
+                self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
+            except BaseException:
+                _SHUFFLE_SCOPE_LOCK.release()
+                raise
         return self
 
     def __exit__(self, *exc):
         if self.n is not None:
-            self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
-            _SHUFFLE_SCOPE_LOCK.release()
+            try:
+                self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
+            finally:
+                _SHUFFLE_SCOPE_LOCK.release()
         return False
 
 def _events_raw_schema(sf_dir: str) -> tuple[T.StructType, bool]:

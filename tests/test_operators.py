@@ -25,6 +25,20 @@ def test_registry_integrity(registry):
     assert rows_only == set()
 
 
+def test_queries_order_is_window_then_registration():
+    """queries() lists every registered query exactly once: the present
+    _R14_WINDOW names first, in window order (the correctness gate
+    samples the first 50), then the rest in registration order."""
+    from seamdb_spark.operators import QUERIES
+
+    names = list(entry_mod.queries())
+    assert len(names) == len(set(names)) and set(names) == set(QUERIES)
+    window = [n for n in entry_mod._R14_WINDOW if n in QUERIES]
+    assert len(window) == 50
+    assert names == window + [n for n in QUERIES if n not in window]
+    assert names[:2] == ["d35_cosine_prefix_filtered", "e51_periodic_finalization"]
+
+
 def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     assert df.count() > 0

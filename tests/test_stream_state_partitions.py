@@ -1,9 +1,8 @@
-"""Focused pins for the round-15 stream_state_partitions rework
-(portable input estimation, validated env override, floor-never-beats-
-cap) and the _shuffle_partitions_during single-scope guard (ADVICE r14).
+"""Focused pins for stream_state_partitions (portable input
+estimation that counts only parquet bytes, floor-never-beats-cap) and
+the _shuffle_partitions_during single-scope guard (ADVICE r14).
 
-Pure driver-side logic — no SparkSession needed, so these run fast and
-first in a cold pytest sweep.
+Plain Python logic: only the Hadoop-FS sizing pin needs a SparkSession.
 """
 
 from __future__ import annotations
@@ -18,18 +17,6 @@ from seamdb_spark.streaming.events import (
 )
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def test_env_override_wins(monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTITIONS", "12")
-    assert stream_state_partitions(SF_DIR) == 12
-
-
-@pytest.mark.parametrize("bad", ["abc", "0", "-3", "1.5"])
-def test_env_override_validated(monkeypatch, bad):
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTITIONS", bad)
-    with pytest.raises(ValueError, match="SPARK_GRAFT_STREAM_PARTITIONS"):
-        stream_state_partitions(SF_DIR)
 
 
 def test_fixture_value_is_floored_small_input(monkeypatch):
@@ -74,14 +61,35 @@ def test_nested_directory_walked_recursively(monkeypatch, tmp_path):
     assert got == 13  # ceil(200MB / 16MB), above the floor, under the cap
 
 
+def test_hadoop_and_local_sizing_count_only_parquet(monkeypatch, tmp_path, spark):
+    # One 200 MB parquet file beside 400 MB each of checksum and marker
+    # files: both sizing paths see only the parquet bytes, so the count
+    # is ceil(200MB / 16MB) = 13 with or without a session (counting
+    # the side files would give 32, the cap).
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
+    d = tmp_path / "events.parquet"
+    d.mkdir()
+    for name, size in (("part-0.parquet", 200 << 20),
+                       (".part-0.parquet.crc", 400 << 20),
+                       ("_SUCCESS", 400 << 20)):
+        f = d / name
+        f.touch()
+        os.truncate(f, size)  # sparse
+    assert stream_state_partitions(str(tmp_path)) == 13
+    assert stream_state_partitions(str(tmp_path), spark=spark) == 13
+
+
 class _FakeConf:
     def __init__(self):
         self.vals = {"spark.sql.shuffle.partitions": "32"}
+        self.fail_set = False
 
     def get(self, k):
         return self.vals[k]
 
     def set(self, k, v):
+        if self.fail_set:
+            raise RuntimeError("conf.set failed")
         self.vals[k] = v
 
 
@@ -111,3 +119,25 @@ def test_none_scope_is_noop_and_unguarded():
         with _shuffle_partitions_during(spark, 8):
             assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
     assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
+
+
+def test_shuffle_scope_releases_lock_when_conf_raises():
+    # A conf error inside __enter__ (or the restore in __exit__) must
+    # not leave the scope lock held: the next scope can still enter.
+    spark = _FakeSpark()
+    spark.conf.fail_set = True
+    with pytest.raises(RuntimeError, match="conf.set failed"):
+        with _shuffle_partitions_during(spark, 8):
+            pass  # pragma: no cover
+    ok = _FakeSpark()
+    with _shuffle_partitions_during(ok, 6):
+        assert ok.conf.get("spark.sql.shuffle.partitions") == "6"
+    assert ok.conf.get("spark.sql.shuffle.partitions") == "32"
+
+    # restore raises in __exit__: the error surfaces, the lock is freed
+    spark = _FakeSpark()
+    with pytest.raises(RuntimeError, match="conf.set failed"):
+        with _shuffle_partitions_during(spark, 8):
+            spark.conf.fail_set = True
+    with _shuffle_partitions_during(ok, 4):
+        assert ok.conf.get("spark.sql.shuffle.partitions") == "4"
