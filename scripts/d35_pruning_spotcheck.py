@@ -34,7 +34,8 @@ import random
 import shutil
 import sys
 
-sys.path.insert(0, "/root/repo")
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
 
 import duckdb  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402

@@ -11,12 +11,14 @@ per query. Use before committing operator changes:
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
 
 from seamdb_spark import TPCH_TABLES  # noqa: E402
 from seamdb_spark.session import build_session  # noqa: E402

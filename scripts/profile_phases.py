@@ -8,11 +8,13 @@ per-call cost table. Diagnostic only — never imported by the engine.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 from collections import defaultdict
 
-sys.path.insert(0, "/root/repo")
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
 
 from seamdb_spark.session import build_session  # noqa: E402
 

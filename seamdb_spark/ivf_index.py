@@ -157,18 +157,19 @@ class IncrementalIVFIndex:
         per-cell stats — O(K) driver state in, O(K) rows out, never a
         corpus scan. ``sum div count`` runs IN SPARK so the integer
         division matches the trainer's means (and the oracle's ``//``)
-        exactly; empty cells yield no row, like lloyd_means."""
+        exactly; empty cells yield no row, like lloyd_means. The frame
+        carries no join hint: a caller that joins it applies the
+        broadcast at its join (a hint on a frame that is only
+        collected is logged as "not part of a join relation")."""
         extra = self.state.current_extra()
         rows = [
             (int(cid), [int(x) for x in sums], int(extra["cell_counts"][cid]))
             for cid, sums in extra["cell_sums"].items()
             if int(extra["cell_counts"][cid]) > 0
         ]
-        # K rows of driver state — always broadcast-sized
-        cdf = local_frame(self._spark, rows, _CELL_STATS_SCHEMA).select(
+        return local_frame(self._spark, rows, _CELL_STATS_SCHEMA).select(
             "cid", F.expr("transform(sums, s -> s div n)").alias("cvec")
         )
-        return F.broadcast(cdf)
 
     def drift_report(self) -> DataFrame:
         """(cid, n_vecs, n_moved) per current cell: how many of its
@@ -183,11 +184,13 @@ class IncrementalIVFIndex:
         drift evaluation while producing identical rows."""
         from .operators.similarity import assign_cells
 
+        # K rows of driver state — always broadcast-sized
+        cdf = self.candidate_centroids()
         re_assigned = assign_cells(
             self.index().select(
                 "vec_id", F.col("cid").alias("prev_cid"), "q"
             ),
-            self.candidate_centroids(),
+            F.broadcast(cdf),
             carry=("prev_cid",),
         )
         return (

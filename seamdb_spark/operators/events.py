@@ -5140,13 +5140,15 @@ def e47_stateful_totals_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def e48_checkpoint_restart_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import re as _re
-
     from ..streaming.events import (
         run_stream_foreach_batch_parquet,
         user_running_totals_over,
     )
-    from .materialize import fresh_external_dir, materialized_value
+    from .materialize import (
+        fresh_external_dir,
+        materialized_value,
+        session_tag,
+    )
 
     def batch() -> DataFrame:
         return (
@@ -5158,8 +5160,7 @@ def e48_checkpoint_restart_parity(spark: SparkSession, sf_dir: str) -> DataFrame
             )
         )
 
-    app = _re.sub(r"[^0-9a-z]+", "_", spark.sparkContext.applicationId.lower())
-    tag = _re.sub(r"[^0-9a-z]+", "_", sf_dir.lower()).strip("_") + "_" + app
+    tag = session_tag(spark, sf_dir)
 
     def run_and_compare() -> tuple[bool, bool]:
         from ..session import run_concurrently

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import atexit
 import os
+import re
 import shutil
 import threading
 import time
@@ -47,6 +48,15 @@ _MATERIALIZED_LOCK = threading.Lock()
 # long enough that no plausibly-live session loses its layout.
 _EXTERNAL_STALE_SECONDS = 24 * 3600
 _EXTERNAL_RESERVED: set[str] = set()
+
+
+def session_tag(spark: SparkSession, sf_dir: str) -> str:
+    """``<sf_dir>_<applicationId>`` folded to ``[0-9a-z_]``: the name a
+    stateful operator gives its session's external layout (a ``<root>/
+    <tag>`` dir) and catalog tables, so two live sessions, or two scale
+    factors in one session, never share a path or a table name."""
+    app = re.sub(r"[^0-9a-z]+", "_", spark.sparkContext.applicationId.lower())
+    return re.sub(r"[^0-9a-z]+", "_", sf_dir.lower()).strip("_") + "_" + app
 
 
 def session_external_dir(root: str, tag: str) -> str:

@@ -23,9 +23,10 @@ from pyspark.sql import functions as F
 
 from ..session import run_concurrently
 from .dedup import _cc_clusters, _cc_ctes
+from .materialize import fresh_external_dir, materialized_value, session_tag
 from .registry import register
 from .rounding import dround
-from .text import QUALITY_SQL, t02_quality_score
+from .text import QUALITY_SQL, quality_frame, t02_quality_score
 
 QUALITY_MIN = 0.10
 
@@ -1547,13 +1548,10 @@ _P14_SCHEMA_SPLIT = 13
     """,
 )
 def p14_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import re as _re
-
     from pyspark.sql import types as T
 
     from ..snapshots import TableSnapshots
     from ..sources import load_table
-    from .materialize import fresh_external_dir, materialized_value
 
     schema = T.StructType(
         [
@@ -1562,8 +1560,7 @@ def p14_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    app = _re.sub(r"[^0-9a-z]+", "_", spark.sparkContext.applicationId.lower())
-    tag = _re.sub(r"[^0-9a-z]+", "_", sf_dir.lower()).strip("_") + "_" + app
+    tag = session_tag(spark, sf_dir)
 
     def build() -> str:
         base = fresh_external_dir("/tmp/seamdb_snapdiff", tag)
@@ -1631,15 +1628,11 @@ _P15_SPLIT = 13
     """,
 )
 def p15_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import re as _re
-
     from ..engine import Engine
     from ..rollups import ContinuousRollup
     from ..sources import load_table
-    from .materialize import fresh_external_dir, materialized_value
 
-    app = _re.sub(r"[^0-9a-z]+", "_", spark.sparkContext.applicationId.lower())
-    tag = _re.sub(r"[^0-9a-z]+", "_", sf_dir.lower()).strip("_") + "_" + app
+    tag = session_tag(spark, sf_dir)
 
     def rollup_for(warehouse: str) -> ContinuousRollup:
         eng = Engine(spark, warehouse, database="p15db", user="pipeline")
@@ -1776,13 +1769,9 @@ def _stream_gate_base(spark: SparkSession, sf_dir: str) -> str:
     rewrite) and runs its feed/stream sequence there, so gates stay
     mutation-isolated (e52's compaction rewrites only its clone)
     while the corpus build is paid once per session."""
-    import re as _re
-
     from ..sources import load_table
-    from .materialize import fresh_external_dir, materialized_value
 
-    app = _re.sub(r"[^0-9a-z]+", "_", spark.sparkContext.applicationId.lower())
-    tag = _re.sub(r"[^0-9a-z]+", "_", sf_dir.lower()).strip("_") + "_" + app
+    tag = session_tag(spark, sf_dir)
 
     def build() -> str:
         base = fresh_external_dir("/tmp/seamdb_sgbase", tag)
@@ -1805,7 +1794,6 @@ def _clone_stream_gate_base(
     """Fresh gate layout at ``<root>/<tag>`` cloned from the shared
     base; returns (base, snaps, lsh, sh)."""
     from ..snapshots import clone_layout
-    from .materialize import fresh_external_dir
 
     src = _stream_gate_base(spark, sf_dir)
     base = fresh_external_dir(root, tag)
@@ -1834,13 +1822,9 @@ def _p16_index_at(spark: SparkSession, base: str, derive_hint=None):
 def _p16_build_index(spark: SparkSession, sf_dir: str) -> tuple[str, bool]:
     """The session-memoized two-batch index layout p16 and p17 share:
     (layout base dir, every-refresh-ran-in-the-expected-mode flag)."""
-    import re as _re
-
     from ..sources import load_table
-    from .materialize import fresh_external_dir, materialized_value
 
-    app = _re.sub(r"[^0-9a-z]+", "_", spark.sparkContext.applicationId.lower())
-    tag = _re.sub(r"[^0-9a-z]+", "_", sf_dir.lower()).strip("_") + "_" + app
+    tag = session_tag(spark, sf_dir)
 
     def build() -> tuple[str, bool]:
         from ..snapshots import TableSnapshots
@@ -1963,15 +1947,11 @@ _P18_SPLIT = 13
     """,
 )
 def p18_compaction_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import re as _re
-
     from ..engine import Engine
     from ..snapshots import TableSnapshots
     from ..sources import load_table
-    from .materialize import fresh_external_dir, materialized_value
 
-    app = _re.sub(r"[^0-9a-z]+", "_", spark.sparkContext.applicationId.lower())
-    tag = _re.sub(r"[^0-9a-z]+", "_", sf_dir.lower()).strip("_") + "_" + app
+    tag = session_tag(spark, sf_dir)
 
     def build() -> tuple[str, bool, int, int]:
         warehouse = fresh_external_dir("/tmp/seamdb_compact", tag) + "/wh"
@@ -2052,13 +2032,10 @@ def p18_compaction_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def p19_retention_gc(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
-    import re as _re
-
     from pyspark.sql import types as T
 
     from ..snapshots import TableSnapshots
     from ..sources import load_table
-    from .materialize import fresh_external_dir, materialized_value
 
     schema = T.StructType(
         [
@@ -2067,8 +2044,7 @@ def p19_retention_gc(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    app = _re.sub(r"[^0-9a-z]+", "_", spark.sparkContext.applicationId.lower())
-    tag = _re.sub(r"[^0-9a-z]+", "_", sf_dir.lower()).strip("_") + "_" + app
+    tag = session_tag(spark, sf_dir)
 
     def build() -> tuple[str, int, int, int, int, int, bool]:
         base = fresh_external_dir("/tmp/seamdb_gc", tag)
@@ -2253,13 +2229,9 @@ def _p24_index_at(spark: SparkSession, base: str):
 
 
 def _p24_build_index(spark: SparkSession, sf_dir: str) -> tuple:
-    import re as _re
-
     from ..sources import load_table
-    from .materialize import fresh_external_dir, materialized_value
 
-    app = _re.sub(r"[^0-9a-z]+", "_", spark.sparkContext.applicationId.lower())
-    tag = _re.sub(r"[^0-9a-z]+", "_", sf_dir.lower()).strip("_") + "_" + app
+    tag = session_tag(spark, sf_dir)
 
     def build() -> tuple:
         from ..snapshots import TableSnapshots
@@ -2353,13 +2325,10 @@ def _p25_oracle() -> str:
 def p25_index_compaction_rebuild(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import re as _re
-
     from pyspark.sql import types as T
 
     from ..snapshots import TableSnapshots
     from ..sources import load_table
-    from .materialize import fresh_external_dir, materialized_value
 
     schema = T.StructType(
         [
@@ -2368,8 +2337,7 @@ def p25_index_compaction_rebuild(
         ]
     )
 
-    app = _re.sub(r"[^0-9a-z]+", "_", spark.sparkContext.applicationId.lower())
-    tag = _re.sub(r"[^0-9a-z]+", "_", sf_dir.lower()).strip("_") + "_" + app
+    tag = session_tag(spark, sf_dir)
 
     def build() -> tuple[str, bool, int]:
         base = fresh_external_dir("/tmp/seamdb_lshrebuild", tag)
@@ -2464,13 +2432,9 @@ def _p26_index_at(spark: SparkSession, base: str, derive_hint=None):
 
 
 def _p26_build_index(spark: SparkSession, sf_dir: str) -> tuple[str, bool]:
-    import re as _re
-
     from ..sources import load_table
-    from .materialize import fresh_external_dir, materialized_value
 
-    app = _re.sub(r"[^0-9a-z]+", "_", spark.sparkContext.applicationId.lower())
-    tag = _re.sub(r"[^0-9a-z]+", "_", sf_dir.lower()).strip("_") + "_" + app
+    tag = session_tag(spark, sf_dir)
 
     def build() -> tuple[str, bool]:
         from ..snapshots import TableSnapshots
@@ -2623,40 +2587,29 @@ def _p29_oracle() -> str:
     """
 
 
-@register("p29_dual_detector_admission", oracle=_p29_oracle())
-def p29_dual_detector_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources import load_table
+_DECISION_COLS = [
+    "doc_id", "quality_score", "n_lexical_collisions",
+    "n_simhash_collisions", "status",
+]
 
-    lsh_base, _ = _p16_build_index(spark, sf_dir)
-    sh_base, _ = _p26_build_index(spark, sf_dir)
-    batch = (
-        load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 2 == 1)
-        .select(F.col("doc_id").cast("long"))
-    )
-    # first-come-wins per detector: the batch doc is the pair's larger
-    # side (both lookups emit doc_a < doc_b)
-    earlier_lex = (
-        _p16_index_at(spark, lsh_base)
-        .new_candidate_pairs(batch)
-        .filter(F.col("doc_b") % 2 == 1)
-        .groupBy(F.col("doc_b").alias("doc_id"))
-        .agg(F.count("*").cast("long").alias("n_lex"))
-    )
-    earlier_sh = (
-        _p26_index_at(spark, sh_base)
-        .new_candidate_pairs(batch)
-        .filter(F.col("doc_b") % 2 == 1)
-        .groupBy(F.col("doc_b").alias("doc_id"))
-        .agg(F.count("*").cast("long").alias("n_sh"))
-    )
-    quality = t02_quality_score(spark, sf_dir).select(
-        "doc_id", "quality_score"
-    )
+
+def _admission_decisions(
+    quality: DataFrame, lex_pairs: DataFrame, sh_pairs: DataFrame
+) -> DataFrame:
+    """p29's decision record for the docs in ``quality`` (doc_id,
+    quality_score). Each pair frame holds only the (doc_a, doc_b) pairs
+    that count against their doc_b; the precedence is quality, then
+    lexical, then SimHash duplicate."""
+
+    def per_doc(pairs: DataFrame, n: str) -> DataFrame:
+        return pairs.groupBy(F.col("doc_b").alias("doc_id")).agg(
+            F.count("*").cast("long").alias(n)
+        )
+
     return (
-        quality.filter(F.col("doc_id") % 2 == 1)
-        .join(earlier_lex, "doc_id", "left")
-        .join(earlier_sh, "doc_id", "left")
+        quality.select("doc_id", "quality_score")
+        .join(per_doc(lex_pairs, "n_lex"), "doc_id", "left")
+        .join(per_doc(sh_pairs, "n_sh"), "doc_id", "left")
         .select(
             "doc_id",
             dround(F.col("quality_score"), 6).alias("quality_score"),
@@ -2673,6 +2626,30 @@ def p29_dual_detector_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("status"),
         )
     )
+
+
+@register("p29_dual_detector_admission", oracle=_p29_oracle())
+def p29_dual_detector_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..sources import load_table
+
+    lsh_base, _ = _p16_build_index(spark, sf_dir)
+    sh_base, _ = _p26_build_index(spark, sf_dir)
+    batch = (
+        load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 2 == 1)
+        .select(F.col("doc_id").cast("long"))
+    )
+    # first-come-wins per detector: the batch doc is the pair's larger
+    # side (both lookups emit doc_a < doc_b)
+    earlier_lex, earlier_sh = (
+        idx.new_candidate_pairs(batch).filter(F.col("doc_b") % 2 == 1)
+        for idx in (
+            _p16_index_at(spark, lsh_base),
+            _p26_index_at(spark, sh_base),
+        )
+    )
+    quality = t02_quality_score(spark, sf_dir).filter(F.col("doc_id") % 2 == 1)
+    return _admission_decisions(quality, earlier_lex, earlier_sh)
 
 
 # --------------------------------------------------------------------------
@@ -2736,16 +2713,12 @@ def p30_bucket_pruned_unique_clash(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     import os as _os
-    import re as _re
-
     from ..engine import Engine
     from ..errors import UniqueIndexError
     from ..snapshots import TableSnapshots
     from ..sources import load_table
-    from .materialize import fresh_external_dir, materialized_value
 
-    app = _re.sub(r"[^0-9a-z]+", "_", spark.sparkContext.applicationId.lower())
-    tag = _re.sub(r"[^0-9a-z]+", "_", sf_dir.lower()).strip("_") + "_" + app
+    tag = session_tag(spark, sf_dir)
     k1, k2 = _P30_FRESH_KEYS
 
     def build() -> tuple[str, bool, bool, bool, int, bool]:
@@ -2855,33 +2828,52 @@ def p30_bucket_pruned_unique_clash(
 
 
 # --------------------------------------------------------------------------
-# e49: STREAMING ingest admission — p29's dual-detector decision as a
-# foreachBatch consumer of a real readStream (the production ingest
-# shape the maintained-index story implies but no other query runs:
-# micro-batch → snapshot commit → index refresh (O(new segment)) →
-# per-batch index lookup → admit/reject decision written to a durable
-# per-batchId sink). The even half of documents is pre-indexed (the
-# existing corpus); the odd half arrives as two id-ordered parquet
-# files consumed one per micro-batch (maxFilesPerTrigger=1;
-# production ingest arrives id/time-ordered, and id-ordering is what
-# makes every per-batch decision FINAL: a pair's larger side doc_b
-# always arrives with or after its smaller side, so doc_b's collision
-# count is complete at doc_b's own micro-batch). The union of the
-# per-batch decisions must equal p29's one-shot batch answer EXACTLY
-# (anti-join both directions + cardinality), pinned as
-# stream_matches_batch; ran_multiple_batches pins that the stream
-# actually split (>=2 micro-batches), so the equality is a real
-# incremental-vs-batch identity, not a one-batch tautology. Oracle =
-# p29's batch-blind index-blind DuckDB replay + the two TRUE columns.
+# The streaming admission harness behind e49-e52: p29's dual-detector
+# decision fed by a real file-source stream, the production ingest
+# shape (micro-batch -> snapshot commit -> O(new segment) LSH and
+# SimHash refresh -> per-batch lookup), keeping both indexes current
+# per arrival without rescanning the corpus (the EDBT 2019 streaming
+# similarity-search design).
 #
-# Scale: each micro-batch pays O(batch) quality scoring + O(new
-# segment) index refresh + O(batch x collision rate) lookups — never
-# a corpus rescan; decisions land in an idempotent per-batchId
-# parquet sink (e48's exactly-once pattern), so a replayed batch
-# overwrites its own directory. Own snapshot/index layout (p16/p26's
-# memoized two-batch layouts keep gating the non-streaming path);
-# build() starts from fresh_external_dir so bench gate-retimes
-# re-enter the exact first-build sequence.
+# _AdmissionStream is the one runner. It clones the pre-stream base
+# (evens committed and indexed, _stream_gate_base) into the gate's own
+# /tmp root, writes the odds as the gate's ordered feed (one file per
+# micro-batch, see _write_ordered_feed), runs the foreachBatch /
+# availableNow stream and returns the bids it consumed. Each micro-
+# batch is committed with commit_once, so a replayed batch skips the
+# append; the index refreshes diff the manifest, so they are no-ops on
+# a replay and finish an interrupted refresh otherwise.
+#
+# A gate supplies only its policy: the feed (one filter per micro-
+# batch, in arrival order) and a per-batch hook. A hook may refresh the
+# indexes, write under the gate's base dir and record what it saw on
+# the driver. It writes each output to a per-bid or per-epoch dir in
+# overwrite mode, so a replay rewrites its own output; and any other
+# commit to /docs must carry the manifest extra forward, or the
+# commit_once guard is lost (e52's compaction). The shared hooks:
+#   decide: per-batch FINAL decisions (e49, e52). Valid only for
+#     id-ordered arrival: a pair's larger side doc_b never arrives
+#     before its smaller side, so doc_b's count is complete at doc_b's
+#     own micro-batch.
+#   log:    every candidate pair involving the batch, both detectors
+#     and no larger-side restriction, plus the batch's quality scores;
+#     no decision (e50, e51). A sweep over the logs decides later.
+#     new_candidate_pairs emits a pair exactly once, at its LATER
+#     endpoint's batch, so the logs' union is the one-shot pair set
+#     whatever the arrival order.
+# The bookkeeping (bids consumed, refresh modes, sealed and amended
+# epochs) is kept in driver records, not read back from listings of
+# the output dirs: foreachBatch runs on the driver, so the records are
+# exact, and they hold on any filesystem, not only a local one.
+#
+# Every gate ends with one check, pinned as stream_matches_batch: its
+# final decision set equals p29's one-shot batch answer exactly
+# (anti-join both ways plus count). Each oracle is p29's batch-blind,
+# index-blind DuckDB replay plus the gate's verdict columns.
+#
+# Scale: a micro-batch pays O(batch) quality scoring, an O(new segment)
+# refresh and O(batch x collision rate) lookups, never a corpus rescan;
+# a sweep reads only the pair and quality logs, key-grouped.
 # --------------------------------------------------------------------------
 def _write_ordered_feed(df: DataFrame, src: str, conds: list) -> None:
     """Write one single-file parquet per condition into ``src`` with a
@@ -2913,6 +2905,164 @@ def _write_ordered_feed(df: DataFrame, src: str, conds: list) -> None:
         _os.utime(dest, (ts, ts))
 
 
+def _id_ranges(odds: DataFrame, n: int) -> list:
+    """Feed of ``n`` contiguous doc_id ranges, oldest first: id-ordered
+    arrival, so every per-batch decision is final."""
+    cuts = odds.approxQuantile("doc_id", [i / n for i in range(1, n)], 0.0)
+    le = [F.col("doc_id") <= c for c in cuts]
+    gt = [F.col("doc_id") > c for c in cuts]
+    return [le[0]] + [gt[i] & le[i + 1] for i in range(n - 2)] + [gt[-1]]
+
+
+class _AdmissionStream:
+    """One gate's stream over a fresh clone of the pre-stream base at
+    ``<root>/<session tag>``, with the ``snaps``/``lsh``/``sh`` handles
+    over that ``base``."""
+
+    def __init__(self, spark: SparkSession, sf_dir: str, root: str):
+        from ..sources import load_table
+
+        self.spark, self.sf_dir = spark, sf_dir
+        self.base, self.snaps, self.lsh, self.sh = _clone_stream_gate_base(
+            spark, sf_dir, root, session_tag(spark, sf_dir)
+        )
+        self.docs = load_table(spark, sf_dir, "documents").select(
+            F.col("doc_id").cast("long"), "text"
+        )
+
+    def read(self, rel: str) -> DataFrame:
+        return self.spark.read.parquet(f"{self.base}/{rel}")
+
+    def write(self, df: DataFrame, rel: str) -> None:
+        df.write.mode("overwrite").parquet(f"{self.base}/{rel}")
+
+    def run(self, feed, on_batch) -> list[int]:
+        """Stream the odds, sliced by ``feed(odds)`` (one filter per
+        micro-batch), through ``on_batch(batch, bid)``; returns the
+        distinct bids consumed, in arrival order."""
+        odds = self.docs.filter(F.col("doc_id") % 2 == 1)
+        src = self.base + "/src"
+        _write_ordered_feed(odds, src, feed(odds))
+        bids: list[int] = []
+
+        def consume(bdf: DataFrame, bid: int) -> None:
+            batch = bdf.select("doc_id", "text").persist()
+            self.snaps.commit_once(batch, bid)
+            on_batch(batch, bid)
+            if bid not in bids:
+                bids.append(bid)
+            batch.unpersist()
+
+        (
+            self.spark.readStream.schema(self.docs.schema)
+            .format("parquet")
+            .option("maxFilesPerTrigger", 1)
+            .load(src)
+            .writeStream.foreachBatch(consume)
+            .option("checkpointLocation", self.base + "/ckpt")
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+        return bids
+
+    def decide(self, batch: DataFrame, bid: int) -> tuple[str, str]:
+        """Per-batch final decisions to ``decisions/bid=<bid>``; returns
+        the (LSH, SimHash) refresh modes."""
+        ids = batch.select("doc_id")
+        # independent refreshes (own state dirs), overlapped so the
+        # batch's small jobs keep the cores busy
+        modes = run_concurrently(self.lsh.refresh, self.sh.refresh)
+        batch_b = ids.withColumnRenamed("doc_id", "doc_b")
+        lex, shc = (
+            idx.new_candidate_pairs(ids, bounded=True).join(
+                F.broadcast(batch_b), "doc_b", "left_semi"
+            )
+            for idx in (self.lsh, self.sh)
+        )
+        self.write(
+            _admission_decisions(quality_frame(batch), lex, shc),
+            f"decisions/bid={bid}",
+        )
+        return tuple(m["mode"] for m in modes)
+
+    def log(self, batch: DataFrame, bid: int) -> None:
+        """Log the batch's pairs to ``pairs_lex``/``pairs_sh`` and its
+        quality scores to ``quality``, each under ``bid=<bid>``."""
+        ids = batch.select("doc_id")
+
+        def pair_leg(idx, log: str):
+            def leg() -> None:
+                idx.refresh()
+                self.write(
+                    idx.new_candidate_pairs(ids, bounded=True).select(
+                        "doc_a", "doc_b"
+                    ),
+                    f"{log}/bid={bid}",
+                )
+
+            return leg
+
+        # three independent chains of small jobs writing disjoint dirs,
+        # overlapped
+        run_concurrently(
+            pair_leg(self.lsh, "pairs_lex"),
+            pair_leg(self.sh, "pairs_sh"),
+            lambda: self.write(
+                quality_frame(batch).select("doc_id", "quality_score"),
+                f"quality/bid={bid}",
+            ),
+        )
+
+    def out_of_order(self) -> bool:
+        """Arrival audit over the quality log: True iff some batch
+        carries an id below an earlier batch's max (one row per batch)."""
+        spans = sorted(
+            (int(r["bid"]), int(r["lo"]), int(r["hi"]))
+            for r in self.read("quality")
+            .groupBy("bid")
+            .agg(F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi"))
+            .collect()
+        )
+        return any(
+            lo < max(h for _, _, h in spans[:i])
+            for i, (_, lo, _) in enumerate(spans)
+            if i > 0
+        )
+
+    def matches_batch(self, rel: str) -> bool:
+        """The decision set under ``rel`` equals p29's one-shot answer.
+        p29's memoized p16/p26 layouts hold what the streamed indexes
+        now hold, so the corpus-wide signature derivation is paid once
+        per family per session. Its answer is pinned: three comparison
+        actions must not replay the quality and lookup lineage."""
+        cols = _DECISION_COLS
+        batch_ans = (
+            p29_dual_detector_admission(self.spark, self.sf_dir)
+            .select(*cols)
+            .localCheckpoint()
+        )
+        got = self.read(rel).select(*cols)
+        return (
+            got.join(batch_ans, cols, "left_anti").count() == 0
+            and batch_ans.join(got, cols, "left_anti").count() == 0
+            and got.count() == batch_ans.count()
+        )
+
+
+def _with_verdicts(df: DataFrame, verdicts: dict, *cols: str) -> DataFrame:
+    """The decision columns, then ``cols``, then each verdict as a
+    constant boolean column."""
+    return df.select(
+        *_DECISION_COLS,
+        *cols,
+        *(F.lit(bool(v)).alias(k) for k, v in verdicts.items()),
+    )
+
+
+# e49: the policy is per-batch decisions over two id-ordered micro-
+# batches, the fewest that make stream-vs-batch an incremental identity
+# rather than a one-batch tautology (pinned as ran_multiple_batches).
 def _e49_oracle() -> str:
     return f"""
     SELECT t.*, TRUE AS stream_matches_batch, TRUE AS ran_multiple_batches
@@ -2924,166 +3074,18 @@ def _e49_oracle() -> str:
 def e49_streaming_admission_parity(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os as _os
-    import re as _re
+    def build() -> tuple[str, dict]:
+        run = _AdmissionStream(spark, sf_dir, "/tmp/seamdb_streamadmit")
+        bids = run.run(lambda odds: _id_ranges(odds, 2), run.decide)
+        return run.base, {
+            "stream_matches_batch": run.matches_batch("decisions"),
+            "ran_multiple_batches": len(bids) >= 2,
+        }
 
-    from pyspark.sql import types as T
-
-    from ..dedup_index import IncrementalLSHIndex, IncrementalSimHashIndex
-    from ..snapshots import TableSnapshots
-    from ..sources import load_table
-    from .materialize import fresh_external_dir, materialized_value
-    from .text import quality_frame
-
-    app = _re.sub(r"[^0-9a-z]+", "_", spark.sparkContext.applicationId.lower())
-    tag = _re.sub(r"[^0-9a-z]+", "_", sf_dir.lower()).strip("_") + "_" + app
-
-    def build() -> tuple[str, bool, bool]:
-        # the existing corpus (evens committed and indexed up front):
-        # cloned from the shared pre-stream base instead of rebuilt —
-        # see _stream_gate_base
-        base, snaps, lsh, sh = _clone_stream_gate_base(
-            spark, sf_dir, "/tmp/seamdb_streamadmit", tag
-        )
-        docs = load_table(spark, sf_dir, "documents").select(
-            F.col("doc_id").cast("long"), "text"
-        )
-
-        # the ingest feed: odds as two contiguous-id-range files with
-        # explicit 2s-apart mtimes + deterministic names
-        # (_write_ordered_feed), so the file source replays them
-        # oldest-first == id-ordered on any filesystem (two
-        # micro-batches are the minimum that makes the identity
-        # incremental-vs-batch rather than a one-batch tautology; each
-        # extra micro-batch costs a full refresh+lookup round, so the
-        # gate pays the smallest non-degenerate count)
-        odds = docs.filter(F.col("doc_id") % 2 == 1)
-        (mid,) = odds.approxQuantile("doc_id", [0.5], 0.0)
-        src = base + "/src"
-        _write_ordered_feed(
-            odds, src, [F.col("doc_id") <= mid, F.col("doc_id") > mid]
-        )
-
-        def consume(bdf: DataFrame, bid: int) -> None:
-            batch = bdf.select("doc_id", "text").persist()
-            ids = batch.select("doc_id")
-            # Exactly-once commit (snapshots.commit_once): a micro-batch
-            # retry — task failure after commit, before the decisions
-            # write — skips the append instead of duplicating the
-            # segment and double-counting collisions. The index
-            # refreshes stay unconditional: they diff the manifest, so
-            # they are no-ops when the commit was skipped and they
-            # complete an interrupted refresh when it wasn't (mirrors
-            # the decisions sink's per-batchId idempotency below).
-            snaps.commit_once(batch, bid)
-            # the two index refreshes are independent (own state dirs,
-            # manifest-diff reads only) and each is a small job —
-            # overlap them so the batch's cores stay busy (guide §2.6)
-            run_concurrently(lsh.refresh, sh.refresh)
-            batch_b = ids.withColumnRenamed("doc_id", "doc_b")
-            lex = (
-                lsh.new_candidate_pairs(ids, bounded=True)
-                .join(F.broadcast(batch_b), "doc_b", "left_semi")
-                .groupBy(F.col("doc_b").alias("doc_id"))
-                .agg(F.count("*").cast("long").alias("n_lex"))
-            )
-            shc = (
-                sh.new_candidate_pairs(ids, bounded=True)
-                .join(F.broadcast(batch_b), "doc_b", "left_semi")
-                .groupBy(F.col("doc_b").alias("doc_id"))
-                .agg(F.count("*").cast("long").alias("n_sh"))
-            )
-            (
-                quality_frame(batch)
-                .select("doc_id", "quality_score")
-                .join(lex, "doc_id", "left")
-                .join(shc, "doc_id", "left")
-                .select(
-                    "doc_id",
-                    dround(F.col("quality_score"), 6).alias("quality_score"),
-                    F.coalesce(F.col("n_lex"), F.lit(0).cast("long")).alias(
-                        "n_lexical_collisions"
-                    ),
-                    F.coalesce(F.col("n_sh"), F.lit(0).cast("long")).alias(
-                        "n_simhash_collisions"
-                    ),
-                    F.when(
-                        F.col("quality_score") < QUALITY_MIN, "dropped_quality"
-                    )
-                    .when(F.col("n_lex").isNotNull(), "dropped_lexical_dup")
-                    .when(F.col("n_sh").isNotNull(), "dropped_simhash_dup")
-                    .otherwise("admitted")
-                    .alias("status"),
-                )
-                .write.mode("overwrite")
-                .parquet(f"{base}/decisions/bid={bid}")
-            )
-            batch.unpersist()
-
-        q = (
-            spark.readStream.schema(docs.schema)
-            .format("parquet")
-            .option("maxFilesPerTrigger", 1)
-            .load(src)
-            .writeStream.foreachBatch(consume)
-            .option("checkpointLocation", base + "/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-        multi = (
-            len(
-                [
-                    d
-                    for d in _os.listdir(base + "/decisions")
-                    if d.startswith("bid=")
-                ]
-            )
-            >= 2
-        )
-        cols = [
-            "doc_id", "quality_score", "n_lexical_collisions",
-            "n_simhash_collisions", "status",
-        ]
-        # One-shot batch answer = p29's query (its p16/p26 memoized
-        # layouts hold exactly the content these streamed indexes now
-        # hold, and p16/p17/p26/p27/p29 reuse them afterwards — so the
-        # corpus-wide signature derivation is paid ONCE per family per
-        # session, attributed here as the first toucher).
-        # localCheckpoint both sides: four comparison actions over
-        # tiny decision sets must not replay the quality+lookup
-        # lineage each time (this alone was ~3 recomputations of the
-        # full p29 plan before round 12's profile).
-        batch_ans = (
-            p29_dual_detector_admission(spark, sf_dir)
-            .select(*cols)
-            .localCheckpoint()
-        )
-        streamed = (
-            spark.read.parquet(base + "/decisions")
-            .select(*cols)
-            .localCheckpoint()
-        )
-        matches = (
-            streamed.join(batch_ans, cols, "left_anti").count() == 0
-            and batch_ans.join(streamed, cols, "left_anti").count() == 0
-            and streamed.count() == batch_ans.count()
-        )
-        return base, bool(matches), bool(multi)
-
-    base, matches, multi = materialized_value(
+    base, verdicts = materialized_value(
         spark, sf_dir, "e49_stream_admission", build
     )
-    return spark.read.parquet(base + "/decisions").select(
-        "doc_id",
-        "quality_score",
-        "n_lexical_collisions",
-        "n_simhash_collisions",
-        "status",
-        F.lit(bool(matches)).alias("stream_matches_batch"),
-        F.lit(bool(multi)).alias("ran_multiple_batches"),
-    )
+    return _with_verdicts(spark.read.parquet(base + "/decisions"), verdicts)
 
 
 # --------------------------------------------------------------------------
@@ -3141,16 +3143,12 @@ def p31_legacy_bucket_migration(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     import os as _os
-    import re as _re
-
     from ..engine import Engine
     from ..errors import UniqueIndexError
     from ..snapshots import TableSnapshots
     from ..sources import load_table
-    from .materialize import fresh_external_dir, materialized_value
 
-    app = _re.sub(r"[^0-9a-z]+", "_", spark.sparkContext.applicationId.lower())
-    tag = _re.sub(r"[^0-9a-z]+", "_", sf_dir.lower()).strip("_") + "_" + app
+    tag = session_tag(spark, sf_dir)
     k1, k2 = _P30_FRESH_KEYS
     clash_keys = [_P30_CLASH_KEY, k1, k2]
 
@@ -3289,46 +3287,21 @@ def p31_legacy_bucket_migration(
 
 
 # --------------------------------------------------------------------------
-# e50: OUT-OF-ORDER streaming ingest admission — e49 with its one
-# acknowledged assumption removed (SCALING.md round-12 §, VERDICT r12
-# "Next round" #5). e49's per-batch decisions are FINAL only because
-# arrival is id-ordered: a pair's larger side doc_b always arrives
-# with or after its smaller side, so doc_b's collision count is
-# complete at doc_b's own micro-batch. Production ingest is not
-# id-ordered. The documented variant, now actually run:
-#   per micro-batch: snapshot commit (exactly-once via the manifest
-#     extra's last_bid — e49's replay guard) → O(new-segment) LSH +
-#     SimHash refresh → log EVERY candidate pair involving the batch
-#     (both detectors, no larger-side restriction) to an idempotent
-#     per-batchId pair log, plus the batch's row-local quality scores;
-#   finalization sweep (the periodic reconciler, run once after the
-#     feed drains): distinct-union the pair logs, count per odd
-#     larger-side doc, join the quality log, apply p29's precedence —
-#     decisions are emitted HERE, never per batch.
-# The feed is deliberately interleaved: file 1 = odd docs with
-# doc_id % 4 == 3, file 2 = odd docs with doc_id % 4 == 1 — so the
+# e50: OUT-OF-ORDER streaming ingest admission — e49 without its one
+# assumption, id-ordered arrival. The policy logs every batch (the
+# harness's log hook) and decides nothing per batch; one finalization
+# sweep after the feed drains distinct-unions the pair logs, counts
+# per odd larger-side doc, joins the quality log and applies p29's
+# precedence. The feed is deliberately interleaved: file 1 holds the
+# odds with doc_id % 4 == 3, file 2 those with doc_id % 4 == 1, so the
 # second micro-batch carries ids BELOW the first batch's (pinned as
 # out_of_order_observed), and some pairs' smaller side arrives a full
-# batch after their larger side (pinned as finalization_reconciled —
+# batch after their larger side (pinned as finalization_reconciled,
 # data-derived in BOTH engines as "a candidate pair with doc_a%4==1
 # and doc_b%4==3 exists", the exact shape a per-batch-final consumer
-# like e49's would miscount). Pair-log completeness is structural:
-# new_candidate_pairs emits a pair exactly once, at the LATER
-# endpoint's batch (the earlier endpoint is already in the index, the
-# later one is in the batch), whatever the id order — so the sweep's
-# distinct union equals the one-shot pair universe. The final
-# decision set must equal p29's batch answer EXACTLY (anti-join both
-# directions + cardinality), pinned as stream_matches_batch. Oracle =
-# p29's batch-blind index-blind DuckDB replay + the two TRUE arrival
-# pins + the data-derived reconciliation pin.
-#
-# Scale: per-batch cost is unchanged from e49 (O(batch) scoring +
-# O(new segment) refresh + O(batch x collision rate) pair logging —
-# never a corpus rescan); the sweep reads only the pair/quality logs
-# (O(pairs + docs), key-grouped), not the corpus, and in production
-# runs periodically over the not-yet-finalized bid range. Decisions
-# for a doc finalize once its arrival epoch is sealed — the lateness
-# bound is the sweep period, the same contract as a watermark.
+# like e49's would miscount). In production the sweep runs
+# periodically over the not-yet-finalized bid range (e51): the
+# lateness bound is the sweep period, the contract of a watermark.
 # --------------------------------------------------------------------------
 def _e50_oracle() -> str:
     from .dedup import SIMHASH_MAX_HAMMING, _lsh_cand_ctes, _simhash_sig_sql
@@ -3358,240 +3331,61 @@ def _e50_oracle() -> str:
 
 @register("e50_outoforder_admission", oracle=_e50_oracle())
 def e50_outoforder_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os as _os
-    import re as _re
-
-    from pyspark.sql import types as T
-
-    from ..dedup_index import IncrementalLSHIndex, IncrementalSimHashIndex
-    from ..snapshots import TableSnapshots
-    from ..sources import load_table
-    from .materialize import fresh_external_dir, materialized_value
-    from .text import quality_frame
-
-    app = _re.sub(r"[^0-9a-z]+", "_", spark.sparkContext.applicationId.lower())
-    tag = _re.sub(r"[^0-9a-z]+", "_", sf_dir.lower()).strip("_") + "_" + app
-
-    def build() -> tuple[str, bool, bool, bool, bool]:
-        # the existing corpus (evens committed and indexed up front):
-        # cloned from the shared pre-stream base (_stream_gate_base)
-        base, snaps, lsh, sh = _clone_stream_gate_base(
-            spark, sf_dir, "/tmp/seamdb_ooo_admit", tag
+    def build() -> tuple[str, dict]:
+        run = _AdmissionStream(spark, sf_dir, "/tmp/seamdb_ooo_admit")
+        bids = run.run(
+            lambda odds: [F.col("doc_id") % 4 == r for r in (3, 1)], run.log
         )
-        docs = load_table(spark, sf_dir, "documents").select(
-            F.col("doc_id").cast("long"), "text"
-        )
-
-        # the ingest feed, deliberately NOT id-ordered: the first file
-        # (explicit oldest mtime + deterministic name via
-        # _write_ordered_feed -> first micro-batch) holds the
-        # doc_id%4==3 odds, the second the %4==1 odds — every %4==1 id
-        # is below some %4==3 id, so batch 2 arrives "late" relative to
-        # batch 1. The pins below are ORDER-INDEPENDENT either way
-        # (the residues interleave, so whichever file replays first,
-        # some pair's larger id arrives before its smaller one and the
-        # sweep reconciles it); the explicit mtimes just make which
-        # batch is "late" reproducible on coarse-mtime filesystems.
-        odds = docs.filter(F.col("doc_id") % 2 == 1)
-        src = base + "/src"
-        _write_ordered_feed(
-            odds, src,
-            [F.col("doc_id") % 4 == 3, F.col("doc_id") % 4 == 1],
-        )
-
-        def consume(bdf: DataFrame, bid: int) -> None:
-            batch = bdf.select("doc_id", "text").persist()
-            ids = batch.select("doc_id")
-            # e49's exactly-once commit guard (snapshots.commit_once):
-            # a micro-batch retry skips the append; the refreshes stay
-            # unconditional (manifest-diff no-ops on replay).
-            snaps.commit_once(batch, bid)
-
-            # Log EVERYTHING involving the batch — including pairs
-            # whose larger side arrived in an EARLIER batch (the
-            # out-of-order case e49 cannot see) and pairs against the
-            # pre-indexed evens. No decision is taken here. The three
-            # legs (LSH refresh→log, SimHash refresh→log, quality log)
-            # are independent chains of small jobs writing to disjoint
-            # dirs — overlapped per guide §2.6.
-            def _lex_leg() -> None:
-                lsh.refresh()
-                (
-                    lsh.new_candidate_pairs(ids, bounded=True)
-                    .write.mode("overwrite")
-                    .parquet(f"{base}/pairs_lex/bid={bid}")
-                )
-
-            def _sh_leg() -> None:
-                sh.refresh()
-                (
-                    sh.new_candidate_pairs(ids, bounded=True)
-                    .select("doc_a", "doc_b")
-                    .write.mode("overwrite")
-                    .parquet(f"{base}/pairs_sh/bid={bid}")
-                )
-
-            def _quality_leg() -> None:
-                (
-                    quality_frame(batch)
-                    .select("doc_id", "quality_score")
-                    .write.mode("overwrite")
-                    .parquet(f"{base}/quality/bid={bid}")
-                )
-
-            run_concurrently(_lex_leg, _sh_leg, _quality_leg)
-            batch.unpersist()
-
-        q = (
-            spark.readStream.schema(docs.schema)
-            .format("parquet")
-            .option("maxFilesPerTrigger", 1)
-            .load(src)
-            .writeStream.foreachBatch(consume)
-            .option("checkpointLocation", base + "/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-        multi = (
-            len(
-                [
-                    d
-                    for d in _os.listdir(base + "/quality")
-                    if d.startswith("bid=")
-                ]
-            )
-            >= 2
-        )
-        # arrival-order audit from the quality log's bid partitions:
-        # out-of-order iff some later batch carries an id below an
-        # earlier batch's max (bounded collect: one row per batch)
-        spans = sorted(
-            (int(r["bid"]), int(r["lo"]), int(r["hi"]))
-            for r in spark.read.parquet(base + "/quality")
-            .groupBy("bid")
-            .agg(F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi"))
-            .collect()
-        )
-        ooo = any(
-            lo < max(h for _, _, h in spans[:i])
-            for i, (_, lo, _) in enumerate(spans)
-            if i > 0
-        )
-
-        # ---- finalization sweep: pair logs -> decisions (one shot)
-        lex_pairs = (
-            spark.read.parquet(base + "/pairs_lex")
-            .select("doc_a", "doc_b")
-            .distinct()
-            .localCheckpoint()
-        )
-        sh_pairs = (
-            spark.read.parquet(base + "/pairs_sh")
-            .select("doc_a", "doc_b")
-            .distinct()
-            .localCheckpoint()
+        # the finalization sweep: pair logs -> decisions, one shot
+        lex, shp = (
+            run.read(log).select("doc_a", "doc_b").distinct().localCheckpoint()
+            for log in ("pairs_lex", "pairs_sh")
         )
         reconciled = (
-            lex_pairs.unionByName(sh_pairs)
+            lex.unionByName(shp)
             .filter((F.col("doc_a") % 4 == 1) & (F.col("doc_b") % 4 == 3))
             .limit(1)
             .count()
             > 0
         )
-        lex = (
-            lex_pairs.filter(F.col("doc_b") % 2 == 1)
-            .groupBy(F.col("doc_b").alias("doc_id"))
-            .agg(F.count("*").cast("long").alias("n_lex"))
+        run.write(
+            _admission_decisions(
+                run.read("quality"),
+                lex.filter(F.col("doc_b") % 2 == 1),
+                shp.filter(F.col("doc_b") % 2 == 1),
+            ),
+            "decisions",
         )
-        shc = (
-            sh_pairs.filter(F.col("doc_b") % 2 == 1)
-            .groupBy(F.col("doc_b").alias("doc_id"))
-            .agg(F.count("*").cast("long").alias("n_sh"))
-        )
-        (
-            spark.read.parquet(base + "/quality")
-            .select("doc_id", "quality_score")
-            .join(lex, "doc_id", "left")
-            .join(shc, "doc_id", "left")
-            .select(
-                "doc_id",
-                dround(F.col("quality_score"), 6).alias("quality_score"),
-                F.coalesce(F.col("n_lex"), F.lit(0).cast("long")).alias(
-                    "n_lexical_collisions"
-                ),
-                F.coalesce(F.col("n_sh"), F.lit(0).cast("long")).alias(
-                    "n_simhash_collisions"
-                ),
-                F.when(
-                    F.col("quality_score") < QUALITY_MIN, "dropped_quality"
-                )
-                .when(F.col("n_lex").isNotNull(), "dropped_lexical_dup")
-                .when(F.col("n_sh").isNotNull(), "dropped_simhash_dup")
-                .otherwise("admitted")
-                .alias("status"),
-            )
-            .write.mode("overwrite")
-            .parquet(base + "/decisions")
-        )
+        return run.base, {
+            "stream_matches_batch": run.matches_batch("decisions"),
+            "ran_multiple_batches": len(bids) >= 2,
+            "out_of_order_observed": run.out_of_order(),
+            "finalization_reconciled": reconciled,
+        }
 
-        cols = [
-            "doc_id", "quality_score", "n_lexical_collisions",
-            "n_simhash_collisions", "status",
-        ]
-        batch_ans = (
-            p29_dual_detector_admission(spark, sf_dir)
-            .select(*cols)
-            .localCheckpoint()
-        )
-        swept = (
-            spark.read.parquet(base + "/decisions")
-            .select(*cols)
-            .localCheckpoint()
-        )
-        matches = (
-            swept.join(batch_ans, cols, "left_anti").count() == 0
-            and batch_ans.join(swept, cols, "left_anti").count() == 0
-            and swept.count() == batch_ans.count()
-        )
-        return base, bool(matches), bool(multi), bool(ooo), bool(reconciled)
-
-    base, matches, multi, ooo, reconciled = materialized_value(
+    base, verdicts = materialized_value(
         spark, sf_dir, "e50_ooo_admission", build
     )
-    return spark.read.parquet(base + "/decisions").select(
-        "doc_id",
-        "quality_score",
-        "n_lexical_collisions",
-        "n_simhash_collisions",
-        "status",
-        F.lit(bool(matches)).alias("stream_matches_batch"),
-        F.lit(bool(multi)).alias("ran_multiple_batches"),
-        F.lit(bool(ooo)).alias("out_of_order_observed"),
-        F.lit(bool(reconciled)).alias("finalization_reconciled"),
-    )
+    return _with_verdicts(spark.read.parquet(base + "/decisions"), verdicts)
 
 
 # --------------------------------------------------------------------------
-# e51 — PERIODIC finalization sweeps: e50's production shape (VERDICT
-# r13 "Next round" #5). e50 proved the pair-log/sweep design with ONE
-# post-drain sweep; a production ingest never drains, so decisions must
-# seal per epoch — a sweep every SEAL_EVERY micro-batches finalizes the
-# docs that arrived in that epoch's bid range using every pair logged
-# so far, and a pair that lands AFTER its doc's seal (the smaller-id
-# endpoint arriving a full epoch later) is reconciled by the NEXT
-# sweep as an amendment record. Scale properties (SCALING.md): each
-# sweep reads only the pair/quality logs, key-grouped — O(pairs +
-# epoch docs), never a corpus rescan; the lateness bound is the sweep
-# period (the watermark contract); amendments are idempotent per-epoch
-# overwrites, so a replayed micro-batch re-runs its sweep
-# deterministically. The feed interleaves residues mod 8 across FOUR
-# micro-batches (order 7,3,5,1) so late pairs span a seal boundary:
-# epoch 0 seals bids 0-1 (residues 7,3), epoch 1 seals bids 2-3
-# (residues 5,1), and any near-dup pair whose smaller side has residue
-# 5/1 and larger side residue 3/7 is logged after its doc_b sealed —
-# the amendment case, pinned data-derived in BOTH engines.
+# e51 — PERIODIC finalization sweeps: e50's production shape. A
+# production ingest never drains, so decisions seal per epoch. The
+# policy logs every batch (the harness's log hook) and, every
+# E51_SEAL_EVERY micro-batches, runs a sweep inside the stream: it
+# seals the docs that arrived in that epoch's bid range using every
+# pair logged so far, and amends earlier-sealed docs hit by a pair that
+# landed AFTER their seal (the smaller-id endpoint arriving a full
+# epoch later). The lateness bound is the sweep period (the watermark
+# contract); seal and amendment dirs are per-epoch overwrites, so a
+# replayed micro-batch re-runs its sweep deterministically. The feed
+# interleaves residues mod 8 across FOUR micro-batches (order 7,3,5,1)
+# so late pairs span a seal boundary: epoch 0 seals bids 0-1 (residues
+# 7,3), epoch 1 seals bids 2-3 (residues 5,1), and any near-dup pair
+# whose smaller side has residue 5/1 and larger side residue 3/7 is
+# logged after its doc_b sealed — the amendment case, pinned
+# data-derived in BOTH engines.
 # --------------------------------------------------------------------------
 E51_SEAL_EVERY = 2  # micro-batches per seal epoch (the sweep period)
 
@@ -3638,284 +3432,113 @@ def _e51_oracle() -> str:
 
 @register("e51_periodic_finalization", oracle=_e51_oracle())
 def e51_periodic_finalization(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os as _os
-    import re as _re
+    from pyspark.sql import Window as W
 
-    from pyspark.sql import types as T
-
-    from ..dedup_index import IncrementalLSHIndex, IncrementalSimHashIndex
-    from ..snapshots import TableSnapshots
-    from ..sources import load_table
-    from .materialize import fresh_external_dir, materialized_value
-    from .text import quality_frame
-
-    app = _re.sub(r"[^0-9a-z]+", "_", spark.sparkContext.applicationId.lower())
-    tag = _re.sub(r"[^0-9a-z]+", "_", sf_dir.lower()).strip("_") + "_" + app
-
-    def build() -> tuple[str, bool, bool, bool, bool]:
-        # evens committed and indexed up front: cloned from the shared
-        # pre-stream base (_stream_gate_base)
-        base, snaps, lsh, sh = _clone_stream_gate_base(
-            spark, sf_dir, "/tmp/seamdb_epoch_seal", tag
-        )
-        docs = load_table(spark, sf_dir, "documents").select(
-            F.col("doc_id").cast("long"), "text"
-        )
-
-        # four micro-batches, residues mod 8 in order 7,3,5,1: each
-        # later file interleaves BELOW earlier ids, and the 5/1 files
-        # land in seal epoch 1 while their 3/7 near-dup partners sealed
-        # in epoch 0 — the cross-epoch lateness this gate exists for
-        odds = docs.filter(F.col("doc_id") % 2 == 1)
-        src = base + "/src"
-        _write_ordered_feed(
-            odds, src,
-            [
-                F.col("doc_id") % 8 == 7,
-                F.col("doc_id") % 8 == 3,
-                F.col("doc_id") % 8 == 5,
-                F.col("doc_id") % 8 == 1,
-            ],
-        )
-
-        def read_pairs(upto_bid: int) -> DataFrame:
-            lex = (
-                spark.read.parquet(base + "/pairs_lex")
-                .filter(F.col("bid") <= upto_bid)
-                .select("doc_a", "doc_b")
-            )
-            shp = (
-                spark.read.parquet(base + "/pairs_sh")
-                .filter(F.col("bid") <= upto_bid)
-                .select("doc_a", "doc_b")
-            )
-            return lex, shp
+    def build() -> tuple[str, dict]:
+        run = _AdmissionStream(spark, sf_dir, "/tmp/seamdb_epoch_seal")
+        sealed: set[int] = set()  # epochs swept, recorded on the driver
+        amended: set[int] = set()
 
         def decisions_for(qual: DataFrame, upto_bid: int) -> DataFrame:
-            """Admission records for the docs in ``qual`` (doc_id,
-            quality_score), counting every pair logged in bids <=
-            upto_bid — key-grouped over the logs only, O(pairs+docs)."""
-            lex_p, sh_p = read_pairs(upto_bid)
-            lex = (
-                lex_p.distinct()
+            """Records for the docs in ``qual`` from every pair logged
+            in bids <= upto_bid."""
+            lex, shp = (
+                run.read(log)
+                .filter(F.col("bid") <= upto_bid)
+                .select("doc_a", "doc_b")
+                .distinct()
                 .filter(F.col("doc_b") % 2 == 1)
-                .groupBy(F.col("doc_b").alias("doc_id"))
-                .agg(F.count("*").cast("long").alias("n_lex"))
+                for log in ("pairs_lex", "pairs_sh")
             )
-            shc = (
-                sh_p.distinct()
-                .filter(F.col("doc_b") % 2 == 1)
-                .groupBy(F.col("doc_b").alias("doc_id"))
-                .agg(F.count("*").cast("long").alias("n_sh"))
-            )
-            return (
-                qual.select("doc_id", "quality_score")
-                .join(lex, "doc_id", "left")
-                .join(shc, "doc_id", "left")
-                .select(
-                    "doc_id",
-                    dround(F.col("quality_score"), 6).alias("quality_score"),
-                    F.coalesce(F.col("n_lex"), F.lit(0).cast("long")).alias(
-                        "n_lexical_collisions"
-                    ),
-                    F.coalesce(F.col("n_sh"), F.lit(0).cast("long")).alias(
-                        "n_simhash_collisions"
-                    ),
-                    F.when(
-                        F.col("quality_score") < QUALITY_MIN,
-                        "dropped_quality",
-                    )
-                    .when(F.col("n_lex").isNotNull(), "dropped_lexical_dup")
-                    .when(F.col("n_sh").isNotNull(), "dropped_simhash_dup")
-                    .otherwise("admitted")
-                    .alias("status"),
-                )
-            )
+            return _admission_decisions(qual, lex, shp)
 
-        def run_sweep(epoch: int, upto_bid: int) -> None:
-            """Seal epoch ``epoch`` (docs arriving in its bid range)
-            and amend earlier-sealed docs hit by newly-logged pairs.
-            Idempotent: per-epoch overwrite dirs, deterministic from
-            the logs — a replayed micro-batch re-runs it bit-identically."""
+        def sweep(epoch: int, upto_bid: int) -> None:
+            """Seal epoch ``epoch`` and amend the earlier-sealed docs
+            hit by pairs logged in its bid range."""
+            quality = run.read("quality")
             lo = epoch * E51_SEAL_EVERY
-            quality = spark.read.parquet(base + "/quality")
+            in_epoch = (F.col("bid") >= lo) & (F.col("bid") <= upto_bid)
 
-            def _seal() -> None:
-                seal_docs = quality.filter(
-                    (F.col("bid") >= lo) & (F.col("bid") <= upto_bid)
-                )
-                (
-                    decisions_for(seal_docs, upto_bid)
-                    .write.mode("overwrite")
-                    .parquet(f"{base}/sealed/epoch={epoch}")
+            def seal() -> None:
+                run.write(
+                    decisions_for(quality.filter(in_epoch), upto_bid),
+                    f"sealed/epoch={epoch}",
                 )
 
-            def _amend() -> None:
-                # late pairs: LOGGED in this epoch's bid range (each
-                # pair is logged exactly once, at its later endpoint's
-                # bid, so a bid-range filter is exactly "newly logged")
-                # whose doc_b ARRIVED before this epoch — arrival bid
-                # comes from the quality log, never assumed from the id
-                new_lex = (
-                    spark.read.parquet(base + "/pairs_lex")
-                    .filter(
-                        (F.col("bid") >= lo) & (F.col("bid") <= upto_bid)
-                    )
+            def amend() -> None:
+                # each pair is logged once, at its later endpoint's bid,
+                # so the epoch's bid range is exactly "newly logged";
+                # doc_b's arrival bid comes from the quality log
+                hit = (
+                    run.read("pairs_lex").filter(in_epoch)
                     .select("doc_a", "doc_b")
-                )
-                new_sh = (
-                    spark.read.parquet(base + "/pairs_sh")
-                    .filter(
-                        (F.col("bid") >= lo) & (F.col("bid") <= upto_bid)
+                    .unionByName(
+                        run.read("pairs_sh").filter(in_epoch)
+                        .select("doc_a", "doc_b")
                     )
-                    .select("doc_a", "doc_b")
-                )
-                hit_docs = (
-                    new_lex.unionByName(new_sh)
                     .filter(F.col("doc_b") % 2 == 1)
                     .select(F.col("doc_b").alias("doc_id"))
                     .distinct()
                 )
-                earlier_arrivals = quality.filter(F.col("bid") < lo).select(
-                    "doc_id", "quality_score"
+                late = hit.join(
+                    quality.filter(F.col("bid") < lo).select(
+                        "doc_id", "quality_score"
+                    ),
+                    "doc_id",
                 )
-                late_docs = hit_docs.join(earlier_arrivals, "doc_id")
-                (
-                    decisions_for(late_docs, upto_bid)
-                    .write.mode("overwrite")
-                    .parquet(f"{base}/amendments/epoch={epoch}")
+                run.write(
+                    decisions_for(late, upto_bid), f"amendments/epoch={epoch}"
                 )
 
             if epoch == 0:
-                _seal()
-                return
-            # seal and amendment read the SAME already-written logs and
-            # write disjoint epoch dirs — overlap them (guide §2.6)
-            run_concurrently(_seal, _amend)
+                seal()
+            else:
+                # both read the same written logs and write disjoint
+                # epoch dirs, so they overlap
+                run_concurrently(seal, amend)
+                amended.add(epoch)
+            sealed.add(epoch)
 
-        def consume(bdf: DataFrame, bid: int) -> None:
-            batch = bdf.select("doc_id", "text").persist()
-            ids = batch.select("doc_id")
-            snaps.commit_once(batch, bid)
-
-            # independent per-batch legs (disjoint output dirs, small
-            # jobs) overlapped per guide §2.6; the sweep below reads
-            # the logs, so it runs after the legs join
-            def _lex_leg() -> None:
-                lsh.refresh()
-                (
-                    lsh.new_candidate_pairs(ids, bounded=True)
-                    .select("doc_a", "doc_b")
-                    .write.mode("overwrite")
-                    .parquet(f"{base}/pairs_lex/bid={bid}")
-                )
-
-            def _sh_leg() -> None:
-                sh.refresh()
-                (
-                    sh.new_candidate_pairs(ids, bounded=True)
-                    .select("doc_a", "doc_b")
-                    .write.mode("overwrite")
-                    .parquet(f"{base}/pairs_sh/bid={bid}")
-                )
-
-            def _quality_leg() -> None:
-                (
-                    quality_frame(batch)
-                    .select("doc_id", "quality_score")
-                    .write.mode("overwrite")
-                    .parquet(f"{base}/quality/bid={bid}")
-                )
-
-            run_concurrently(_lex_leg, _sh_leg, _quality_leg)
-            # the PERIODIC sweep: every E51_SEAL_EVERY batches, inside
-            # the stream — not a post-drain pass
+        def on_batch(batch: DataFrame, bid: int) -> None:
+            run.log(batch, bid)
             if (bid + 1) % E51_SEAL_EVERY == 0:
-                run_sweep((bid + 1) // E51_SEAL_EVERY - 1, bid)
-            batch.unpersist()
+                sweep((bid + 1) // E51_SEAL_EVERY - 1, bid)
 
-        q = (
-            spark.readStream.schema(docs.schema)
-            .format("parquet")
-            .option("maxFilesPerTrigger", 1)
-            .load(src)
-            .writeStream.foreachBatch(consume)
-            .option("checkpointLocation", base + "/ckpt")
-            .trigger(availableNow=True)
-            .start()
+        bids = run.run(
+            lambda odds: [F.col("doc_id") % 8 == r for r in (7, 3, 5, 1)],
+            on_batch,
         )
-        q.awaitTermination()
-
-        # drain-time safety sweep: seal any bid range the periodic
-        # cadence left open (none when the batch count divides evenly)
-        all_bids = sorted(
-            int(d.split("=", 1)[1])
-            for d in _os.listdir(base + "/quality")
-            if d.startswith("bid=")
-        )
-        max_bid = all_bids[-1]
-        n_sealed = len(
-            [
-                d
-                for d in _os.listdir(base + "/sealed")
-                if d.startswith("epoch=")
-            ]
-        )
-        if n_sealed * E51_SEAL_EVERY <= max_bid:
-            run_sweep(n_sealed, max_bid)
-            n_sealed += 1
-
-        # arrival-order audit, as e50: out-of-order iff a later batch
-        # carries an id below an earlier batch's max (one row per batch)
-        spans = sorted(
-            (int(r["bid"]), int(r["lo"]), int(r["hi"]))
-            for r in spark.read.parquet(base + "/quality")
-            .groupBy("bid")
-            .agg(F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi"))
-            .collect()
-        )
-        ooo = any(
-            lo < max(h for _, _, h in spans[:i])
-            for i, (_, lo, _) in enumerate(spans)
-            if i > 0
-        )
+        # drain-time sweep: seal any bid range the periodic cadence left
+        # open (none when the batch count divides evenly)
+        if len(sealed) * E51_SEAL_EVERY <= max(bids):
+            sweep(len(sealed), max(bids))
 
         # final assembly: latest record per doc (amendment over seal),
         # plus the doc's seal epoch and whether it was amended
-        rec_cols = [
-            "doc_id", "quality_score", "n_lexical_collisions",
-            "n_simhash_collisions", "status",
-        ]
-        sealed = spark.read.parquet(base + "/sealed").withColumnRenamed(
-            "epoch", "seal_epoch"
-        )
-        amend_dir = base + "/amendments"
-        if _os.path.isdir(amend_dir) and any(
-            d.startswith("epoch=") for d in _os.listdir(amend_dir)
-        ):
-            from pyspark.sql import Window as W
-
-            am = spark.read.parquet(amend_dir)
+        rec = _DECISION_COLS
+        seals = run.read("sealed").withColumnRenamed("epoch", "seal_epoch")
+        if amended:
             latest_am = (
-                am.withColumn(
+                run.read("amendments")
+                .withColumn(
                     "__rn",
                     F.row_number().over(
                         W.partitionBy("doc_id").orderBy(F.desc("epoch"))
                     ),
                 )
                 .filter(F.col("__rn") == 1)
-                .select(*rec_cols)
+                .select(*rec)
             )
         else:
-            latest_am = sealed.select(*rec_cols).limit(0)
+            latest_am = seals.select(*rec).limit(0)
         amended_ids = latest_am.select("doc_id")
-        final = (
-            sealed.join(amended_ids, "doc_id", "left_anti")
-            .select(*rec_cols, "seal_epoch")
+        run.write(
+            seals.join(amended_ids, "doc_id", "left_anti")
+            .select(*rec, "seal_epoch")
             .unionByName(
                 latest_am.join(
-                    sealed.select("doc_id", "seal_epoch"), "doc_id"
-                ).select(*rec_cols, "seal_epoch")
+                    seals.select("doc_id", "seal_epoch"), "doc_id"
+                ).select(*rec, "seal_epoch")
             )
             .join(
                 amended_ids.withColumn("amended", F.lit(True)),
@@ -3923,73 +3546,42 @@ def e51_periodic_finalization(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "left",
             )
             .select(
-                *rec_cols,
+                *rec,
                 F.col("seal_epoch").cast("int").alias("seal_epoch"),
                 F.coalesce("amended", F.lit(False)).alias("amended"),
-            )
+            ),
+            "final",
         )
-        final.write.mode("overwrite").parquet(base + "/final")
+        return run.base, {
+            "stream_matches_batch": run.matches_batch("final"),
+            "ran_multiple_epochs": len(sealed) >= 2,
+            "late_pairs_amended": latest_am.count() > 0,
+            "out_of_order_observed": run.out_of_order(),
+        }
 
-        multi_epochs = n_sealed >= 2
-        n_amended = latest_am.count()
-
-        batch_ans = (
-            p29_dual_detector_admission(spark, sf_dir)
-            .select(*rec_cols)
-            .localCheckpoint()
-        )
-        fin = spark.read.parquet(base + "/final").select(*rec_cols)
-        matches = (
-            fin.join(batch_ans, rec_cols, "left_anti").count() == 0
-            and batch_ans.join(fin, rec_cols, "left_anti").count() == 0
-            and fin.count() == batch_ans.count()
-        )
-        return (
-            base,
-            bool(matches),
-            bool(multi_epochs),
-            bool(n_amended > 0),
-            bool(ooo),
-        )
-
-    base, matches, multi_epochs, amended_any, ooo = materialized_value(
-        spark, sf_dir, "e51_epoch_seal", build
-    )
-    return spark.read.parquet(base + "/final").select(
-        "doc_id",
-        "quality_score",
-        "n_lexical_collisions",
-        "n_simhash_collisions",
-        "status",
-        "seal_epoch",
-        "amended",
-        F.lit(bool(matches)).alias("stream_matches_batch"),
-        F.lit(bool(multi_epochs)).alias("ran_multiple_epochs"),
-        F.lit(bool(amended_any)).alias("late_pairs_amended"),
-        F.lit(bool(ooo)).alias("out_of_order_observed"),
+    base, verdicts = materialized_value(spark, sf_dir, "e51_epoch_seal", build)
+    return _with_verdicts(
+        spark.read.parquet(base + "/final"), verdicts, "seal_epoch", "amended"
     )
 
 
 # --------------------------------------------------------------------------
-# e52 — ONLINE COMPACTION DURING STREAMING INGEST: the one untested
-# production interaction between the maintained-index family and the
-# snapshot layout. A week-old ingest table has accumulated hundreds of
-# small per-batch segments; OPTIMIZE (engine.compact's rewrite-as-one-
-# segment) runs while the stream keeps consuming. Two things must
-# survive: (1) the incremental indexes' manifest diff sees every
-# pre-compaction file VANISH and must take the REBUILD branch
-# (p25/p28's contract) rather than double-index or drop documents —
-# and the post-rebuild batch's admission decisions must be exactly
-# what they would have been without the compaction; (2) the
-# exactly-once admission guard (commit_once's last_bid riding the
-# manifest extra) must be carried through the compaction's overwrite
-# commit, else a micro-batch replay arriving just after OPTIMIZE
-# would double-commit. Sequence: evens pre-indexed; odds in three
-# id-ordered micro-batches (per-batch decisions final, e49
-# semantics); after batch 1's decisions land, the table is compacted
-# to ONE segment with extra carried forward; batch 2 then refreshes
-# (both indexes must report mode="rebuild"), decides, and the full
-# decision union must equal p29's one-shot batch answer. Scale: the
+# e52 — ONLINE COMPACTION DURING STREAMING INGEST: the production
+# interaction between the maintained indexes and the snapshot layout.
+# A long-running ingest table accumulates small per-batch segments, and
+# OPTIMIZE (engine.compact's rewrite-as-one-segment) runs while the
+# stream keeps consuming. Two things must survive: (1) the incremental
+# indexes' manifest diff sees every pre-compaction file VANISH and must
+# take the REBUILD branch (p25/p28's contract) rather than double-index
+# or drop documents, and the post-rebuild batch's decisions must be
+# exactly what they would have been without the compaction; (2) the
+# exactly-once guard (commit_once's last_bid in the manifest extra)
+# must be carried through the compaction's overwrite commit, else a
+# micro-batch replay arriving just after OPTIMIZE would double-commit.
+# The policy: per-batch decisions (the harness's decide hook) over
+# three id-ordered micro-batches; after batch 1's decisions land, the
+# table is compacted to ONE segment with its extra carried forward;
+# batch 2's refreshes must then both report mode="rebuild". Scale: the
 # rebuild is the p25/p28 cost (two corpus passes, amortized over the
 # compaction interval); per-batch cost before and after is unchanged.
 # --------------------------------------------------------------------------
@@ -4008,183 +3600,45 @@ def _e52_oracle() -> str:
 def e52_compaction_during_ingest(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os as _os
-    import re as _re
+    def build() -> tuple[str, dict]:
+        # the compaction rewrites only this gate's clone of the base
+        run = _AdmissionStream(spark, sf_dir, "/tmp/seamdb_online_compact")
+        snaps = run.snaps
+        modes: dict[int, tuple[str, str]] = {}  # per-bid refresh modes
+        compacted = {"to_one": False, "guard": False}
 
-    from ..sources import load_table
-    from .materialize import materialized_value
-    from .text import quality_frame
-
-    app = _re.sub(r"[^0-9a-z]+", "_", spark.sparkContext.applicationId.lower())
-    tag = _re.sub(r"[^0-9a-z]+", "_", sf_dir.lower()).strip("_") + "_" + app
-
-    def build() -> tuple[str, bool, bool, bool, bool]:
-        # evens committed and indexed up front: cloned from the shared
-        # pre-stream base (_stream_gate_base); the compaction below
-        # rewrites only this clone's segments, never the shared layout
-        base, snaps, lsh, sh = _clone_stream_gate_base(
-            spark, sf_dir, "/tmp/seamdb_online_compact", tag
-        )
-        docs = load_table(spark, sf_dir, "documents").select(
-            F.col("doc_id").cast("long"), "text"
-        )
-
-        # three id-ordered micro-batches (terciles), so per-batch
-        # decisions are final (e49 semantics; e50/e51 own the
-        # out-of-order story) and the compaction lands BETWEEN
-        # decided batches
-        odds = docs.filter(F.col("doc_id") % 2 == 1)
-        q1, q2 = odds.approxQuantile("doc_id", [1 / 3, 2 / 3], 0.0)
-        src = base + "/src"
-        _write_ordered_feed(
-            odds, src,
-            [
-                F.col("doc_id") <= q1,
-                (F.col("doc_id") > q1) & (F.col("doc_id") <= q2),
-                F.col("doc_id") > q2,
-            ],
-        )
-
-        # driver-side audit state (foreachBatch runs on the driver):
-        # per-bid refresh modes + the two compaction-site checks
-        audit = {"modes": {}, "compacted_to_one": False, "guard": False}
-
-        def consume(bdf: DataFrame, bid: int) -> None:
-            batch = bdf.select("doc_id", "text").persist()
-            ids = batch.select("doc_id")
-            snaps.commit_once(batch, bid)
-            # independent refreshes overlapped (guide §2.6)
-            m_lsh, m_sh = run_concurrently(lsh.refresh, sh.refresh)
-            audit["modes"][int(bid)] = (m_lsh["mode"], m_sh["mode"])
-            batch_b = ids.withColumnRenamed("doc_id", "doc_b")
-            lex = (
-                lsh.new_candidate_pairs(ids, bounded=True)
-                .join(F.broadcast(batch_b), "doc_b", "left_semi")
-                .groupBy(F.col("doc_b").alias("doc_id"))
-                .agg(F.count("*").cast("long").alias("n_lex"))
-            )
-            shc = (
-                sh.new_candidate_pairs(ids, bounded=True)
-                .join(F.broadcast(batch_b), "doc_b", "left_semi")
-                .groupBy(F.col("doc_b").alias("doc_id"))
-                .agg(F.count("*").cast("long").alias("n_sh"))
-            )
-            (
-                quality_frame(batch)
-                .select("doc_id", "quality_score")
-                .join(lex, "doc_id", "left")
-                .join(shc, "doc_id", "left")
-                .select(
-                    "doc_id",
-                    dround(F.col("quality_score"), 6).alias("quality_score"),
-                    F.coalesce(F.col("n_lex"), F.lit(0).cast("long")).alias(
-                        "n_lexical_collisions"
-                    ),
-                    F.coalesce(F.col("n_sh"), F.lit(0).cast("long")).alias(
-                        "n_simhash_collisions"
-                    ),
-                    F.when(
-                        F.col("quality_score") < QUALITY_MIN,
-                        "dropped_quality",
-                    )
-                    .when(F.col("n_lex").isNotNull(), "dropped_lexical_dup")
-                    .when(F.col("n_sh").isNotNull(), "dropped_simhash_dup")
-                    .otherwise("admitted")
-                    .alias("status"),
-                )
-                .write.mode("overwrite")
-                .parquet(f"{base}/decisions/bid={bid}")
-            )
+        def on_batch(batch: DataFrame, bid: int) -> None:
+            modes[bid] = run.decide(batch, bid)
             if bid == 1:
                 # ONLINE OPTIMIZE: fold the table (evens + two decided
-                # batches) into one segment. extra is carried forward
-                # EXPLICITLY — the overwrite would otherwise drop the
-                # commit_once guard and a post-compaction replay could
-                # double-commit (engine.compact preserves bucketing the
-                # same way).
+                # batches) into one segment, carrying extra forward
+                # EXPLICITLY (engine.compact preserves bucketing the
+                # same way)
                 snaps.commit(
-                    snaps.read(spark, docs.schema).coalesce(1),
+                    snaps.read(spark, run.docs.schema).coalesce(1),
                     mode="overwrite",
                     extra=snaps.current_extra(),
                 )
-                audit["compacted_to_one"] = (
-                    len(snaps.current_files()) == 1
-                )
-                audit["guard"] = (
+                compacted["to_one"] = len(snaps.current_files()) == 1
+                compacted["guard"] = (
                     int(snaps.current_extra().get("last_bid", -1)) == 1
                 )
-            batch.unpersist()
 
-        q = (
-            spark.readStream.schema(docs.schema)
-            .format("parquet")
-            .option("maxFilesPerTrigger", 1)
-            .load(src)
-            .writeStream.foreachBatch(consume)
-            .option("checkpointLocation", base + "/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        bids = run.run(lambda odds: _id_ranges(odds, 3), on_batch)
+        inc, reb = ("incremental",) * 2, ("rebuild",) * 2
+        return run.base, {
+            "stream_matches_batch": run.matches_batch("decisions"),
+            "ran_multiple_batches": len(bids) >= 3,
+            # pre-compaction batches refresh incrementally; the first
+            # post-compaction batch must rebuild both index families
+            "compaction_rebuilt": (
+                [modes.get(b) for b in range(3)] == [inc, inc, reb]
+                and compacted["to_one"]
+            ),
+            "guard_preserved": compacted["guard"],
+        }
 
-        multi = (
-            len(
-                [
-                    d
-                    for d in _os.listdir(base + "/decisions")
-                    if d.startswith("bid=")
-                ]
-            )
-            >= 3
-        )
-        # pre-compaction batches refresh incrementally; the first
-        # post-compaction batch must REBUILD (both index families)
-        modes = audit["modes"]
-        rebuilt = (
-            modes.get(0) == ("incremental", "incremental")
-            and modes.get(1) == ("incremental", "incremental")
-            and modes.get(2) == ("rebuild", "rebuild")
-            and audit["compacted_to_one"]
-        )
-
-        cols = [
-            "doc_id", "quality_score", "n_lexical_collisions",
-            "n_simhash_collisions", "status",
-        ]
-        batch_ans = (
-            p29_dual_detector_admission(spark, sf_dir)
-            .select(*cols)
-            .localCheckpoint()
-        )
-        streamed = (
-            spark.read.parquet(base + "/decisions")
-            .select(*cols)
-            .localCheckpoint()
-        )
-        matches = (
-            streamed.join(batch_ans, cols, "left_anti").count() == 0
-            and batch_ans.join(streamed, cols, "left_anti").count() == 0
-            and streamed.count() == batch_ans.count()
-        )
-        return (
-            base,
-            bool(matches),
-            bool(multi),
-            bool(rebuilt),
-            bool(audit["guard"]),
-        )
-
-    base, matches, multi, rebuilt, guard = materialized_value(
+    base, verdicts = materialized_value(
         spark, sf_dir, "e52_online_compact", build
     )
-    return spark.read.parquet(base + "/decisions").select(
-        "doc_id",
-        "quality_score",
-        "n_lexical_collisions",
-        "n_simhash_collisions",
-        "status",
-        F.lit(bool(matches)).alias("stream_matches_batch"),
-        F.lit(bool(multi)).alias("ran_multiple_batches"),
-        F.lit(bool(rebuilt)).alias("compaction_rebuilt"),
-        F.lit(bool(guard)).alias("guard_preserved"),
-    )
+    return _with_verdicts(spark.read.parquet(base + "/decisions"), verdicts)

@@ -2846,9 +2846,11 @@ J02_BUCKETS = 8
 
 
 def _j02_bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    import re as _re
-
-    from .materialize import materialized_value, session_external_dir
+    from .materialize import (
+        materialized_value,
+        session_external_dir,
+        session_tag,
+    )
 
     # namespace the catalog names AND the warehouse path by the Spark
     # application id: two concurrent sessions on one machine would
@@ -2856,8 +2858,7 @@ def _j02_bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     # mode=overwrite deleting bucket files the other's catalog entry
     # still references (the session-level memoization below is keyed
     # per session, so the app id is stable across reuse)
-    app = _re.sub(r"[^0-9a-z]+", "_", spark.sparkContext.applicationId.lower())
-    tag = _re.sub(r"[^0-9a-z]+", "_", sf_dir.lower()).strip("_") + "_" + app
+    tag = session_tag(spark, sf_dir)
     li_name, ord_name = f"j02_li_{tag}", f"j02_ord_{tag}"
     # reserve (and reclaim siblings of) the session's warehouse dir
     base = session_external_dir("/tmp/seamdb_bucketed", tag)
@@ -2940,13 +2941,14 @@ J03_TOP_MONTHS = 3
 
 
 def _j03_partitioned_lineitem(spark: SparkSession, sf_dir: str) -> str:
-    import re as _re
-
-    from .materialize import materialized_value, session_external_dir
+    from .materialize import (
+        materialized_value,
+        session_external_dir,
+        session_tag,
+    )
 
     # same concurrency discipline as j02: namespace by applicationId
-    app = _re.sub(r"[^0-9a-z]+", "_", spark.sparkContext.applicationId.lower())
-    tag = _re.sub(r"[^0-9a-z]+", "_", sf_dir.lower()).strip("_") + "_" + app
+    tag = session_tag(spark, sf_dir)
     path = session_external_dir("/tmp/seamdb_partitioned", tag) + "/lineitem"
 
     def build() -> str:

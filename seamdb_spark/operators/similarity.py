@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from ..sources import load_table
 from .hashing import md5_prefix_long
-from .materialize import materialized_df, materialized_value
+from .materialize import materialized_df, materialized_value, session_tag
 from .registry import ORACLE_SQL, register
 from .rounding import dround
 
@@ -3987,12 +3987,9 @@ def _p20_index_at(spark: SparkSession, sf_dir: str, base: str):
 def _p20_build_index(spark: SparkSession, sf_dir: str) -> tuple:
     """The session-memoized two-batch IVF index layout p20 and s27
     share: (layout base dir, modes-ran-as-expected flag, retrained)."""
-    import re as _re
-
     from .materialize import fresh_external_dir, materialized_value
 
-    app = _re.sub(r"[^0-9a-z]+", "_", spark.sparkContext.applicationId.lower())
-    tag = _re.sub(r"[^0-9a-z]+", "_", sf_dir.lower()).strip("_") + "_" + app
+    tag = session_tag(spark, sf_dir)
 
     def build() -> tuple:
         from ..snapshots import TableSnapshots
@@ -4130,12 +4127,9 @@ def _p22_index_at(spark: SparkSession, sf_dir: str, base: str):
 
 
 def _p22_build_index(spark: SparkSession, sf_dir: str) -> tuple:
-    import re as _re
-
     from .materialize import fresh_external_dir, materialized_value
 
-    app = _re.sub(r"[^0-9a-z]+", "_", spark.sparkContext.applicationId.lower())
-    tag = _re.sub(r"[^0-9a-z]+", "_", sf_dir.lower()).strip("_") + "_" + app
+    tag = session_tag(spark, sf_dir)
 
     def build() -> tuple:
         from ..snapshots import TableSnapshots
@@ -4342,12 +4336,9 @@ def _p28_oracle() -> str:
 
 @register("p28_ivf_compaction_rebuild", oracle=_p28_oracle())
 def p28_ivf_compaction_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import re as _re
-
     from .materialize import fresh_external_dir, materialized_value
 
-    app = _re.sub(r"[^0-9a-z]+", "_", spark.sparkContext.applicationId.lower())
-    tag = _re.sub(r"[^0-9a-z]+", "_", sf_dir.lower()).strip("_") + "_" + app
+    tag = session_tag(spark, sf_dir)
 
     def build() -> tuple[str, bool, int]:
         from ..snapshots import TableSnapshots

@@ -3736,14 +3736,6 @@ _T49_NORM_SPARK_SQL = (
 )
 
 
-def _t49_norm_col(col: "F.Column") -> "F.Column":
-    return F.trim(
-        F.regexp_replace(
-            F.regexp_replace(F.lower(col), "[^a-z0-9 ]", " "), " +", " "
-        )
-    )
-
-
 def _t49_oracle() -> str:
     from .dedup import DECONTAM_MIN_SHINGLES, EVAL_SET_MOD
 

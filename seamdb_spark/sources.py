@@ -48,9 +48,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             return df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
     return spark.read.parquet(table_path(sf_dir, name))
-
-
-def register_views(spark: SparkSession, sf_dir: str, tables=TPCH_TABLES) -> None:
-    """Register each fixture table as a temp view for SQL-path queries."""
-    for name in tables:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -1,8 +1,10 @@
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
 
 from seamdb_spark.session import build_session  # noqa: E402
 

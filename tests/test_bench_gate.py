@@ -3,9 +3,11 @@ the max(2x, +2s) bound, new-query and allowlist exemptions, and the
 SF-mismatch guard that keeps a local sf0.01 iteration from gating (or
 poisoning) the sf0.1 trajectory."""
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
 
 from bench import check_regressions
 

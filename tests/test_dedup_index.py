@@ -384,6 +384,24 @@ def test_ivf_drift_triggers_retrain(spark, tmp_path):
     assert {(r.vec_id, r.cid) for r in idx.index().collect()} == want
 
 
+def test_ivf_centroid_broadcast_hint_sits_at_the_drift_join(spark, tmp_path):
+    """candidate_centroids() is a plain frame, so the retrain path's
+    collect() of it carries no join hint for Spark to reject;
+    drift_report() applies the hint at its own join, so the centroid
+    side is still broadcast there."""
+    snaps, idx, schema, b1, b2 = _ivf_fixture(spark, tmp_path, 1000)
+    snaps.commit(spark.createDataFrame(b1, schema), mode="overwrite")
+    assert idx.refresh()["mode"] == "train"
+
+    analyzed = idx.candidate_centroids()._jdf.queryExecution().analyzed()
+    assert "ResolvedHint" not in analyzed.toString()
+    drift = idx.drift_report()._jdf.queryExecution()
+    assert "strategy=broadcast" in drift.analyzed().toString()
+    physical = drift.executedPlan().toString()
+    assert "BroadcastNestedLoopJoin BuildRight" in physical
+    assert "BroadcastExchange" in physical
+
+
 def test_ivf_vanished_segments_force_rebuild(spark, tmp_path):
     """Compaction rewriting the source manifest must trigger a sound
     retrain-from-current, not an incremental diff against files that

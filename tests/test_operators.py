@@ -3785,6 +3785,7 @@ def test_d35_prefix_filter_prunes_on_skewed_weights(spark, tmp_path):
     the pruning that justifies the operator at scale."""
     import importlib.util
     import math
+    import os
 
     from seamdb_spark.operators.dedup import (
         D22_COS_THRESHOLD,
@@ -3793,7 +3794,11 @@ def test_d35_prefix_filter_prunes_on_skewed_weights(spark, tmp_path):
     )
 
     spec = importlib.util.spec_from_file_location(
-        "d35spot", "/root/repo/scripts/d35_pruning_spotcheck.py"
+        "d35spot",
+        os.path.join(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            "scripts", "d35_pruning_spotcheck.py",
+        ),
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)

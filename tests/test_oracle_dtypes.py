@@ -15,13 +15,15 @@ impossible to reach the driver again:
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/scripts")
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
+sys.path.insert(0, os.path.join(_REPO, "scripts"))
 
 from parity_check import oracle_dtype_problems  # noqa: E402
 from seamdb_spark import TPCH_TABLES  # noqa: E402
