@@ -4801,7 +4801,7 @@ def e44_lsh_stream_batch_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     def run_and_compare() -> bool:
         got = run_stream_to_memory(
             lsh_candidates_stream(spark, sf_dir), "e44_lsh_stream", "append",
-            state_partitions=stream_state_partitions(sf_dir, "documents", spark),
+            state_partitions=stream_state_partitions(spark, sf_dir, "documents"),
         ).select("doc_a", "doc_b")
         want = batch_pairs()
         # the two direction checks are independent actions over the
@@ -4908,7 +4908,7 @@ def e45_stream_stream_join_parity(
 
         got = run_stream_to_memory(
             click_purchase_join_stream(spark, sf_dir), "e45_ssj", "append",
-            state_partitions=stream_state_partitions(sf_dir, spark=spark),
+            state_partitions=stream_state_partitions(spark, sf_dir),
         ).select("purchase_id", "click_id")
         want = batch_pairs().select("purchase_id", "click_id")
         extra, missing = run_concurrently(
@@ -4999,7 +4999,7 @@ def e46_stream_sessionization_parity(
 
         got = run_stream_to_memory(
             session_window_stream(spark, sf_dir), "e46_sessions", "complete",
-            state_partitions=stream_state_partitions(sf_dir, spark=spark),
+            state_partitions=stream_state_partitions(spark, sf_dir),
         ).select(*keys)
         want = batch().select(*keys)
         extra, missing = run_concurrently(
@@ -5070,7 +5070,7 @@ def e47_stateful_totals_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         out = run_stream_to_memory(
             user_running_totals_stream(spark, sf_dir), "e47_totals", "update",
-            state_partitions=stream_state_partitions(sf_dir, spark=spark),
+            state_partitions=stream_state_partitions(spark, sf_dir),
         )
         w = W.partitionBy("user_id").orderBy(F.col("n_events").desc())
         got = (
@@ -5184,7 +5184,7 @@ def e48_checkpoint_restart_parity(spark: SparkSession, sf_dir: str) -> DataFrame
         # identical value on BOTH runs (deterministic from the source
         # size): the count is baked into run 1's checkpoint metadata
         # and must match at restart
-        n_state_parts = stream_state_partitions(sf_dir, spark=spark)
+        n_state_parts = stream_state_partitions(spark, sf_dir)
 
         def stream() -> DataFrame:
             return user_running_totals_over(

@@ -7,11 +7,11 @@ with DRI/RSTn restart-marker support), PNG (grayscale, truecolor,
 and palette/indexed — every 8-bit color type — each sequential and
 Adam7-interlaced), and GIF (sequential and 4-pass interlaced) decode
 is REAL (pure-Python byte-layout parsers
-``decode_bmp``/``decode_wav``, a pure-Python + numpy T.81 codec family
-``build_jpeg``/``decode_jpeg``/``decode_jpeg_progressive``/
-``decode_jpeg_420``, a stdlib-zlib PNG codec ``build_png``/
-``decode_png``, and an LZW GIF codec, driven through the oracle gate by
-m06/m07/m15/m22/m25/m31/m32). The MP4/ISO-BMFF container walk and mdat
+``decode_bmp``/``decode_wav``, a pure-Python + numpy T.81 codec — the
+builders ``build_jpeg``/``build_jpeg_progressive``/``build_jpeg_420``
+and the one decoder ``decode_jpeg`` — a stdlib-zlib PNG codec
+``build_png``/``decode_png``, and an LZW GIF codec, driven through
+the oracle gate by m06/m07/m15/m22/m25/m31/m32). The MP4/ISO-BMFF container walk and mdat
 sample slicing are real too (m27/m30); only the video codec payloads
 inside mdat (H.264/H.265) and non-4:2:0 chroma subsampling (e.g.
 4:2:2) need codec libraries absent from this container and stay a
@@ -36,6 +36,7 @@ from __future__ import annotations
 import hashlib
 import math
 import struct
+from collections import defaultdict
 from collections.abc import Iterator
 
 import pandas as pd
@@ -200,20 +201,24 @@ def decode_wav(payload: bytes) -> dict:
 
 
 # --------------------------------------------------------------------------
-# Baseline JPEG (ITU-T T.81 / JFIF) codec — pure Python + numpy, no
-# codec libraries. Closes the former decode_media() JPEG boundary.
+# JPEG (ITU-T T.81 / JFIF) codec — pure Python + numpy, no codec
+# libraries. T.81 Annex B gives every frame type one marker-segment
+# syntax; sequential and progressive files differ only in how each
+# scan is entropy-coded (Annexes F and G). The codec follows that
+# split: one segment walker (_jpeg_segments) and one decoder
+# (decode_jpeg) whose scan decoder handles every scan kind, and one
+# encoder (_jpeg_encode) behind the three builders.
 # The ENCODER exists to build genuine test files (the build_bmp/
-# build_wav discipline): baseline sequential DCT, 3-component YCbCr
-# 4:4:4, one 8-bit quant table, and custom UNIFORM-LENGTH canonical
-# Huffman tables declared in the file's DHT segments — T.81 lets a
-# file carry any valid tables (Kraft sums 12/16 and 162/256 < 1, no
-# all-ones code), and uniform lengths trade compression ratio for an
-# obviously-correct construction. The DECODER is general for baseline
-# 4:4:4 / grayscale: it reads whatever DQT/DHT the file declares,
-# Huffman-decodes the entropy stream (byte-unstuffing 0xFF00),
-# dequantizes, IDCTs, and converts back to RGB. Subsampled (4:2:0/
-# 4:2:2), progressive (SOF2), and 16-bit-table files raise ValueError
-# — a documented format boundary, not a stub.
+# build_wav discipline): DCT with one 8-bit quant table, YCbCr 4:4:4 or
+# 4:2:0, baseline or progressive scans, and custom UNIFORM-LENGTH
+# canonical Huffman tables declared in the file's DHT segments — T.81
+# lets a file carry any valid tables (Kraft sums 12/16 and 162/256 < 1,
+# no all-ones code), and uniform lengths trade compression ratio for an
+# obviously-correct construction. The DECODER reads whatever DQT/DHT
+# the file declares. Its format boundary: SOF0 4:4:4, grayscale and
+# 4:2:0, SOF2 4:4:4 and grayscale, each with DRI/RSTn restarts. Other
+# SOF types and sampling factors, 16-bit tables and non-8-bit
+# precision raise ValueError — a documented boundary, not a stub.
 #
 # Determinism: DCT/IDCT are 8x8 float64 matrix products in a fixed
 # operation order; quantization uses rint (half-even); color
@@ -724,6 +729,205 @@ def _jpeg_extend(v, cat):
     return v if v >= (1 << (cat - 1)) else v - (1 << cat) + 1
 
 
+def _jpeg_segment(marker: int, body: bytes) -> bytes:
+    """One marker segment: 0xFF, marker, 2-byte length (itself
+    included), body."""
+    return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
+
+
+def _jpeg_mcus(cis, factors, width, height, unit, restart_interval):
+    """The MCUs of one scan, in coding order, as (RSTn number expected
+    before the MCU or None, [(component, block index), ...]). Blocks are
+    indexed in raster order over each component's block grid. T.81 A.2:
+    a one-component scan codes one block per MCU, raster over that
+    component; an interleaved scan codes each component's H x V blocks
+    per ``unit`` x ``unit`` pixel MCU."""
+    if len(cis) == 1:
+        hs, vs = factors[cis[0]]
+        n = (width // unit * hs) * (height // unit * vs)
+        mcus = ([(cis[0], bi)] for bi in range(n))
+    else:
+        mcus = (
+            [
+                (ci, (my * vs + dv) * (width // unit * hs) + mx * hs + dh)
+                for ci in cis
+                for hs, vs in [factors[ci]]
+                for dv in range(vs)
+                for dh in range(hs)
+            ]
+            for my in range(height // unit)
+            for mx in range(width // unit)
+        )
+    for i, mcu in enumerate(mcus):
+        if restart_interval and i and i % restart_interval == 0:
+            yield (i // restart_interval - 1) % 8, mcu
+        else:
+            yield None, mcu
+
+
+# --------------------------------------------------------------------------
+# Encoder: one front end (colour transform, optional 4:2:0 chroma
+# downsampling, DCT, quantisation), one entropy writer for every scan
+# kind, one file writer. The three public builders differ only in the
+# SOF marker, the sampling factors and the scan script.
+# --------------------------------------------------------------------------
+def _jpeg_coefficients(width, height, rgb, subsample=False):
+    """Per component (Y, Cb, Cr), the zigzag-ordered quantised
+    coefficients of each 8x8 block of its plane, in raster order.
+    ``subsample`` halves Cb/Cr in both directions by the exact integer
+    2x2 mean (a+b+c+d+2)>>2 (4:2:0)."""
+    import numpy as np
+
+    unit = 16 if subsample else 8
+    if width % unit or height % unit:
+        raise ValueError(f"JPEG encoder requires multiple-of-{unit} dimensions")
+    if len(rgb) != width * height * 3:
+        raise ValueError("rgb length mismatch")
+    C = _jpeg_dct_matrix()
+    q = np.array(_JPEG_QTAB, dtype=np.float64).reshape(8, 8)
+    px = np.frombuffer(bytes(rgb), dtype=np.uint8).reshape(height, width, 3)
+    r, g, b = (px[:, :, i].astype(np.int64) for i in range(3))
+    planes = [
+        np.clip((77 * r + 150 * g + 29 * b + 128) >> 8, 0, 255),
+        np.clip(((-43 * r - 85 * g + 128 * b + 128) >> 8) + 128, 0, 255),
+        np.clip(((128 * r - 107 * g - 21 * b + 128) >> 8) + 128, 0, 255),
+    ]
+    if subsample:
+        planes[1:] = [
+            (p[0::2, 0::2] + p[0::2, 1::2] + p[1::2, 0::2] + p[1::2, 1::2] + 2)
+            >> 2
+            for p in planes[1:]
+        ]
+    out = []
+    for plane in planes:
+        blocks = []
+        for by in range(0, plane.shape[0], 8):
+            for bx in range(0, plane.shape[1], 8):
+                block = plane[by:by + 8, bx:bx + 8].astype(np.float64) - 128.0
+                qc = np.rint((C @ block @ C.T) / q).astype(np.int64)
+                blocks.append([int(v) for v in qc.flat[ZIGZAG]])
+        out.append(blocks)
+    return out
+
+
+def _jpeg_put(w, codes, sym, value=0, cat=0):
+    """Write one Huffman symbol, then ``cat`` magnitude bits of
+    ``value`` (T.81 F.1.2.1: negatives as value + 2^cat - 1)."""
+    w.write(*codes[sym])
+    if cat:
+        w.write(value if value >= 0 else value + (1 << cat) - 1, cat)
+
+
+def _jpeg_put_band(w, band, ac_codes):
+    """Run-length code one block's AC band (sequential, or a
+    progressive first pass after the point transform): ZRL per 16
+    zeros, (run, size) symbols, EOB when the band ends in zeros."""
+    last = max((j for j, v in enumerate(band) if v), default=-1)
+    run = 0
+    for v in band[:last + 1]:
+        if v == 0:
+            run += 1
+            continue
+        while run > 15:
+            _jpeg_put(w, ac_codes, 0xF0)
+            run -= 16
+        cat = _jpeg_category(v)
+        _jpeg_put(w, ac_codes, (run << 4) | cat, v, cat)
+        run = 0
+    if last < len(band) - 1:
+        _jpeg_put(w, ac_codes, 0x00)
+
+
+def _jpeg_put_refine(w, band, al, ac_codes):
+    """One block's AC refinement pass (T.81 G.1.2.3, libjpeg's
+    encode_mcu_AC_refine). At the current precision a magnitude of 1 is
+    newly significant (coded with its sign); a larger one is history
+    and gets a buffered correction bit. ZRLs flush the buffer on every
+    nonzero (history included) so the bits stay aligned with the
+    decoder's skip loop; trailing zeros past the last newly significant
+    coefficient fold into the EOB."""
+    mags = [abs(v) >> al for v in band]
+    eobpos = max((j for j, t in enumerate(mags) if t == 1), default=-1)
+    run = corr = ncorr = 0
+    for j, t in enumerate(mags):
+        if t == 0:
+            run += 1
+            continue
+        while run > 15 and j <= eobpos:
+            _jpeg_put(w, ac_codes, 0xF0)
+            run -= 16
+            w.write(corr, ncorr)
+            corr = ncorr = 0
+        if t > 1:
+            corr, ncorr = (corr << 1) | (t & 1), ncorr + 1
+            continue
+        _jpeg_put(w, ac_codes, (run << 4) | 1, 1 if band[j] >= 0 else -1, 1)
+        w.write(corr, ncorr)
+        run = corr = ncorr = 0
+    if run or ncorr:
+        _jpeg_put(w, ac_codes, 0x00)  # EOB (a run of exactly 1)
+        w.write(corr, ncorr)
+
+
+def _jpeg_encode(sof, width, height, rgb, restart_interval, scans,
+                 subsample=False):
+    """Encode RGB as a JFIF: SOI, APP0/JFIF, DQT, SOF (``sof`` marker),
+    the DC and AC DHTs, DRI when ``restart_interval`` > 0, one SOS +
+    entropy-coded segment per ``(components, Ss, Se, Ah, Al)`` entry of
+    ``scans``, EOI. Each scan puts RSTn markers (numbered from RST0,
+    DC predictors reset) every ``restart_interval`` MCUs; a scan with
+    Ss=0, Se=63 is sequential (DC then the full AC band per block)."""
+    coefs = _jpeg_coefficients(width, height, rgb, subsample)
+    factors = [(2, 2), (1, 1), (1, 1)] if subsample else [(1, 1)] * 3
+    dc_bits, dc_syms, dc_codes = _jpeg_huff_spec(_JPEG_DC_SYMBOLS, 4)
+    ac_bits, ac_syms, ac_codes = _jpeg_huff_spec(_JPEG_AC_SYMBOLS, 8)
+    out = [
+        b"\xff\xd8",
+        _jpeg_segment(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"),
+        _jpeg_segment(0xDB, bytes([0]) + bytes(_JPEG_QTAB[k] for k in ZIGZAG)),
+        _jpeg_segment(sof, struct.pack(">BHHB", 8, height, width, 3) + bytes(
+            [1, (factors[0][0] << 4) | factors[0][1], 0, 2, 0x11, 0, 3, 0x11, 0]
+        )),
+        _jpeg_segment(0xC4, bytes([0x00] + dc_bits[1:17] + dc_syms)),
+        _jpeg_segment(0xC4, bytes([0x10] + ac_bits[1:17] + ac_syms)),
+    ]
+    if restart_interval:
+        out.append(_jpeg_segment(0xDD, struct.pack(">H", restart_interval)))
+    for cis, ss, se, ah, al in scans:
+        w = _JpegBitWriter()
+        prev = [0, 0, 0]
+        for rst, blocks in _jpeg_mcus(
+            cis, factors, width, height, 8 * factors[0][0], restart_interval
+        ):
+            if rst is not None:
+                w.restart(rst)
+                prev = [0, 0, 0]
+            for ci, bi in blocks:
+                zz, k = coefs[ci][bi], ss
+                if ss == 0:
+                    if ah:  # DC refinement: the Al-th bit
+                        w.write((zz[0] >> al) & 1, 1)
+                        continue
+                    v = zz[0] >> al  # point transform: arithmetic shift
+                    cat = _jpeg_category(v - prev[ci])
+                    _jpeg_put(w, dc_codes, cat, v - prev[ci], cat)
+                    prev[ci], k = v, 1
+                if k > se:
+                    continue
+                if ah:
+                    _jpeg_put_refine(w, zz[k:se + 1], al, ac_codes)
+                else:  # point transform: magnitude shift, sign kept
+                    _jpeg_put_band(w, [
+                        v >> al if v >= 0 else -(-v >> al) for v in zz[k:se + 1]
+                    ], ac_codes)
+        out.append(_jpeg_segment(0xDA, bytes(
+            [len(cis)] + [x for ci in cis for x in (ci + 1, 0)]
+            + [ss, se, (ah << 4) | al]
+        )) + w.flush())
+    out.append(b"\xff\xd9")
+    return b"".join(out)
+
+
 def build_jpeg(
     width: int, height: int, rgb: bytes, restart_interval: int = 0
 ) -> bytes:
@@ -733,101 +937,106 @@ def build_jpeg(
     ``restart_interval`` > 0 emits a DRI segment and an RSTn marker
     (with DC-predictor reset) every that-many MCUs — the error-
     resilience layout most real camera JPEGs carry."""
-    import numpy as np
-
-    if width % 8 or height % 8:
-        raise ValueError("build_jpeg requires multiple-of-8 dimensions")
-    if len(rgb) != width * height * 3:
-        raise ValueError("rgb length mismatch")
-    C = _jpeg_dct_matrix()
-    q = np.array(_JPEG_QTAB, dtype=np.float64).reshape(8, 8)
-    px = np.frombuffer(bytes(rgb), dtype=np.uint8).reshape(height, width, 3)
-    px = px.astype(np.int64)
-    r, g, b = px[:, :, 0], px[:, :, 1], px[:, :, 2]
-    y = (77 * r + 150 * g + 29 * b + 128) >> 8
-    cb = ((-43 * r - 85 * g + 128 * b + 128) >> 8) + 128
-    cr = ((128 * r - 107 * g - 21 * b + 128) >> 8) + 128
-    planes = [np.clip(p, 0, 255) for p in (y, cb, cr)]
-
-    _, _, dc_codes = _jpeg_huff_spec(_JPEG_DC_SYMBOLS, 4)
-    _, _, ac_codes = _jpeg_huff_spec(_JPEG_AC_SYMBOLS, 8)
-    w = _JpegBitWriter()
-    prev_dc = [0, 0, 0]
-    mcu = 0
-    rst = 0
-    for by in range(0, height, 8):
-        for bx in range(0, width, 8):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                w.restart(rst)
-                rst = (rst + 1) % 8
-                prev_dc = [0, 0, 0]
-            mcu += 1
-            for ci, plane in enumerate(planes):
-                block = plane[by:by + 8, bx:bx + 8].astype(np.float64) - 128.0
-                qc = np.rint((C @ block @ C.T) / q).astype(np.int64)
-                zz = [int(qc.flat[ZIGZAG[i]]) for i in range(64)]
-                diff = zz[0] - prev_dc[ci]
-                prev_dc[ci] = zz[0]
-                cat = _jpeg_category(diff)
-                code, nb = dc_codes[cat]
-                w.write(code, nb)
-                if cat:
-                    w.write(diff if diff >= 0 else diff + (1 << cat) - 1, cat)
-                last_nz = 0
-                for i in range(1, 64):
-                    if zz[i]:
-                        last_nz = i
-                run = 0
-                for i in range(1, last_nz + 1):
-                    v = zz[i]
-                    if v == 0:
-                        run += 1
-                        continue
-                    while run > 15:
-                        code, nb = ac_codes[0xF0]  # ZRL
-                        w.write(code, nb)
-                        run -= 16
-                    cat = _jpeg_category(v)
-                    code, nb = ac_codes[(run << 4) | cat]
-                    w.write(code, nb)
-                    w.write(v if v >= 0 else v + (1 << cat) - 1, cat)
-                    run = 0
-                if last_nz < 63:
-                    code, nb = ac_codes[0x00]  # EOB
-                    w.write(code, nb)
-    scan = w.flush()
-
-    def seg(marker, body):
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    dqt = seg(0xDB, bytes([0]) + bytes(_JPEG_QTAB[ZIGZAG[k]] for k in range(64)))
-    sof = seg(
-        0xC0,
-        bytes([8]) + struct.pack(">HH", height, width) + bytes([3])
-        + bytes([1, 0x11, 0]) + bytes([2, 0x11, 0]) + bytes([3, 0x11, 0]),
+    return _jpeg_encode(
+        0xC0, width, height, rgb, restart_interval, [((0, 1, 2), 0, 63, 0, 0)]
     )
-    dc_bits, dc_syms, _ = _jpeg_huff_spec(_JPEG_DC_SYMBOLS, 4)
-    ac_bits, ac_syms, _ = _jpeg_huff_spec(_JPEG_AC_SYMBOLS, 8)
-    dht = seg(0xC4, bytes([0x00]) + bytes(dc_bits[1:17]) + bytes(dc_syms))
-    dht += seg(0xC4, bytes([0x10]) + bytes(ac_bits[1:17]) + bytes(ac_syms))
-    sos = seg(
-        0xDA, bytes([3]) + bytes([1, 0x00, 2, 0x00, 3, 0x00]) + bytes([0, 63, 0])
+
+
+# Progressive scan script: spectral selection for AC plus successive
+# approximation for BOTH DC (first pass at Al=1, one-bit refinement
+# scan) and the luma AC bands (first pass at Al=1, then the T.81
+# G.1.2.3 correction-bit refinement scans) — every T.81 progressive
+# dimension exercised. (components, Ss, Se, Ah, Al); the DC scans
+# interleave all three components.
+_JPEG_PROG_SCANS = [
+    ((0, 1, 2), 0, 0, 0, 1),  # DC first pass, all comps, point transform 1
+    ((0,), 1, 5, 0, 1),       # Y AC low band, first pass at Al=1
+    ((0,), 6, 63, 0, 1),      # Y AC high band, first pass at Al=1
+    ((1,), 1, 63, 0, 0),      # Cb AC (single full-precision pass)
+    ((2,), 1, 63, 0, 0),      # Cr AC
+    ((0, 1, 2), 0, 0, 1, 0),  # DC refinement (1 raw bit per block)
+    ((0,), 1, 5, 1, 0),       # Y AC low band refinement (correction bits)
+    ((0,), 6, 63, 1, 0),      # Y AC high band refinement
+]
+
+
+def build_jpeg_progressive(
+    width: int, height: int, rgb: bytes, restart_interval: int = 0
+) -> bytes:
+    """Encode raw RGB as a PROGRESSIVE JFIF (SOF2, YCbCr 4:4:4): the
+    same quantized coefficients as build_jpeg, split across the
+    _JPEG_PROG_SCANS script. EOB runs are emitted per block (EOBRUN=1,
+    a valid encoder choice), so the baseline Annex-K Huffman tables
+    suffice for every scan. ``restart_interval`` > 0 emits a DRI
+    segment and RSTn markers every that-many MCUs in EVERY scan
+    (numbering restarting at RST0 per scan, DC predictors reset at
+    each boundary) — per-block EOB runs never cross a boundary."""
+    return _jpeg_encode(
+        0xC2, width, height, rgb, restart_interval, _JPEG_PROG_SCANS
     )
-    jfif = seg(
-        0xE0, b"JFIF\x00\x01\x01\x00" + struct.pack(">HH", 1, 1) + b"\x00\x00"
+
+
+def build_jpeg_420(
+    width: int, height: int, rgb: bytes, restart_interval: int = 0
+) -> bytes:
+    """Encode raw RGB as a 4:2:0 chroma-subsampled baseline JFIF
+    (SOF0; Y at 2x2 sampling factors, Cb/Cr at half resolution via the
+    exact integer 2x2 mean (a+b+c+d+2)>>2). Dimensions must be
+    multiples of 16 — one MCU covers 16x16 pixels as four Y blocks
+    (raster order) + one Cb + one Cr block, the standard interleave.
+    ``restart_interval`` emits DRI/RSTn exactly as in build_jpeg."""
+    return _jpeg_encode(
+        0xC0, width, height, rgb, restart_interval,
+        [((0, 1, 2), 0, 63, 0, 0)], subsample=True,
     )
-    dri = (
-        seg(0xDD, struct.pack(">H", restart_interval))
-        if restart_interval
-        else b""
-    )
-    return b"\xff\xd8" + jfif + dqt + sof + dht + dri + sos + scan + b"\xff\xd9"
+
+
+# --------------------------------------------------------------------------
+# Decoder: one segment walker, one set of length-checked segment
+# readers, one scan decoder for every scan kind, one pixel step.
+# --------------------------------------------------------------------------
+def _jpeg_segments(payload: bytes):
+    """Walk a JPEG's marker segments (T.81 B.1.1) after checking SOI:
+    yield ``(marker, body, scan_data)`` per segment until EOI, where
+    ``scan_data`` is the entropy-coded data after an SOS (RSTn markers
+    and stuffed 0xFF00 included, up to the next other marker) and
+    ``b""`` otherwise. A missing SOI, a non-marker byte where a marker
+    is due, or a segment that runs past the payload is a ValueError."""
+    if payload[:2] != b"\xff\xd8":
+        raise ValueError("not a JPEG: missing SOI")
+    pos = 2
+    while pos + 4 <= len(payload):
+        if payload[pos] != 0xFF:
+            raise ValueError("JPEG marker expected")
+        marker = payload[pos + 1]
+        if marker == 0xD9:
+            return
+        end = pos + 2 + struct.unpack_from(">H", payload, pos + 2)[0]
+        if end < pos + 4 or end > len(payload):
+            raise ValueError("truncated JPEG segment")
+        data_end = end
+        if marker == 0xDA:  # entropy-coded data: up to a marker not RSTn
+            data_end = payload.find(b"\xff", end)
+            while 0 <= data_end < len(payload) - 1 and (
+                payload[data_end + 1] == 0x00
+                or 0xD0 <= payload[data_end + 1] <= 0xD7
+            ):
+                data_end = payload.find(b"\xff", data_end + 2)
+            if data_end < 0:
+                data_end = len(payload)
+        yield marker, payload[pos + 4:end], payload[end:data_end]
+        pos = data_end
+
+
+def _jpeg_field(body: bytes, off: int, n: int, what: str) -> bytes:
+    """``body[off:off + n]``; a ValueError if the segment ends first."""
+    if off + n > len(body):
+        raise ValueError(f"truncated JPEG {what} segment")
+    return body[off:off + n]
 
 
 def _jpeg_decode_table(bits, symbols):
     """Canonical (code, length) -> symbol map from DHT bits/values."""
-    if sum(bits[1:17]) > len(symbols):
-        raise ValueError("JPEG DHT bit counts exceed its symbol list")
     table = {}
     code = 0
     k = 0
@@ -850,994 +1059,260 @@ def _jpeg_huff_decode(reader, table):
     raise ValueError("invalid Huffman code in JPEG scan")
 
 
+def _jpeg_ac_first(reader, zz, k, se, al, table, sequential):
+    """Decode one block's AC band [k..se] (sequential, or a progressive
+    first pass at point transform ``al``); returns the EOBRUN that
+    follows it (T.81 G.1.2.2: EOBn covers 2^n + n extra bits blocks,
+    this one included)."""
+    while k <= se:
+        sym = _jpeg_huff_decode(reader, table)
+        r, s = sym >> 4, sym & 0x0F
+        if s == 0:
+            if r == 15:  # ZRL
+                k += 16
+                continue
+            if r and sequential:
+                raise ValueError("JPEG EOB run in a sequential scan")
+            return (1 << r) - 1 + (reader.read(r) if r else 0)
+        k += r
+        if k > se:
+            raise ValueError("JPEG AC run past band end")
+        zz[k] = _jpeg_extend(reader.read(s), s) << al
+        k += 1
+    return 0
+
+
+def _jpeg_ac_refine(reader, zz, k, se, al, table, eobrun):
+    """Decode one block's AC refinement pass (T.81 G.1.2.3, libjpeg's
+    decode_mcu_AC_refine): newly significant coefficients land as
+    +-2^al on zero-history positions, and every already-nonzero
+    coefficient passed over (or covered by an EOB run) reads one
+    correction bit. Returns the EOBRUN left after this block."""
+    p1, m1 = 1 << al, -(1 << al)
+
+    def refine(k):
+        if reader.read_bit() and (abs(zz[k]) & p1) == 0:
+            zz[k] += p1 if zz[k] >= 0 else m1
+
+    while eobrun == 0 and k <= se:
+        sym = _jpeg_huff_decode(reader, table)
+        r, s = sym >> 4, sym & 0x0F
+        newval = 0
+        if s == 0 and r != 15:  # EOBn: covers THIS block too
+            eobrun = (1 << r) + (reader.read(r) if r else 0)
+            break
+        if s:
+            if s != 1:
+                raise ValueError("AC refinement symbol must have s=1")
+            newval = p1 if reader.read_bit() else m1
+        # pass r zero-history positions (history coefficients take
+        # correction bits instead), stopping AT the (r+1)-th: newval's
+        # slot, or ZRL's 16th zero, consumed by the trailing k += 1
+        while k <= se:
+            if zz[k]:
+                refine(k)
+            else:
+                r -= 1
+                if r < 0:
+                    break
+            k += 1
+        if newval:
+            if k > se:
+                raise ValueError("JPEG AC refinement past band end")
+            zz[k] = newval
+        k += 1
+    if eobrun:
+        for k in range(k, se + 1):
+            if zz[k]:
+                refine(k)
+        eobrun -= 1
+    return eobrun
+
+
+def _jpeg_decode_scan(reader, grids, dc, ac, band, mcus, sequential):
+    """Decode one scan's entropy-coded data into the per-component
+    coefficient grids; the mirror of _jpeg_encode's per-block step.
+    ``band`` is the scan's (Ss, Se, Ah, Al); ``dc``/``ac`` map each
+    scan component to its Huffman tables. At each RSTn the reader
+    byte-aligns, and the DC predictors and the EOB run reset."""
+    ss, se, ah, al = band
+    prev = [0] * len(grids)
+    eobrun = 0
+    for rst, blocks in mcus:
+        if rst is not None:
+            reader.expect_restart(rst)
+            prev, eobrun = [0] * len(grids), 0
+        for ci, bi in blocks:
+            zz, k = grids[ci][bi], ss
+            if ss == 0:
+                if ah:  # DC refinement: one raw bit
+                    if reader.read_bit():
+                        zz[0] |= 1 << al
+                    continue
+                cat = _jpeg_huff_decode(reader, dc[ci])
+                prev[ci] += _jpeg_extend(reader.read(cat), cat) if cat else 0
+                zz[0], k = prev[ci] << al, 1
+            if k > se:
+                continue
+            if ah:
+                eobrun = _jpeg_ac_refine(reader, zz, k, se, al, ac[ci], eobrun)
+            elif eobrun:
+                eobrun -= 1
+            else:
+                eobrun = _jpeg_ac_first(reader, zz, k, se, al, ac[ci], sequential)
+
+
 def decode_jpeg(payload: bytes) -> dict:
-    """Decode a baseline sequential JFIF (4:4:4 color or grayscale).
+    """Decode a JFIF: baseline SOF0 (4:4:4, grayscale or 4:2:0) or
+    progressive SOF2 (4:4:4 or grayscale), with DRI/RSTn restarts.
+
+    Every scan decodes into one coefficient grid per component (blocks
+    in raster order, zigzag-ordered coefficients): a sequential scan
+    codes DC and the full AC band per block; a progressive scan codes a
+    DC first pass or refinement bit, or an AC band first pass or
+    correction-bit refinement (T.81 G.1.2), with EOBRUN. Then each
+    block is dequantized and IDCT'd, chroma upsampled by pixel
+    replication and YCbCr converted to RGB.
 
     Returns {"kind", "width", "height", "n_frames", "feat_dim",
-    "pixels" (RGB bytes, row-major), "pixel_sum", "feat_mean"}.
-    Subsampled / progressive / 16-bit-table files raise ValueError.
+    "pixels" (RGB bytes, row-major), "pixel_sum", "feat_mean"}, plus
+    {"progressive": True, "n_scans"} for SOF2 and {"subsampling":
+    "4:2:0"} for 4:2:0. Other SOF types, other sampling factors,
+    16-bit tables and non-8-bit precision raise ValueError.
     """
     import numpy as np
 
-    if payload[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG: missing SOI")
-    pos = 2
     qtabs: dict[int, object] = {}
-    dc_tables: dict[int, dict] = {}
-    ac_tables: dict[int, dict] = {}
-    sof = None
-    scan_comps = None
-    scan_start = None
-    restart_interval = 0
-    while pos + 4 <= len(payload):
-        if payload[pos] != 0xFF:
-            raise ValueError("JPEG marker expected")
-        marker = payload[pos + 1]
-        if marker == 0xD9:
-            break
-        size = struct.unpack_from(">H", payload, pos + 2)[0]
-        body = payload[pos + 4 : pos + 2 + size]
-        if len(body) != size - 2:
-            raise ValueError("truncated JPEG segment")
-        if marker == 0xDD:
-            if len(body) < 2:
-                raise ValueError("truncated JPEG DRI segment")
-            restart_interval = struct.unpack(">H", body[:2])[0]
-        elif marker == 0xDB:
+    huff: dict[tuple, dict] = {}  # (0 = DC / 1 = AC, table id) -> table
+    grids = None
+    restart_interval = n_scans = 0
+    for marker, body, data in _jpeg_segments(payload):
+        if marker == 0xDB:
+            for off in range(0, len(body), 65):
+                tab = _jpeg_field(body, off, 65, "DQT")
+                if tab[0] >> 4:
+                    raise ValueError("16-bit JPEG quant tables unsupported")
+                q = np.zeros(64, dtype=np.int64)
+                q[ZIGZAG] = list(tab[1:])
+                qtabs[tab[0] & 0x0F] = q.reshape(8, 8)
+        elif marker == 0xC4:
             off = 0
             while off < len(body):
-                if off + 65 > len(body):
-                    raise ValueError("truncated JPEG DQT segment")
-                pq, tq = body[off] >> 4, body[off] & 0x0F
-                if pq != 0:
-                    raise ValueError("16-bit JPEG quant tables unsupported")
-                tab = np.zeros(64, dtype=np.int64)
-                for k in range(64):
-                    tab[ZIGZAG[k]] = body[off + 1 + k]
-                qtabs[tq] = tab.reshape(8, 8)
-                off += 65
-        elif marker == 0xC2:
-            # progressive: hand the whole payload to the scan-merging
-            # decoder (round-7 addition; formerly a ValueError boundary)
-            return decode_jpeg_progressive(payload)
-        elif marker in (0xC1, 0xC3, 0xC5, 0xC6, 0xC7):
+                bits = [0, *_jpeg_field(body, off + 1, 16, "DHT")]
+                syms = _jpeg_field(body, off + 17, sum(bits), "DHT")
+                tc_th = body[off]
+                huff[min(tc_th >> 4, 1), tc_th & 0x0F] = _jpeg_decode_table(
+                    bits, syms
+                )
+                off += 17 + len(syms)
+        elif marker == 0xDD:
+            (restart_interval,) = struct.unpack(
+                ">H", _jpeg_field(body, 0, 2, "DRI")
+            )
+        elif marker in (0xC0, 0xC2):
+            prec, h, w, n = struct.unpack(
+                ">BHHB", _jpeg_field(body, 0, 6, "SOF")
+            )
+            comps = _jpeg_field(body, 6, 3 * n, "SOF")
+            samp = list(comps[1::3])
+            if prec != 8:
+                raise ValueError("only 8-bit JPEG precision supported")
+            subsampled = (marker, samp) == (0xC0, [0x22, 0x11, 0x11])
+            if n not in (1, 3) or samp != [0x11] * n and not subsampled:
+                raise ValueError(
+                    "only 4:4:4/grayscale (and baseline 4:2:0) JPEG supported"
+                )
+            unit = 16 if subsampled else 8
+            if w % unit or h % unit:
+                raise ValueError(f"JPEG dimensions not multiples of {unit}")
+            ids, tqs = list(comps[0::3]), list(comps[2::3])
+            factors = [(s >> 4, s & 0x0F) for s in samp]
+            # blocks materialise as scans reach them: a corrupt SOF may
+            # declare far more blocks than the payload can code
+            grids = [defaultdict(lambda: [0] * 64) for _ in factors]
+            progressive = marker == 0xC2
+            n_scans = 0
+        elif 0xC1 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
             raise ValueError(
                 "only baseline (SOF0) and progressive (SOF2) JPEG supported"
             )
-        elif marker == 0xC0:
-            if len(body) < 6:
-                raise ValueError("truncated JPEG SOF0 segment")
-            prec = body[0]
-            h, w = struct.unpack_from(">HH", body, 1)
-            ncomp = body[5]
-            if len(body) < 6 + 3 * ncomp:
-                raise ValueError("truncated JPEG SOF0 component list")
-            samps = [body[7 + 3 * i] for i in range(ncomp)]
-            if samps == [0x22, 0x11, 0x11]:
-                # 4:2:0: hand the whole payload to the subsampling-aware
-                # decoder (round-7 addition; formerly a ValueError
-                # boundary)
-                return decode_jpeg_420(payload)
-            comps = []
-            for i in range(ncomp):
-                cid, samp, tq = body[6 + 3 * i : 9 + 3 * i]
-                if samp != 0x11:
-                    raise ValueError(
-                        "only 4:4:4/grayscale and 4:2:0 JPEG sampling"
-                        " supported"
-                    )
-                comps.append((cid, tq))
-            if prec != 8:
-                raise ValueError("only 8-bit JPEG precision supported")
-            sof = (w, h, comps)
-        elif marker == 0xC4:
-            off = 0
-            while off < len(body):
-                if off + 17 > len(body):
-                    raise ValueError("truncated JPEG DHT segment")
-                tc, th = body[off] >> 4, body[off] & 0x0F
-                bits = [0] + list(body[off + 1 : off + 17])
-                nsym = sum(bits)
-                if off + 17 + nsym > len(body):
-                    raise ValueError("truncated JPEG DHT symbol list")
-                syms = list(body[off + 17 : off + 17 + nsym])
-                table = _jpeg_decode_table(bits, syms)
-                (dc_tables if tc == 0 else ac_tables)[th] = table
-                off += 17 + nsym
         elif marker == 0xDA:
-            if len(body) < 1 or len(body) < 1 + 2 * body[0] + 3:
-                raise ValueError("truncated JPEG SOS segment")
-            ns = body[0]
-            scan_comps = []
-            for i in range(ns):
-                cid, tabs = body[1 + 2 * i], body[2 + 2 * i]
-                scan_comps.append((cid, tabs >> 4, tabs & 0x0F))
-            scan_start = pos + 2 + size
-            break
-        pos += 2 + size
-    if sof is None or scan_comps is None:
-        raise ValueError("JPEG missing SOF0/SOS")
-    w, h, comps = sof
-    if w % 8 or h % 8:
-        raise ValueError("non-multiple-of-8 JPEG dimensions unsupported")
-    # Undeclared-table references are parse failures (the documented
-    # ValueError contract), not KeyErrors in the MCU loop.
-    for _cid, tq in comps:
-        if tq not in qtabs:
-            raise ValueError(f"JPEG references undeclared quant table {tq}")
-    comp_q = {cid: qtabs[tq] for cid, tq in comps}
-    for cid, dct_id, act_id in scan_comps:
-        if dct_id not in dc_tables or act_id not in ac_tables:
-            raise ValueError("JPEG references undeclared Huffman table")
-        if cid not in comp_q:
-            raise ValueError(f"JPEG SOS references undeclared component {cid}")
-    end = payload.rfind(b"\xff\xd9")
-    reader = _JpegBitReader(payload[scan_start : end if end > 0 else len(payload)])
-    C = _jpeg_dct_matrix()
-    planes = [np.zeros((h, w), dtype=np.float64) for _ in scan_comps]
-    prev_dc = [0] * len(scan_comps)
-    mcu = 0
-    rst = 0
-    for by in range(0, h, 8):
-        for bx in range(0, w, 8):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                reader.expect_restart(rst)
-                rst = (rst + 1) % 8
-                prev_dc = [0] * len(scan_comps)
-            mcu += 1
-            for ci, (cid, dct_id, act_id) in enumerate(scan_comps):
-                dct = dc_tables[dct_id]
-                act = ac_tables[act_id]
-                zz = [0] * 64
-                cat = _jpeg_huff_decode(reader, dct)
-                diff = _jpeg_extend(reader.read(cat), cat) if cat else 0
-                prev_dc[ci] += diff
-                zz[0] = prev_dc[ci]
-                i = 1
-                while i < 64:
-                    sym = _jpeg_huff_decode(reader, act)
-                    if sym == 0x00:  # EOB
-                        break
-                    if sym == 0xF0:  # ZRL
-                        i += 16
-                        continue
-                    run, cat = sym >> 4, sym & 0x0F
-                    i += run
-                    if i > 63:
-                        raise ValueError("JPEG AC run past block end")
-                    zz[i] = _jpeg_extend(reader.read(cat), cat)
-                    i += 1
-                coef = np.zeros(64, dtype=np.float64)
-                for k in range(64):
-                    coef[ZIGZAG[k]] = zz[k]
-                coef = coef.reshape(8, 8) * comp_q[cid].astype(np.float64)
-                planes[ci][by:by + 8, bx:bx + 8] = C.T @ coef @ C + 128.0
-    ip = [np.clip(np.rint(p), 0, 255).astype(np.int64) for p in planes]
-    if len(ip) == 3:
-        y, cb, cr = ip[0], ip[1] - 128, ip[2] - 128
-        r = np.clip(np.rint(y + 1.402 * cr), 0, 255).astype(np.uint8)
-        g = np.clip(
-            np.rint(y - 0.344136 * cb - 0.714136 * cr), 0, 255
-        ).astype(np.uint8)
-        b = np.clip(np.rint(y + 1.772 * cb), 0, 255).astype(np.uint8)
-        rgb = np.stack([r, g, b], axis=2)
-    else:
-        g8 = ip[0].astype(np.uint8)
-        rgb = np.stack([g8, g8, g8], axis=2)
-    pix = rgb.tobytes()
-    psum = int(rgb.astype(np.int64).sum())
-    return {
-        "kind": "jpeg", "width": int(w), "height": int(h), "n_frames": 1,
-        "feat_dim": 3, "pixels": pix, "pixel_sum": psum,
-        "feat_mean": psum / (len(pix) * 255.0) if pix else 0.0,
-    }
-
-
-def _jpeg_quantized_zz(width: int, height: int, rgb: bytes) -> list[list[list[int]]]:
-    """Shared encoder front end (color transform, DCT, quantization):
-    per component, the zigzag-ordered quantized coefficient list of
-    each 8x8 block in raster order — bit-identical to what build_jpeg
-    entropy-codes, so a progressive re-encode of the same pixels holds
-    the SAME coefficients and must decode bit-identically."""
-    import numpy as np
-
-    if width % 8 or height % 8:
-        raise ValueError("JPEG encoder requires multiple-of-8 dimensions")
-    if len(rgb) != width * height * 3:
-        raise ValueError("rgb length mismatch")
-    C = _jpeg_dct_matrix()
-    q = np.array(_JPEG_QTAB, dtype=np.float64).reshape(8, 8)
-    px = np.frombuffer(bytes(rgb), dtype=np.uint8).reshape(height, width, 3)
-    px = px.astype(np.int64)
-    r, g, b = px[:, :, 0], px[:, :, 1], px[:, :, 2]
-    y = (77 * r + 150 * g + 29 * b + 128) >> 8
-    cb = ((-43 * r - 85 * g + 128 * b + 128) >> 8) + 128
-    cr = ((128 * r - 107 * g - 21 * b + 128) >> 8) + 128
-    planes = [np.clip(p, 0, 255) for p in (y, cb, cr)]
-    out: list[list[list[int]]] = [[], [], []]
-    for by in range(0, height, 8):
-        for bx in range(0, width, 8):
-            for ci, plane in enumerate(planes):
-                block = plane[by:by + 8, bx:bx + 8].astype(np.float64) - 128.0
-                qc = np.rint((C @ block @ C.T) / q).astype(np.int64)
-                out[ci].append([int(qc.flat[ZIGZAG[i]]) for i in range(64)])
-    return out
-
-
-# Progressive scan script: spectral selection for AC plus successive
-# approximation for BOTH DC (first pass at Al=1, one-bit refinement
-# scan) and the luma AC bands (first pass at Al=1, then the T.81
-# G.1.2.3 correction-bit refinement scans) — every T.81 progressive
-# dimension exercised. (comp_indices, Ss, Se, Ah, Al); comp None means
-# "all components, interleaved" (DC scans).
-_JPEG_PROG_SCANS = [
-    (None, 0, 0, 0, 1),   # DC first pass, all comps, point transform 1
-    ((0,), 1, 5, 0, 1),   # Y AC low band, first pass at Al=1
-    ((0,), 6, 63, 0, 1),  # Y AC high band, first pass at Al=1
-    ((1,), 1, 63, 0, 0),  # Cb AC (single full-precision pass)
-    ((2,), 1, 63, 0, 0),  # Cr AC
-    (None, 0, 0, 1, 0),   # DC refinement (1 raw bit per block)
-    ((0,), 1, 5, 1, 0),   # Y AC low band refinement (correction bits)
-    ((0,), 6, 63, 1, 0),  # Y AC high band refinement
-]
-
-
-def build_jpeg_progressive(
-    width: int, height: int, rgb: bytes, restart_interval: int = 0
-) -> bytes:
-    """Encode raw RGB as a PROGRESSIVE JFIF (SOF2, YCbCr 4:4:4): the
-    same quantized coefficients as build_jpeg, split across the
-    _JPEG_PROG_SCANS script. EOB runs are emitted per block (EOBRUN=1,
-    a valid encoder choice), so the baseline Annex-K Huffman tables
-    suffice for every scan. ``restart_interval`` > 0 emits a DRI
-    segment and RSTn markers every that-many MCUs in EVERY scan
-    (numbering restarting at RST0 per scan, DC predictors reset at
-    each boundary) — per-block EOB runs never cross a boundary."""
-    coefs = _jpeg_quantized_zz(width, height, rgb)
-    nblocks = len(coefs[0])
-    _, _, dc_codes = _jpeg_huff_spec(_JPEG_DC_SYMBOLS, 4)
-    _, _, ac_codes = _jpeg_huff_spec(_JPEG_AC_SYMBOLS, 8)
-
-    def seg(marker, body):
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    scans = b""
-    for comp_ids, ss, se, ah, al in _JPEG_PROG_SCANS:
-        w = _JpegBitWriter()
-        rst = 0
-        if ss == 0:  # DC scan (interleaved, all components)
-            if ah == 0:  # first pass on the point-transformed values
-                prev = [0, 0, 0]
-                for bi in range(nblocks):
-                    if restart_interval and bi and bi % restart_interval == 0:
-                        w.restart(rst)
-                        rst = (rst + 1) % 8
-                        prev = [0, 0, 0]
-                    for ci in range(3):
-                        v = coefs[ci][bi][0] >> al  # arithmetic shift
-                        diff = v - prev[ci]
-                        prev[ci] = v
-                        cat = _jpeg_category(diff)
-                        code, nb = dc_codes[cat]
-                        w.write(code, nb)
-                        if cat:
-                            w.write(
-                                diff if diff >= 0 else diff + (1 << cat) - 1,
-                                cat,
-                            )
-            else:  # refinement: the Al-th magnitude bit, one per block
-                for bi in range(nblocks):
-                    if restart_interval and bi and bi % restart_interval == 0:
-                        w.restart(rst)
-                        rst = (rst + 1) % 8
-                    for ci in range(3):
-                        w.write(coefs[ci][bi][0] & 1, 1)
-            header = bytes([3]) + bytes(
-                [1, 0x00, 2, 0x00, 3, 0x00]
-            ) + bytes([ss, se, (ah << 4) | al])
-        elif ah == 0:  # AC first pass: single component, band [ss..se]
-            (ci,) = comp_ids
-            for bi in range(nblocks):
-                if restart_interval and bi and bi % restart_interval == 0:
-                    w.restart(rst)
-                    rst = (rst + 1) % 8
-                zz = coefs[ci][bi]
-                # point transform: magnitude shift, sign preserved
-                band = [
-                    (v >> al) if v >= 0 else -((-v) >> al)
-                    for v in (zz[i] for i in range(ss, se + 1))
-                ]
-                last = -1
-                for j, v in enumerate(band):
-                    if v:
-                        last = j
-                run = 0
-                for j in range(last + 1):
-                    v = band[j]
-                    if v == 0:
-                        run += 1
-                        continue
-                    while run > 15:
-                        code, nb = ac_codes[0xF0]  # ZRL
-                        w.write(code, nb)
-                        run -= 16
-                    cat = _jpeg_category(v)
-                    code, nb = ac_codes[(run << 4) | cat]
-                    w.write(code, nb)
-                    w.write(v if v >= 0 else v + (1 << cat) - 1, cat)
-                    run = 0
-                if last < se - ss:  # per-block EOB (EOBRUN of exactly 1)
-                    code, nb = ac_codes[0x00]
-                    w.write(code, nb)
-            header = bytes([1]) + bytes([ci + 1, 0x00]) + bytes(
-                [ss, se, (ah << 4) | al]
-            )
-        else:  # AC refinement (T.81 G.1.2.3 / libjpeg encode_mcu_AC_refine)
-            (ci,) = comp_ids
-            for bi in range(nblocks):
-                if restart_interval and bi and bi % restart_interval == 0:
-                    w.restart(rst)
-                    rst = (rst + 1) % 8
-                zz = coefs[ci][bi]
-                # magnitudes at the CURRENT precision: 1 = newly
-                # significant this pass, >1 = history (correction bit)
-                mags = [abs(zz[i]) >> al for i in range(ss, se + 1)]
-                eobpos = -1
-                for j, t in enumerate(mags):
-                    if t == 1:
-                        eobpos = j
-                run = 0
-                corr: list[int] = []  # buffered correction bits
-                for j, t in enumerate(mags):
-                    if t == 0:
-                        run += 1
-                        continue
-                    # ZRLs flush on EVERY nonzero encounter (history
-                    # included) so correction bits stay positionally
-                    # aligned with the decoder's skip loop; trailing
-                    # zeros past the last new significant fold into EOB
-                    while run > 15 and j <= eobpos:
-                        code, nb = ac_codes[0xF0]  # ZRL
-                        w.write(code, nb)
-                        run -= 16
-                        for b in corr:
-                            w.write(b, 1)
-                        corr = []
-                    if t > 1:  # history coefficient: buffer its bit
-                        corr.append(t & 1)
-                        continue
-                    # newly significant (t == 1)
-                    code, nb = ac_codes[(run << 4) | 1]
-                    w.write(code, nb)
-                    w.write(1 if zz[ss + j] >= 0 else 0, 1)  # sign bit
-                    for b in corr:
-                        w.write(b, 1)
-                    corr = []
-                    run = 0
-                if run > 0 or corr:
-                    code, nb = ac_codes[0x00]  # EOB (run of exactly 1)
-                    w.write(code, nb)
-                    for b in corr:
-                        w.write(b, 1)
-            header = bytes([1]) + bytes([ci + 1, 0x00]) + bytes(
-                [ss, se, (ah << 4) | al]
-            )
-        scans += seg(0xDA, header) + w.flush()
-
-    dqt = seg(0xDB, bytes([0]) + bytes(_JPEG_QTAB[ZIGZAG[k]] for k in range(64)))
-    sof = seg(
-        0xC2,
-        bytes([8]) + struct.pack(">HH", height, width) + bytes([3])
-        + bytes([1, 0x11, 0]) + bytes([2, 0x11, 0]) + bytes([3, 0x11, 0]),
-    )
-    dc_bits, dc_syms, _ = _jpeg_huff_spec(_JPEG_DC_SYMBOLS, 4)
-    ac_bits, ac_syms, _ = _jpeg_huff_spec(_JPEG_AC_SYMBOLS, 8)
-    dht = seg(0xC4, bytes([0x00]) + bytes(dc_bits[1:17]) + bytes(dc_syms))
-    dht += seg(0xC4, bytes([0x10]) + bytes(ac_bits[1:17]) + bytes(ac_syms))
-    jfif = seg(
-        0xE0, b"JFIF\x00\x01\x01\x00" + struct.pack(">HH", 1, 1) + b"\x00\x00"
-    )
-    dri = (
-        seg(0xDD, struct.pack(">H", restart_interval))
-        if restart_interval
-        else b""
-    )
-    return b"\xff\xd8" + jfif + dqt + sof + dht + dri + scans + b"\xff\xd9"
-
-
-def decode_jpeg_progressive(payload: bytes) -> dict:
-    """Decode a progressive JFIF (SOF2, 4:4:4 or grayscale): walk every
-    scan, merging spectral-selection bands and DC successive-
-    approximation passes into one coefficient array per block, then
-    dequantize + IDCT once. Supports the full progressive feature set
-    for 4:4:4/grayscale: DC first/refinement passes and AC first
-    passes at any Al, plus the T.81 G.1.2.3 AC correction-bit
-    refinement (newly-significant ±1<<Al insertion, zero-history run
-    skipping, EOB-covered correction bits), and DRI/RSTn restart
-    markers in every scan kind (byte-align + DC-predictor/EOBRUN reset
-    at each boundary, RST numbering restarting per scan)."""
-    import numpy as np
-
-    if payload[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG: missing SOI")
-    pos = 2
-    restart_interval = 0
-    qtabs: dict[int, object] = {}
-    dc_tables: dict[int, dict] = {}
-    ac_tables: dict[int, dict] = {}
-    sof = None
-    coefs: list | None = None  # per comp: nblocks x 64 ints, zigzag order
-    n_scans = 0
-    while pos + 4 <= len(payload):
-        if payload[pos] != 0xFF:
-            raise ValueError("JPEG marker expected")
-        marker = payload[pos + 1]
-        if marker == 0xD9:
-            break
-        size = struct.unpack_from(">H", payload, pos + 2)[0]
-        body = payload[pos + 4 : pos + 2 + size]
-        if len(body) != size - 2:
-            raise ValueError("truncated JPEG segment")
-        if marker == 0xDD:
-            if len(body) < 2:
-                raise ValueError("truncated JPEG DRI segment")
-            restart_interval = struct.unpack(">H", body[:2])[0]
-        elif marker == 0xDB:
-            off = 0
-            while off < len(body):
-                if off + 65 > len(body):
-                    raise ValueError("truncated JPEG DQT segment")
-                pq, tq = body[off] >> 4, body[off] & 0x0F
-                if pq != 0:
-                    raise ValueError("16-bit JPEG quant tables unsupported")
-                tab = np.zeros(64, dtype=np.int64)
-                for k in range(64):
-                    tab[ZIGZAG[k]] = body[off + 1 + k]
-                qtabs[tq] = tab.reshape(8, 8)
-                off += 65
-        elif marker == 0xC4:
-            off = 0
-            while off < len(body):
-                if off + 17 > len(body):
-                    raise ValueError("truncated JPEG DHT segment")
-                tc, th = body[off] >> 4, body[off] & 0x0F
-                bits = [0] + list(body[off + 1 : off + 17])
-                nsym = sum(bits)
-                if off + 17 + nsym > len(body):
-                    raise ValueError("truncated JPEG DHT symbol list")
-                syms = list(body[off + 17 : off + 17 + nsym])
-                (dc_tables if tc == 0 else ac_tables)[th] = (
-                    _jpeg_decode_table(bits, syms)
-                )
-                off += 17 + nsym
-        elif marker == 0xC2:
-            prec = body[0]
-            h, w = struct.unpack_from(">HH", body, 1)
-            ncomp = body[5]
-            comps = []
-            for i in range(ncomp):
-                cid, samp, tq = body[6 + 3 * i : 9 + 3 * i]
-                if samp != 0x11:
-                    raise ValueError(
-                        "subsampled JPEG unsupported (4:4:4/grayscale only)"
-                    )
-                comps.append((cid, tq))
-            if prec != 8 or w % 8 or h % 8:
-                raise ValueError("unsupported JPEG precision/dimensions")
-            sof = (w, h, comps)
-            nblocks = (w // 8) * (h // 8)
-            coefs = [
-                [[0] * 64 for _ in range(nblocks)] for _ in range(ncomp)
-            ]
-        elif marker in (0xC0, 0xC1, 0xC3, 0xC5, 0xC6, 0xC7):
-            raise ValueError("decode_jpeg_progressive expects SOF2")
-        elif marker == 0xDA:
-            if sof is None or coefs is None:
-                raise ValueError("JPEG SOS before SOF2")
-            w_, h_, comps = sof
-            cid_to_ci = {cid: i for i, (cid, _tq) in enumerate(comps)}
-            if len(body) < 1 or len(body) < 1 + 2 * body[0] + 3:
-                raise ValueError("truncated JPEG SOS segment")
-            ns = body[0]
-            scan_comps = []
-            for i in range(ns):
-                cid, tabs = body[1 + 2 * i], body[2 + 2 * i]
-                if cid not in cid_to_ci:
+            if grids is None:
+                raise ValueError("JPEG SOS before SOF")
+            ns = _jpeg_field(body, 0, 1, "SOS")[0]
+            spec = _jpeg_field(body, 1, 2 * ns + 3, "SOS")
+            ss, se, ah, al = spec[-3], spec[-2], spec[-1] >> 4, spec[-1] & 0x0F
+            if ns == 0 or (
+                (se > 63 or ss > se or (ss == 0) != (se == 0) or ss and ns > 1)
+                if progressive else (ss, se, ah, al) != (0, 63, 0, 0)
+            ):
+                raise ValueError("invalid JPEG scan header")
+            cis, dc, ac = [], {}, {}
+            for cid, tabs in zip(spec[0:2 * ns:2], spec[1:2 * ns:2]):
+                if cid not in ids:
                     raise ValueError(
                         f"JPEG SOS references undeclared component {cid}"
                     )
-                scan_comps.append((cid_to_ci[cid], tabs >> 4, tabs & 0x0F))
-            ss, se = body[1 + 2 * ns], body[2 + 2 * ns]
-            ah, al = body[3 + 2 * ns] >> 4, body[3 + 2 * ns] & 0x0F
-            if ss > se or se > 63:
-                raise ValueError("JPEG progressive scan band out of range")
-            # entropy data: up to the next real marker (skip stuffing;
-            # RSTn markers are scan-interior, keep walking past them)
-            dstart = pos + 2 + size
-            dend = dstart
-            while dend < len(payload) - 1:
-                nxt = payload[dend + 1]
-                if payload[dend] == 0xFF and nxt != 0x00 and not (
-                    0xD0 <= nxt <= 0xD7
-                ):
-                    break
-                dend += 1
-            reader = _JpegBitReader(payload[dstart:dend])
-            nblocks = (w_ // 8) * (h_ // 8)
+                ci = ids.index(cid)
+                cis.append(ci)
+                dc[ci] = huff.get((0, tabs >> 4))
+                ac[ci] = huff.get((1, tabs & 0x0F))
+                if (ss == 0 and ah == 0 and dc[ci] is None
+                        or se and ac[ci] is None):
+                    raise ValueError("JPEG references undeclared Huffman table")
+            _jpeg_decode_scan(
+                _JpegBitReader(data), grids, dc, ac, (ss, se, ah, al),
+                _jpeg_mcus(cis, factors, w, h, unit, restart_interval),
+                not progressive,
+            )
             n_scans += 1
-            rst = 0  # RST numbering restarts at RST0 for each scan
-            if ss == 0:  # DC scan (interleaved over scan_comps)
-                if se != 0:
-                    raise ValueError("DC scan must have Se=0")
-                if ah == 0:
-                    for ci, dct_id, _a in scan_comps:
-                        if dct_id not in dc_tables:
-                            raise ValueError(
-                                "JPEG references undeclared Huffman table"
-                            )
-                    prev = [0] * len(scan_comps)
-                    for bi in range(nblocks):
-                        if restart_interval and bi and (
-                            bi % restart_interval == 0
-                        ):
-                            reader.expect_restart(rst)
-                            rst = (rst + 1) % 8
-                            prev = [0] * len(scan_comps)
-                        for si, (ci, dct_id, _a) in enumerate(scan_comps):
-                            cat = _jpeg_huff_decode(reader, dc_tables[dct_id])
-                            diff = (
-                                _jpeg_extend(reader.read(cat), cat)
-                                if cat else 0
-                            )
-                            prev[si] += diff
-                            coefs[ci][bi][0] = prev[si] << al
-                else:  # DC refinement: one raw bit per block per comp
-                    for bi in range(nblocks):
-                        if restart_interval and bi and (
-                            bi % restart_interval == 0
-                        ):
-                            reader.expect_restart(rst)
-                            rst = (rst + 1) % 8
-                        for ci, _d, _a in scan_comps:
-                            if reader.read_bit():
-                                coefs[ci][bi][0] |= 1 << al
-            elif ah == 0:  # AC first pass: single component, band
-                if len(scan_comps) != 1:
-                    raise ValueError("progressive AC scan must be 1-component")
-                ci, _d, act_id = scan_comps[0]
-                if act_id not in ac_tables:
-                    raise ValueError("JPEG references undeclared Huffman table")
-                act = ac_tables[act_id]
-                eobrun = 0
-                for bi in range(nblocks):
-                    if restart_interval and bi and bi % restart_interval == 0:
-                        # T.81: EOB runs do not cross restart boundaries
-                        reader.expect_restart(rst)
-                        rst = (rst + 1) % 8
-                        eobrun = 0
-                    zz = coefs[ci][bi]
-                    if eobrun > 0:
-                        eobrun -= 1
-                        continue
-                    k = ss
-                    while k <= se:
-                        sym = _jpeg_huff_decode(reader, act)
-                        r, s = sym >> 4, sym & 0x0F
-                        if s == 0:
-                            if r == 15:  # ZRL
-                                k += 16
-                                continue
-                            # EOBn: run of 2^r blocks + r extra bits
-                            eobrun = (1 << r) - 1 + (reader.read(r) if r else 0)
-                            break
-                        k += r
-                        if k > se:
-                            raise ValueError("JPEG AC run past band end")
-                        zz[k] = _jpeg_extend(reader.read(s), s) << al
-                        k += 1
-            else:  # AC refinement (T.81 G.1.2.3 / decode_mcu_AC_refine)
-                if len(scan_comps) != 1:
-                    raise ValueError("progressive AC scan must be 1-component")
-                ci, _d, act_id = scan_comps[0]
-                if act_id not in ac_tables:
-                    raise ValueError("JPEG references undeclared Huffman table")
-                act = ac_tables[act_id]
-                p1, m1 = 1 << al, -(1 << al)
-
-                def _refine_nonzero(zz, k):
-                    # one correction bit per already-nonzero coefficient
-                    if reader.read_bit() and (abs(zz[k]) & p1) == 0:
-                        zz[k] += p1 if zz[k] >= 0 else m1
-
-                eobrun = 0
-                for bi in range(nblocks):
-                    if restart_interval and bi and bi % restart_interval == 0:
-                        reader.expect_restart(rst)
-                        rst = (rst + 1) % 8
-                        eobrun = 0
-                    zz = coefs[ci][bi]
-                    k = ss
-                    if eobrun == 0:
-                        while k <= se:
-                            sym = _jpeg_huff_decode(reader, act)
-                            r, s = sym >> 4, sym & 0x0F
-                            newval = 0
-                            if s == 0:
-                                if r != 15:  # EOBn (covers THIS block too)
-                                    eobrun = (1 << r) + (
-                                        reader.read(r) if r else 0
-                                    )
-                                    break
-                                # ZRL: skip 16 zero-history positions
-                            else:
-                                if s != 1:
-                                    raise ValueError(
-                                        "AC refinement symbol must have s=1"
-                                    )
-                                newval = p1 if reader.read_bit() else m1
-                            # advance: pass r zero-history positions
-                            # (history coefficients don't count against
-                            # r — they get correction bits), stopping AT
-                            # the (r+1)-th zero-history position: the
-                            # landing slot for newval, or ZRL's 16th
-                            # zero, consumed by the trailing k += 1
-                            if s == 0:
-                                r = 15
-                            while k <= se:
-                                if zz[k] != 0:
-                                    _refine_nonzero(zz, k)
-                                else:
-                                    r -= 1
-                                    if r < 0:
-                                        break
-                                k += 1
-                            if newval:
-                                if k > se:
-                                    raise ValueError(
-                                        "JPEG AC refinement past band end"
-                                    )
-                                zz[k] = newval
-                            k += 1
-                    if eobrun > 0:
-                        # EOB-covered region: remaining nonzero-history
-                        # coefficients still carry correction bits
-                        while k <= se:
-                            if zz[k] != 0:
-                                _refine_nonzero(zz, k)
-                            k += 1
-                        eobrun -= 1
-            pos = dend
-            continue
-        pos += 2 + size
-    if sof is None or coefs is None:
-        raise ValueError("JPEG missing SOF2/SOS")
-    w, h, comps = sof
-    for _cid, tq in comps:
-        if tq not in qtabs:
-            raise ValueError(f"JPEG references undeclared quant table {tq}")
+    if grids is None or n_scans == 0:
+        raise ValueError("JPEG missing SOF/SOS")
     C = _jpeg_dct_matrix()
     planes = []
-    for ci, (_cid, tq) in enumerate(comps):
-        plane = np.zeros((h, w), dtype=np.float64)
-        qtab = qtabs[tq].astype(np.float64)
-        bi = 0
-        for by in range(0, h, 8):
-            for bx in range(0, w, 8):
-                coef = np.zeros(64, dtype=np.float64)
-                zz = coefs[ci][bi]
-                for k in range(64):
-                    coef[ZIGZAG[k]] = zz[k]
-                coef = coef.reshape(8, 8) * qtab
-                plane[by:by + 8, bx:bx + 8] = C.T @ coef @ C + 128.0
-                bi += 1
-        planes.append(plane)
-    ip = [np.clip(np.rint(p), 0, 255).astype(np.int64) for p in planes]
-    if len(ip) == 3:
-        y, cb, cr = ip[0], ip[1] - 128, ip[2] - 128
-        r = np.clip(np.rint(y + 1.402 * cr), 0, 255).astype(np.uint8)
-        g = np.clip(
-            np.rint(y - 0.344136 * cb - 0.714136 * cr), 0, 255
-        ).astype(np.uint8)
-        b = np.clip(np.rint(y + 1.772 * cb), 0, 255).astype(np.uint8)
-        rgb = np.stack([r, g, b], axis=2)
-    else:
-        g8 = ip[0].astype(np.uint8)
-        rgb = np.stack([g8, g8, g8], axis=2)
-    pix = rgb.tobytes()
-    psum = int(rgb.astype(np.int64).sum())
-    return {
-        "kind": "jpeg", "width": int(w), "height": int(h), "n_frames": 1,
-        "feat_dim": 3, "pixels": pix, "pixel_sum": psum,
-        "feat_mean": psum / (len(pix) * 255.0) if pix else 0.0,
-        "progressive": True, "n_scans": n_scans,
-    }
-
-
-def build_jpeg_420(
-    width: int, height: int, rgb: bytes, restart_interval: int = 0
-) -> bytes:
-    """Encode raw RGB as a 4:2:0 chroma-subsampled baseline JFIF
-    (SOF0; Y at 2x2 sampling factors, Cb/Cr at half resolution via the
-    exact integer 2x2 mean (a+b+c+d+2)>>2). Dimensions must be
-    multiples of 16 — one MCU covers 16x16 pixels as four Y blocks
-    (raster order) + one Cb + one Cr block, the standard interleave.
-    ``restart_interval`` emits DRI/RSTn exactly as in build_jpeg."""
-    import numpy as np
-
-    if width % 16 or height % 16:
-        raise ValueError("build_jpeg_420 requires multiple-of-16 dimensions")
-    if len(rgb) != width * height * 3:
-        raise ValueError("rgb length mismatch")
-    C = _jpeg_dct_matrix()
-    q = np.array(_JPEG_QTAB, dtype=np.float64).reshape(8, 8)
-    px = np.frombuffer(bytes(rgb), dtype=np.uint8).reshape(height, width, 3)
-    px = px.astype(np.int64)
-    r, g, b = px[:, :, 0], px[:, :, 1], px[:, :, 2]
-    y = np.clip((77 * r + 150 * g + 29 * b + 128) >> 8, 0, 255)
-    cb = np.clip(((-43 * r - 85 * g + 128 * b + 128) >> 8) + 128, 0, 255)
-    cr = np.clip(((128 * r - 107 * g - 21 * b + 128) >> 8) + 128, 0, 255)
-
-    def down(p):  # exact integer 2x2 mean, round half up
-        return (
-            p[0::2, 0::2] + p[0::2, 1::2] + p[1::2, 0::2] + p[1::2, 1::2] + 2
-        ) >> 2
-
-    cbh, crh = down(cb), down(cr)
-    _, _, dc_codes = _jpeg_huff_spec(_JPEG_DC_SYMBOLS, 4)
-    _, _, ac_codes = _jpeg_huff_spec(_JPEG_AC_SYMBOLS, 8)
-    w = _JpegBitWriter()
-    prev_dc = [0, 0, 0]
-
-    def put_block(plane, by, bx, ci):
-        block = plane[by:by + 8, bx:bx + 8].astype(np.float64) - 128.0
-        qc = np.rint((C @ block @ C.T) / q).astype(np.int64)
-        zz = [int(qc.flat[ZIGZAG[i]]) for i in range(64)]
-        diff = zz[0] - prev_dc[ci]
-        prev_dc[ci] = zz[0]
-        cat = _jpeg_category(diff)
-        code, nb = dc_codes[cat]
-        w.write(code, nb)
-        if cat:
-            w.write(diff if diff >= 0 else diff + (1 << cat) - 1, cat)
-        last_nz = 0
-        for i in range(1, 64):
-            if zz[i]:
-                last_nz = i
-        run = 0
-        for i in range(1, last_nz + 1):
-            v = zz[i]
-            if v == 0:
-                run += 1
-                continue
-            while run > 15:
-                code, nb = ac_codes[0xF0]
-                w.write(code, nb)
-                run -= 16
-            cat = _jpeg_category(v)
-            code, nb = ac_codes[(run << 4) | cat]
-            w.write(code, nb)
-            w.write(v if v >= 0 else v + (1 << cat) - 1, cat)
-            run = 0
-        if last_nz < 63:
-            code, nb = ac_codes[0x00]
-            w.write(code, nb)
-
-    mcu = 0
-    rst = 0
-    for my in range(0, height, 16):
-        for mx in range(0, width, 16):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                w.restart(rst)
-                rst = (rst + 1) % 8
-                prev_dc[:] = [0, 0, 0]
-            mcu += 1
-            for vv in (0, 8):
-                for hh in (0, 8):
-                    put_block(y, my + vv, mx + hh, 0)
-            put_block(cbh, my // 2, mx // 2, 1)
-            put_block(crh, my // 2, mx // 2, 2)
-    scan = w.flush()
-
-    def seg(marker, body):
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    dqt = seg(0xDB, bytes([0]) + bytes(_JPEG_QTAB[ZIGZAG[k]] for k in range(64)))
-    sof = seg(
-        0xC0,
-        bytes([8]) + struct.pack(">HH", height, width) + bytes([3])
-        + bytes([1, 0x22, 0]) + bytes([2, 0x11, 0]) + bytes([3, 0x11, 0]),
-    )
-    dc_bits, dc_syms, _ = _jpeg_huff_spec(_JPEG_DC_SYMBOLS, 4)
-    ac_bits, ac_syms, _ = _jpeg_huff_spec(_JPEG_AC_SYMBOLS, 8)
-    dht = seg(0xC4, bytes([0x00]) + bytes(dc_bits[1:17]) + bytes(dc_syms))
-    dht += seg(0xC4, bytes([0x10]) + bytes(ac_bits[1:17]) + bytes(ac_syms))
-    sos = seg(
-        0xDA, bytes([3]) + bytes([1, 0x00, 2, 0x00, 3, 0x00]) + bytes([0, 63, 0])
-    )
-    jfif = seg(
-        0xE0, b"JFIF\x00\x01\x01\x00" + struct.pack(">HH", 1, 1) + b"\x00\x00"
-    )
-    dri = (
-        seg(0xDD, struct.pack(">H", restart_interval))
-        if restart_interval
-        else b""
-    )
-    return b"\xff\xd8" + jfif + dqt + sof + dht + dri + sos + scan + b"\xff\xd9"
-
-
-def decode_jpeg_420(payload: bytes) -> dict:
-    """Decode a 4:2:0 baseline JFIF (SOF0 with sampling factors
-    Y=0x22, Cb=Cr=0x11): per MCU, four Y blocks + one Cb + one Cr in
-    the standard interleave; chroma upsampled by 2x2 pixel replication
-    before the YCbCr->RGB conversion. decode_jpeg delegates here when
-    it sees the 4:2:0 factor pattern."""
-    import numpy as np
-
-    if payload[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG: missing SOI")
-    pos = 2
-    qtabs: dict[int, object] = {}
-    dc_tables: dict[int, dict] = {}
-    ac_tables: dict[int, dict] = {}
-    sof = None
-    scan_comps = None
-    scan_start = None
-    restart_interval = 0
-    while pos + 4 <= len(payload):
-        if payload[pos] != 0xFF:
-            raise ValueError("JPEG marker expected")
-        marker = payload[pos + 1]
-        if marker == 0xD9:
-            break
-        size = struct.unpack_from(">H", payload, pos + 2)[0]
-        body = payload[pos + 4 : pos + 2 + size]
-        if len(body) != size - 2:
-            raise ValueError("truncated JPEG segment")
-        if marker == 0xDD:
-            if len(body) < 2:
-                raise ValueError("truncated JPEG DRI segment")
-            restart_interval = struct.unpack(">H", body[:2])[0]
-        elif marker == 0xDB:
-            off = 0
-            while off < len(body):
-                if off + 65 > len(body):
-                    raise ValueError("truncated JPEG DQT segment")
-                pq, tq = body[off] >> 4, body[off] & 0x0F
-                if pq != 0:
-                    raise ValueError("16-bit JPEG quant tables unsupported")
-                tab = np.zeros(64, dtype=np.int64)
-                for k in range(64):
-                    tab[ZIGZAG[k]] = body[off + 1 + k]
-                qtabs[tq] = tab.reshape(8, 8)
-                off += 65
-        elif marker == 0xC4:
-            off = 0
-            while off < len(body):
-                if off + 17 > len(body):
-                    raise ValueError("truncated JPEG DHT segment")
-                tc, th = body[off] >> 4, body[off] & 0x0F
-                bits = [0] + list(body[off + 1 : off + 17])
-                nsym = sum(bits)
-                if off + 17 + nsym > len(body):
-                    raise ValueError("truncated JPEG DHT symbol list")
-                syms = list(body[off + 17 : off + 17 + nsym])
-                (dc_tables if tc == 0 else ac_tables)[th] = (
-                    _jpeg_decode_table(bits, syms)
-                )
-                off += 17 + nsym
-        elif marker == 0xC0:
-            prec = body[0]
-            h, w = struct.unpack_from(">HH", body, 1)
-            ncomp = body[5]
-            comps = []
-            for i in range(ncomp):
-                cid, samp, tq = body[6 + 3 * i : 9 + 3 * i]
-                comps.append((cid, samp, tq))
-            if prec != 8:
-                raise ValueError("only 8-bit JPEG precision supported")
-            if [s for _c, s, _t in comps] != [0x22, 0x11, 0x11]:
-                raise ValueError("decode_jpeg_420 expects 4:2:0 factors")
-            if w % 16 or h % 16:
-                raise ValueError("non-multiple-of-16 4:2:0 dimensions")
-            sof = (w, h, comps)
-        elif marker == 0xDA:
-            if len(body) < 1 or len(body) < 1 + 2 * body[0] + 3:
-                raise ValueError("truncated JPEG SOS segment")
-            ns = body[0]
-            scan_comps = []
-            for i in range(ns):
-                cid, tabs = body[1 + 2 * i], body[2 + 2 * i]
-                scan_comps.append((cid, tabs >> 4, tabs & 0x0F))
-            scan_start = pos + 2 + size
-            break
-        pos += 2 + size
-    if sof is None or scan_comps is None:
-        raise ValueError("JPEG missing SOF0/SOS")
-    w, h, comps = sof
-    if len(scan_comps) != len(comps):
-        raise ValueError("JPEG SOS component count != SOF component count")
-    for _cid, _s, tq in comps:
+    for (hs, vs), tq, grid in zip(factors, tqs, grids):
         if tq not in qtabs:
             raise ValueError(f"JPEG references undeclared quant table {tq}")
-    for _cid, dct_id, act_id in scan_comps:
-        if dct_id not in dc_tables or act_id not in ac_tables:
-            raise ValueError("JPEG references undeclared Huffman table")
-    end = payload.rfind(b"\xff\xd9")
-    reader = _JpegBitReader(payload[scan_start : end if end > 0 else len(payload)])
-    C = _jpeg_dct_matrix()
-    yplane = np.zeros((h, w), dtype=np.float64)
-    cbplane = np.zeros((h // 2, w // 2), dtype=np.float64)
-    crplane = np.zeros((h // 2, w // 2), dtype=np.float64)
-    prev_dc = [0, 0, 0]
-    qmap = {i: qtabs[tq].astype(np.float64) for i, (_c, _s, tq) in enumerate(comps)}
-
-    def get_block(ci, plane, by, bx):
-        _cid, dct_id, act_id = scan_comps[ci]
-        zz = [0] * 64
-        cat = _jpeg_huff_decode(reader, dc_tables[dct_id])
-        diff = _jpeg_extend(reader.read(cat), cat) if cat else 0
-        prev_dc[ci] += diff
-        zz[0] = prev_dc[ci]
-        i = 1
-        while i < 64:
-            sym = _jpeg_huff_decode(reader, ac_tables[act_id])
-            if sym == 0x00:
-                break
-            if sym == 0xF0:
-                i += 16
-                continue
-            run, cat = sym >> 4, sym & 0x0F
-            i += run
-            if i > 63:
-                raise ValueError("JPEG AC run past block end")
-            zz[i] = _jpeg_extend(reader.read(cat), cat)
-            i += 1
-        coef = np.zeros(64, dtype=np.float64)
-        for k in range(64):
-            coef[ZIGZAG[k]] = zz[k]
-        coef = coef.reshape(8, 8) * qmap[ci]
-        plane[by:by + 8, bx:bx + 8] = C.T @ coef @ C + 128.0
-
-    mcu = 0
-    rst = 0
-    for my in range(0, h, 16):
-        for mx in range(0, w, 16):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                reader.expect_restart(rst)
-                rst = (rst + 1) % 8
-                prev_dc[:] = [0, 0, 0]
-            mcu += 1
-            for vv in (0, 8):
-                for hh in (0, 8):
-                    get_block(0, yplane, my + vv, mx + hh)
-            get_block(1, cbplane, my // 2, mx // 2)
-            get_block(2, crplane, my // 2, mx // 2)
-    yq = np.clip(np.rint(yplane), 0, 255).astype(np.int64)
-    cbq = np.clip(np.rint(cbplane), 0, 255).astype(np.int64)
-    crq = np.clip(np.rint(crplane), 0, 255).astype(np.int64)
-    cbu = np.repeat(np.repeat(cbq, 2, axis=0), 2, axis=1) - 128
-    cru = np.repeat(np.repeat(crq, 2, axis=0), 2, axis=1) - 128
-    r = np.clip(np.rint(yq + 1.402 * cru), 0, 255).astype(np.uint8)
-    g = np.clip(
-        np.rint(yq - 0.344136 * cbu - 0.714136 * cru), 0, 255
-    ).astype(np.uint8)
-    b = np.clip(np.rint(yq + 1.772 * cbu), 0, 255).astype(np.uint8)
-    rgb = np.stack([r, g, b], axis=2)
+        q = qtabs[tq].astype(np.float64)
+        rows, cols = h // unit * vs, w // unit * hs
+        plane = np.zeros((rows * 8, cols * 8), dtype=np.float64)
+        for bi in range(rows * cols):
+            coef = np.zeros(64, dtype=np.float64)
+            coef[ZIGZAG] = grid[bi]
+            by, bx = 8 * (bi // cols), 8 * (bi % cols)
+            coef = coef.reshape(8, 8) * q
+            plane[by:by + 8, bx:bx + 8] = C.T @ coef @ C + 128.0
+        plane = np.clip(np.rint(plane), 0, 255).astype(np.int64)
+        up = unit // 8 // hs
+        planes.append(np.repeat(np.repeat(plane, up, axis=0), up, axis=1))
+    if len(planes) == 3:
+        y, cb, cr = planes[0], planes[1] - 128, planes[2] - 128
+        rgb = np.stack([
+            np.clip(np.rint(y + 1.402 * cr), 0, 255),
+            np.clip(np.rint(y - 0.344136 * cb - 0.714136 * cr), 0, 255),
+            np.clip(np.rint(y + 1.772 * cb), 0, 255),
+        ], axis=2).astype(np.uint8)
+    else:
+        rgb = np.repeat(planes[0].astype(np.uint8)[:, :, None], 3, axis=2)
     pix = rgb.tobytes()
     psum = int(rgb.astype(np.int64).sum())
-    return {
+    out = {
         "kind": "jpeg", "width": int(w), "height": int(h), "n_frames": 1,
         "feat_dim": 3, "pixels": pix, "pixel_sum": psum,
         "feat_mean": psum / (len(pix) * 255.0) if pix else 0.0,
-        "subsampling": "4:2:0",
     }
+    if progressive:
+        out.update(progressive=True, n_scans=n_scans)
+    if unit == 16:
+        out["subsampling"] = "4:2:0"
+    return out
 
 
 def decode_media(payload: bytes) -> dict:
     """Decode a media payload by sniffing magic bytes.
 
-    BMP, WAV, JPEG (baseline, progressive, and 4:2:0 — ``decode_jpeg``
-    routes by SOF marker and sampling factors), PNG (grayscale,
+    BMP, WAV, JPEG (baseline, progressive, and 4:2:0 — all through
+    the one decoder ``decode_jpeg``), PNG (grayscale,
     truecolor, AND palette/indexed — every 8-bit color type — each in
     both sequential and Adam7-interlaced layouts), and GIF (both
     sequential and 4-pass interlaced layouts) decode for real
@@ -5683,8 +5158,7 @@ def build_exif_app1(
         + _exif_ifd(entries, bo, 8)
         + gps_blob
     )
-    body = b"Exif\x00\x00" + tiff
-    return b"\xff\xe1" + struct.pack(">H", len(body) + 2) + body
+    return _jpeg_segment(0xE1, b"Exif\x00\x00" + tiff)
 
 
 def build_jpeg_with_exif(width: int, height: int, rgb: bytes, app1: bytes) -> bytes:
@@ -5700,23 +5174,13 @@ def parse_exif(payload: bytes) -> dict:
     (tag, type, count, value) entries with inline/offset resolution,
     ASCII / SHORT / LONG / RATIONAL decoding. Raises ValueError on any
     malformed layout (the media-decoder error contract)."""
-    if payload[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG: missing SOI")
-    pos, app1 = 2, None
-    while pos + 4 <= len(payload):
-        if payload[pos] != 0xFF:
-            raise ValueError("JPEG marker expected")
-        marker = payload[pos + 1]
-        if marker in (0xD9, 0xDA):
+    app1 = None
+    for marker, body, _data in _jpeg_segments(payload):
+        if marker == 0xDA:
             break
-        size = struct.unpack_from(">H", payload, pos + 2)[0]
-        body = payload[pos + 4 : pos + 2 + size]
-        if len(body) != size - 2:
-            raise ValueError("truncated JPEG segment")
         if marker == 0xE1 and body[:6] == b"Exif\x00\x00":
             app1 = body[6:]
             break
-        pos += 2 + size
     if app1 is None:
         raise ValueError("no APP1 Exif segment")
     if len(app1) < 8:

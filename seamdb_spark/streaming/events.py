@@ -32,7 +32,7 @@ _log = logging.getLogger(__name__)
 
 
 def stream_state_partitions(
-    sf_dir: str, table: str = "events", spark: SparkSession | None = None
+    spark: SparkSession, sf_dir: str, table: str = "events"
 ) -> int | None:
     """Shuffle/state-store partition count for the finite-replay parity
     gates, derived from the streamed input's size instead of the core
@@ -51,16 +51,13 @@ def stream_state_partitions(
     while a MB-scale replay stops paying hundreds of empty store
     round-trips.
 
-    Returns ``None`` — "don't override; keep the session's core-count
-    default" — when the input's size cannot be measured (no session to
-    reach the filesystem with and the path is not driver-local, or the
-    path is missing/empty): the pre-r14 behavior, never a
-    silently-pinned floor (ADVICE r14). Either way only ``*.parquet``
-    bytes count (never ``.crc`` or ``_SUCCESS``). With a ``spark``
-    handle the size comes from the Hadoop FileSystem of the path's own
-    scheme (a recursive ``listFiles`` — works for s3a/hdfs/local
-    alike); without one, a recursive local walk covers the fixture
-    layouts."""
+    The size comes from the Hadoop FileSystem of the path's own scheme
+    (a recursive ``listFiles`` — s3a/hdfs/local alike), and only
+    ``*.parquet`` bytes count (never ``.crc`` or ``_SUCCESS``). Returns
+    ``None`` — "don't override; keep the session's core-count default"
+    — when the size cannot be measured: the FileSystem lookup fails
+    (logged once), or the path is missing or holds no parquet bytes.
+    Never a silently-pinned floor (ADVICE r14)."""
     import math
     import os
 
@@ -68,29 +65,18 @@ def stream_state_partitions(
 
     path = os.path.join(sf_dir, f"{table}.parquet")
     size = 0
-    if spark is not None:
-        try:
-            hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-            fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-            if fs.exists(hpath):
-                it = fs.listFiles(hpath, True)
-                while it.hasNext():
-                    st = it.next()
-                    if st.getPath().getName().endswith(".parquet"):
-                        size += int(st.getLen())
-        except Exception:  # noqa: BLE001 — estimation must never kill a gate
-            _log.warning("cannot size %s via Hadoop FS", path, exc_info=True)
-            size = 0
-    if size <= 0 and "://" not in sf_dir:
-        if os.path.isdir(path):
-            size = sum(
-                os.path.getsize(os.path.join(root, f))
-                for root, _dirs, files in os.walk(path)
-                for f in files
-                if f.endswith(".parquet")
-            )
-        elif os.path.exists(path):
-            size = os.path.getsize(path)
+    try:
+        hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+        if fs.exists(hpath):
+            it = fs.listFiles(hpath, True)
+            while it.hasNext():
+                st = it.next()
+                if st.getPath().getName().endswith(".parquet"):
+                    size += int(st.getLen())
+    except Exception:  # noqa: BLE001 — estimation must never kill a gate
+        _log.warning("cannot size %s via Hadoop FS", path, exc_info=True)
+        return None
     if size <= 0:
         return None  # unmeasurable input: keep the session default
     cap = default_parallelism()

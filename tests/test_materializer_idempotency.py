@@ -119,18 +119,26 @@ def test_materializer_list_is_current():
     evict-and-rerun sweep — exactly the failure class (non-re-runnable
     build on gate retime) that destroyed the round-10 bench record.
     Reads bench_results.json["materializers"] (the mechanical
-    discovery record bench.py writes every run); the reverse direction
+    discovery record bench.py writes every run), or, in a checkout
+    where bench.py has not run, the newest committed
+    BENCH_DETAILS_r*.json; the reverse direction
     — a listed query that no longer materializes — is handled by the
     sweep's skip branch, because warm shared artifacts can legitimately
     hide a materializer from any single bench ordering."""
+    import glob
     import json
     import os
+    import re
 
     import bench
 
-    results = os.path.join(os.path.dirname(bench.__file__), "bench_results.json")
+    root = os.path.dirname(bench.__file__)
+    results = os.path.join(root, "bench_results.json")
     if not os.path.exists(results):
-        pytest.skip("no bench_results.json yet (bench never run in this checkout)")
+        results = max(
+            glob.glob(os.path.join(root, "BENCH_DETAILS_r*.json")),
+            key=lambda p: int(re.search(r"_r(\d+)\.json$", p).group(1)),
+        )
     with open(results) as f:
         discovered = set(json.load(f).get("materializers", {}))
     missing = sorted(discovered - set(MATERIALIZER_QUERIES))

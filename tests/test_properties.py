@@ -273,6 +273,89 @@ def test_jpeg_decoder_rejects_unsupported_variants():
     with pytest.raises(ValueError):
         decode_jpeg(payload[: len(payload) // 2])  # truncated scan
 
+    from seamdb_spark.operators.multimodal import (
+        build_jpeg_420,
+        build_jpeg_progressive,
+    )
+
+    raw = bytes(range(256)) * 3
+    # a progressive SOF2 whose body is cut to 3 bytes (length field kept
+    # consistent, so only the SOF reader can notice)
+    prog = build_jpeg_progressive(16, 16, raw)
+    at = prog.index(b"\xff\xc2")
+    end = at + 2 + int.from_bytes(prog[at + 2:at + 4], "big")
+    with pytest.raises(ValueError):
+        decode_jpeg(prog[:at + 2] + b"\x00\x05" + prog[at + 4:at + 7] + prog[end:])
+    # a 4:2:0 SOS naming a component the frame does not declare
+    sub = build_jpeg_420(16, 16, raw)
+    at = sub.index(b"\xff\xda") + 5  # first component id of the scan
+    with pytest.raises(ValueError):
+        decode_jpeg(sub[:at] + bytes([9]) + sub[at + 1:])
+
+
+# Per builder: sha256 of its bytes, and of the sorted items of each
+# decode_media() result, over test_jpeg_codec_output_is_pinned's matrix.
+# Recorded from the codec before it was rebuilt around one segment
+# walker and one encoder front end. A codec change must reproduce them;
+# they are not regenerated to make a test pass.
+_JPEG_GOLDEN = {
+    "build_jpeg": (
+        "26da72ef7e2cb0bd2ed81d03f20926b54e4072b84b6f2c105b0d8d9980359000",
+        "97b29bbbf53f5c10e70547094ded541daf115b0df8917bab184836ef14ad6008",
+    ),
+    "build_jpeg_progressive": (
+        "7d10ca7a01330ae51a9bccefa479a2d5b8f6bd5b6f3c9b99b36665bdd6958a1a",
+        "10b87189124e2f4d26af496c19701b4f80998ac17fe5bef549e45e3f7a6fcb9f",
+    ),
+    "build_jpeg_420": (
+        "ef861bb59eeac2e222b1e2dffb6a007fd5d9df262eff19bdfb06ae6289970931",
+        "1066a43dcd6ee95741c9807db161b5612805db5b86742e9f0c021910db765f0e",
+    ),
+}
+
+
+def test_jpeg_codec_output_is_pinned():
+    """Absolute pin of every JPEG builder and of the decoder: for each
+    builder, a ramp and a seeded-noise image at 16x16 and 32x32, each
+    with restart interval 0, 1 and 3, hash to the recorded digests —
+    both the encoded bytes and the full decoded dict (pixels included).
+    The round-trip tests only compare the codec with itself; this one
+    catches a change that shifts encoder and decoder together."""
+    import hashlib
+
+    import numpy as np
+
+    from seamdb_spark.operators import multimodal as mm
+
+    def ramp(side):
+        ys, xs = np.mgrid[0:side, 0:side]
+        return np.stack(
+            [(6 * xs + 3 * ys) % 256, (4 * xs + 5 * ys) % 256,
+             (2 * xs + 7 * ys) % 256],
+            axis=2,
+        ).astype(np.uint8).tobytes()
+
+    def noise(side):
+        return np.random.default_rng(8).integers(
+            0, 256, size=side * side * 3, dtype=np.uint8
+        ).tobytes()
+
+    got = {}
+    for name in _JPEG_GOLDEN:
+        hb, hd = hashlib.sha256(), hashlib.sha256()
+        for side in (16, 32):
+            for image in (ramp, noise):
+                rgb = image(side)
+                for ri in (0, 1, 3):
+                    payload = getattr(mm, name)(
+                        side, side, rgb, restart_interval=ri
+                    )
+                    hb.update(payload)
+                    out = mm.decode_media(payload)
+                    hd.update(repr(sorted(out.items())).encode())
+        got[name] = (hb.hexdigest(), hd.hexdigest())
+    assert got == _JPEG_GOLDEN
+
 
 @given(
     w=st.integers(min_value=1, max_value=24),

@@ -1,12 +1,13 @@
-"""Focused pins for stream_state_partitions (portable input
-estimation that counts only parquet bytes, floor-never-beats-cap) and
-the _shuffle_partitions_during single-scope guard (ADVICE r14).
+"""Focused pins for stream_state_partitions (input estimation through
+the Hadoop FileSystem that counts only parquet bytes, floor-never-beats-
+cap) and the _shuffle_partitions_during single-scope guard (ADVICE r14).
 
-Plain Python logic: only the Hadoop-FS sizing pin needs a SparkSession.
+The sizing pins need a SparkSession; the scope guard is plain Python.
 """
 
 from __future__ import annotations
 
+import logging
 import os
 
 import pytest
@@ -19,53 +20,54 @@ from seamdb_spark.streaming.events import (
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def test_fixture_value_is_floored_small_input(monkeypatch):
+def test_fixture_value_is_floored_small_input(monkeypatch, spark):
     # sf0.001 events is far under 16 MB -> ceil(size/16MB) == 1, floored
     # at min(8, cap); with the default 32-core budget that is 8.
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_PARTITIONS", raising=False)
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
-    assert stream_state_partitions(SF_DIR) == 8
+    assert stream_state_partitions(spark, SF_DIR) == 8
 
 
-def test_cap_beats_floor(monkeypatch):
+def test_cap_beats_floor(monkeypatch, spark):
     # ADVICE r14: the old max(8, min(cap, ...)) let the 8 floor override
     # a 4-core budget; the cap must win.
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_PARTITIONS", raising=False)
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
-    assert stream_state_partitions(SF_DIR) == 4
+    assert stream_state_partitions(spark, SF_DIR) == 4
 
 
-def test_remote_uri_returns_none_without_session(monkeypatch):
-    # Un-measurable input (no session to reach the scheme's FS with):
-    # None = "keep the session's core-count default", never a pinned 8.
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_PARTITIONS", raising=False)
-    assert stream_state_partitions("s3://bucket/sf100") is None
+def test_remote_uri_without_filesystem_returns_none(spark, caplog):
+    # Un-measurable input: no FileSystem for the scheme on this
+    # classpath (no hadoop-aws jar, so the lookup fails before any
+    # connection). None = "keep the session's core-count default",
+    # never a pinned 8, and the failure is logged once.
+    with caplog.at_level(logging.WARNING, "seamdb_spark.streaming.events"):
+        assert stream_state_partitions(spark, "s3a://bucket/sf100") is None
+    assert [r.getMessage() for r in caplog.records] == [
+        "cannot size s3a://bucket/sf100/events.parquet via Hadoop FS"
+    ]
 
 
-def test_missing_path_returns_none(monkeypatch, tmp_path):
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_PARTITIONS", raising=False)
-    assert stream_state_partitions(str(tmp_path)) is None
+def test_missing_path_returns_none(tmp_path, spark):
+    assert stream_state_partitions(spark, str(tmp_path)) is None
 
 
-def test_nested_directory_walked_recursively(monkeypatch, tmp_path):
+def test_nested_directory_walked_recursively(monkeypatch, tmp_path, spark):
     # A partitioned layout (part=*/...parquet) must be sized from ALL
     # nested parquet bytes; the old non-recursive listdir read 0.
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_PARTITIONS", raising=False)
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
     d = tmp_path / "events.parquet" / "part=0"
     d.mkdir(parents=True)
     f = d / "chunk.parquet"
     f.touch()
     os.truncate(f, 200 << 20)  # 200 MB nested (sparse)
-    got = stream_state_partitions(str(tmp_path))
+    got = stream_state_partitions(spark, str(tmp_path))
     assert got == 13  # ceil(200MB / 16MB), above the floor, under the cap
 
 
 def test_hadoop_and_local_sizing_count_only_parquet(monkeypatch, tmp_path, spark):
     # One 200 MB parquet file beside 400 MB each of checksum and marker
-    # files: both sizing paths see only the parquet bytes, so the count
-    # is ceil(200MB / 16MB) = 13 with or without a session (counting
-    # the side files would give 32, the cap).
+    # files on a local path: the Hadoop listing sees only the parquet
+    # bytes, so the count is ceil(200MB / 16MB) = 13 (counting the side
+    # files would give 32, the cap).
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
     d = tmp_path / "events.parquet"
     d.mkdir()
@@ -75,8 +77,7 @@ def test_hadoop_and_local_sizing_count_only_parquet(monkeypatch, tmp_path, spark
         f = d / name
         f.touch()
         os.truncate(f, size)  # sparse
-    assert stream_state_partitions(str(tmp_path)) == 13
-    assert stream_state_partitions(str(tmp_path), spark=spark) == 13
+    assert stream_state_partitions(spark, str(tmp_path)) == 13
 
 
 class _FakeConf:
