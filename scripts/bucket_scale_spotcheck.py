@@ -9,10 +9,11 @@ touch few buckets vs a scattered batch touching every bucket).
 
 Protocol: a hash-clustered snapshot table (BUCKETS xxhash64 buckets,
 SEGMENTS append commits — the shape a long-lived ingest table has),
-then for each batch shape run the EXACT probe execute_insert runs
-(dml.py:281-305: derive the batch's bucket set, bucket-restricted
-snapshots.read, left-semi clash check capped at 1) and audit the
-files the pruned read touches via input_file_name(), p30's audit.
+then for each batch shape run the EXACT probe the distributed
+``dml.execute_insert`` path runs (derive the batch's bucket set,
+bucket-restricted snapshots.read, left-semi clash check capped at 1)
+and audit the files the pruned read touches via input_file_name(),
+p30's audit.
 
 Scale claim under test: scanned files ≈ SEGMENTS × touched_buckets —
 independent of table row count for a locality-keyed batch — while the
@@ -72,7 +73,7 @@ def build_table(spark, root: str, rows: int) -> TableSnapshots:
 
 
 def probe(spark, snaps: TableSnapshots, schema, batch_keys, pruned: bool):
-    """The execute_insert clash probe (dml.py:281-305), instrumented."""
+    """The distributed ``dml.execute_insert`` clash probe, instrumented."""
     batch = spark.createDataFrame([(int(k),) for k in batch_keys], "k long")
     # The batch's TRUE bucket set, in both branches (ADVICE r13: the
     # unpruned row used to report touched_buckets=BUCKETS, misstating

@@ -12,10 +12,28 @@ snapshot append.
   src/sql/mod.rs:277-426),
 - returns a single-row ``count`` result (insert.rs:50-53,232-234).
 
-Spark-first: uniqueness = in-batch groupBy duplicate check + anti-join
-against the current snapshot — both distributed, no driver loop. The
-whole statement commits atomically via the snapshot manifest swap; a
-constraint violation aborts before any manifest change.
+Two paths, picked by a property of the input, never by a setting or a
+row count:
+- A VALUES list (the input is a local relation: its rows are in the
+  plan, bounded by the statement text) is checked on the driver
+  (``_insert_rows``). Catalyst folds the aligning casts into the
+  relation, so collecting it runs no job; serial columns are numbered
+  from the statement's counter range, the null and in-batch duplicate
+  checks run in Python, one filtered scan of the snapshot finds clashes
+  with existing keys, and the rows commit as a local relation. These
+  are the reference's per-key point checks; a 50-row statement runs
+  ≤3 Spark jobs.
+- Any other input (INSERT … SELECT) stays distributed: serials from
+  ``monotonically_increasing_id`` plus per-partition offsets
+  (``assign_serials``), and ``validate_batch``'s groupBy duplicate
+  check and semi-join against the current snapshot. No row of the
+  batch reaches the driver.
+
+Both raise in the reference's order (nullability, then each unique
+index in declaration order, in-batch duplicate before clash) with the
+same key equality. The whole statement commits atomically via the
+snapshot manifest swap; a constraint violation aborts before any
+manifest change.
 
 Scale notes (100 TB): the existing-side join prunes to the index
 columns only (column pruning at the parquet scan); for huge tables this
@@ -25,15 +43,25 @@ unique key so the anti-join co-locates without a full shuffle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from functools import reduce
+from operator import or_
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .catalog import Metastore
-from .errors import NullViolationError, TypeMismatchError, UniqueIndexError
+from .errors import (
+    InvalidArgumentError,
+    NullViolationError,
+    TypeMismatchError,
+    UniqueIndexError,
+)
 from .session import local_frame
-from .snapshots import TableSnapshots
-from .types import TableDescriptor, spark_type
+from .snapshots import TableSnapshots, bucket_column
+from .types import IndexDescriptor, TableDescriptor, spark_type
+
+_UNIQUE_KINDS = ("primary_key", "unique_nulls_distinct", "unique_nulls_not_distinct")
 
 _KIND_FAMILY = {
     "boolean": "bool",
@@ -75,18 +103,21 @@ def align_and_validate(
     unmentioned columns with NULL, check type-kind compatibility, cast."""
     target_cols = [c.name for c in desc.columns]
     names = insert_columns if insert_columns is not None else target_cols
-    if len(df.columns) != len(names):
+    width = len(df.columns)
+    if width != len(names):
         raise TypeMismatchError(
-            f"INSERT has {len(df.columns)} expressions but {len(names)} target columns"
+            f"INSERT has {width} expressions but {len(names)} target columns"
         )
     for n in names:
-        desc.column(n)  # raises KeyError → surfaced by engine
+        if n not in target_cols:
+            raise InvalidArgumentError(f"unknown column {n!r}")
     renamed = df.toDF(*names)
+    src_types = dict(renamed.dtypes)  # one schema read, not one per column
 
     exprs = []
     for col in desc.columns:
         if col.name in names:
-            src_type = dict(renamed.dtypes)[col.name]
+            src_type = src_types[col.name]
             src_fam = _family_of_spark(src_type)
             dst_fam = _KIND_FAMILY[col.kind]
             if src_fam not in (dst_fam, "null"):
@@ -182,15 +213,19 @@ def validate_batch(
     desc: TableDescriptor,
     pruned: dict[tuple, DataFrame] | None = None,
 ) -> int:
-    """All constraint checks in ONE Spark action; returns the row count.
+    """All constraint checks of a distributed batch in one Spark action;
+    returns the row count.
 
     The row count, every non-nullable column's null flag
     (≙ reference: src/sql/client.rs:253-256), and every unique index's
     in-batch-duplicate and existing-key-clash flags
     (≙ src/sql/row.rs:89-109; tests src/sql/mod.rs:277-426) are computed
-    as 1-row aggregates cross-joined into a single 1-row result, so an
-    INSERT pays one validation job regardless of how many constraints
-    the table declares (previously up to 4 jobs per index).
+    as 1-row aggregates cross-joined into a single 1-row result and
+    read by one ``collect``. That one action is still several Spark
+    jobs: under AQE each aggregate's shuffle stage runs as its own job
+    (14–20 jobs for a table with a serial key and one unique column),
+    which is why a VALUES list takes the driver path
+    (``_insert_rows``) instead.
 
     NULLS [NOT] DISTINCT semantics:
     - nulls_distinct: rows with any NULL key column never conflict —
@@ -215,12 +250,7 @@ def validate_batch(
         ],
     )
 
-    unique_ixs = [
-        ix
-        for ix in desc.indexes
-        if ix.kind
-        in ("primary_key", "unique_nulls_distinct", "unique_nulls_not_distinct")
-    ]
+    unique_ixs = _unique_indexes(desc)
     for i, ix in enumerate(unique_ixs):
         nulls_conflict = ix.kind == "unique_nulls_not_distinct"
         cols = ix.columns
@@ -260,11 +290,36 @@ def validate_batch(
             raise NullViolationError(f"null value in non-null column {c}")
     for i, ix in enumerate(unique_ixs):
         if row[f"__dup_{i}"] or row[f"__clash_{i}"]:
-            raise UniqueIndexError(
-                "duplicate key value violates unique constraint on "
-                f"({', '.join(ix.columns)})"
-            )
+            raise _unique_error(ix)
     return row["__n"]
+
+
+def _unique_indexes(desc: TableDescriptor) -> list[IndexDescriptor]:
+    return [ix for ix in desc.indexes if ix.kind in _UNIQUE_KINDS]
+
+
+def _unique_error(ix: IndexDescriptor) -> UniqueIndexError:
+    return UniqueIndexError(
+        "duplicate key value violates unique constraint on "
+        f"({', '.join(ix.columns)})"
+    )
+
+
+def _is_values_list(df: DataFrame) -> bool:
+    """The input is a VALUES list: its analyzed plan is a local
+    relation, so its rows are already on the driver."""
+    plan = df._jdf.queryExecution().analyzed()
+    return plan.getClass().getSimpleName() == "LocalRelation"
+
+
+_NAN = object()
+
+
+def _key(values) -> tuple:
+    """A batch key that Python compares as Spark compares keys: NaN
+    equals NaN (a Python NaN equals nothing, not even itself inside a
+    tuple), and 0.0 equals -0.0 (Python agrees already)."""
+    return tuple(_NAN if v != v else v for v in values)
 
 
 def execute_insert(
@@ -275,9 +330,13 @@ def execute_insert(
     database: str,
     snapshots: TableSnapshots,
 ) -> int:
-    """Full insert pipeline; returns affected-row count."""
+    """Full insert pipeline; returns affected-row count. A VALUES list
+    is checked on the driver (``_insert_rows``); any other input runs
+    the distributed pipeline below."""
     spark = input_df.sparkSession
     aligned = align_and_validate(input_df, desc, insert_columns)
+    if _is_values_list(input_df):
+        return _insert_rows(aligned, desc, insert_columns, store, database, snapshots)
     filled = assign_serials(aligned, desc, store, database, insert_columns)
     # Materialize once: serial assignment + validation + commit must see
     # one deterministic batch.
@@ -293,22 +352,171 @@ def execute_insert(
         bucketing = snapshots.current_extra().get("bucketing")
         pruned: dict[tuple, DataFrame] = {}
         if bucketing:
-            bcols, n_buckets = bucketing["cols"], int(bucketing["n"])
-            bucket_expr = F.pmod(
-                F.xxhash64(*[F.col(c) for c in bcols]), F.lit(n_buckets)
-            ).cast("int")
             batch_buckets = {
                 r[0]
-                for r in filled.select(bucket_expr.alias("b")).distinct().collect()
+                for r in filled.select(bucket_column(bucketing))
+                .distinct()
+                .collect()
             }
             pruned_read = snapshots.read(
                 spark, desc.spark_schema(), buckets=batch_buckets
             )
             for ix in desc.indexes:
-                if set(ix.columns) == set(bcols):
+                if set(ix.columns) == set(bucketing["cols"]):
                     pruned[tuple(ix.columns)] = pruned_read
         count = validate_batch(filled, existing, desc, pruned=pruned)
         snapshots.commit(filled, mode="append", bucketing=bucketing)
     finally:
         filled.unpersist()
     return count
+
+
+def _insert_rows(
+    aligned: DataFrame,
+    desc: TableDescriptor,
+    insert_columns: list[str] | None,
+    store: Metastore,
+    database: str,
+    snapshots: TableSnapshots,
+) -> int:
+    """Check, number and commit a VALUES batch on the driver.
+
+    Same outcomes as ``assign_serials`` + ``validate_batch``: the same
+    ids on the same rows, the same errors in the same order, the same
+    key equality (NaN equals NaN, 0.0 equals -0.0, ``bytea`` by
+    bytes). ANSI cast errors (e.g. CAST_OVERFLOW) raise from the
+    collect, before any serial is taken."""
+    spark = aligned.sparkSession
+    rows = [
+        [bytes(v) if isinstance(v, bytearray) else v for v in r]
+        for r in aligned.collect()
+    ]
+    pos = {c.name: i for i, c in enumerate(desc.columns)}
+    names = insert_columns if insert_columns is not None else list(pos)
+    # Serials before any check: a rejected INSERT still consumes its
+    # range, as a Postgres sequence does. Statement order numbers the
+    # rows, as monotonically_increasing_id does over a local relation.
+    serial_ranges: dict[str, range] = {}
+    for c in desc.columns:
+        if c.serial and c.name not in names:
+            ids = store.next_serial(
+                database, desc.name, c.name, c.kind, count=len(rows)
+            )
+            for row, v in zip(rows, ids):
+                row[pos[c.name]] = v
+            serial_ranges[c.name] = ids
+    for c in desc.columns:
+        if not c.nullable and any(r[pos[c.name]] is None for r in rows):
+            raise NullViolationError(f"null value in non-null column {c.name}")
+
+    # Each index's key filter on the snapshot, in declaration order, up
+    # to the first index with an in-batch duplicate (its error wins
+    # unless an earlier index clashes).
+    indexes = _unique_indexes(desc)
+    probes: list[tuple[IndexDescriptor, Column]] = []
+    duplicate = None
+    for ix in indexes:
+        if len(ix.columns) == 1 and ix.columns[0] in serial_ranges:
+            # Filled by this statement: distinct, and exactly lo..hi.
+            ids = serial_ranges[ix.columns[0]]
+            probes.append((ix, F.col(ix.columns[0]).between(ids[0], ids[-1])))
+            continue
+        keys = [tuple(r[pos[c]] for c in ix.columns) for r in rows]
+        if ix.kind != "unique_nulls_not_distinct":
+            keys = [k for k in keys if None not in k]
+        distinct = {_key(k): k for k in keys}
+        if len(distinct) < len(keys):
+            duplicate = ix
+            break
+        if keys:
+            probes.append((ix, _key_probe(desc, ix, list(distinct.values()))))
+
+    batch = local_frame(spark, [tuple(r) for r in rows], desc.spark_schema())
+    bucketing = snapshots.current_extra().get("bucketing")
+    clash = _first_clash(spark, desc, snapshots, probes, batch, bucketing)
+    if clash is not None:
+        raise _unique_error(clash)
+    if duplicate is not None:
+        raise _unique_error(duplicate)
+    snapshots.commit(batch, mode="append", bucketing=bucketing)
+    return len(rows)
+
+
+def _key_probe(
+    desc: TableDescriptor, ix: IndexDescriptor, keys: list[tuple]
+) -> Column:
+    """Existing rows holding one of the batch ``keys``, as one IN list
+    parsed from text (one py4j call; ``Column.isin`` makes one per
+    value). Spark's IN compares NaN equal to NaN and 0.0 to -0.0, and a
+    struct compares NULL fields as equal: a multi-column key matched as
+    one struct is NULLS NOT DISTINCT, and under NULLS DISTINCT the batch
+    keys hold no NULL. A single column keeps a plain IN, which parquet
+    row-group statistics can prune."""
+    kinds = [desc.column(c).kind for c in ix.columns]
+    cols = [f"`{c.replace('`', '``')}`" for c in ix.columns]
+    if len(cols) == 1:
+        values = [k[0] for k in keys if k[0] is not None]
+        terms = [f"{cols[0]} IS NULL"] if len(values) < len(keys) else []
+        if values:
+            listed = ", ".join(_sql_literal(v, kinds[0]) for v in values)
+            terms.append(f"{cols[0]} IN ({listed})")
+        return F.expr(" OR ".join(terms))
+
+    def struct(fields) -> str:
+        return "named_struct(" + ", ".join(
+            f"'k{i}', {f}" for i, f in enumerate(fields)
+        ) + ")"
+
+    listed = ", ".join(
+        struct(_sql_literal(v, kind) for v, kind in zip(k, kinds)) for k in keys
+    )
+    return F.expr(f"{struct(cols)} IN ({listed})")
+
+
+def _sql_literal(v, kind: str) -> str:
+    """``v`` as a Spark SQL literal of the column's type that parses back
+    to exactly ``v`` under any string-escape setting: text and bytes as
+    hex, floats from their repr (NaN and infinities by name)."""
+    if v is None:
+        src = "NULL"
+    elif kind in ("string", "bytes"):
+        src = "X'" + (v.encode() if kind == "string" else v).hex() + "'"
+    elif kind in ("float32", "float64"):
+        src = "'" + ("NaN" if v != v else repr(v).replace("inf", "Infinity")) + "'"
+    else:
+        src = str(v)  # an integer, or True / False
+    return f"CAST({src} AS {spark_type(kind).simpleString()})"
+
+
+def _first_clash(
+    spark: SparkSession,
+    desc: TableDescriptor,
+    snapshots: TableSnapshots,
+    probes: list[tuple[IndexDescriptor, Column]],
+    batch: DataFrame,
+    bucketing: dict | None,
+) -> IndexDescriptor | None:
+    """The first probed index whose key an existing row already holds,
+    from one filtered scan of the current snapshot. The scan returns the
+    probes' flags for each existing row that matches one; stored keys
+    are unique per index, so at most one row matches each batch key and
+    the statement bounds the result. On a table bucketed on every probed
+    index's columns, the scan reads only the batch's buckets (projected
+    over the local relation: no job)."""
+    if not probes:
+        return None
+    buckets = None
+    if bucketing and all(
+        set(ix.columns) == set(bucketing["cols"]) for ix, _ in probes
+    ):
+        buckets = {r[0] for r in batch.select(bucket_column(bucketing)).collect()}
+    existing = snapshots.read(spark, desc.spark_schema(), buckets=buckets)
+    hits = (
+        existing.where(reduce(or_, [p for _, p in probes]))
+        .select(*[p.alias(f"p{i}") for i, (_, p) in enumerate(probes)])
+        .collect()
+    )
+    for i, (ix, _) in enumerate(probes):
+        if any(r[i] for r in hits):
+            return ix
+    return None

@@ -13,6 +13,7 @@ Query lifecycle (≙ SURVEY.md §3.1):
     ├─ CREATE DATABASE/TABLE, DROP TABLE → metastore ops
     │    → 1-row ``result`` DataFrame ("created"/"already exists")
     ├─ INSERT → [… SELECT: pin snapshots, spark.sql] → dml.execute_insert
+    │    (a VALUES list is checked on the driver, a SELECT distributed)
     │    → 1-row ``count`` DataFrame
     └─ query, information_schema included → pin the current table
        snapshots as temp views → dialect normalization (::casts,
@@ -41,7 +42,7 @@ from pyspark.sql import types as T
 from . import sqlparse
 from .catalog import DEFAULT_SCHEMA, Metastore
 from .dml import execute_insert
-from .errors import DatabaseNotFoundError, InvalidArgumentError, TableNotFoundError
+from .errors import DatabaseNotFoundError, TableNotFoundError
 from .session import local_frame
 from .snapshots import TableSnapshots, recorded_bytes, segment_files
 
@@ -181,24 +182,21 @@ class Engine:
         db, table = self._resolve_table(parsed.table)
         desc = self.store.get_table(db, table)
         if parsed.values_sql is not None:
-            input_df = self.spark.sql(f"SELECT * FROM VALUES {parsed.values_sql}")
+            input_df = self.spark.sql(f"VALUES {parsed.values_sql}")
         else:
             self._check_query_databases(parsed.select_sql)
             self._register_views()
             input_df = self.spark.sql(
                 sqlparse.normalize_query(parsed.select_sql, self.database, self.user)
             )
-        try:
-            n = execute_insert(
-                input_df,
-                desc,
-                parsed.columns,
-                self.store,
-                db,
-                TableSnapshots(self.store.table_dir(db, table)),
-            )
-        except KeyError as e:
-            raise InvalidArgumentError(f"unknown column {e}") from e
+        n = execute_insert(
+            input_df,
+            desc,
+            parsed.columns,
+            self.store,
+            db,
+            TableSnapshots(self.store.table_dir(db, table)),
+        )
         return self._count(n)
 
     def _register_views(self) -> None:

@@ -2667,8 +2667,9 @@ def p29_dual_detector_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
 # columns replay each admission decision batch-blind in DuckDB from the
 # raw nation table, and pin the PHYSICAL pruning property: the clash
 # probe's snapshot read (snapshots.read(buckets={1}), the exact
-# construction execute_insert uses, dml.py:291-307) touches only
-# bucket-1 segment files — measured with input_file_name() against the
+# construction the INSERT clash checks use: dml._first_clash for a
+# VALUES batch, dml.execute_insert for a SELECT) touches only bucket-1
+# segment files — measured with input_file_name() against the
 # manifest's per-file bucket ids — and strictly fewer files than the
 # full table read.
 #
@@ -2745,7 +2746,8 @@ def p30_bucket_pruned_unique_clash(
 
         insert([r for r in rows if r[0] < _P30_SPLIT])
         # the clash batch's bucket footprint, derived Spark-side with
-        # the exact expression execute_insert uses (dml.py:295-301)
+        # the expression snapshots.bucket_column builds for the INSERT
+        # paths: pmod(xxhash64(key), n)
         clash_keys = [_P30_CLASH_KEY, k1, k2]
         batch_buckets = {
             r[0]

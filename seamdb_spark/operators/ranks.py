@@ -11,8 +11,8 @@ parallel partitions; per-partition dense indexes come from
 ``monotonically_increasing_id`` after ``sortWithinPartitions``; one
 tiny aggregation (one row per partition) yields the cumulative offsets
 that turn local indexes into the exact global rank.  This is the same
-offsets pattern ``dml.assign_serials`` (dml.py:120-174) uses for serial
-columns — nothing bigger than #partitions rows ever reaches the driver.
+offsets pattern ``dml.assign_serials`` uses for the serial columns of a
+distributed batch — nothing bigger than #partitions rows ever reaches the driver.
 
 ``ntile_exact``: exact SQL NTILE(k) derived from that rank.  NTILE
 semantics put the larger buckets FIRST — with n = q*k + r, the first r

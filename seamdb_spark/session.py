@@ -108,11 +108,24 @@ def run_concurrently(*thunks):
     they leave most cores idle — submitting the independent chains
     (e.g. the LSH and SimHash refresh→lookup→write legs) concurrently
     lets the FIFO scheduler back-fill the idle capacity. Results are
-    written to disjoint outputs, so overlap cannot change any result."""
+    written to disjoint outputs, so overlap cannot change any result.
+
+    Spark keeps the job group, like every local property, per thread,
+    and a pool thread starts with none. When the calling thread has an
+    active session, each leg is wrapped with ``inheritable_thread_target``,
+    so its jobs carry the caller's job group and description."""
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
 
     if len(thunks) == 1:
         return [thunks[0]()]
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        # One wrap per leg: each wrap copies the caller's properties,
+        # and legs sharing one copy would overwrite each other's
+        # execution ids in it.
+        thunks = tuple(inheritable_thread_target(active)(t) for t in thunks)
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
         futures = [pool.submit(t) for t in thunks]
         return [f.result() for f in futures]

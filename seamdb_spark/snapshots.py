@@ -37,7 +37,8 @@ import os
 import shutil
 from collections.abc import Iterable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .session import local_frame
@@ -69,6 +70,16 @@ def recorded_bytes(sizes: Iterable[int | None]) -> int | None:
     ``None`` when any file is a legacy entry with no recorded size."""
     sizes = list(sizes)
     return None if None in sizes else sum(sizes)
+
+
+def bucket_column(bucketing: dict) -> Column:
+    """A row's bucket id under ``bucketing`` ({"cols": [...], "n": int}):
+    ``pmod(xxhash64(cols), n)``, the one expression the bucketed write
+    and the insert clash checks share."""
+    return F.pmod(
+        F.xxhash64(*[F.col(c) for c in bucketing["cols"]]),
+        F.lit(int(bucketing["n"])),
+    ).cast("int")
 
 
 class TableSnapshots:
@@ -200,16 +211,10 @@ class TableSnapshots:
         Every new entry records its file's ``bytes``; output sizing is
         the caller's (``segment_files``).
         """
-        from pyspark.sql import functions as F
-
         manifest = self._read_manifest()
         v = manifest["version"] + 1
         seg_dir = os.path.join(self.table_dir, f"seg-{v:06d}")
         if bucketing:
-            bucket_col = F.pmod(
-                F.xxhash64(*[F.col(c) for c in bucketing["cols"]]),
-                F.lit(int(bucketing["n"])),
-            ).cast("int")
             # Cluster rows onto their bucket BEFORE the partitioned
             # write: without the repartition every upstream task writes
             # one file into every bucket directory it touches, so a
@@ -233,7 +238,7 @@ class TableSnapshots:
             # every parquet under the bucket dir, so multi-file
             # buckets read identically); it does not split the task.
             (
-                df.withColumn("__bucket", bucket_col)
+                df.withColumn("__bucket", bucket_column(bucketing))
                 .repartition(int(bucketing["n"]), "__bucket")
                 .write.mode("overwrite")
                 .option("maxRecordsPerFile", SEG_MAX_RECORDS_PER_FILE)

@@ -1,7 +1,9 @@
 """Bucketed co-located joins (the 100 TB strategy for repeated
 large-large joins on a stable key) and the bucketed unique-index insert
 path (SCALING.md Engine §): hash-clustered segments let the per-insert
-unique-clash check scan O(touched buckets) instead of O(table)."""
+unique-clash check scan O(touched buckets) instead of O(table). The
+unique tests run each INSERT as a VALUES list and as the equivalent
+SELECT (``insert_forms``): the driver-side and distributed checks."""
 
 import contextlib
 import io
@@ -9,7 +11,7 @@ import io
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, insert_forms
 
 from seamdb_spark.errors import UniqueIndexError
 from seamdb_spark.snapshots import TableSnapshots
@@ -116,31 +118,48 @@ def test_bucket_pruned_read_skips_untouched_files(engine):
 
 
 def test_bucketed_unique_check_still_enforces(engine):
-    _setup_bucketed(engine)
-    engine.sql("INSERT INTO users VALUES (1, 'a'), (2, 'b')")
-    with pytest.raises(UniqueIndexError):
-        engine.sql("INSERT INTO users VALUES (2, 'dup')")
-    # non-clashing insert still lands
-    engine.sql("INSERT INTO users VALUES (3, 'c')")
-    assert engine.table("users").count() == 3
+    for insert in insert_forms(engine):
+        _setup_bucketed(engine)
+        insert("users", "(1, 'a'), (2, 'b')")
+        with pytest.raises(UniqueIndexError):
+            insert("users", "(2, 'dup')")
+        # non-clashing insert still lands
+        insert("users", "(3, 'c')")
+        assert engine.table("users").count() == 3
+
+
+def test_bucketed_table_checks_unbucketed_unique_column(engine):
+    # Only indexes on the bucket columns can prune: a clash on another
+    # unique column must be found in any bucket.
+    for insert in insert_forms(engine):
+        engine.sql("CREATE TABLE users (id bigint PRIMARY KEY, name text UNIQUE)")
+        engine.bucket_table("users", 8)
+        insert("users", ", ".join(f"({i}, 'u{i}')" for i in range(32)))
+        with pytest.raises(UniqueIndexError, match=r"\(name\)"):
+            insert("users", "(100, 'u7')")
+        with pytest.raises(UniqueIndexError, match=r"\(id\)"):
+            insert("users", "(7, 'fresh')")
+        insert("users", "(100, 'fresh')")
+        assert engine.table("users").count() == 33
 
 
 def test_legacy_unbucketed_segments_still_checked(engine):
     # Rows inserted BEFORE bucketing was declared carry no bucket id;
     # the pruned clash check must still see them (and compact() migrates
     # them into clustered, prunable segments).
-    engine.sql("CREATE TABLE users (id bigint PRIMARY KEY, name text)")
-    engine.sql("INSERT INTO users VALUES (10, 'legacy')")
-    engine.bucket_table("users", 8)
-    with pytest.raises(UniqueIndexError):
-        engine.sql("INSERT INTO users VALUES (10, 'dup-of-legacy')")
-    engine.sql("INSERT INTO users VALUES (11, 'new')")
-    engine.compact("users")
-    snaps = _snaps(engine)
-    assert all(b is not None for _, b in snaps.current_file_entries())
-    with pytest.raises(UniqueIndexError):
-        engine.sql("INSERT INTO users VALUES (10, 'still-dup')")
-    assert {r.id for r in engine.table("users").collect()} == {10, 11}
+    for insert in insert_forms(engine):
+        engine.sql("CREATE TABLE users (id bigint PRIMARY KEY, name text)")
+        insert("users", "(10, 'legacy')")
+        engine.bucket_table("users", 8)
+        with pytest.raises(UniqueIndexError):
+            insert("users", "(10, 'dup-of-legacy')")
+        insert("users", "(11, 'new')")
+        engine.compact("users")
+        snaps = _snaps(engine)
+        assert all(b is not None for _, b in snaps.current_file_entries())
+        with pytest.raises(UniqueIndexError):
+            insert("users", "(10, 'still-dup')")
+        assert {r.id for r in engine.table("users").collect()} == {10, 11}
 
 
 def test_j05_salt_expansion_and_skew(spark):

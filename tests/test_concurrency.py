@@ -40,6 +40,26 @@ def test_run_concurrently_actually_overlaps():
     assert run_concurrently(barrier.wait, barrier.wait) is not None
 
 
+def test_run_concurrently_legs_keep_the_callers_job_group(spark):
+    """Job groups are per thread; each leg runs its jobs under the
+    caller's group, so a tagged phase counts the jobs of its legs."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"legs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        run_concurrently(
+            lambda: spark.range(0, 10, 1, 2).collect(),
+            lambda: spark.range(0, 20, 1, 2).collect(),
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+
+
 def test_memo_registry_safe_under_concurrent_first_touch(spark):
     """Concurrent first-touch builds of DISTINCT keys (the e49 base
     build: band-rows hint on one thread, simhash hint on the other)

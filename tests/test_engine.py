@@ -5,6 +5,8 @@ session functions; :587-638 DDL descriptor assertions)."""
 
 import pytest
 
+from tests.conftest import insert_forms
+
 from seamdb_spark.errors import (
     InvalidArgumentError,
     TableAlreadyExistsError,
@@ -326,20 +328,24 @@ def test_explicit_null_serial_rejected(engine):
 
 
 
-def _collect_counting_jobs(spark, df):
-    """``df.collect()`` and the number of Spark jobs it ran, read from
-    the status store under a job group of its own."""
+def _counting_jobs(spark, action):
+    """``action()`` and the number of Spark jobs it ran, read from the
+    status store under a job group of its own."""
     import uuid
 
     sc = spark.sparkContext
-    group = f"collect-{uuid.uuid4().hex}"
+    group = f"action-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
     try:
-        rows = df.collect()
+        result = action()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _collect_counting_jobs(spark, df):
+    return _counting_jobs(spark, df.collect)
 
 
 def test_statement_results_run_no_spark_job(engine, spark):
@@ -373,6 +379,69 @@ def test_statement_results_run_no_spark_job(engine, spark):
         # the JVM-side schema (a fresh projection), not the cached one
         assert df.select("*").schema == schema, stmt
         assert [tuple(r) for r in rows] == expected, stmt
+
+
+def test_values_insert_runs_at_most_three_jobs(engine, spark):
+    # A VALUES batch is checked, numbered and committed on the driver:
+    # one filtered scan of the snapshot plus the commit's write. The
+    # distributed pipeline ran 24 jobs for this statement.
+    engine.sql(
+        "CREATE TABLE w (id bigserial PRIMARY KEY, k bigint NOT NULL,"
+        " u text UNIQUE NULLS DISTINCT, v double precision, note text)"
+    )
+
+    def statement(tag):
+        rows = ", ".join(
+            f"({i}, {'NULL' if i % 10 == 0 else repr(f'{tag}-{i}')}, {i / 4}, 'a b')"
+            for i in range(50)
+        )
+        return f"INSERT INTO w (k, u, v, note) VALUES {rows}"
+
+    for tag in ("a", "b", "c"):
+        df, jobs = _counting_jobs(spark, lambda: engine.sql(statement(tag)))
+        assert df.collect()[0]["count"] == 50
+        assert jobs <= 3, tag
+    ids = engine.sql("SELECT min(id) AS lo, max(id) AS hi FROM w").collect()[0]
+    assert (ids.lo, ids.hi) == (1, 150)
+
+
+def test_batch_bucket_set_runs_no_job(spark):
+    # The driver path projects the bucket expression over the batch's
+    # local relation: Catalyst folds it, and the ids equal the ones a
+    # distributed plan computes.
+    from pyspark.sql import types as T
+
+    from seamdb_spark.session import local_frame
+    from seamdb_spark.snapshots import bucket_column
+
+    bucketing = {"cols": ["id"], "n": 8}
+    schema = T.StructType([T.StructField("id", T.LongType(), False)])
+    batch = local_frame(spark, [(i,) for i in range(64)], schema)
+    rows, jobs = _collect_counting_jobs(spark, batch.select(bucket_column(bucketing)))
+    assert jobs == 0
+    distributed = spark.range(0, 64, 1, 4).select(bucket_column(bucketing)).collect()
+    assert [r[0] for r in rows] == [r[0] for r in distributed]
+
+
+def test_unknown_insert_column_is_invalid_argument(engine):
+    for insert in insert_forms(engine):
+        engine.sql("CREATE TABLE t (id bigint PRIMARY KEY, v text)")
+        with pytest.raises(InvalidArgumentError, match="unknown column 'nope'"):
+            insert("t (id, nope)", "(1, 'x')")
+
+
+def test_insert_internal_key_error_is_not_a_user_error(engine, monkeypatch):
+    # Only the column lookup reports an unknown column; a KeyError from
+    # inside the insert pipeline is a bug and surfaces as one.
+    import seamdb_spark.engine as engine_mod
+
+    def broken(*args, **kwargs):
+        raise KeyError("internal")
+
+    monkeypatch.setattr(engine_mod, "execute_insert", broken)
+    engine.sql("CREATE TABLE t (id bigint PRIMARY KEY)")
+    with pytest.raises(KeyError):
+        engine.sql("INSERT INTO t VALUES (1)")
 
 
 def test_local_frame_keeps_row_checks(spark):
