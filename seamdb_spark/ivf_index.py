@@ -80,12 +80,6 @@ _STATE_SCHEMA = T.StructType(
         T.StructField("q", T.ArrayType(T.LongType())),
     ]
 )
-_CENTROID_SCHEMA = T.StructType(
-    [
-        T.StructField("cid", T.IntegerType()),
-        T.StructField("cvec", T.ArrayType(T.LongType())),
-    ]
-)
 _CELL_STATS_SCHEMA = T.StructType(
     [
         T.StructField("cid", T.IntegerType()),
@@ -134,13 +128,11 @@ class IncrementalIVFIndex:
         return _qemb(df)
 
     def _cdf(self, centroids: list) -> DataFrame:
-        # K×64 int64 driver literal — always broadcast-sized
-        cdf = local_frame(
-            self._spark,
-            [(int(c), [int(x) for x in v]) for c, v in centroids],
-            _CENTROID_SCHEMA,
-        )
-        return F.broadcast(cdf)
+        """The K×64 centroid table (similarity.centroid_frame);
+        assign_cells broadcasts it at its join."""
+        from .operators.similarity import centroid_frame
+
+        return centroid_frame(self._spark, centroids)
 
     def centroids(self) -> list[tuple[int, list[int]]]:
         return [
@@ -158,8 +150,8 @@ class IncrementalIVFIndex:
         corpus scan. ``sum div count`` runs IN SPARK so the integer
         division matches the trainer's means (and the oracle's ``//``)
         exactly; empty cells yield no row, like lloyd_means. The frame
-        carries no join hint: a caller that joins it applies the
-        broadcast at its join (a hint on a frame that is only
+        carries no join hint: assign_cells, which joins it, applies
+        the broadcast at its join (a hint on a frame that is only
         collected is logged as "not part of a join relation")."""
         extra = self.state.current_extra()
         rows = [
@@ -184,13 +176,11 @@ class IncrementalIVFIndex:
         drift evaluation while producing identical rows."""
         from .operators.similarity import assign_cells
 
-        # K rows of driver state — always broadcast-sized
-        cdf = self.candidate_centroids()
         re_assigned = assign_cells(
             self.index().select(
                 "vec_id", F.col("cid").alias("prev_cid"), "q"
             ),
-            F.broadcast(cdf),
+            self.candidate_centroids(),
             carry=("prev_cid",),
         )
         return (

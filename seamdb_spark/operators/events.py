@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ..sources import load_table
 from .ranks import ntile_exact
 from .registry import register
@@ -2215,7 +2216,8 @@ def e22_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_rows = [
         (c, b, r, b - r, ((b - r) * 1000) // eff_tot) for c, b, r in effects
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out_rows,
         "channel string, base_conv_ppm long, removed_conv_ppm long,"
         " removal_effect_ppm long, attribution_milli long",
@@ -3696,9 +3698,7 @@ def e34_periodicity_autocorrelation(
         .select("event_type", "h", F.coalesce("c", F.lit(0)).alias("c"))
         .localCheckpoint()  # grid read by both sides of each lag join
     )
-    lags = spark.createDataFrame(
-        [(lag,) for lag in E34_LAGS], "lag long"
-    )
+    lags = local_frame(spark, [(lag,) for lag in E34_LAGS], "lag long")
     a = dense.crossJoin(F.broadcast(lags))
     b = dense.select(
         "event_type", F.col("h").alias("hb"), F.col("c").alias("cb")

@@ -260,6 +260,16 @@ def _jpeg_dct_matrix():
     return C
 
 
+def _jpeg_matmul(a, b):
+    """``a @ b`` for the 8x8 DCT, without BLAS. BLAS ``dgemm`` picks a
+    kernel per CPU, and the FMA kernels round differently from the
+    others, so ``np.rint`` of a coefficient that lands near .5 flips
+    between hosts. Elementwise products summed by numpy run the same
+    IEEE operations in the same order everywhere, so the encoder's
+    bytes and the decoder's pixels do not depend on the host."""
+    return (a[:, :, None] * b[None, :, :]).sum(axis=1)
+
+
 def _jpeg_huff_spec(symbols, length):
     """(bits[1..16], symbols, symbol->(code,len)) — canonical, uniform."""
     bits = [0] * 17
@@ -804,7 +814,8 @@ def _jpeg_coefficients(width, height, rgb, subsample=False):
         for by in range(0, plane.shape[0], 8):
             for bx in range(0, plane.shape[1], 8):
                 block = plane[by:by + 8, bx:bx + 8].astype(np.float64) - 128.0
-                qc = np.rint((C @ block @ C.T) / q).astype(np.int64)
+                coef = _jpeg_matmul(_jpeg_matmul(C, block), C.T)
+                qc = np.rint(coef / q).astype(np.int64)
                 blocks.append([int(v) for v in qc.flat[ZIGZAG]])
         out.append(blocks)
     return out
@@ -1281,7 +1292,8 @@ def decode_jpeg(payload: bytes) -> dict:
             coef[ZIGZAG] = grid[bi]
             by, bx = 8 * (bi // cols), 8 * (bi % cols)
             coef = coef.reshape(8, 8) * q
-            plane[by:by + 8, bx:bx + 8] = C.T @ coef @ C + 128.0
+            pix = _jpeg_matmul(_jpeg_matmul(C.T, coef), C)
+            plane[by:by + 8, bx:bx + 8] = pix + 128.0
         plane = np.clip(np.rint(plane), 0, 255).astype(np.int64)
         up = unit // 8 // hs
         planes.append(np.repeat(np.repeat(plane, up, axis=0), up, axis=1))

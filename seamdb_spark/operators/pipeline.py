@@ -1367,19 +1367,14 @@ def p12_cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     from .hashing import md5_prefix_long
-    from .similarity import _ivf_centroids, _qd2, _quant_corpus
-
-    quant = _quant_corpus(spark, sf_dir)
-    centroids = _ivf_centroids(spark, sf_dir)
-    cdf = F.broadcast(
-        spark.createDataFrame(centroids, "cid int, cvec array<bigint>")
+    from .similarity import (
+        _ivf_centroids, _quant_corpus, assign_cells, centroid_frame,
     )
+
+    cdf = centroid_frame(spark, _ivf_centroids(spark, sf_dir))
     cells = (
-        quant.crossJoin(cdf)
-        .withColumn("d2", _qd2("q", "cvec"))
-        .groupBy("vec_id")
-        .agg(F.min(F.struct("d2", "cid")).alias("m"))
-        .select("vec_id", F.col("m.cid").alias("cid"))
+        assign_cells(_quant_corpus(spark, sf_dir), cdf)
+        .select("vec_id", "cid")
         # read by sizes AND the per-cell rank
         .localCheckpoint()
     )
@@ -2880,31 +2875,39 @@ def p30_bucket_pruned_unique_clash(
 def _write_ordered_feed(df: DataFrame, src: str, conds: list) -> None:
     """Write one single-file parquet per condition into ``src`` with a
     GUARANTEED replay order: slice i becomes ``src/{i:02d}_slice.parquet``
-    with an explicit mtime i*2 seconds apart (os.utime). FileStreamSource
-    orders micro-batches by file modification time, and the previous
+    with an explicit mtime i*2 seconds apart. FileStreamSource orders
+    micro-batches by file modification time, and the previous
     append-then-sleep(0.05) scheme relied on sub-second mtime
     granularity — on a coarse-mtime filesystem the two feed files could
     tie and fall back to listing order over random UUID part names
     (ADVICE r13). Each slice stages into a scratch dir and its part
-    file is renamed into place, so the name is deterministic too."""
-    import os as _os
-    import shutil as _shutil
+    file is renamed into place, so the name is deterministic too.
+    Every file operation (listStatus, rename, delete, setTimes) goes
+    through the Hadoop FileSystem of ``src``'s scheme, so the feed
+    stages the same way on a local disk, HDFS or s3a."""
     import time as _time
 
-    _os.makedirs(src, exist_ok=True)
-    base_ts = _time.time() - 60  # firmly in the past; stream starts later
+    spark = df.sparkSession
+    path = spark._jvm.org.apache.hadoop.fs.Path
+    root = path(src)
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs.mkdirs(root)
+    base_ms = int((_time.time() - 60) * 1000)  # past; stream starts later
     for i, cond in enumerate(conds):
-        stage = f"{src}__stage{i}"
-        df.filter(cond).coalesce(1).write.mode("overwrite").parquet(stage)
+        stage = path(f"{src}__stage{i}")
+        df.filter(cond).coalesce(1).write.mode("overwrite").parquet(str(stage))
         (part,) = [
-            f for f in _os.listdir(stage)
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
+            st.getPath() for st in fs.listStatus(stage)
+            if st.getPath().getName().endswith(".parquet")
+            and not st.getPath().getName().startswith(("_", "."))
         ]
-        dest = _os.path.join(src, f"{i:02d}_slice.parquet")
-        _shutil.move(_os.path.join(stage, part), dest)
-        _shutil.rmtree(stage, ignore_errors=True)
-        ts = base_ts + 2.0 * i
-        _os.utime(dest, (ts, ts))
+        dest = path(root, f"{i:02d}_slice.parquet")
+        fs.delete(dest, False)
+        if not fs.rename(part, dest):
+            raise OSError(f"cannot move {part} to {dest}")
+        fs.delete(stage, True)
+        ts = base_ms + 2000 * i
+        fs.setTimes(dest, ts, ts)
 
 
 def _id_ranges(odds: DataFrame, n: int) -> list:

@@ -29,6 +29,8 @@ from pyspark.sql import types as T
 
 from pyspark.sql.column import Column
 
+from ..session import local_frame
+
 _PID = "__rk_pid"
 _MID = "__rk_mid"
 _OFF = "__rk_off"
@@ -74,7 +76,8 @@ def global_rank(
     n = acc
     if n == 0:
         return df.withColumn(out_col, F.lit(None).cast("long")), 0
-    odf = spark.createDataFrame(
+    odf = local_frame(
+        spark,
         offsets,
         T.StructType(
             [
@@ -156,7 +159,8 @@ def grouped_running_sum(
     no task ever sees more than one partition's rows.
 
     ``order_cols`` must be a total order within each group (include a
-    unique tiebreak) for the prefix sum to be deterministic.
+    unique tiebreak) for the prefix sum to be deterministic, and
+    ``value_col`` integral: the offsets are exact long sums.
     """
     spark = df.sparkSession
     keys = [F.col(c) for c in group_cols]
@@ -180,8 +184,17 @@ def grouped_running_sum(
         acc[gkey] = acc.get(gkey, 0) + (r["__gs"] or 0)
     if not offsets:
         return df.withColumn(out_col, F.lit(None).cast("long"))
-    odf = spark.createDataFrame(
-        offsets, schema=["__o_pid", *[f"__g_{c}" for c in group_cols], _OFF]
+    odf = local_frame(
+        spark,
+        offsets,
+        T.StructType(
+            [T.StructField("__o_pid", T.IntegerType(), False)]
+            + [
+                T.StructField(f"__g_{c}", part.schema[c].dataType)
+                for c in group_cols
+            ]
+            + [T.StructField(_OFF, T.LongType(), False)]
+        ),
     )
     cond = [F.col(_PID) == F.col("__o_pid")] + [
         F.col(c).eqNullSafe(F.col(f"__g_{c}")) for c in group_cols

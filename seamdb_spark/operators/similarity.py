@@ -28,7 +28,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from ..session import local_frame
 from ..sources import load_table
 from .hashing import md5_prefix_long
 from .materialize import materialized_df, materialized_value, session_tag
@@ -201,7 +203,7 @@ def _hyperplanes(spark: SparkSession, dims: int) -> DataFrame:
             h = int(hashlib.md5(f"plane{p}_dim{d}".encode()).hexdigest()[:8], 16)
             weights.append((h % 2001 - 1000) / 1000.0)
         rows.append((p, weights))
-    return spark.createDataFrame(rows, "plane int, w array<double>")
+    return local_frame(spark, rows, "plane int, w array<double>")
 
 
 def _signatures(emb: DataFrame, planes: DataFrame) -> DataFrame:
@@ -408,6 +410,30 @@ def _qd2(a: str | Column, b: str | Column) -> Column:
     return _isum(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)))
 
 
+_CENTROID_SCHEMA = T.StructType(
+    [
+        T.StructField("cid", T.IntegerType()),
+        T.StructField("cvec", T.ArrayType(T.LongType())),
+    ]
+)
+
+
+def centroid_frame(spark: SparkSession, centroids: list) -> DataFrame:
+    """(cid, cvec) over driver-held (cid, vector) centroid rows — the
+    one centroid frame. A JVM local relation, so reading it runs no
+    Spark job. It carries no join hint: the join that consumes it
+    (_cell_d2) applies the broadcast."""
+    rows = [(int(c), [int(x) for x in v]) for c, v in centroids]
+    return local_frame(spark, rows, _CENTROID_SCHEMA)
+
+
+def _cell_d2(quant: DataFrame, cdf: DataFrame) -> DataFrame:
+    """Every (vector, centroid) pair with its exact squared distance
+    ``d2`` — the one centroid join. The K-row centroid table is
+    broadcast here and nowhere else."""
+    return quant.crossJoin(F.broadcast(cdf)).withColumn("d2", _qd2("q", "cvec"))
+
+
 def assign_cells(
     quant: DataFrame, cdf: DataFrame, carry: tuple[str, ...] = ()
 ) -> DataFrame:
@@ -415,8 +441,11 @@ def assign_cells(
     min(struct(d2, cid)) — a hash aggregate with map-side partial
     combine instead of a corpus×K row_number window; lexicographic
     struct-min == ORDER BY d2, cid (ties → lowest cid). ONE definition
-    shared by the Lloyd trainer, s03, and the incremental IVF index
-    (ivf_index.py) so assignment semantics can never fork.
+    shared by the Lloyd trainer, the incremental IVF index
+    (ivf_index.py) and every query that buckets the corpus into cells
+    (s03, s12, s17, s19, s20, s23, d17, p12), so assignment semantics
+    can never fork. A caller that needs only (vec_id, cid) selects
+    them; Catalyst prunes the unused ``first(q)``.
 
     ``carry``: extra per-vector columns of ``quant`` passed through the
     aggregation (single-valued per vec_id, so F.first is exact) — lets
@@ -424,8 +453,7 @@ def assign_cells(
     previous cid in drift_report) keep it WITHOUT a second scan + join
     back on vec_id."""
     return (
-        quant.crossJoin(cdf)
-        .withColumn("d2", _qd2("q", "cvec"))
+        _cell_d2(quant, cdf)
         .groupBy("vec_id")
         .agg(
             F.min(F.struct("d2", "cid")).alias("m"),
@@ -433,6 +461,20 @@ def assign_cells(
             *[F.first(c).alias(c) for c in carry],
         )
         .select("vec_id", F.col("m.cid").alias("cid"), "q", *carry)
+    )
+
+
+def probe_cells(probes: DataFrame, cdf: DataFrame, nprobe: int) -> DataFrame:
+    """(vec_id, cid, crk): each probe vector's ``nprobe`` nearest cells,
+    ranked 1.. by (d2, cid) — the probe-side twin of assign_cells (its
+    crk = 1 cell is the assigned one). A row_number window over the
+    probes × K pairs; only probe sets (O(N_PROBES) rows) come here."""
+    w = W.partitionBy("vec_id").orderBy(F.col("d2"), F.col("cid"))
+    return (
+        _cell_d2(probes.select("vec_id", "q"), cdf)
+        .withColumn("crk", F.row_number().over(w))
+        .filter(F.col("crk") <= nprobe)
+        .select("vec_id", "cid", "crk")
     )
 
 
@@ -499,9 +541,7 @@ def _centroid_history(
     history = [centroids]
     spark = quant.sparkSession
     for _ in range(IVF_ITERS):
-        cdf = F.broadcast(
-            spark.createDataFrame(centroids, "cid int, cvec array<bigint>")
-        )
+        cdf = centroid_frame(spark, centroids)
         means = lloyd_means(assign_cells(quant, cdf)).collect()
         centroids = sorted((r.cid, [int(x) for x in r.cvec]) for r in means)
         history.append(centroids)
@@ -632,19 +672,9 @@ def _ivf_topk(cells: DataFrame, cdf: DataFrame, probe_src: DataFrame) -> DataFra
     re-ranks. Shared by s03 (cells assigned per run) and s27 (cells
     READ from the maintained incremental index)."""
     with_norm = cells.withColumn("nq", _isum(F.transform("q", lambda v: v * v)))
-    probes = (
-        probe_src.select("vec_id", "q").filter(F.col("vec_id") < N_PROBES)
-        .crossJoin(cdf)
-        .withColumn("d2", _qd2("q", "cvec"))
-        .withColumn(
-            "crk",
-            F.row_number().over(
-                W.partitionBy("vec_id").orderBy(F.col("d2"), F.col("cid"))
-            ),
-        )
-        .filter(F.col("crk") <= IVF_NPROBE)
-        .select(F.col("vec_id").alias("probe_id"), "cid")
-    )
+    probes = probe_cells(
+        probe_src.filter(F.col("vec_id") < N_PROBES), cdf, IVF_NPROBE
+    ).select(F.col("vec_id").alias("probe_id"), "cid")
     probe_vecs = with_norm.filter(F.col("vec_id") < N_PROBES).select(
         F.col("vec_id").alias("probe_id"),
         F.col("q").alias("pq"),
@@ -679,7 +709,7 @@ def s03_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (localCheckpoint also truncates lineage across iterations).
     quant = _quant_corpus(spark, sf_dir)
     centroids = _ivf_centroids(spark, sf_dir)
-    cdf = F.broadcast(spark.createDataFrame(centroids, "cid int, cvec array<bigint>"))
+    cdf = centroid_frame(spark, centroids)
     # Assign every vector to its cell (assign_cells: min(struct) hash
     # aggregate, map-side combine — no corpus×K window shuffle); probes
     # read from the checkpointed quant (N_PROBES×K rows — trivial).
@@ -723,11 +753,8 @@ def d06_embedding_neardup_blocked(spark: SparkSession, sf_dir: str) -> DataFrame
     import numpy as np
     import pandas as pd
 
-    emb = _emb(spark, sf_dir)
-    quant = emb.select(
-        "vec_id",
-        F.expr(f"transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * {QUANT_SCALE}) AS BIGINT))").alias("q"),
-        (F.col("vec_id") % N_BLOCKS).alias("blk"),
+    quant = _qemb(_emb(spark, sf_dir)).withColumn(
+        "blk", F.col("vec_id") % N_BLOCKS
     )
     packed = quant.groupBy("blk").agg(
         F.array_sort(F.collect_list(F.struct("vec_id", "q"))).alias("rows")
@@ -1157,6 +1184,61 @@ def _qnorm(emb: DataFrame) -> DataFrame:
     )
 
 
+_CODEBOOK_SCHEMA = T.StructType(
+    [
+        T.StructField("b", T.IntegerType()),
+        T.StructField("cid", T.IntegerType()),
+        T.StructField("cw", T.ArrayType(T.LongType())),
+    ]
+)
+
+
+def codebook_frame(spark: SparkSession, rows: list) -> DataFrame:
+    """(b, cid, cw) over the driver-held PQ codebook rows — the one
+    codebook frame. Like centroid_frame: a local relation (no job to
+    read it), hinted only at its join (_code_d2)."""
+    return local_frame(spark, rows, _CODEBOOK_SCHEMA)
+
+
+def pq_blocks(quant: DataFrame) -> DataFrame:
+    """(vec_id, b, sub): each (vec_id, q) vector split into its
+    PQ_BLOCKS subvectors of PQ_SUB dims, in one explode pass — the one
+    subvector split, shared by the encoder and the probe-side LUTs."""
+    blocks_arr = F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("b"),
+                F.slice("q", b * PQ_SUB + 1, PQ_SUB).alias("sub"),
+            )
+            for b in range(PQ_BLOCKS)
+        ]
+    )
+    return quant.select("vec_id", F.explode(blocks_arr).alias("bk")).select(
+        "vec_id", "bk.b", "bk.sub"
+    )
+
+
+def _code_d2(blocks: DataFrame, cb: DataFrame) -> DataFrame:
+    """Every (subvector, same-block codeword) pair with its exact
+    squared distance ``d2`` — the one codebook join. The PQ_BLOCKS x
+    PQ_K codebook is broadcast here and nowhere else."""
+    return blocks.join(F.broadcast(cb), "b").withColumn("d2", _qd2("sub", "cw"))
+
+
+def pq_encode(blocks: DataFrame, cb: DataFrame) -> DataFrame:
+    """(vec_id, b, code, d2): each subvector's nearest codeword and its
+    distance — the one PQ encoder. Argmin via min(struct(d2, cid)) as
+    in assign_cells (ties → lowest cid): a map-side-combined hash
+    aggregate, no window. The winning distance rides along, so s22's
+    distortion audit is free at encoding time."""
+    return (
+        _code_d2(blocks, cb)
+        .groupBy("vec_id", "b")
+        .agg(F.min(F.struct("d2", "cid")).alias("m"))
+        .select("vec_id", "b", F.col("m.cid").alias("code"), "m.d2")
+    )
+
+
 def _pq_chain_sql() -> str:
     """Shared PQ CTE prefix (quant → seeds → codebook → per-vec
     subvector blocks) — spliced by both s08's search oracle and s22's
@@ -1274,47 +1356,20 @@ def _pq_codebook_rows(spark: SparkSession, sf_dir: str) -> list:
 
 @register("s08_ann_pq_topk", oracle=_s08_oracle())
 def s08_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    quant = _qnorm_corpus(spark, sf_dir)
-    cb_rows = _pq_codebook_rows(spark, sf_dir)
-    cb = F.broadcast(
-        spark.createDataFrame(cb_rows, "b int, cid int, cw array<bigint>")
-    )
-    blocks_arr = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("b"),
-                F.slice("q", b * PQ_SUB + 1, PQ_SUB).alias("sub"),
-            )
-            for b in range(PQ_BLOCKS)
-        ]
-    )
-    cblk = quant.select("vec_id", F.explode(blocks_arr).alias("bk")).select(
-        "vec_id", "bk.b", "bk.sub"
-    )
-    # Code assignment: argmin codeword per (vec, block) via the
-    # min(struct(d2, cid)) hash aggregate — map-side combine, no window.
-    codes = (
-        cblk.join(cb, "b")
-        .withColumn("d2", _qd2("sub", "cw"))
-        .groupBy("vec_id", "b")
-        .agg(F.min(F.struct("d2", "cid")).alias("m"))
-        .select("vec_id", "b", F.col("m.cid").alias("code"))
-    )
+    cb = codebook_frame(spark, _pq_codebook_rows(spark, sf_dir))
+    cblk = pq_blocks(_qnorm_corpus(spark, sf_dir))
+    codes = pq_encode(cblk, cb).select("vec_id", "b", "code")
     # Per-probe ADC lookup tables: O(N_PROBES x 8 x 16) rows, broadcast.
     # The lut columns are renamed (lb/lcid) because both sides descend
     # from the same cblk lineage — joining codes.b to an attribute with
     # the SAME expression id would be self-referential (analyzer
     # auto-disambiguates today, but it's one resolution change away
     # from a silent cross join).
-    lut = (
-        cblk.filter(F.col("vec_id") < N_PROBES)
-        .join(cb, "b")
-        .select(
-            F.col("vec_id").alias("probe_id"),
-            F.col("b").alias("lb"),
-            F.col("cid").alias("lcid"),
-            _qd2("sub", "cw").alias("d2"),
-        )
+    lut = _code_d2(cblk.filter(F.col("vec_id") < N_PROBES), cb).select(
+        F.col("vec_id").alias("probe_id"),
+        F.col("b").alias("lb"),
+        F.col("cid").alias("lcid"),
+        "d2",
     )
     approx = (
         codes.join(
@@ -1646,19 +1701,8 @@ def s10_mips_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def d17_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     quant = _quant_corpus(spark, sf_dir)
-    centroids = _ivf_centroids(spark, sf_dir)
-    cdf = F.broadcast(
-        spark.createDataFrame(centroids, "cid int, cvec array<bigint>")
-    )
-    cells = (
-        quant.crossJoin(cdf)
-        .withColumn("d2", _qd2("q", "cvec"))
-        .groupBy("vec_id")
-        .agg(
-            F.min(F.struct("d2", "cid")).alias("m"),
-            F.first("q").alias("q"),
-        )
-        .select("vec_id", F.col("m.cid").alias("cid"), "q")
+    cells = assign_cells(
+        quant, centroid_frame(spark, _ivf_centroids(spark, sf_dir))
     )
     with_norm = cells.withColumn(
         "nq", _isum(F.transform("q", lambda v: v * v))
@@ -2034,62 +2078,20 @@ def s12_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids = materialized_value(
         spark, sf_dir, "ivf_centroids_qnorm", lambda: _centroid_rows(quant)
     )
-    cdf = F.broadcast(
-        spark.createDataFrame(centroids, "cid int, cvec array<bigint>")
-    )
-    cells = (
-        quant.crossJoin(cdf)
-        .withColumn("d2", _qd2("q", "cvec"))
-        .groupBy("vec_id")
-        .agg(F.min(F.struct("d2", "cid")).alias("m"))
-        .select("vec_id", F.col("m.cid").alias("cid"))
-    )
-    probes = (
-        quant.filter(F.col("vec_id") < N_PROBES)
-        .crossJoin(cdf)
-        .withColumn("d2", _qd2("q", "cvec"))
-        .withColumn(
-            "crk",
-            F.row_number().over(
-                W.partitionBy("vec_id").orderBy(F.col("d2"), F.col("cid"))
-            ),
-        )
-        .filter(F.col("crk") <= IVF_NPROBE)
-        .select(F.col("vec_id").alias("probe_id"), "cid")
-    )
+    cdf = centroid_frame(spark, centroids)
+    cells = assign_cells(quant, cdf).select("vec_id", "cid")
+    probes = probe_cells(
+        quant.filter(F.col("vec_id") < N_PROBES), cdf, IVF_NPROBE
+    ).select(F.col("vec_id").alias("probe_id"), "cid")
     # PQ side: shared codebook, per-vector codes, per-probe ADC LUTs
-    cb_rows = _pq_codebook_rows(spark, sf_dir)
-    cb = F.broadcast(
-        spark.createDataFrame(cb_rows, "b int, cid int, cw array<bigint>")
-    )
-    blocks_arr = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("b"),
-                F.slice("q", b * PQ_SUB + 1, PQ_SUB).alias("sub"),
-            )
-            for b in range(PQ_BLOCKS)
-        ]
-    )
-    cblk = quant.select("vec_id", F.explode(blocks_arr).alias("bk")).select(
-        "vec_id", "bk.b", "bk.sub"
-    )
-    codes = (
-        cblk.join(cb, "b")
-        .withColumn("d2", _qd2("sub", "cw"))
-        .groupBy("vec_id", "b")
-        .agg(F.min(F.struct("d2", "cid")).alias("m"))
-        .select("vec_id", "b", F.col("m.cid").alias("code"))
-    )
-    lut = (
-        cblk.filter(F.col("vec_id") < N_PROBES)
-        .join(cb, "b")
-        .select(
-            F.col("vec_id").alias("probe_id"),
-            "b",
-            F.col("cid").alias("cw_cid"),
-            _qd2("sub", "cw").alias("d2"),
-        )
+    cb = codebook_frame(spark, _pq_codebook_rows(spark, sf_dir))
+    cblk = pq_blocks(quant)
+    codes = pq_encode(cblk, cb).select("vec_id", "b", "code")
+    lut = _code_d2(cblk.filter(F.col("vec_id") < N_PROBES), cb).select(
+        F.col("vec_id").alias("probe_id"),
+        "b",
+        F.col("cid").alias("cw_cid"),
+        "d2",
     )
     # ADC restricted to probed cells: codes ⋈ cells ⋈ probes ⋈ lut
     approx = (
@@ -2252,9 +2254,8 @@ def s13_graph_beam_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sqrt(_isum(F.transform("pq", lambda x: x * x)).cast("double"))
         * F.sqrt(_isum(F.transform("nq", lambda x: x * x)).cast("double"))
     )
-    entries = spark.createDataFrame(
-        [(e,) for e in S13_ENTRIES], "node long"
-    )  # O(1) fixed entry set
+    # O(1) fixed entry set
+    entries = local_frame(spark, [(e,) for e in S13_ENTRIES], "node long")
     beam = probes.select("probe_id").crossJoin(F.broadcast(entries))
     scored = None
     w_probe = W.partitionBy("probe_id").orderBy(F.col("qcos").desc(), "node")
@@ -2866,15 +2867,8 @@ def s17_ivf_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def assigned(cents: list, name: str) -> DataFrame:
-        cdf = F.broadcast(
-            spark.createDataFrame(cents, "cid int, cvec array<bigint>")
-        )
-        return (
-            quant.crossJoin(cdf)
-            .withColumn("d2", _qd2("q", "cvec"))
-            .groupBy("vec_id")
-            .agg(F.min(F.struct("d2", "cid")).alias("m"))
-            .select("vec_id", F.col("m.cid").alias(name))
+        return assign_cells(quant, centroid_frame(spark, cents)).select(
+            "vec_id", F.col("cid").alias(name)
         )
 
     seeds, c1, c2 = history[0], history[1], history[2]
@@ -2883,7 +2877,7 @@ def s17_ivf_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(assigned(c1, "cid2"), "vec_id")
         .join(assigned(c2, "cidf"), "vec_id")
     )
-    cells = spark.createDataFrame([(c,) for c, _ in seeds], "cid int")
+    cells = local_frame(spark, [(c,) for c, _ in seeds], "cid int")
     per = joined.crossJoin(F.broadcast(cells)).groupBy("cid").agg(
         F.count(F.when(F.col("cid1") == F.col("cid"), 1)).alias("n_round1"),
         F.count(F.when(F.col("cid2") == F.col("cid"), 1)).alias("n_round2"),
@@ -3099,36 +3093,19 @@ def _s19_oracle() -> str:
 def s19_ivf_probe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     quant = _quant_corpus(spark, sf_dir)
     centroids = _ivf_centroids(spark, sf_dir)
-    cdf = F.broadcast(
-        spark.createDataFrame(centroids, "cid int, cvec array<bigint>")
-    )
+    cdf = centroid_frame(spark, centroids)
     # Cell assignment + norms shared by every sweep point — session-
     # materialized so the five candidate joins read one artifact.
     def _build_cells():
-        cells = (
-            quant.crossJoin(cdf)
-            .withColumn("d2", _qd2("q", "cvec"))
-            .groupBy("vec_id")
-            .agg(
-                F.min(F.struct("d2", "cid")).alias("m"),
-                F.first("q").alias("q"),
-            )
-            .select("vec_id", F.col("m.cid").alias("cid"), "q")
+        return assign_cells(quant, cdf).withColumn(
+            "nq", _isum(F.transform("q", lambda v: v * v))
         )
-        return cells.withColumn("nq", _isum(F.transform("q", lambda v: v * v)))
 
     with_norm = materialized_df(spark, sf_dir, "s19_cells_norm", _build_cells)
     pranks = (
-        quant.filter(F.col("vec_id") < N_PROBES)
-        .crossJoin(cdf)
-        .withColumn("d2", _qd2("q", "cvec"))
-        .withColumn(
-            "crk",
-            F.row_number().over(
-                W.partitionBy("vec_id").orderBy(F.col("d2"), F.col("cid"))
-            ),
+        probe_cells(
+            quant.filter(F.col("vec_id") < N_PROBES), cdf, max(S19_NPROBES)
         )
-        .filter(F.col("crk") <= max(S19_NPROBES))
         .select(F.col("vec_id").alias("probe_id"), "cid", "crk")
         # probes x max(nprobe) rows, consumed once per sweep point —
         # pin it so the sweep doesn't re-derive the centroid ranking.
@@ -3264,17 +3241,8 @@ def _s20_oracle() -> str:
 def s20_ivf_purity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir).select("vec_id", "label")
     quant = _quant_corpus(spark, sf_dir)
-    centroids = _ivf_centroids(spark, sf_dir)
-    cdf = F.broadcast(
-        spark.createDataFrame(centroids, "cid int, cvec array<bigint>")
-    )
-    cells = (
-        quant.crossJoin(cdf)
-        .withColumn("d2", _qd2("q", "cvec"))
-        .groupBy("vec_id")
-        .agg(F.min(F.struct("d2", "cid")).alias("m"))
-        .select("vec_id", F.col("m.cid").alias("cid"))
-    )
+    cdf = centroid_frame(spark, _ivf_centroids(spark, sf_dir))
+    cells = assign_cells(quant, cdf).select("vec_id", "cid")
     cl = (
         cells.join(emb, "vec_id")
         .groupBy("cid", "label")
@@ -3460,36 +3428,15 @@ def _s22_oracle() -> str:
 
 @register("s22_pq_distortion_audit", oracle=_s22_oracle())
 def s22_pq_distortion_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    quant = _qnorm_corpus(spark, sf_dir)
-    cb_rows = _pq_codebook_rows(spark, sf_dir)
-    cb = F.broadcast(
-        spark.createDataFrame(cb_rows, "b int, cid int, cw array<bigint>")
-    )
-    blocks_arr = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("b"),
-                F.slice("q", b * PQ_SUB + 1, PQ_SUB).alias("sub"),
-            )
-            for b in range(PQ_BLOCKS)
-        ]
-    )
-    cblk = quant.select("vec_id", F.explode(blocks_arr).alias("bk")).select(
-        "vec_id", "bk.b", "bk.sub"
-    )
-    errs = (
-        cblk.join(cb, "b")
-        .withColumn("d2", _qd2("sub", "cw"))
-        .groupBy("vec_id", "b")
-        .agg(F.min(F.struct("d2", "cid")).alias("m"))
-        .select("vec_id", "b", F.col("m.d2").alias("d2"), F.col("m.cid").alias("cid"))
-        .localCheckpoint()  # read by the stats agg AND the tail recount
-    )
+    cb = codebook_frame(spark, _pq_codebook_rows(spark, sf_dir))
+    errs = pq_encode(
+        pq_blocks(_qnorm_corpus(spark, sf_dir)), cb
+    ).localCheckpoint()  # read by the stats agg AND the tail recount
     per = errs.groupBy("b").agg(
         F.count("*").alias("n_vecs"),
         F.sum("d2").alias("sum_d2"),
         F.max("d2").alias("max_d2"),
-        F.count_distinct("cid").alias("codes_used"),
+        F.count_distinct("code").alias("codes_used"),
     )
     high = (
         errs.join(F.broadcast(per.select("b", "n_vecs", "sum_d2")), "b")
@@ -3624,15 +3571,8 @@ def s23_kmeans_stability_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, sf_dir, f"s23_centroids_{tag}",
             lambda: _centroid_history(quant, salt)[-1],
         )
-        cdf = F.broadcast(
-            spark.createDataFrame(cents, "cid int, cvec array<bigint>")
-        )
-        return (
-            quant.crossJoin(cdf)
-            .withColumn("d2", _qd2("q", "cvec"))
-            .groupBy("vec_id")
-            .agg(F.min(F.struct("d2", "cid")).alias("m"))
-            .select("vec_id", F.col("m.cid").alias(f"cid_{tag}"))
+        return assign_cells(quant, centroid_frame(spark, cents)).select(
+            "vec_id", F.col("cid").alias(f"cid_{tag}")
         )
 
     cont = (
@@ -4075,11 +4015,7 @@ def s27_ann_incremental_index_topk(
     base, _modes_ok, _retrained = _p20_build_index(spark, sf_dir)
     idx = _p20_index_at(spark, sf_dir, base)
     cells = idx.index()
-    cdf = F.broadcast(
-        spark.createDataFrame(
-            idx.centroids(), "cid int, cvec array<bigint>"
-        )
-    )
+    cdf = centroid_frame(spark, idx.centroids())
     # probes read from the index rows too — the whole query path is
     # parquet scans of the maintained index; nothing re-trains or
     # re-assigns (compare s03, which builds its index per run)

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ..sources import load_table
 from .hashing import md5_prefix_long, md5_prefix_long_sql
 from .ranks import global_rank
@@ -431,36 +432,18 @@ def t09_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def t10_deterministic_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NOT a global window (ROW_NUMBER with no PARTITION BY collapses to a
-    # single partition in Spark): range-partition on the hash key, then
-    # compose the global rank from per-bucket row_numbers plus bucket
-    # offsets (one #buckets-row aggregate to the driver). Range buckets
-    # are ordered, so offset(bucket) + rank-in-bucket IS the global rank
-    # — no single-reducer stage, and no .rdd/Python round-trip of the
-    # corpus (the per-bucket window shuffles each bucket to one task,
-    # the same parallelism the range partitioning already has).
-    docs = _docs(spark, sf_dir)
+    # single partition in Spark): ranks.global_rank range-partitions on
+    # the total order (h, doc_id) and adds per-bucket offsets (one
+    # #buckets-row aggregate to the driver) — no single-reducer stage,
+    # no .rdd/Python round-trip of the corpus.
     h = md5_prefix_long(F.col("doc_id").cast("string"))
-    bucketed = (
-        docs.select("doc_id", h.alias("h"))
-        .repartitionByRange(64, F.col("h"), F.col("doc_id"))
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint()  # pin the row↔bucket assignment across jobs
+    ranked, _ = global_rank(
+        _docs(spark, sf_dir).select("doc_id", h.alias("h")),
+        [F.col("h"), F.col("doc_id")],
+        "shuffle_pos",
+        num_partitions=64,
     )
-    stats = bucketed.groupBy("__pid").agg(F.count("*").alias("__cnt")).collect()
-    offsets, acc = [], 0
-    for r in sorted(stats, key=lambda r: r["__pid"]):
-        offsets.append((r["__pid"], acc))
-        acc += r["__cnt"]
-    odf = spark.createDataFrame(offsets, "__pid int, __off long")
-    w = W.partitionBy("__pid").orderBy("h", "doc_id")
-    return (
-        bucketed.join(F.broadcast(odf), "__pid")
-        .withColumn(
-            "shuffle_pos",
-            (F.col("__off") + F.row_number().over(w)).cast("long"),
-        )
-        .select("doc_id", "shuffle_pos")
-    )
+    return ranked.select("doc_id", "shuffle_pos")
 
 
 # --------------------------------------------------------------------------
@@ -3018,8 +3001,9 @@ def t40_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     rules = materialized_value(
         spark, sf_dir, "t40_rules", lambda: _t40_train_rules(spark, sf_dir)
     )
-    return spark.createDataFrame(
-        rules, "merge_rank long, left_sym string, right_sym string, pair_freq long"
+    return local_frame(
+        spark, rules,
+        "merge_rank long, left_sym string, right_sym string, pair_freq long",
     )
 
 
@@ -3516,7 +3500,7 @@ def t46_vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = ranked.agg(
         F.sum("cnt").alias("total"), F.count("*").alias("vocab_size")
     )
-    ks = spark.createDataFrame([(k,) for k in T46_KS], "k long")
+    ks = local_frame(spark, [(k,) for k in T46_KS], "k long")
     return (
         ranked.join(F.broadcast(ks), F.col("rk") <= F.col("k"))
         .groupBy("k")

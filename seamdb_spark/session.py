@@ -26,21 +26,27 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 
-def local_frame(spark: SparkSession, rows: list, schema: T.StructType) -> DataFrame:
+def local_frame(
+    spark: SparkSession, rows: list, schema: T.StructType | str
+) -> DataFrame:
     """A DataFrame over driver-held ``rows`` (tuples in ``schema``'s field
-    order), built as a JVM local relation.
+    order), built as a JVM local relation. ``schema`` is a StructType or
+    a DDL string such as ``"k long, w array<double>"``.
 
     ``createDataFrame(<list>)`` parallelizes a pickled RDD, so reading a
     three-row catalog answer runs a Spark job (~150 ms at local[2]). An
     Arrow table goes through ``PythonSQLUtils.toDataFrame`` instead: the
-    rows live in the plan, so reading them, or broadcasting them, runs
-    no job. That path ignores the Arrow conf, so it works on a vanilla
-    session too. Rows get the same checks as ``verifySchema``: a wrong
+    rows live in the plan, so reading them runs no job. (A broadcast
+    join still runs one job to build its exchange, over a local
+    relation as over any other.) That path ignores the Arrow conf, so
+    it works on a vanilla session too. Rows get the same checks as ``verifySchema``: a wrong
     Python type or a ``None`` in a non-nullable field raises here."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import _make_type_verifier
 
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
     verify = _make_type_verifier(schema)
     for row in rows:
         verify(row)

@@ -400,14 +400,10 @@ def test_no_forced_broadcast_on_scale_variant_tables():
         "totals",  # e11: per-event-type totals, |types| rows
         "univ",  # q56: COUNT(DISTINCT p_size) scalar universe, 1 row
         "lut",  # s08: per-probe ADC table, N_PROBES x PQ_BLOCKS x PQ_K rows
-        # O(K) probe / centroid / plane / chunk tables
-        "probes", "probe_blocks", "probe_vecs", "planes", "chunks", "cdf",
-        # spark.createDataFrame(<driver-local list>) is O(K) by construction
-        "spark",
+        # O(K) probe / centroid / plane tables
+        "probes", "probe_blocks", "probe_vecs", "planes", "cdf",
         # per-partition serial offsets (#partitions rows, dml.py)
         "odf",
-        # capped dense vocab (documented cap in d08)
-        "vocab",
         # x07: DEPTH x WIDTH counter grid — fixed size by construction
         "grid",
         # s13: fixed beam-search entry-point table, len(S13_ENTRIES) rows
@@ -507,7 +503,8 @@ def test_no_forced_broadcast_on_scale_variant_tables():
         "stats", "fences",
         # x13: |types|-row score frame for the predecessor-count rank
         "other",
-        # s21: |labels|-row centroid table (both join sides)
+        # s21: |labels|-row centroid table (both join sides); the PQ
+        # codebook (PQ_BLOCKS x PQ_K rows) at similarity._code_d2
         "cent", "cb",
         # e36: 1-row global hour-span bounds (2 longs)
         "span",

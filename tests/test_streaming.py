@@ -648,3 +648,26 @@ def test_stream_sources_accept_directory_layout(spark, tmp_path):
         .collect()
     }
     assert got == want and got
+
+
+def test_ordered_feed_names_and_spaces_its_slices(spark, tmp_path):
+    # e49-e52's feed: one file per slice, named by position, mtimes 2 s
+    # apart (the FileStreamSource replay order), staging dirs removed.
+    import os
+
+    from seamdb_spark.operators.pipeline import _write_ordered_feed
+
+    df = spark.range(30).withColumnRenamed("id", "doc_id")
+    src = str(tmp_path / "src")
+    conds = [F.col("doc_id") < 10, F.col("doc_id").between(10, 19),
+             F.col("doc_id") >= 20]
+    _write_ordered_feed(df, src, conds)
+
+    names = sorted(n for n in os.listdir(src) if not n.startswith("."))
+    assert names == ["00_slice.parquet", "01_slice.parquet", "02_slice.parquet"]
+    mtimes = [os.stat(os.path.join(src, n)).st_mtime for n in names]
+    assert [round(b - a, 3) for a, b in zip(mtimes, mtimes[1:])] == [2.0, 2.0]
+    assert not any(p.name.startswith("src__stage") for p in tmp_path.iterdir())
+    for i, n in enumerate(names):
+        ids = {r.doc_id for r in spark.read.parquet(os.path.join(src, n)).collect()}
+        assert ids == set(range(10 * i, 10 * i + 10))
