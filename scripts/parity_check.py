@@ -6,10 +6,20 @@ exact for non-floats, 1e-9 relative for floats), and prints a verdict
 per query. Use before committing operator changes:
 
     python scripts/parity_check.py [sf_dir] [query ...]
+
+``--digest FILE`` skips the oracles and writes one ``<query> <sha256>``
+line per query instead: the hash of the Spark rows after ``normalize``
+(plus the column names and types). Two checkouts' files then differ
+exactly where their results do:
+
+    python scripts/parity_check.py --digest old.txt SF_DIR   # old checkout
+    python scripts/parity_check.py --digest new.txt SF_DIR   # new checkout
+    diff old.txt new.txt
 """
 
 from __future__ import annotations
 
+import hashlib
 import math
 import os
 import sys
@@ -46,6 +56,15 @@ def normalize(rows: list[tuple], cols: list[str]) -> list[tuple]:
 
     projected = [tuple(row[i] for i in order) for row in rows]
     return sorted(projected, key=lambda r: [str(x) if x is not None else "\0" for x in r])
+
+
+def digest(spark_df) -> str:
+    """sha256 of the normalized rows, column names and column types."""
+    cols = spark_df.columns
+    h = hashlib.sha256(repr(sorted(spark_df.dtypes)).encode())
+    for row in normalize([tuple(r) for r in spark_df.collect()], cols):
+        h.update(repr(row).encode() + b"\n")
+    return h.hexdigest()
 
 
 def values_equal(a, b) -> bool:
@@ -133,6 +152,11 @@ def compare(name: str, spark_df, oracle_rows, oracle_cols) -> list[str]:
 
 def main() -> int:
     args = sys.argv[1:]
+    digest_path = None
+    if "--digest" in args:
+        i = args.index("--digest")
+        digest_path = args[i + 1]
+        del args[i : i + 2]
     sf_dir = args[0] if args and "/" in args[0] else "/root/testdata/sf0.001"
     only = [a for a in args if "/" not in a]
 
@@ -148,12 +172,18 @@ def main() -> int:
     con = duck_connection(sf_dir)
 
     failed, passed, skipped = [], [], []
+    digests = []
     for name, fn in sorted(queries.items()):
         if only and name not in only:
             continue
         t0 = time.time()
         try:
             df = fn(spark, sf_dir)
+            if digest_path is not None:
+                digests.append(f"{name} {digest(df)}")
+                print(f"[digest] {name} ({time.time()-t0:.1f}s)")
+                passed.append(name)
+                continue
             if name not in oracles:
                 n = df.count()
                 skipped.append(name)
@@ -167,6 +197,8 @@ def main() -> int:
             problems += compare(name, df, oracle_rows, oracle_cols)
         except Exception as e:  # noqa: BLE001
             problems = [f"EXCEPTION: {type(e).__name__}: {e}"]
+            if digest_path is not None:
+                digests.append(f"{name} EXCEPTION:{type(e).__name__}")
         dt = time.time() - t0
         if problems:
             failed.append(name)
@@ -177,6 +209,9 @@ def main() -> int:
             passed.append(name)
             print(f"[ok]   {name} ({dt:.1f}s)")
 
+    if digest_path is not None:
+        with open(digest_path, "w") as f:
+            f.write("\n".join(digests) + "\n")
     print(
         f"\n{len(passed)} ok, {len(failed)} failed, {len(skipped)} rows-only"
         + (f"\nFAILED: {failed}" if failed else "")

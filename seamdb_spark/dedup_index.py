@@ -39,9 +39,12 @@ from pyspark.sql.observation import Observation
 from .operators.hashing import (
     MINHASH_PARAMS,
     N_BANDS,
-    ROWS_PER_BAND,
+    band_pairs,
+    band_select,
     md5_prefix_long,
+    minhash_sigs,
     minhash_value,
+    word_windows,
 )
 from .session import local_frame
 from .snapshots import TableSnapshots, recorded_bytes, segment_files
@@ -59,83 +62,35 @@ def shingle_arrays(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(doc_id, shingles) — distinct 3-word shingles per document, on
     an arbitrary (id, text) DataFrame; docs with <3 tokens are skipped
     (matches d02's ``_SHINGLES_SQL WHERE len >= 3``)."""
-    # Two non-obvious constraints shape this expression:
-    # (1) TOTALITY — safe on short docs regardless of filter placement:
-    #     a bare sequence(0, size - 3) auto-descends for size < 3
-    #     (ANSI-mode index error, or silent 1/2-gram pseudo-shingles
-    #     with ANSI off), and Catalyst merges/reorders filters, so
-    #     index positions are clamped INSIDE the expression: the
-    #     i <= size-3 filter empties the sequence for short docs.
-    # (2) SINGLE EVALUATION — the one-element-array binding
-    #     (transform(array(split(..)), toks -> ...), d02's idiom):
-    #     a two-step select would be collapsed by CollapseProject,
-    #     inlining split(text) into EVERY toks reference inside the
-    #     lambda — measured ~10x slower (4.5s -> 0.5s for the p16
-    #     refresh banding at sf0.1) because the text re-splits per
-    #     element access.
-    shingle_expr = (
-        "array_distinct(flatten(transform("
-        f" array(split(`{text_col}`, ' ')),"
-        " toks -> transform("
-        "  filter(sequence(0, size(toks) - 1), i -> i <= size(toks) - 3),"
-        "  i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2])))))"
-    )
+    shingle_expr = word_windows(f"split(`{text_col}`, ' ')", 3)
     return (
         df.select(
             F.col(id_col).alias("doc_id"),
-            F.expr(shingle_expr).alias("shingles"),
+            F.array_distinct(F.expr(shingle_expr)).alias("shingles"),
         )
         .filter(F.size("shingles") > 0)
     )
-
-
-def _band_select(sigs: DataFrame) -> DataFrame:
-    """(doc_id, mh0..mhN) signatures -> exploded (doc_id, band_id,
-    band_key) band rows. ONE definition of the band layout, shared by
-    the batch and stateless-streaming signature paths so a banding
-    constant change can never silently break their pinned equality."""
-    band_structs = []
-    for band in range(N_BANDS):
-        lo = band * ROWS_PER_BAND
-        key = F.concat_ws(
-            "-",
-            *[F.col(f"mh{j}").cast("string") for j in range(lo, lo + ROWS_PER_BAND)],
-        )
-        band_structs.append(
-            F.struct(F.lit(band).alias("band_id"), key.alias("band_key"))
-        )
-    return sigs.select(
-        "doc_id", F.explode(F.array(*band_structs)).alias("b")
-    ).select("doc_id", F.col("b.band_id").alias("band_id"), F.col("b.band_key").alias("band_key"))
 
 
 def band_rows(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(doc_id, band_id, band_key) LSH band rows for each document —
     the same deterministic banding as d02 (hashing.py constants), on an
     arbitrary (id, text) DataFrame."""
-    sh = shingle_arrays(df, id_col, text_col)
-    hashed = sh.select("doc_id", F.explode("shingles").alias("s")).select(
-        "doc_id", md5_prefix_long(F.col("s")).alias("h")
-    )
-    sigs = hashed.groupBy("doc_id").agg(
-        *[
-            F.min(minhash_value(F.col("h"), a, b)).alias(f"mh{j}")
-            for j, (a, b) in enumerate(MINHASH_PARAMS)
-        ]
-    )
-    return _band_select(sigs)
+    sigs = minhash_sigs(shingle_arrays(df, id_col, text_col), ["doc_id"])
+    return band_select(sigs, ["doc_id"])
 
 
 def band_rows_stateless(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Row-local form of :func:`band_rows` for STREAMING inputs: each
-    minhash_j is array_min over per-element ``minhash_value(
-    md5_prefix_long(s))`` on the document's OWN shingle array —
-    identical values to the explode+groupBy batch kernel by the
-    min-over-elements identity, but with no aggregation, so it composes
-    under Structured Streaming's aggregate-then-join restriction.
-    Values are built from the SAME hashing helpers and the band layout
-    from the SAME _band_select as the batch path (one definition each;
-    the stream==batch equality test pins the identity end-to-end)."""
+    """Row-local form of :func:`band_rows` for STREAMING inputs.
+
+    Structured Streaming cannot aggregate a stream before a
+    stream-static join, so the ``minhash_sigs`` groupBy is not
+    available here: each minhash_j is instead ``array_min`` over
+    per-element ``minhash_value(md5_prefix_long(s))`` on the
+    document's OWN shingle array — identical values by the
+    min-over-elements identity. The hashing helpers and the band layout
+    (``band_select``) are the batch path's; the stream==batch equality
+    test pins the identity end-to-end."""
     sh = shingle_arrays(df, id_col, text_col)
 
     # closure factory, not lambda default-args: pyspark derives the
@@ -153,7 +108,7 @@ def band_rows_stateless(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         "doc_id",
         *[_mh(a, b).alias(f"mh{j}") for j, (a, b) in enumerate(MINHASH_PARAMS)],
     )
-    return _band_select(sigs)
+    return band_select(sigs, ["doc_id"])
 
 
 def shingle_hash_rows(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -413,26 +368,7 @@ class IncrementalLSHIndex(_IncrementalTextIndex):
 
     def candidate_pairs(self) -> DataFrame:
         """All near-dup candidate pairs (doc_a < doc_b) from the index."""
-        # Explicit partition count before the self-join — the band table
-        # is small enough that AQE would coalesce it to one partition and
-        # single-thread the bucket join (the d02/d03 trap); band_key is
-        # near-unique so 64 buckets keep every core busy.
-        bands = self.index().repartition(64, "band_id", "band_key")
-        b1 = bands.alias("b1")
-        b2 = bands.alias("b2")
-        return (
-            b1.join(
-                b2,
-                (F.col("b1.band_id") == F.col("b2.band_id"))
-                & (F.col("b1.band_key") == F.col("b2.band_key"))
-                & (F.col("b1.doc_id") < F.col("b2.doc_id")),
-            )
-            .select(
-                F.col("b1.doc_id").alias("doc_a"),
-                F.col("b2.doc_id").alias("doc_b"),
-            )
-            .distinct()
-        )
+        return band_pairs(self.index(), doc_a="a.doc_id", doc_b="b.doc_id").distinct()
 
     def new_candidate_pairs(
         self, new_doc_ids: DataFrame, bounded: bool = False
@@ -444,25 +380,21 @@ class IncrementalLSHIndex(_IncrementalTextIndex):
 
         ``bounded``: the caller asserts ``new_doc_ids`` is a true
         micro-batch (bounded by ingest trigger size, NOT a corpus
-        slice). Then the batch's band rows — N_BANDS x batch, a
-        constant multiple of an already-bounded input — are broadcast
-        so the index side stays exchange-free (guide §3.1: hint when
+        slice). Then the batch's id list and its band rows — N_BANDS x
+        batch, a constant multiple of an already-bounded input — are
+        broadcast so the index side stays exchange-free (guide §3.1: hint when
         you KNOW a side is small; Catalyst can't estimate the
         post-join size and would shuffle the full index per batch).
         Leave False for corpus-proportional id sets (the one-shot
         admission queries p17/p21/p27/p29 pass half the corpus): the
-        planner/AQE then picks the join from actual sizes — a forced
+        planner/AQE then picks both joins from actual sizes — a forced
         broadcast there would grow with the table and OOM at scale."""
         bands = self.index()
-        new_bands = bands.join(
-            F.broadcast(new_doc_ids.select(F.col(self.id_col).alias("doc_id"))),
-            "doc_id",
+        batch_ids = new_doc_ids.select(F.col(self.id_col).alias("doc_id"))
+        batch_bands = bands.join(
+            F.broadcast(batch_ids) if bounded else batch_ids, "doc_id"
         )
-        if bounded:
-            batch_bands = new_bands
-            nb = F.broadcast(batch_bands).alias("nb")
-        else:
-            nb = new_bands.alias("nb")
+        nb = (F.broadcast(batch_bands) if bounded else batch_bands).alias("nb")
         ib = bands.alias("ib")
         return (
             nb.join(
@@ -523,14 +455,15 @@ class IncrementalSimHashIndex(_IncrementalTextIndex):
 
         ``bounded``: caller-asserted micro-batch contract, as
         :meth:`IncrementalLSHIndex.new_candidate_pairs`. When True the
-        batch's block keys (28 x batch, a constant multiple of a
-        bounded input) are broadcast and the blocking-key repartition
+        batch's id list and block keys (28 x batch, a constant multiple
+        of a bounded input) are broadcast and the blocking-key repartition
         is skipped — the exchange exists for the full SELF-join's
         bucket parallelism (candidate_pairs); in the per-batch lookup
         it re-shuffled the entire 28x-corpus key table on every
         micro-batch for no parallelism gain. When False (corpus-
         proportional id sets, e.g. p27/p29's half-corpus admission
-        batch) the shuffle path is the scale-correct plan."""
+        batch) nothing is hinted: the shuffle path is the scale-correct
+        plan."""
         from .operators.dedup import (
             SIMHASH_MAX_HAMMING,
             simhash_block_keys,
@@ -539,11 +472,9 @@ class IncrementalSimHashIndex(_IncrementalTextIndex):
         keyed = simhash_block_keys(
             self.index(), "simhash", repartition=not bounded
         )
+        batch_ids = new_doc_ids.select(F.col(self.id_col).alias("doc_id"))
         batch_keyed = keyed.join(
-            F.broadcast(
-                new_doc_ids.select(F.col(self.id_col).alias("doc_id"))
-            ),
-            "doc_id",
+            F.broadcast(batch_ids) if bounded else batch_ids, "doc_id"
         )
         batch_keys = batch_keyed.select(
             F.col("doc_id").alias("nb_id"), F.col("simhash").alias("nb_sh"),

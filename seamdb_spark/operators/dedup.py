@@ -31,10 +31,13 @@ from .hashing import (
     MINHASH_PARAMS,
     N_BANDS,
     ROWS_PER_BAND,
+    band_pairs,
+    band_select,
     md5_prefix_long,
     md5_prefix_long_sql,
-    minhash_value,
+    minhash_sigs,
     minhash_value_sql,
+    word_windows,
 )
 from .registry import register, register_candidates
 from .rounding import dround
@@ -98,20 +101,18 @@ def d01_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 def _shingles_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """doc_id + distinct 3-word shingle array."""
-    docs = _docs(spark, sf_dir)
-    # The token array is bound once inside the lambda (wrapping it in a
-    # one-element array) — inlining split() into the element lambda
-    # re-splits the text per element access (measured 10x slower).
-    return docs.select(
-        "doc_id",
-        F.array_distinct(
-            F.expr(
-                "flatten(transform(array(split(text, ' ')),"
-                " toks -> transform(sequence(0, size(toks) - 3),"
-                " i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))))"
-            )
-        ).alias("shingles"),
-    ).filter(F.size("shingles") > 0)
+    from ..dedup_index import shingle_arrays
+
+    return shingle_arrays(_docs(spark, sf_dir), "doc_id", "text")
+
+
+def _bigrams_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """doc_id + distinct word-bigram array (docs with <2 tokens
+    skipped): the d04/d07/d08 set and d22's term set."""
+    bigrams = word_windows("split(text, ' ')", 2)
+    return _docs(spark, sf_dir).select(
+        "doc_id", F.array_distinct(F.expr(bigrams)).alias("bigrams")
+    ).filter(F.size("bigrams") > 0)
 
 
 _SHINGLES_SQL = """
@@ -244,26 +245,8 @@ def _lsh_candidate_pairs_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # band pipeline here. The memo is localCheckpointed, which also
     # subsumes the old pre-self-join sigs pin (the join's two sides
     # would otherwise re-derive the banding twice).
-    bands = (
-        _docs_band_rows_hint(spark, sf_dir)()
-        # Explicit partition count: the band table is small enough that AQE
-        # would coalesce to one partition and single-thread the bucket join
-        # (same trap as d03); band_key is near-unique so 64 is plenty.
-        .repartition(64, "band_id", "band_key")
-    )
-    b1 = bands.alias("b1")
-    b2 = bands.alias("b2")
-    cand = (
-        b1.join(
-            b2,
-            (F.col("b1.band_id") == F.col("b2.band_id"))
-            & (F.col("b1.band_key") == F.col("b2.band_key"))
-            & (F.col("b1.doc_id") < F.col("b2.doc_id")),
-        )
-        .select(F.col("b1.doc_id").alias("doc_a"), F.col("b2.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    return cand
+    bands = _docs_band_rows_hint(spark, sf_dir)()
+    return band_pairs(bands, doc_a="a.doc_id", doc_b="b.doc_id").distinct()
 
 
 @register("d02_dedup_minhash_lsh", oracle=_minhash_oracle())
@@ -571,17 +554,7 @@ def _d03_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def d04_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
-    bg = docs.select(
-        "doc_id",
-        F.array_distinct(
-            F.expr(
-                "flatten(transform(array(split(text, ' ')),"
-                " toks -> transform(sequence(0, size(toks) - 2),"
-                " i -> concat_ws(' ', toks[i], toks[i+1]))))"
-            )
-        ).alias("bigrams"),
-    ).filter(F.size("bigrams") > 0)
+    bg = _bigrams_df(spark, sf_dir)
     # Shuffle hygiene: join on a 64-bit hash of the bigram (xxhash64 is
     # engine-internal — only the join key, never an output value) and
     # carry no payload through the wide join; set sizes rejoin after the
@@ -630,17 +603,7 @@ def d04_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("d07_dedup_jaccard_prefix_filtered")
 def d07_dedup_jaccard_prefix_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = BIGRAM_JACCARD_THRESHOLD
-    docs = _docs(spark, sf_dir)
-    bg = docs.select(
-        "doc_id",
-        F.array_distinct(
-            F.expr(
-                "flatten(transform(array(split(text, ' ')),"
-                " toks -> transform(sequence(0, size(toks) - 2),"
-                " i -> concat_ws(' ', toks[i], toks[i+1]))))"
-            )
-        ).alias("bigrams"),
-    ).filter(F.size("bigrams") > 0)
+    bg = _bigrams_df(spark, sf_dir)
     exploded = bg.select("doc_id", F.size("bigrams").alias("nb"), F.explode("bigrams").alias("g"))
     # global rarity order: document frequency, tiebreak on the token
     df_per_g = exploded.groupBy("g").agg(F.count("*").alias("df"))
@@ -713,17 +676,7 @@ def d08_dedup_jaccard_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = BIGRAM_JACCARD_THRESHOLD
     n_blocks = 8
-    docs = _docs(spark, sf_dir)
-    bg = docs.select(
-        "doc_id",
-        F.array_distinct(
-            F.expr(
-                "flatten(transform(array(split(text, ' ')),"
-                " toks -> transform(sequence(0, size(toks) - 2),"
-                " i -> concat_ws(' ', toks[i], toks[i+1]))))"
-            )
-        ).alias("bigrams"),
-    ).filter(F.size("bigrams") > 0)
+    bg = _bigrams_df(spark, sf_dir)
     doc_vecs = (
         bg.select("doc_id", F.explode("bigrams").alias("g"))
         .select("doc_id", F.xxhash64("g").alias("h"))
@@ -1301,17 +1254,9 @@ SPAN_TOKENS = 8
 def d12_duplicated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     spans = (
-        docs.filter(F.size(F.split("text", " ")) >= SPAN_TOKENS)
-        .select(
+        docs.select(
             "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(array(split(text, ' ')),"
-                    f" toks -> transform(sequence(0, size(toks) - {SPAN_TOKENS}),"
-                    f" i -> concat_ws(' ', slice(toks, i + 1, {SPAN_TOKENS}))))"
-                    "[0]"
-                )
-            ).alias("g"),
+            F.explode(F.expr(word_windows("split(text, ' ')", SPAN_TOKENS))).alias("g"),
         )
         .select("doc_id", F.xxhash64("g").alias("h"))
         .distinct()
@@ -1737,17 +1682,10 @@ BOILER_MIN_DOCS = 3
 def d16_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     toks = docs.select("doc_id", F.split("text", " ").alias("tk"))
-    spans = (
-        toks.filter(F.size("tk") >= BOILER_SPAN)
-        .select(
-            "doc_id",
-            F.posexplode(
-                F.expr(
-                    f"transform(sequence(0, size(tk) - {BOILER_SPAN}),"
-                    f" i -> md5(concat_ws(' ', slice(tk, i + 1, {BOILER_SPAN}))))"
-                )
-            ).alias("pos", "h"),
-        )
+    span_md5 = f"md5(concat_ws(' ', slice(toks, i + 1, {BOILER_SPAN})))"
+    spans = toks.select(
+        "doc_id",
+        F.posexplode(F.expr(word_windows("tk", BOILER_SPAN, span_md5))).alias("pos", "h"),
     )
     popular = (
         spans.groupBy("h")
@@ -1794,9 +1732,9 @@ def d16_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # est/exact/error are all rational values of small integers, so the
 # audit hash-matches exactly.
 #
-# Scale: identical plan shape to d02 up to the candidate join; the
-# audit adds one 8-term signature comparison per candidate (map-side,
-# no extra shuffle) — the exact-Jaccard column is the fixture-only
+# Scale: the candidates are d02's (the shared, budget-gated
+# _lsh_candidate_pairs); the audit adds one 8-term signature
+# comparison per candidate (map-side, no extra shuffle) — the exact-Jaccard column is the fixture-only
 # audit and is what sketch-only mode would drop.
 # --------------------------------------------------------------------------
 def _d18_oracle() -> str:
@@ -1858,41 +1796,8 @@ def _d18_oracle() -> str:
 @register("d18_minhash_estimate_audit", oracle=_d18_oracle())
 def d18_minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = _shingles_df(spark, sf_dir)
-    exploded = sh.select("doc_id", F.explode("shingles").alias("sh"))
-    hashed = exploded.select("doc_id", md5_prefix_long(F.col("sh")).alias("h"))
-    sigs = hashed.groupBy("doc_id").agg(
-        *[
-            F.min(minhash_value(F.col("h"), a, b)).alias(f"mh{j}")
-            for j, (a, b) in enumerate(MINHASH_PARAMS)
-        ]
-    )
-    band_structs = []
-    for band in range(N_BANDS):
-        lo = band * ROWS_PER_BAND
-        key = F.concat_ws(
-            "-",
-            *[F.col(f"mh{j}").cast("string") for j in range(lo, lo + ROWS_PER_BAND)],
-        )
-        band_structs.append(
-            F.struct(F.lit(band).alias("band_id"), key.alias("band_key"))
-        )
-    bands = (
-        sigs.select("doc_id", F.explode(F.array(*band_structs)).alias("b"))
-        .select("doc_id", "b.band_id", "b.band_key")
-        .repartition(64, "band_id", "band_key")
-    )
-    b1 = bands.alias("b1")
-    b2 = bands.alias("b2")
-    cand = (
-        b1.join(
-            b2,
-            (F.col("b1.band_id") == F.col("b2.band_id"))
-            & (F.col("b1.band_key") == F.col("b2.band_key"))
-            & (F.col("b1.doc_id") < F.col("b2.doc_id")),
-        )
-        .select(F.col("b1.doc_id").alias("doc_a"), F.col("b2.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    sigs = minhash_sigs(sh, ["doc_id"])
+    cand = _lsh_candidate_pairs(spark, sf_dir)
     n_perms = len(MINHASH_PARAMS)
     sa = sigs.select(
         F.col("doc_id").alias("doc_a"),
@@ -1995,17 +1900,9 @@ def d19_substring_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # All span OCCURRENCES with start positions — no distinct: a span
     # repeated twice within one document is duplicated content too.
     spans = (
-        docs.filter(F.size(F.split("text", " ")) >= D19_SPAN)
-        .select(
+        docs.select(
             "doc_id",
-            F.posexplode(
-                F.expr(
-                    "transform(array(split(text, ' ')),"
-                    f" toks -> transform(sequence(0, size(toks) - {D19_SPAN}),"
-                    f" i -> concat_ws(' ', slice(toks, i + 1, {D19_SPAN}))))"
-                    "[0]"
-                )
-            ).alias("pos", "g"),
+            F.posexplode(F.expr(word_windows("split(text, ' ')", D19_SPAN))).alias("pos", "g"),
         )
         # h is internal-only (never output) so the engines need not
         # hash identically — xxhash64 keeps the shuffle key at 8 bytes
@@ -2114,7 +2011,7 @@ def _cdc_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
     # starts is bound as a COLUMN before the chunk transform so each
     # token is hashed exactly once — inlining the filter into the
     # per-chunk lambda would re-hash the whole token array per chunk
-    # (the _shingles_df re-split trap, O(n²/CDC_MOD) hashing).
+    # (the word_windows re-split trap, O(n²/CDC_MOD) hashing).
     flat = (
         docs.filter(F.size(F.split("text", " ")) >= 1)
         .select("doc_id", "text", F.split("text", " ").alias("toks"))
@@ -2276,21 +2173,8 @@ def _d22_oracle() -> str:
 
 
 def _d22_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
-    terms = (
-        docs.filter(F.size(F.split("text", " ")) >= 2)
-        .select(
-            "doc_id",
-            F.explode(
-                F.array_distinct(
-                    F.expr(
-                        "flatten(transform(array(split(text, ' ')),"
-                        " toks -> transform(sequence(0, size(toks) - 2),"
-                        " i -> concat_ws(' ', toks[i], toks[i+1]))))"
-                    )
-                )
-            ).alias("t"),
-        )
+    terms = _bigrams_df(spark, sf_dir).select(
+        "doc_id", F.explode("bigrams").alias("t")
     )
     # Internal-only join key: xxhash64 keeps every downstream shuffle
     # and join on an 8-byte key (d10/d19 precedent — never an output
@@ -2810,23 +2694,10 @@ def _d25_chunk_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunks = _d25_chunks(spark, sf_dir)
 
     def _build_chunk_shingles() -> DataFrame:
-        # Shingle positions are clamped inside the expression (the
-        # band_rows discipline): ct is bound as a column, the filtered
-        # ascending sequence never indexes past len(ct).
-        return (
-            chunks.filter(F.size("ct") >= 3)
-            .select(
-                "doc_id",
-                "chunk_id",
-                F.array_distinct(
-                    F.expr(
-                        "transform("
-                        " filter(sequence(0, size(ct) - 1),"
-                        "        i -> i <= size(ct) - 3),"
-                        " i -> concat_ws(' ', ct[i], ct[i+1], ct[i+2]))"
-                    )
-                ).alias("shingles"),
-            )
+        return chunks.filter(F.size("ct") >= 3).select(
+            "doc_id",
+            "chunk_id",
+            F.array_distinct(F.expr(word_windows("ct", 3))).alias("shingles"),
         )
 
     return _materialized(spark, sf_dir, "d25_chunk_shingles", _build_chunk_shingles)
@@ -2836,46 +2707,12 @@ def _d25_chunk_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _d25_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-chunk banding equi-join (d02's kernel over paragraph chunks):
     candidate (doc, chunk) pairs the Jaccard verify then scores."""
-    csh = _d25_chunk_shingles(spark, sf_dir)
-    hashed = csh.select(
-        "doc_id", "chunk_id", F.explode("shingles").alias("sh")
-    ).select("doc_id", "chunk_id", md5_prefix_long(F.col("sh")).alias("h"))
-    sigs = hashed.groupBy("doc_id", "chunk_id").agg(
-        *[
-            F.min(minhash_value(F.col("h"), a, b)).alias(f"mh{j}")
-            for j, (a, b) in enumerate(MINHASH_PARAMS)
-        ]
-    )
-    band_structs = []
-    for band in range(N_BANDS):
-        lo = band * ROWS_PER_BAND
-        key = F.concat_ws(
-            "-",
-            *[F.col(f"mh{j}").cast("string") for j in range(lo, lo + ROWS_PER_BAND)],
-        )
-        band_structs.append(
-            F.struct(F.lit(band).alias("band_id"), key.alias("band_key"))
-        )
-    bands = (
-        sigs.select(
-            "doc_id", "chunk_id", F.explode(F.array(*band_structs)).alias("b")
-        )
-        .select("doc_id", "chunk_id", "b.band_id", "b.band_key")
-        # Same AQE-coalesce guard as _lsh_candidate_pairs: keep the
-        # bucket self-join parallel.
-        .repartition(64, "band_id", "band_key")
-    )
-    b1 = bands.alias("b1")
-    b2 = bands.alias("b2")
-    return b1.join(
-        b2,
-        (F.col("b1.band_id") == F.col("b2.band_id"))
-        & (F.col("b1.band_key") == F.col("b2.band_key"))
-        # cross-doc only: paragraph contamination means ANOTHER doc
-        & (F.col("b1.doc_id") < F.col("b2.doc_id")),
-    ).select(
-        F.col("b1.doc_id").alias("da"), F.col("b1.chunk_id").alias("ca"),
-        F.col("b2.doc_id").alias("db"), F.col("b2.chunk_id").alias("cb"),
+    keys = ["doc_id", "chunk_id"]
+    bands = band_select(minhash_sigs(_d25_chunk_shingles(spark, sf_dir), keys), keys)
+    # doc_a < doc_b keeps the pairs cross-doc: paragraph contamination
+    # means ANOTHER doc
+    return band_pairs(
+        bands, da="a.doc_id", ca="a.chunk_id", db="b.doc_id", cb="b.chunk_id"
     )
 
 
@@ -4161,15 +3998,7 @@ def d33_bbit_minhash_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = len(MINHASH_PARAMS)
     mod = 1 << D33_B_BITS
     inv = (1 << D33_B_BITS) - 1
-    sh = _shingles_df(spark, sf_dir)
-    exploded = sh.select("doc_id", F.explode("shingles").alias("sh"))
-    hashed = exploded.select("doc_id", md5_prefix_long(F.col("sh")).alias("h"))
-    sigs = hashed.groupBy("doc_id").agg(
-        *[
-            F.min(minhash_value(F.col("h"), a, b)).alias(f"mh{j}")
-            for j, (a, b) in enumerate(MINHASH_PARAMS)
-        ]
-    )
+    sigs = minhash_sigs(_shingles_df(spark, sf_dir), ["doc_id"])
     cand = _lsh_candidate_pairs(spark, sf_dir)
     sa = sigs.select(
         F.col("doc_id").alias("doc_a"),

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from ..session import local_frame
 from ..sources import load_table
-from .hashing import md5_prefix_long, md5_prefix_long_sql
+from .hashing import md5_prefix_long, md5_prefix_long_sql, word_windows
 from .ranks import global_rank
 from .registry import register
 from .rounding import dround
@@ -34,6 +34,20 @@ STOPWORDS = ("the", "a", "and", "of", "to", "in")
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "documents")
+
+
+# word_windows element: the two words of a word pair (t23/t38/t40)
+_WORD_PAIR = "struct(toks[i] AS w1, toks[i+1] AS w2)"
+
+
+def _bigram_stream(docs: DataFrame, *cols) -> DataFrame:
+    """``cols`` + (w1, g), one row per word-bigram occurrence: its
+    first word and the bigram (t16/t30/t31)."""
+    w1_g = "struct(toks[i] AS w1, concat_ws(' ', toks[i], toks[i+1]) AS g)"
+    flat = docs.select(
+        *cols, F.explode(F.expr(word_windows("split(text, ' ')", 2, w1_g))).alias("b")
+    )
+    return flat.select(*[c for c in flat.columns if c != "b"], "b.w1", "b.g")
 
 
 def _in_list_sql(items: tuple[str, ...]) -> str:
@@ -494,13 +508,7 @@ def t11_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("top_cnt"),
         F.size(
-            F.array_distinct(
-                F.expr(
-                    "transform(sequence(0, size(split(text, ' ')) - 2),"
-                    " i -> concat_ws(' ', split(text, ' ')[i],"
-                    " split(text, ' ')[i+1]))"
-                )
-            )
+            F.array_distinct(F.expr(word_windows("split(text, ' ')", 2)))
         ).alias("nb_distinct"),
         (F.size(t) - 1).alias("nb"),
     ).filter(F.col("n_tokens_i") >= 2)
@@ -825,21 +833,7 @@ def t15_domain_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def t16_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
-    flat = (
-        docs.filter(F.size(F.split("text", " ")) >= 2)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "flatten(transform(array(split(text, ' ')),"
-                    " toks -> transform(sequence(0, size(toks) - 2),"
-                    " i -> struct(toks[i] AS w1,"
-                    "             concat_ws(' ', toks[i], toks[i+1]) AS g))))"
-                )
-            ).alias("b"),
-        )
-        .select("doc_id", "b.w1", "b.g")
-    )
+    flat = _bigram_stream(docs, "doc_id")
     bg_counts = flat.groupBy("g").agg(F.count("*").alias("c_bg"))
     u_counts = flat.groupBy("w1").agg(F.count("*").alias("c_u"))
     scored = (
@@ -1284,21 +1278,9 @@ T23_TOP_PAIRS = 100
     """,
 )
 def t23_bpe_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = (
-        _docs(spark, sf_dir)
-        .select("doc_id", F.split("text", " ").alias("l"))
-        # single-token docs yield no pairs; guards sequence() from the
-        # descending-range trap at size(l) == 1
-        .filter(F.size("l") >= 2)
-    )
-    pairs = docs.select(
+    pairs = _docs(spark, sf_dir).select(
         "doc_id",
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(l) - 1),"
-                " i -> struct(l[i - 1] AS w1, l[i] AS w2))"
-            )
-        ).alias("p"),
+        F.explode(F.expr(word_windows("split(text, ' ')", 2, _WORD_PAIR))).alias("p"),
     ).select("doc_id", "p.w1", "p.w2")
     return (
         pairs.groupBy("w1", "w2")
@@ -1632,26 +1614,17 @@ def t25_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 def t26_trigram_backoff_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     is_train = (md5_prefix_long(F.col("doc_id").cast("string")) % 100) < 80
-    stream = (
-        docs.filter(F.size(F.split("text", " ")) >= 3)
-        .select(
-            "doc_id",
-            is_train.alias("is_train"),
-            F.explode(
-                F.expr(
-                    "flatten(transform(array(split(text, ' ')),"
-                    " toks -> transform(sequence(0, size(toks) - 3),"
-                    " i -> struct("
-                    "   concat_ws(' ', toks[i], toks[i+1], toks[i+2]) AS tg,"
-                    "   concat_ws(' ', toks[i], toks[i+1]) AS ctx2,"
-                    "   concat_ws(' ', toks[i+1], toks[i+2]) AS bg,"
-                    "   toks[i+1] AS ctx1,"
-                    "   toks[i+2] AS uni))))"
-                )
-            ).alias("b"),
-        )
-        .select("doc_id", "is_train", "b.tg", "b.ctx2", "b.bg", "b.ctx1", "b.uni")
+    trigram = (
+        "struct(concat_ws(' ', toks[i], toks[i+1], toks[i+2]) AS tg,"
+        " concat_ws(' ', toks[i], toks[i+1]) AS ctx2,"
+        " concat_ws(' ', toks[i+1], toks[i+2]) AS bg,"
+        " toks[i+1] AS ctx1, toks[i+2] AS uni)"
     )
+    stream = docs.select(
+        "doc_id",
+        is_train.alias("is_train"),
+        F.explode(F.expr(word_windows("split(text, ' ')", 3, trigram))).alias("b"),
+    ).select("doc_id", "is_train", "b.tg", "b.ctx2", "b.bg", "b.ctx1", "b.uni")
     train = stream.filter("is_train")
     c_tg = train.groupBy("tg").agg(F.count("*").alias("c3"))
     c_ctx2 = train.groupBy("ctx2").agg(F.count("*").alias("c2x"))
@@ -1756,17 +1729,10 @@ DSIR_TARGET_LANG = "en"
 def t27_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     flat = (
-        docs.filter(F.size(F.split("text", " ")) >= 2)
-        .select(
+        docs.select(
             "doc_id",
             "lang",
-            F.explode(
-                F.expr(
-                    "flatten(transform(array(split(text, ' ')),"
-                    " toks -> transform(sequence(0, size(toks) - 2),"
-                    " i -> concat_ws(' ', toks[i], toks[i+1]))))"
-                )
-            ).alias("g"),
+            F.explode(F.expr(word_windows("split(text, ' ')", 2))).alias("g"),
         )
         .select(
             "doc_id", "lang",
@@ -2058,21 +2024,7 @@ def t30_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .ranks import ntile_exact
 
     docs = _docs(spark, sf_dir)
-    flat = (
-        docs.filter(F.size(F.split("text", " ")) >= 2)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "flatten(transform(array(split(text, ' ')),"
-                    " toks -> transform(sequence(0, size(toks) - 2),"
-                    " i -> struct(toks[i] AS w1,"
-                    "             concat_ws(' ', toks[i], toks[i+1]) AS g))))"
-                )
-            ).alias("b"),
-        )
-        .select("doc_id", "b.w1", "b.g")
-    )
+    flat = _bigram_stream(docs, "doc_id")
     bg_counts = flat.groupBy("g").agg(F.count("*").alias("c_bg"))
     u_counts = flat.groupBy("w1").agg(F.count("*").alias("c_u"))
     scored = (
@@ -2165,22 +2117,7 @@ def t30_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 def t31_heldout_lm_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     bucket = md5_prefix_long(F.col("doc_id").cast("string")) % 100
-    flat = (
-        docs.filter(F.size(F.split("text", " ")) >= 2)
-        .select(
-            "doc_id",
-            bucket.alias("bucket"),
-            F.explode(
-                F.expr(
-                    "flatten(transform(array(split(text, ' ')),"
-                    " toks -> transform(sequence(0, size(toks) - 2),"
-                    " i -> struct(toks[i] AS w1,"
-                    "             concat_ws(' ', toks[i], toks[i+1]) AS g))))"
-                )
-            ).alias("b"),
-        )
-        .select("doc_id", "bucket", "b.w1", "b.g")
-    )
+    flat = _bigram_stream(docs, "doc_id", bucket.alias("bucket"))
     train = flat.filter(F.col("bucket") < 80)
     bg_counts = train.groupBy("g").agg(F.count("*").alias("c_bg"))
     u_counts = train.groupBy("w1").agg(F.count("*").alias("c_u"))
@@ -2796,21 +2733,10 @@ def t37_oov_rate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def t38_kneser_ney_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
-    toks = F.split("text", " ")
-    s = (
-        docs.filter(F.size(toks) >= 2)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, size(split(text, ' ')) - 2),"
-                    " i -> struct(split(text, ' ')[i] AS w1,"
-                    "             split(text, ' ')[i+1] AS w2))"
-                )
-            ).alias("b"),
-        )
-        .select("doc_id", "b.w1", "b.w2")
-    )
+    s = docs.select(
+        "doc_id",
+        F.explode(F.expr(word_windows("split(text, ' ')", 2, _WORD_PAIR))).alias("b"),
+    ).select("doc_id", "b.w1", "b.w2")
     # One shuffle collapses the occurrence stream to per-doc bigram
     # counts; EVERYTHING else (corpus bigram table, context totals,
     # successor/predecessor type counts, the scoring join) derives from
@@ -3029,17 +2955,9 @@ def _t40_train_rules(spark: SparkSession, sf_dir: str) -> list[tuple]:
     )
     rules = []
     for k in range(1, T40_MERGES + 1):
-        toks = vocab.select("freq", F.split(F.trim("s"), "  ").alias("l")).filter(
-            F.size("l") >= 2
-        )
-        pairs = toks.select(
+        pairs = vocab.select(
             "freq",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(l) - 1),"
-                    " i -> struct(l[i - 1] AS w1, l[i] AS w2))"
-                )
-            ).alias("p"),
+            F.explode(F.expr(word_windows("split(trim(s), '  ')", 2, _WORD_PAIR))).alias("p"),
         ).select("p.w1", "p.w2", "freq")
         top = (
             pairs.groupBy("w1", "w2")
@@ -3388,10 +3306,9 @@ def t45_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     gram_arrays = []
     for n in range(2, 7):
-        parts = ", ".join(f"t[i+{k}]" for k in range(n))
+        parts = ", ".join(f"toks[i+{k}]" for k in range(n))
         gram_arrays.append(
-            f"transform(sequence(0, size(t) - {n}),"
-            f" i -> struct({n} AS n, concat_ws(' ', {parts}) AS g))"
+            word_windows("t", n, f"struct({n} AS n, concat_ws(' ', {parts}) AS g)")
         )
     flat = f"flatten(array({', '.join(gram_arrays)}))"
     toks = docs.select(
@@ -3797,26 +3714,18 @@ def t49_normalized_decontaminate(
     )
 
     def exploded_of(src: DataFrame, text_sql: str) -> DataFrame:
-        # The one-element-array binding (the d02 _shingles_df trick):
-        # Catalyst's CollapseProject would otherwise inline the
-        # canonicalization chain into EVERY toks reference inside the
-        # shingle transform (~8 re-evaluations of two regexp passes per
-        # row — measured 38s vs 4.5s single-threaded at sf0.1), so the
-        # normalized-and-split text is bound ONCE per row inside the
-        # expression. The repartition parallelizes the row-local
-        # regexp+shingle work across cores: the source parquet is one
-        # ~file-sized partition, and this is the rare projection heavy
-        # enough to be worth one cheap shuffle of the raw text.
-        shingle_expr = (
-            "array_distinct(flatten(transform("
-            f" array(split({text_sql}, ' ')),"
-            " toks -> transform("
-            "  filter(sequence(0, size(toks) - 1), i -> i <= size(toks) - 3),"
-            "  i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2])))))"
-        )
+        # word_windows binds the normalized-and-split text ONCE per row:
+        # inlined, the canonicalization chain ran per toks reference
+        # (~8 re-evaluations of two regexp passes per row — measured 38s
+        # vs 4.5s single-threaded at sf0.1). The repartition
+        # parallelizes the row-local regexp+shingle work across cores:
+        # the source parquet is one ~file-sized partition, and this is
+        # the rare projection heavy enough to be worth one cheap shuffle
+        # of the raw text.
+        shingles = F.array_distinct(F.expr(word_windows(f"split({text_sql}, ' ')", 3)))
         return (
             src.repartition(32, "doc_id")
-            .select("doc_id", F.explode(F.expr(shingle_expr)).alias("s"))
+            .select("doc_id", F.explode(shingles).alias("s"))
             .select("doc_id", F.xxhash64("s").alias("gh"))
         )
 

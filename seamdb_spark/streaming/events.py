@@ -1101,7 +1101,7 @@ def lsh_candidates_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation (and no aggregate-then-join restriction) is ever
     involved. Identical values by the min-over-elements identity; the
     signature expressions and band layout are SHARED definitions with
-    the batch kernel (dedup_index._band_select + hashing.py), so a
+    the batch kernel (hashing.band_select and its hash helpers), so a
     constant change cannot break one side silently; the batch-equality
     test pins stream == p17 kernel exactly.
 

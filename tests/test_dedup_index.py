@@ -4,9 +4,26 @@ only new segments, per-batch candidate lookup must match the full
 self-join restricted to the batch, and history rewrites must trigger a
 sound rebuild."""
 
+import hashlib
+import random
+
+import pytest
 from pyspark.sql import functions as F
 
-from seamdb_spark.dedup_index import IncrementalLSHIndex, band_rows
+from seamdb_spark.dedup_index import (
+    IncrementalEvalIndex,
+    IncrementalLSHIndex,
+    IncrementalSimHashIndex,
+    band_rows,
+    band_rows_stateless,
+    shingle_arrays,
+)
+from seamdb_spark.operators.hashing import (
+    MINHASH_PARAMS,
+    MINHASH_PRIME,
+    N_BANDS,
+    ROWS_PER_BAND,
+)
 
 
 def _setup(engine):
@@ -49,6 +66,102 @@ def test_short_docs_are_skipped_not_crashed(engine):
     out = idx.refresh()
     assert out["mode"] == "incremental" and out["n_new_docs"] == 1
     assert {r.doc_id for r in idx.index().collect()} == {3}
+
+
+@pytest.mark.parametrize("n", range(2, 7))
+def test_word_windows_are_total_on_short_arrays(spark, n):
+    """Every n-token window in position order, for token counts 0..n+1:
+    an array shorter than the window yields none, and nothing raises
+    (ANSI mode turns an out-of-range toks[i+k] into
+    INVALID_ARRAY_INDEX)."""
+    from seamdb_spark.operators.hashing import word_windows
+
+    rows = [(k, [f"w{j}" for j in range(k)]) for k in range(n + 2)]
+    df = spark.createDataFrame(rows, "k int, t array<string>")
+    got = {
+        r.k: list(r.w)
+        for r in df.select("k", F.expr(word_windows("t", n)).alias("w")).collect()
+    }
+    assert got == {k: [" ".join(t[i:i + n]) for i in range(k - n + 1)] for k, t in rows}
+
+
+@pytest.mark.parametrize("path", ["d02_shingles", "d04_bigrams"])
+def test_short_documents_do_not_break_shingles_or_bigrams(spark, tmp_path, path):
+    """An empty text, a 1-token and a 2-token doc go through d02's
+    shingle frame and d04's bigram join: the short docs yield no
+    shingles (and the 1-token docs no bigrams) instead of raising
+    INVALID_ARRAY_INDEX."""
+    from seamdb_spark.operators import dedup
+
+    docs = [(1, ""), (2, "solo"), (3, "two tokens"), (4, "two tokens"),
+            (5, "three proper tokens")]
+    spark.createDataFrame(docs, "doc_id bigint, text string").write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    sf = str(tmp_path)
+    if path == "d02_shingles":
+        got = {r.doc_id: r.shingles for r in dedup._shingles_df(spark, sf).collect()}
+        assert got == {5: ["three proper tokens"]}
+    else:
+        got = [tuple(r) for r in dedup.d04_dedup_ngram_jaccard(spark, sf).collect()]
+        assert got == [(3, 4, 1.0)]
+
+
+def _reference_sigs(docs):
+    """Pure-Python MinHash: distinct 3-word shingles, md5 8-hex-digit
+    prefix, min over (a*x+b) % MINHASH_PRIME per hash function."""
+    sigs = {}
+    for doc_id, text in docs:
+        toks = text.split(" ")
+        shingles = {" ".join(toks[i:i + 3]) for i in range(len(toks) - 2)}
+        if shingles:
+            hs = [int(hashlib.md5(s.encode()).hexdigest()[:8], 16) for s in shingles]
+            sigs[doc_id] = [min((a * h + b) % MINHASH_PRIME for h in hs)
+                            for a, b in MINHASH_PARAMS]
+    return sigs
+
+
+def test_minhash_kernel_matches_python_reference(spark):
+    from seamdb_spark.operators.hashing import minhash_sigs
+
+    rng = random.Random(13)
+    words = ["alpha", "beta", "gamma", "delta", "eps", "zeta", "eta"]
+    docs = [(i, " ".join(rng.choice(words) for _ in range(rng.randint(0, 10))))
+            for i in range(80)]
+    df = spark.createDataFrame(docs, "doc_id bigint, text string")
+    ref = _reference_sigs(docs)
+    sigs = minhash_sigs(shingle_arrays(df, "doc_id", "text"), ["doc_id"])
+    got = {r.doc_id: [r[f"mh{j}"] for j in range(len(MINHASH_PARAMS))]
+           for r in sigs.collect()}
+    assert got == ref
+    want = {
+        (d, band, "-".join(str(sig[j]) for j in range(band * ROWS_PER_BAND,
+                                                       (band + 1) * ROWS_PER_BAND)))
+        for d, sig in ref.items() for band in range(N_BANDS)
+    }
+    assert set(map(tuple, band_rows(df, "doc_id", "text").collect())) == want
+    assert set(map(tuple, band_rows_stateless(df, "doc_id", "text").collect())) == want
+
+
+def test_only_bounded_batches_force_broadcast(engine):
+    """new_candidate_pairs hints the batch side only under bounded=True;
+    a corpus-proportional id set leaves both joins to the planner."""
+    _setup(engine)
+    _insert(engine, _BATCH1)
+    ids = engine.table("docs").filter("id = 1")
+    lsh = IncrementalLSHIndex(engine, "docs_lsh", "docs", "id", "body")
+    sim = IncrementalSimHashIndex(engine, "docs_sim", "docs", "id", "body")
+    for index in (lsh, sim):
+        index.refresh()
+        qe = index.new_candidate_pairs(ids)._jdf.queryExecution()
+        assert "broadcast" not in qe.analyzed().toString()
+        qe = index.new_candidate_pairs(ids, bounded=True)._jdf.queryExecution()
+        pair_join, id_join = [
+            line for line in qe.optimizedPlan().toString().splitlines()
+            if "Join Inner" in line
+        ]
+        assert pair_join.endswith("leftHint=(strategy=broadcast)")
+        assert id_join.endswith("rightHint=(strategy=broadcast)")
 
 
 def test_incremental_index_equals_full_rebanding(engine):
@@ -163,7 +276,6 @@ def test_over_snapshots_matches_engine_path(engine, spark, tmp_path):
 
 
 # ---------------------------------------------------------------- eval index
-from seamdb_spark.dedup_index import IncrementalEvalIndex, shingle_arrays
 
 
 def _setup_eval(engine):
@@ -243,7 +355,6 @@ def test_eval_index_contaminated_matches_direct_join(engine):
         for r in idx.contaminated(train, "tid", "body").collect()
     }
     univ = _full_universe(engine)
-    import hashlib
 
     def h32(s):
         return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
@@ -454,8 +565,6 @@ def test_ivf_three_uneven_batches_equal_one_shot(spark, tmp_path):
 # the full verify restricted to the batch, compaction triggers rebuild.
 # ---------------------------------------------------------------------------
 def _setup_simhash(engine):
-    from seamdb_spark.dedup_index import IncrementalSimHashIndex
-
     engine.sql("CREATE TABLE sdocs (id serial PRIMARY KEY, body text)")
     return IncrementalSimHashIndex(engine, "sdocs_sh", "sdocs", "id", "body")
 

@@ -464,15 +464,13 @@ def test_no_forced_broadcast_on_scale_variant_tables():
         "sa", "sb", "agg",
         # e26: per-prev-type modal next step — |types| rows
         "modal",
-        # dedup_index: the per-refresh ingest batch — bounded by batch
-        # size (operator input), not the corpus
-        "new_doc_ids",
-        # dedup_index new_candidate_pairs(bounded=True): the batch's
-        # band rows / block keys — a CONSTANT multiple (N_BANDS / 28)
-        # of a caller-asserted micro-batch; the broadcast only exists
-        # inside the `if bounded:` branch, and corpus-proportional
-        # callers (p17/p21/p27/p29) take the shuffle path
-        "batch_bands", "batch_keys",
+        # dedup_index new_candidate_pairs(bounded=True): the batch's id
+        # list and its band rows / block keys — a CONSTANT multiple
+        # (1 / N_BANDS / 28) of a caller-asserted micro-batch; every
+        # hint is conditional on `bounded`, so corpus-proportional
+        # callers (p17/p21/p27/p29, bounded=False) get no hint at all
+        # (test_only_bounded_batches_force_broadcast pins both sides)
+        "batch_ids", "batch_bands", "batch_keys",
         # dedup_index _derive_of: the new segment set's id projection,
         # broadcast only under the HINT_IDS_BROADCAST_MAX_BYTES input
         # guard (constant bytes, corpus-independent); rebuild-sized
@@ -1606,6 +1604,7 @@ def test_pair_consumers_use_gated_sources():
         "d03_dedup_simhash",
     )
     consumers = [
+        dedup.d18_minhash_estimate_audit,
         dedup.d21_editdist_verified_neardup,
         dedup.d26_containment_neardup,
         dedup.d29_threshold_sensitivity,
