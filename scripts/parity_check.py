@@ -23,6 +23,7 @@ import hashlib
 import math
 import os
 import sys
+import tempfile
 import time
 
 import duckdb
@@ -34,8 +35,20 @@ from seamdb_spark import TPCH_TABLES  # noqa: E402
 from seamdb_spark.session import build_session  # noqa: E402
 
 
-def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
+# DuckDB's default memory limit is 80% of RAM, which one oracle can fill
+# beside the Spark JVM on a 16 GB box. Bound it, and let operators that
+# can spill do so into the run's temporary dir, with the spill capped
+# too. s16's layered CTE does not spill and still fails, now at 4GB.
+DUCK_MEMORY_LIMIT = "4GB"
+DUCK_SPILL_LIMIT = "8GB"
+
+
+def duck_connection(sf_dir: str, scratch: str) -> duckdb.DuckDBPyConnection:
+    con = duckdb.connect(config={
+        "memory_limit": DUCK_MEMORY_LIMIT,
+        "temp_directory": os.path.join(scratch, "duckdb_spill"),
+        "max_temp_directory_size": DUCK_SPILL_LIMIT,
+    })
     for t in TPCH_TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
@@ -169,7 +182,8 @@ def main() -> int:
     master = os.environ.get("PARITY_MASTER", "local[8]")
     shuffle = int(os.environ.get("PARITY_SHUFFLE", "8"))
     spark = build_session("parity_check", master=master, shuffle_partitions=shuffle)
-    con = duck_connection(sf_dir)
+    scratch = tempfile.TemporaryDirectory(prefix="parity_check_")
+    con = duck_connection(sf_dir, scratch.name)
 
     failed, passed, skipped = [], [], []
     digests = []
@@ -209,6 +223,8 @@ def main() -> int:
             passed.append(name)
             print(f"[ok]   {name} ({dt:.1f}s)")
 
+    con.close()
+    scratch.cleanup()
     if digest_path is not None:
         with open(digest_path, "w") as f:
             f.write("\n".join(digests) + "\n")

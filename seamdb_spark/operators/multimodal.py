@@ -20,6 +20,17 @@ binary column synthesis, Arrow-batched ``mapInPandas`` with an
 explicit output schema, and partition-preserving flow (no driver
 collect).
 
+Each format decision has one copy. ``_bmp_rows`` is the only BMP
+header parse (``decode_bmp``, ``bmp_pixels``), ``_wav_pcm`` the only
+RIFF chunk walk and ``fmt `` check (``decode_wav``, ``wav_samples``),
+``_mp4_boxes`` the only ISO-BMFF box walker (``decode_mp4_probe``,
+``mp4_mdat_offset``, ``extract_mp4_samples``, through
+``_mp4_tables``), ``_png_encode`` the only PNG encoder and
+``_jpeg_segments`` / ``decode_jpeg`` / ``_jpeg_encode`` the JPEG
+marker walker, decoder and encoder. Every row-local UDF is a per-row
+function run by ``rowmap.row_map``; only the vectorised m01/m02
+kernels call ``mapInPandas`` directly.
+
 ``m01_binary_metadata`` has a DuckDB oracle because its outputs
 (byte length, md5 digest, declared content type) are computable from the
 source text in SQL; the Pandas-UDF path must agree with it exactly —
@@ -36,15 +47,18 @@ from __future__ import annotations
 import hashlib
 import math
 import struct
+import zlib
 from collections import defaultdict
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources import load_table
 from .registry import register, register_candidates
+from .rowmap import row_map
 
 DECODE_SCHEMA = "doc_id long, n_bytes long, checksum string, content_type string"
 FEATURE_SCHEMA = (
@@ -71,12 +85,11 @@ FEATURE_SCHEMA = (
 # boundary: H.264/H.265 video payloads inside mdat and non-4:2:0
 # chroma subsampling (e.g. 4:2:2).
 # --------------------------------------------------------------------------
-def decode_bmp(payload: bytes) -> dict:
-    """Parse an uncompressed 24-bit BMP: dimensions + pixel-sum stats.
-
-    Returns {"kind", "width", "height", "n_frames", "feat_dim",
-    "pixel_sum", "feat_mean"}; pixel_sum excludes row padding bytes.
-    """
+def _bmp_rows(payload: bytes) -> tuple[int, int, bool, list[bytes]]:
+    """The one BMP header parse: validate a 24-bit uncompressed
+    BITMAPINFOHEADER file and return (width, height, top_down, rows),
+    each row's pixel bytes with the 4-byte padding stripped, in stored
+    order."""
     if len(payload) < 54 or payload[:2] != b"BM":
         raise ValueError("not a BMP: missing 'BM' magic / truncated header")
     data_off = struct.unpack_from("<I", payload, 10)[0]
@@ -97,10 +110,20 @@ def decode_bmp(payload: bytes) -> dict:
     need = data_off + stride * height
     if len(payload) < need:
         raise ValueError(f"truncated BMP pixel data ({len(payload)} < {need})")
-    pixel_sum = 0
-    for row in range(height):
-        start = data_off + row * stride
-        pixel_sum += sum(payload[start : start + width * 3])
+    return width, height, top_down, [
+        payload[data_off + r * stride : data_off + r * stride + width * 3]
+        for r in range(height)
+    ]
+
+
+def decode_bmp(payload: bytes) -> dict:
+    """Parse an uncompressed 24-bit BMP: dimensions + pixel-sum stats.
+
+    Returns {"kind", "width", "height", "n_frames", "feat_dim",
+    "pixel_sum", "feat_mean"}; pixel_sum excludes row padding bytes.
+    """
+    width, height, top_down, rows = _bmp_rows(payload)
+    pixel_sum = sum(sum(row) for row in rows)
     n_bytes = width * height * 3
     return {
         "kind": "bmp",
@@ -115,58 +138,35 @@ def decode_bmp(payload: bytes) -> dict:
 
 
 def bmp_pixels(payload: bytes) -> bytes:
-    """Extract the raw BGR pixel bytes from a 24-bit uncompressed BMP.
-
-    Same header walk as :func:`decode_bmp` but returns the pixel data
-    itself (row-major, padding stripped, rows in stored order — the
-    exact inverse of :func:`build_bmp`). Input to per-pixel feature
-    extraction (m09 perceptual hashing).
-    """
-    if len(payload) < 54 or payload[:2] != b"BM":
-        raise ValueError("not a BMP: missing 'BM' magic / truncated header")
-    data_off = struct.unpack_from("<I", payload, 10)[0]
-    width, height = struct.unpack_from("<ii", payload, 18)
-    planes, bpp = struct.unpack_from("<HH", payload, 26)
-    compression = struct.unpack_from("<I", payload, 30)[0]
-    if planes != 1 or bpp != 24 or compression != 0:
-        raise ValueError("only 24-bit uncompressed BMP supported")
-    height = abs(height)
-    stride = ((width * 3 + 3) // 4) * 4
-    if len(payload) < data_off + stride * height:
-        raise ValueError("truncated BMP pixel data")
-    return b"".join(
-        payload[data_off + r * stride : data_off + r * stride + width * 3]
-        for r in range(height)
-    )
+    """The raw BGR pixel bytes of a 24-bit uncompressed BMP: row-major,
+    padding stripped, rows in stored order — the exact inverse of
+    :func:`build_bmp`. Input to per-pixel feature extraction (m09
+    perceptual hashing)."""
+    return b"".join(_bmp_rows(payload)[3])
 
 
-def decode_wav(payload: bytes) -> dict:
-    """Parse a RIFF/WAVE PCM file (8- or 16-bit): format + sample stats.
-
-    Walks the chunk list (handles extra chunks and odd-size padding).
-    Returns {"kind", "sample_rate", "channels", "bits", "n_frames"
-    (sample frames), "feat_dim", "abs_sum" (sum |sample| over all
-    channels), "feat_mean" (mean |sample| normalized to [0, 1])}.
-    """
+def _wav_pcm(payload: bytes) -> tuple[int, int, int, list[int]]:
+    """The one RIFF/WAVE chunk walk and ``fmt `` check: returns
+    (sample_rate, channels, bits, samples) for an 8- or 16-bit PCM file,
+    samples interleaved and signed (8-bit values are re-centred on 0).
+    Extra chunks are skipped and odd-size chunks honour the even-offset
+    padding; a block_align other than channels * bits / 8 raises."""
     if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
         raise ValueError("not a WAV: missing RIFF/WAVE header")
-    fmt = None
-    data = None
+    chunks = {}
     off = 12
     while off + 8 <= len(payload):
         cid = payload[off : off + 4]
         size = struct.unpack_from("<I", payload, off + 4)[0]
-        body = payload[off + 8 : off + 8 + size]
-        if cid == b"fmt ":
-            fmt = body
-        elif cid == b"data":
-            data = body
+        chunks[cid] = payload[off + 8 : off + 8 + size]
         off += 8 + size + (size & 1)  # chunks pad to even offsets
+    fmt, data = chunks.get(b"fmt "), chunks.get(b"data")
     if fmt is None or data is None:
         raise ValueError("WAV missing fmt/data chunk")
+    if len(fmt) < 16:
+        raise ValueError("truncated WAV fmt chunk")
     audio_format, channels, sample_rate = struct.unpack_from("<HHI", fmt, 0)
-    block_align = struct.unpack_from("<H", fmt, 12)[0]
-    bits = struct.unpack_from("<H", fmt, 14)[0]
+    block_align, bits = struct.unpack_from("<HH", fmt, 12)
     if audio_format != 1 or bits not in (8, 16):
         raise ValueError(
             f"unsupported WAV (format={audio_format}, bits={bits}); "
@@ -176,28 +176,40 @@ def decode_wav(payload: bytes) -> dict:
         raise ValueError(
             "WAV block_align inconsistent with channels/bit depth"
         )
-    n_samples = len(data) // block_align if block_align else 0
+    n_vals = len(data) // block_align * channels
     if bits == 16:
-        vals = struct.unpack_from(f"<{n_samples * channels}h", data, 0)
-        abs_sum = sum(abs(v) for v in vals)
-        denom = 32768.0
+        samples = list(struct.unpack_from(f"<{n_vals}h", data, 0))
     else:
-        vals = data[: n_samples * channels]
-        abs_sum = sum(abs(v - 128) for v in vals)
-        denom = 128.0
-    n_vals = n_samples * channels
+        samples = [b - 128 for b in data[:n_vals]]
+    return sample_rate, channels, bits, samples
+
+
+def decode_wav(payload: bytes) -> dict:
+    """Parse a RIFF/WAVE PCM file (8- or 16-bit): format + sample stats.
+
+    Returns {"kind", "sample_rate", "channels", "bits", "n_frames"
+    (sample frames), "feat_dim", "abs_sum" (sum |sample| over all
+    channels), "feat_mean" (mean |sample| normalized to [0, 1])}.
+    """
+    sample_rate, channels, bits, samples = _wav_pcm(payload)
+    abs_sum = sum(abs(v) for v in samples)
+    denom = 32768.0 if bits == 16 else 128.0
     return {
         "kind": "wav",
         "sample_rate": sample_rate,
         "channels": channels,
         "bits": bits,
-        "n_frames": n_samples,
+        "n_frames": len(samples) // channels,
         "feat_dim": channels,
         "abs_sum": abs_sum,
-        "feat_mean": abs_sum / (n_vals * denom) if n_vals else 0.0,
+        "feat_mean": abs_sum / (len(samples) * denom) if samples else 0.0,
     }
 
 
+def wav_samples(payload: bytes) -> list[int]:
+    """The raw interleaved sample values of a PCM WAV payload — the
+    input to framewise feature extraction (m08)."""
+    return _wav_pcm(payload)[3]
 
 
 # --------------------------------------------------------------------------
@@ -249,8 +261,6 @@ _JPEG_AC_SYMBOLS = [0x00, 0xF0] + [          # EOB, ZRL, then (run,size)
 
 
 def _jpeg_dct_matrix():
-    import numpy as np
-
     C = np.zeros((8, 8), dtype=np.float64)
     for k in range(8):
         for n in range(8):
@@ -358,13 +368,14 @@ class _JpegBitReader:
 # --------------------------------------------------------------------------
 # PNG codec (pure Python + stdlib zlib — the DEFLATE/CRC32 primitives
 # PNG needs are in the standard library, so unlike MP4 the format
-# requires no external codec). Encoder cycles the filter type per row
+# requires no external codec). One encoder front end (_png_encode)
+# sits behind the three builders; it cycles the filter type per row
 # (None/Sub/Up/Average/Paeth) so a round-trip exercises every unfilter
-# path; decoder validates chunk CRCs, concatenates multi-chunk IDAT,
-# inflates, and unfilters. 8-bit RGB (color type 2), both interlace
-# methods — 0 (sequential) and 1 (Adam7: seven filtered sub-images
-# scattered on the 8x8 progressive grid, round-8 addition, m38);
-# palette/alpha raise ValueError.
+# path. The decoder validates chunk CRCs, concatenates multi-chunk
+# IDAT, inflates, and unfilters. 8-bit grayscale, truecolor and
+# palette (color types 0, 2 and 3), both interlace methods — 0
+# (sequential) and 1 (Adam7: seven filtered sub-images scattered on
+# the 8x8 progressive grid, m38); 16-bit and alpha raise ValueError.
 # --------------------------------------------------------------------------
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
@@ -388,8 +399,6 @@ def _adam7_pass_dims(width: int, height: int) -> list[tuple]:
 
 
 def _png_chunk(ctype: bytes, data: bytes) -> bytes:
-    import zlib
-
     return (
         struct.pack(">I", len(data)) + ctype + data
         + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
@@ -485,47 +494,50 @@ def _png_unfilter_rows(raw: bytes, width: int, height: int, bpp: int = 3):
     return bytes(out), filters
 
 
-def build_png(width: int, height: int, rgb: bytes, interlace: int = 0) -> bytes:
-    """Encode raw RGB bytes (len == width*height*3, row-major) as an
-    8-bit truecolor PNG. Filter type cycles row % 5 so every filter
-    (0 None / 1 Sub / 2 Up / 3 Average / 4 Paeth) appears; IDAT is
-    split into two chunks to exercise the decoder's stream concat.
-    ``interlace=1`` writes Adam7: the seven pass sub-images are
-    gathered off the 8x8 progressive grid and each pass is filtered
-    independently (filters restart per pass, per the spec)."""
-    import zlib
-
-    if len(rgb) != width * height * 3:
-        raise ValueError("rgb length != width*height*3")
+def _png_encode(width, height, samples, bpp, color_type, interlace,
+                plte=b""):
+    """The one PNG encoder front end: ``samples`` holds ``bpp`` bytes
+    per pixel in raster order. Sequential (``interlace=0``) filters the
+    whole image; Adam7 (``interlace=1``) gathers the seven pass
+    sub-images off the 8x8 progressive grid and filters each
+    independently (filters restart per pass, per the spec). The
+    filtered stream is compressed once and split across two IDAT
+    chunks to exercise the decoder's stream concat; a non-empty
+    ``plte`` is written as the PLTE chunk."""
     if interlace not in (0, 1):
         raise ValueError("PNG interlace method must be 0 or 1")
-    stride = width * 3
+    grid = np.frombuffer(samples, dtype=np.uint8).reshape(height, width, bpp)
     if interlace == 0:
-        rows = [rgb[y * stride:(y + 1) * stride] for y in range(height)]
-        filtered = _png_filter_rows(rows)
+        passes = [(0, 0, 1, 1)]
     else:
-        filtered = bytearray()
-        for x0, y0, dx, dy, pw, ph in _adam7_pass_dims(width, height):
-            rows = []
-            for j in range(ph):
-                y = y0 + j * dy
-                row = bytearray()
-                for i in range(pw):
-                    x = x0 + i * dx
-                    p = (y * width + x) * 3
-                    row += rgb[p:p + 3]
-                rows.append(bytes(row))
-            filtered += _png_filter_rows(rows)
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, 2, 0, 0, interlace)
+        passes = [p[:4] for p in _adam7_pass_dims(width, height)]
+    filtered = bytearray()
+    for x0, y0, dx, dy in passes:
+        rows = [row.tobytes() for row in grid[y0::dy, x0::dx]]
+        filtered += _png_filter_rows(rows, bpp)
+    ihdr = struct.pack(
+        ">IIBBBBB", width, height, 8, color_type, 0, 0, interlace
+    )
     comp = zlib.compress(bytes(filtered), 6)
     half = len(comp) // 2
     return (
         _PNG_SIG
         + _png_chunk(b"IHDR", ihdr)
+        + (_png_chunk(b"PLTE", plte) if plte else b"")
         + _png_chunk(b"IDAT", comp[:half])
         + _png_chunk(b"IDAT", comp[half:])
         + _png_chunk(b"IEND", b"")
     )
+
+
+def build_png(width: int, height: int, rgb: bytes, interlace: int = 0) -> bytes:
+    """Encode raw RGB bytes (len == width*height*3, row-major) as an
+    8-bit truecolor PNG. Filter type cycles row % 5 so every filter
+    (0 None / 1 Sub / 2 Up / 3 Average / 4 Paeth) appears;
+    ``interlace=1`` writes Adam7."""
+    if len(rgb) != width * height * 3:
+        raise ValueError("rgb length != width*height*3")
+    return _png_encode(width, height, rgb, 3, 2, interlace)
 
 
 def build_png_palette(
@@ -536,14 +548,9 @@ def build_png_palette(
     emit): the distinct colors (must be <= 256) become the PLTE chunk
     in first-appearance order, scanlines carry 1-byte indices, and
     filtering runs with bpp=1 (the PNG spec's filter unit for indexed
-    images). ``interlace=1`` writes Adam7 with per-pass filter
-    restarts, same grid as truecolor."""
-    import zlib
-
+    images). ``interlace=1`` writes Adam7."""
     if len(rgb) != width * height * 3:
         raise ValueError("rgb length != width*height*3")
-    if interlace not in (0, 1):
-        raise ValueError("PNG interlace method must be 0 or 1")
     palette: dict[bytes, int] = {}
     idx = bytearray(width * height)
     for p in range(width * height):
@@ -553,28 +560,8 @@ def build_png_palette(
                 raise ValueError("more than 256 distinct colors")
             palette[c] = len(palette)
         idx[p] = palette[c]
-    if interlace == 0:
-        rows = [bytes(idx[y * width:(y + 1) * width]) for y in range(height)]
-        filtered = _png_filter_rows(rows, bpp=1)
-    else:
-        filtered = bytearray()
-        for x0, y0, dx, dy, pw, ph in _adam7_pass_dims(width, height):
-            rows = [
-                bytes(idx[(y0 + j * dy) * width + x0 + i * dx] for i in range(pw))
-                for j in range(ph)
-            ]
-            filtered += _png_filter_rows(rows, bpp=1)
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, 3, 0, 0, interlace)
-    plte = b"".join(palette)
-    comp = zlib.compress(bytes(filtered), 6)
-    half = len(comp) // 2
-    return (
-        _PNG_SIG
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"PLTE", plte)
-        + _png_chunk(b"IDAT", comp[:half])
-        + _png_chunk(b"IDAT", comp[half:])
-        + _png_chunk(b"IEND", b"")
+    return _png_encode(
+        width, height, bytes(idx), 1, 3, interlace, b"".join(palette)
     )
 
 
@@ -584,37 +571,10 @@ def build_png_gray(
     """Encode raw 8-bit grayscale samples (len == width*height) as a
     color-type-0 PNG — the form scanned-document and OCR corpora
     carry. Scanlines are the samples themselves, filtered with bpp=1;
-    ``interlace=1`` writes Adam7 with per-pass filter restarts."""
-    import zlib
-
+    ``interlace=1`` writes Adam7."""
     if len(gray) != width * height:
         raise ValueError("gray length != width*height")
-    if interlace not in (0, 1):
-        raise ValueError("PNG interlace method must be 0 or 1")
-    if interlace == 0:
-        rows = [gray[y * width:(y + 1) * width] for y in range(height)]
-        filtered = _png_filter_rows(rows, bpp=1)
-    else:
-        filtered = bytearray()
-        for x0, y0, dx, dy, pw, ph in _adam7_pass_dims(width, height):
-            rows = [
-                bytes(
-                    gray[(y0 + j * dy) * width + x0 + i * dx]
-                    for i in range(pw)
-                )
-                for j in range(ph)
-            ]
-            filtered += _png_filter_rows(rows, bpp=1)
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, 0, 0, 0, interlace)
-    comp = zlib.compress(bytes(filtered), 6)
-    half = len(comp) // 2
-    return (
-        _PNG_SIG
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", comp[:half])
-        + _png_chunk(b"IDAT", comp[half:])
-        + _png_chunk(b"IEND", b"")
-    )
+    return _png_encode(width, height, gray, 1, 0, interlace)
 
 
 def decode_png(payload: bytes) -> dict:
@@ -627,8 +587,6 @@ def decode_png(payload: bytes) -> dict:
     flag, palette_size (0 for truecolor), raw RGB pixels, and the
     per-row filter types seen (concatenated in pass order for
     Adam7)."""
-    import zlib
-
     if payload[:8] != _PNG_SIG:
         raise ValueError("not a PNG signature")
     pos, width, height, inter, idat = 8, None, None, 0, bytearray()
@@ -686,7 +644,7 @@ def decode_png(payload: bytes) -> dict:
         )
         if len(raw) != need:
             raise ValueError("inflated length != Adam7 pass total")
-        out = bytearray(width * height * bpp)
+        grid = np.zeros((height, width, bpp), dtype=np.uint8)
         filters = []
         off = 0
         for x0, y0, dx, dy, pw, ph in passes:
@@ -694,12 +652,10 @@ def decode_png(payload: bytes) -> dict:
             sub, fs = _png_unfilter_rows(raw[off:off + plen], pw, ph, bpp)
             off += plen
             filters += fs
-            for j in range(ph):
-                for i in range(pw):
-                    p = ((y0 + j * dy) * width + (x0 + i * dx)) * bpp
-                    s = (j * pw + i) * bpp
-                    out[p:p + bpp] = sub[s:s + bpp]
-        pixels = bytes(out)
+            grid[y0::dy, x0::dx] = np.frombuffer(sub, np.uint8).reshape(
+                ph, pw, bpp
+            )
+        pixels = grid.tobytes()
     if ctyp == 0:
         # grayscale: replicate each sample to RGB (the standard
         # expansion a pixel pipeline applies before RGB-only kernels)
@@ -786,8 +742,6 @@ def _jpeg_coefficients(width, height, rgb, subsample=False):
     coefficients of each 8x8 block of its plane, in raster order.
     ``subsample`` halves Cb/Cr in both directions by the exact integer
     2x2 mean (a+b+c+d+2)>>2 (4:2:0)."""
-    import numpy as np
-
     unit = 16 if subsample else 8
     if width % unit or height % unit:
         raise ValueError(f"JPEG encoder requires multiple-of-{unit} dimensions")
@@ -1191,8 +1145,6 @@ def decode_jpeg(payload: bytes) -> dict:
     "4:2:0"} for 4:2:0. Other SOF types, other sampling factors,
     16-bit tables and non-8-bit precision raise ValueError.
     """
-    import numpy as np
-
     qtabs: dict[int, object] = {}
     huff: dict[tuple, dict] = {}  # (0 = DC / 1 = AC, table id) -> table
     grids = None
@@ -1885,23 +1837,18 @@ FRAME_SCHEMA = "doc_id long, frame_idx long, frame_checksum string"
     """,
 )
 def m03_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    payloads = _with_payload(spark, sf_dir)
+    payloads = _with_payload(spark, sf_dir).select("doc_id", "payload")
 
-    def sample_frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {"doc_id": [], "frame_idx": [], "frame_checksum": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                raw = bytes(payload)
-                n_frames = 1 + hashlib.md5(raw).digest()[0] % 8
-                for idx in range(0, n_frames, 2):
-                    out["doc_id"].append(doc_id)
-                    out["frame_idx"].append(idx)
-                    out["frame_checksum"].append(
-                        hashlib.md5(raw + b":" + str(idx).encode()).hexdigest()
-                    )
-            yield pd.DataFrame(out)
+    def sample_frames(doc_id, payload):
+        raw = bytes(payload)
+        n_frames = 1 + hashlib.md5(raw).digest()[0] % 8
+        for idx in range(0, n_frames, 2):
+            yield (
+                doc_id, idx,
+                hashlib.md5(raw + b":" + str(idx).encode()).hexdigest(),
+            )
 
-    return payloads.mapInPandas(sample_frames, schema=FRAME_SCHEMA)
+    return row_map(payloads, sample_frames, FRAME_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -1963,34 +1910,23 @@ def fake_decode_dims(payload: bytes) -> tuple[int, int]:
     """,
 )
 def m04_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    payloads = _with_payload(spark, sf_dir)
+    payloads = _with_payload(spark, sf_dir).select("doc_id", "payload")
 
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "width": [], "height": [],
-                "thumb_w": [], "thumb_h": [], "thumb_checksum": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                raw = bytes(payload)
-                w, h = fake_decode_dims(raw)
-                mx = max(w, h)
-                tw, th = (w, h) if mx <= MAX_SIDE else (
-                    w * MAX_SIDE // mx, h * MAX_SIDE // mx
-                )
-                # decode_media(raw) + PIL .resize((tw, th)) is the real
-                # path; the checksum stands in for the resized bytes.
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["thumb_w"].append(tw)
-                out["thumb_h"].append(th)
-                out["thumb_checksum"].append(
-                    hashlib.md5(raw + f":{tw}x{th}".encode()).hexdigest()
-                )
-            yield pd.DataFrame(out)
+    def resize(doc_id, payload):
+        raw = bytes(payload)
+        w, h = fake_decode_dims(raw)
+        mx = max(w, h)
+        tw, th = (w, h) if mx <= MAX_SIDE else (
+            w * MAX_SIDE // mx, h * MAX_SIDE // mx
+        )
+        # decode_media(raw) + PIL .resize((tw, th)) is the real
+        # path; the checksum stands in for the resized bytes.
+        yield (
+            doc_id, w, h, tw, th,
+            hashlib.md5(raw + f":{tw}x{th}".encode()).hexdigest(),
+        )
 
-    return payloads.mapInPandas(resize, schema=RESIZE_SCHEMA)
+    return row_map(payloads, resize, RESIZE_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -2040,34 +1976,18 @@ WINDOW_SCHEMA = (
     """,
 )
 def m05_binary_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    payloads = _with_payload(spark, sf_dir)
+    payloads = _with_payload(spark, sf_dir).select("doc_id", "payload")
 
-    def windows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, wids, offs, lens, digests = [], [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                data = bytes(payload)
-                n = len(data)
-                n_windows = 1 + max(0, -(-max(0, n - WINDOW_BYTES) // WINDOW_HOP))
-                for k in range(n_windows):
-                    start = k * WINDOW_HOP
-                    piece = data[start : start + WINDOW_BYTES]
-                    ids.append(doc_id)
-                    wids.append(k)
-                    offs.append(start + 1)
-                    lens.append(len(piece))
-                    digests.append(hashlib.md5(piece).hexdigest())
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.array(ids, dtype="int64"),
-                    "window_id": pd.array(wids, dtype="int64"),
-                    "byte_off": pd.array(offs, dtype="int64"),
-                    "n_bytes": pd.array(lens, dtype="int64"),
-                    "window_md5": pd.array(digests, dtype="string"),
-                }
-            )
+    def windows(doc_id, payload):
+        data = bytes(payload)
+        n = len(data)
+        n_windows = 1 + max(0, -(-max(0, n - WINDOW_BYTES) // WINDOW_HOP))
+        for k in range(n_windows):
+            start = k * WINDOW_HOP
+            piece = data[start : start + WINDOW_BYTES]
+            yield doc_id, k, start + 1, len(piece), hashlib.md5(piece).hexdigest()
 
-    return payloads.mapInPandas(windows, schema=WINDOW_SCHEMA)
+    return row_map(payloads, windows, WINDOW_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -2129,27 +2049,17 @@ _BYTE_I_SQL = (
 def m06_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def synth_decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "width": [], "height": [], "n_frames": [],
-                "feat_dim": [], "pixel_sum": [], "feat_mean": [],
-            }
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                digest = hashlib.md5(text.encode("utf-8")).digest()
-                w, h = 1 + digest[1] % 4, 1 + digest[2] % 4
-                pixels = bytes(digest[i % 16] for i in range(w * h * 3))
-                info = decode_media(build_bmp(w, h, pixels))  # real parse
-                out["doc_id"].append(doc_id)
-                out["width"].append(info["width"])
-                out["height"].append(info["height"])
-                out["n_frames"].append(info["n_frames"])
-                out["feat_dim"].append(info["feat_dim"])
-                out["pixel_sum"].append(info["pixel_sum"])
-                out["feat_mean"].append(info["feat_mean"])
-            yield pd.DataFrame(out)
+    def synth_decode(doc_id, text):
+        digest = hashlib.md5(text.encode("utf-8")).digest()
+        w, h = 1 + digest[1] % 4, 1 + digest[2] % 4
+        pixels = bytes(digest[i % 16] for i in range(w * h * 3))
+        info = decode_media(build_bmp(w, h, pixels))  # real parse
+        yield (
+            doc_id, info["width"], info["height"], info["n_frames"],
+            info["feat_dim"], info["pixel_sum"], info["feat_mean"],
+        )
 
-    return docs.mapInPandas(synth_decode, schema=_BMP_DECODE_SCHEMA)
+    return row_map(docs, synth_decode, _BMP_DECODE_SCHEMA)
 
 
 _WAV_DECODE_SCHEMA = (
@@ -2189,60 +2099,18 @@ _WAV_RATE = 16000
 def m07_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def synth_decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "sample_rate": [], "channels": [], "bits": [],
-                "n_samples": [], "abs_sum": [], "feat_mean": [],
-            }
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                digest = hashlib.md5(text.encode("utf-8")).digest()
-                n = 32 + digest[3] % 3 * 16
-                samples = [(digest[k % 16] - 128) * 256 for k in range(n)]
-                info = decode_media(build_wav(samples, _WAV_RATE))  # real parse
-                out["doc_id"].append(doc_id)
-                out["sample_rate"].append(info["sample_rate"])
-                out["channels"].append(info["channels"])
-                out["bits"].append(info["bits"])
-                out["n_samples"].append(info["n_frames"])
-                out["abs_sum"].append(info["abs_sum"])
-                out["feat_mean"].append(info["feat_mean"])
-            yield pd.DataFrame(out)
+    def synth_decode(doc_id, text):
+        digest = hashlib.md5(text.encode("utf-8")).digest()
+        n = 32 + digest[3] % 3 * 16
+        samples = [(digest[k % 16] - 128) * 256 for k in range(n)]
+        info = decode_media(build_wav(samples, _WAV_RATE))  # real parse
+        yield (
+            doc_id, info["sample_rate"], info["channels"],
+            info["bits"], info["n_frames"], info["abs_sum"],
+            info["feat_mean"],
+        )
 
-    return docs.mapInPandas(synth_decode, schema=_WAV_DECODE_SCHEMA)
-
-
-def wav_samples(payload: bytes) -> list[int]:
-    """Extract the raw interleaved sample values from a PCM WAV payload.
-
-    Same chunk walk as :func:`decode_wav` but returns the samples
-    themselves — the input to framewise feature extraction (m08).
-    """
-    info_fmt = None
-    data = None
-    if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        raise ValueError("not a WAV: missing RIFF/WAVE header")
-    off = 12
-    while off + 8 <= len(payload):
-        cid = payload[off : off + 4]
-        size = struct.unpack_from("<I", payload, off + 4)[0]
-        body = payload[off + 8 : off + 8 + size]
-        if cid == b"fmt ":
-            info_fmt = body
-        elif cid == b"data":
-            data = body
-        off += 8 + size + (size & 1)
-    if info_fmt is None or data is None:
-        raise ValueError("WAV missing fmt/data chunk")
-    audio_format, channels, _rate = struct.unpack_from("<HHI", info_fmt, 0)
-    block_align = struct.unpack_from("<H", info_fmt, 12)[0]
-    bits = struct.unpack_from("<H", info_fmt, 14)[0]
-    if audio_format != 1 or bits not in (8, 16):
-        raise ValueError("only 8/16-bit PCM supported")
-    n_samples = len(data) // block_align if block_align else 0
-    if bits == 16:
-        return list(struct.unpack_from(f"<{n_samples * channels}h", data, 0))
-    return [b - 128 for b in data[: n_samples * channels]]
+    return row_map(docs, synth_decode, _WAV_DECODE_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -2315,34 +2183,23 @@ def _byte_at(var: str) -> str:
 def m08_audio_frame_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def frame_energy(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "n_audio_frames": [], "total_energy": [],
-                "peak_energy": [], "peak_frame": [],
-            }
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                digest = hashlib.md5(text.encode("utf-8")).digest()
-                n = 32 + digest[3] % 3 * 16
-                synth = [(digest[k % 16] - 128) * 256 for k in range(n)]
-                samples = wav_samples(build_wav(synth, _WAV_RATE))  # real parse
-                nf = len(samples) // AUDIO_FRAME
-                energies = [
-                    sum(
-                        s * s
-                        for s in samples[f * AUDIO_FRAME : (f + 1) * AUDIO_FRAME]
-                    )
-                    for f in range(nf)
-                ]
-                peak = max(energies)
-                out["doc_id"].append(doc_id)
-                out["n_audio_frames"].append(nf)
-                out["total_energy"].append(sum(energies))
-                out["peak_energy"].append(peak)
-                out["peak_frame"].append(energies.index(peak))
-            yield pd.DataFrame(out)
+    def frame_energy(doc_id, text):
+        digest = hashlib.md5(text.encode("utf-8")).digest()
+        n = 32 + digest[3] % 3 * 16
+        synth = [(digest[k % 16] - 128) * 256 for k in range(n)]
+        samples = wav_samples(build_wav(synth, _WAV_RATE))  # real parse
+        nf = len(samples) // AUDIO_FRAME
+        energies = [
+            sum(
+                s * s
+                for s in samples[f * AUDIO_FRAME : (f + 1) * AUDIO_FRAME]
+            )
+            for f in range(nf)
+        ]
+        peak = max(energies)
+        yield doc_id, nf, sum(energies), peak, energies.index(peak)
 
-    return docs.mapInPandas(frame_energy, schema=_AUDIO_ENERGY_SCHEMA)
+    return row_map(docs, frame_energy, _AUDIO_ENERGY_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -2423,23 +2280,14 @@ def _m09_oracle() -> str:
 def m09_image_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def hash_images(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "width": [], "height": [], "ahash": [],
-            }
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                digest = hashlib.md5(text.encode("utf-8")).digest()
-                w, h = 8 + digest[1] % 8, 8 + digest[2] % 8
-                pixels = bytes(digest[i % 16] for i in range(w * h * 3))
-                pw, ph, ah = ahash_bmp(build_bmp(w, h, pixels))  # real parse
-                out["doc_id"].append(doc_id)
-                out["width"].append(pw)
-                out["height"].append(ph)
-                out["ahash"].append(ah)
-            yield pd.DataFrame(out)
+    def hash_images(doc_id, text):
+        digest = hashlib.md5(text.encode("utf-8")).digest()
+        w, h = 8 + digest[1] % 8, 8 + digest[2] % 8
+        pixels = bytes(digest[i % 16] for i in range(w * h * 3))
+        pw, ph, ah = ahash_bmp(build_bmp(w, h, pixels))  # real parse
+        yield doc_id, pw, ph, ah
 
-    hashes = docs.mapInPandas(hash_images, schema=_AHASH_SCHEMA)
+    hashes = row_map(docs, hash_images, _AHASH_SCHEMA)
     groups = hashes.groupBy("ahash").agg(F.count("*").alias("group_size"))
     return hashes.join(groups, "ahash").select(
         "doc_id", "width", "height", "ahash", "group_size"
@@ -2503,31 +2351,22 @@ _RESAMPLE_SCHEMA = (
 def m10_wav_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def resample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "n_in": [], "n_out": [], "rate_out": [],
-                "abs_sum_out": [], "peak_out": [],
-            }
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                digest = hashlib.md5(text.encode("utf-8")).digest()
-                n = 32 + digest[3] % 3 * 16
-                synth = [(digest[k % 16] - 128) * 256 for k in range(n)]
-                samples = wav_samples(build_wav(synth, _WAV_RATE))  # real parse
-                res = [
-                    ((samples[2 * i] + 32768) + (samples[2 * i + 1] + 32768)) // 2
-                    - 32768
-                    for i in range(len(samples) // 2)
-                ]
-                out["doc_id"].append(doc_id)
-                out["n_in"].append(len(samples))
-                out["n_out"].append(len(res))
-                out["rate_out"].append(_WAV_RATE // 2)
-                out["abs_sum_out"].append(sum(abs(v) for v in res))
-                out["peak_out"].append(max(abs(v) for v in res))
-            yield pd.DataFrame(out)
+    def resample(doc_id, text):
+        digest = hashlib.md5(text.encode("utf-8")).digest()
+        n = 32 + digest[3] % 3 * 16
+        synth = [(digest[k % 16] - 128) * 256 for k in range(n)]
+        samples = wav_samples(build_wav(synth, _WAV_RATE))  # real parse
+        res = [
+            ((samples[2 * i] + 32768) + (samples[2 * i + 1] + 32768)) // 2
+            - 32768
+            for i in range(len(samples) // 2)
+        ]
+        yield (
+            doc_id, len(samples), len(res), _WAV_RATE // 2,
+            sum(abs(v) for v in res), max(abs(v) for v in res),
+        )
 
-    return docs.mapInPandas(resample, schema=_RESAMPLE_SCHEMA)
+    return row_map(docs, resample, _RESAMPLE_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -2606,43 +2445,30 @@ def _m11_oracle() -> str:
 def m11_bmp_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def downsample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "width": [], "height": [], "out_w": [],
-                "out_h": [], "out_sum": [], "out_hash": [],
-            }
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                digest = hashlib.md5(text.encode("utf-8")).digest()
-                w, h = 8 + digest[1] % 8, 8 + digest[2] % 8
-                pixels = bytes(digest[i % 16] for i in range(w * h * 3))
-                px = bmp_pixels(build_bmp(w, h, pixels))  # real parse
-                ow, oh = (w + 1) // 2, (h + 1) // 2
-                vals = []
-                for oy in range(oh):
-                    for ox in range(ow):
-                        for c in range(3):
-                            x1 = min(2 * ox + 1, w - 1)
-                            y1 = min(2 * oy + 1, h - 1)
-                            total = cnt = 0
-                            for yy in range(2 * oy, y1 + 1):
-                                for xx in range(2 * ox, x1 + 1):
-                                    total += px[3 * (yy * w + xx) + c]
-                                    cnt += 1
-                            vals.append(total // cnt)
-                acc = 0
-                for b in vals:
-                    acc = (acc * 31 + b) % _M11_MOD
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["out_w"].append(ow)
-                out["out_h"].append(oh)
-                out["out_sum"].append(sum(vals))
-                out["out_hash"].append(acc)
-            yield pd.DataFrame(out)
+    def downsample(doc_id, text):
+        digest = hashlib.md5(text.encode("utf-8")).digest()
+        w, h = 8 + digest[1] % 8, 8 + digest[2] % 8
+        pixels = bytes(digest[i % 16] for i in range(w * h * 3))
+        px = bmp_pixels(build_bmp(w, h, pixels))  # real parse
+        ow, oh = (w + 1) // 2, (h + 1) // 2
+        vals = []
+        for oy in range(oh):
+            for ox in range(ow):
+                for c in range(3):
+                    x1 = min(2 * ox + 1, w - 1)
+                    y1 = min(2 * oy + 1, h - 1)
+                    total = cnt = 0
+                    for yy in range(2 * oy, y1 + 1):
+                        for xx in range(2 * ox, x1 + 1):
+                            total += px[3 * (yy * w + xx) + c]
+                            cnt += 1
+                    vals.append(total // cnt)
+        acc = 0
+        for b in vals:
+            acc = (acc * 31 + b) % _M11_MOD
+        yield doc_id, w, h, ow, oh, sum(vals), acc
 
-    return docs.mapInPandas(downsample, schema=_DOWNSAMPLE_SCHEMA)
+    return row_map(docs, downsample, _DOWNSAMPLE_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -2701,30 +2527,16 @@ _CHANNEL_SCHEMA = (
 def m12_bmp_channel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def synth_channel_stats(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "channel": [], "n_bytes": [], "ch_sum": [],
-                "ch_min": [], "ch_max": [],
-            }
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                digest = hashlib.md5(text.encode("utf-8")).digest()
-                w, h = 1 + digest[1] % 4, 1 + digest[2] % 4
-                pixels = bytes(digest[i % 16] for i in range(w * h * 3))
-                decoded = bmp_pixels(build_bmp(w, h, pixels))  # real roundtrip
-                for c in range(3):
-                    ch = decoded[c::3]
-                    out["doc_id"].append(doc_id)
-                    out["channel"].append(c)
-                    out["n_bytes"].append(len(ch))
-                    out["ch_sum"].append(sum(ch))
-                    out["ch_min"].append(min(ch))
-                    out["ch_max"].append(max(ch))
-            yield pd.DataFrame(out)
+    def synth_channel_stats(doc_id, text):
+        digest = hashlib.md5(text.encode("utf-8")).digest()
+        w, h = 1 + digest[1] % 4, 1 + digest[2] % 4
+        pixels = bytes(digest[i % 16] for i in range(w * h * 3))
+        decoded = bmp_pixels(build_bmp(w, h, pixels))  # real roundtrip
+        for c in range(3):
+            ch = decoded[c::3]
+            yield doc_id, c, len(ch), sum(ch), min(ch), max(ch)
 
-    return docs.mapInPandas(synth_channel_stats, schema=_CHANNEL_SCHEMA)
+    return row_map(docs, synth_channel_stats, _CHANNEL_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -2803,42 +2615,34 @@ def _m13_oracle() -> str:
 def m13_silence_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def silence_runs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "n_frames": [], "n_silent": [], "n_runs": [],
-                "longest_run": [],
-            }
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                digest = hashlib.md5(text.encode("utf-8")).digest()
-                n = 32 + digest[3] % 3 * 16
-                synth = [(digest[k % 16] - 128) * 256 for k in range(n)]
-                samples = wav_samples(build_wav(synth, _WAV_RATE))  # real parse
-                nf = len(samples) // AUDIO_FRAME
-                silent = [
-                    sum(
-                        s * s
-                        for s in samples[f * AUDIO_FRAME : (f + 1) * AUDIO_FRAME]
-                    )
-                    < M13_SILENCE_ENERGY
-                    for f in range(nf)
-                ]
-                runs = []
+    def silence_runs(doc_id, text):
+        digest = hashlib.md5(text.encode("utf-8")).digest()
+        n = 32 + digest[3] % 3 * 16
+        synth = [(digest[k % 16] - 128) * 256 for k in range(n)]
+        samples = wav_samples(build_wav(synth, _WAV_RATE))  # real parse
+        nf = len(samples) // AUDIO_FRAME
+        silent = [
+            sum(
+                s * s
+                for s in samples[f * AUDIO_FRAME : (f + 1) * AUDIO_FRAME]
+            )
+            < M13_SILENCE_ENERGY
+            for f in range(nf)
+        ]
+        runs = []
+        cur = 0
+        for flag in silent + [False]:
+            if flag:
+                cur += 1
+            elif cur:
+                runs.append(cur)
                 cur = 0
-                for flag in silent + [False]:
-                    if flag:
-                        cur += 1
-                    elif cur:
-                        runs.append(cur)
-                        cur = 0
-                out["doc_id"].append(doc_id)
-                out["n_frames"].append(nf)
-                out["n_silent"].append(sum(silent))
-                out["n_runs"].append(len(runs))
-                out["longest_run"].append(max(runs) if runs else 0)
-            yield pd.DataFrame(out)
+        yield (
+            doc_id, nf, sum(silent), len(runs),
+            max(runs) if runs else 0,
+        )
 
-    return docs.mapInPandas(silence_runs, schema=_SILENCE_SCHEMA)
+    return row_map(docs, silence_runs, _SILENCE_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -2904,40 +2708,29 @@ _ROUTER_SCHEMA = (
 def m14_modality_router(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def route_decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "kind": [], "n_units": [], "content_sum": [],
-                "feat_mean": [],
-            }
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                digest = hashlib.md5(text.encode("utf-8")).digest()
-                if doc_id % 2 == 0:
-                    w, h = 1 + digest[1] % 4, 1 + digest[2] % 4
-                    payload = build_bmp(
-                        w, h, bytes(digest[i % 16] for i in range(w * h * 3))
-                    )
-                else:
-                    n = 32 + digest[3] % 3 * 16
-                    payload = build_wav(
-                        [(digest[k % 16] - 128) * 256 for k in range(n)],
-                        _WAV_RATE,
-                    )
-                info = decode_media(payload)  # magic-byte routed
-                if info["kind"] == "bmp":
-                    units = info["width"] * info["height"] * 3
-                    csum = info["pixel_sum"]
-                else:
-                    units = info["n_frames"]
-                    csum = info["abs_sum"]
-                out["doc_id"].append(doc_id)
-                out["kind"].append(info["kind"])
-                out["n_units"].append(units)
-                out["content_sum"].append(csum)
-                out["feat_mean"].append(info["feat_mean"])
-            yield pd.DataFrame(out)
+    def route_decode(doc_id, text):
+        digest = hashlib.md5(text.encode("utf-8")).digest()
+        if doc_id % 2 == 0:
+            w, h = 1 + digest[1] % 4, 1 + digest[2] % 4
+            payload = build_bmp(
+                w, h, bytes(digest[i % 16] for i in range(w * h * 3))
+            )
+        else:
+            n = 32 + digest[3] % 3 * 16
+            payload = build_wav(
+                [(digest[k % 16] - 128) * 256 for k in range(n)],
+                _WAV_RATE,
+            )
+        info = decode_media(payload)  # magic-byte routed
+        if info["kind"] == "bmp":
+            units = info["width"] * info["height"] * 3
+            csum = info["pixel_sum"]
+        else:
+            units = info["n_frames"]
+            csum = info["abs_sum"]
+        yield doc_id, info["kind"], units, csum, info["feat_mean"]
 
-    return docs.mapInPandas(route_decode, schema=_ROUTER_SCHEMA)
+    return row_map(docs, route_decode, _ROUTER_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -2966,8 +2759,6 @@ def _ramp_rgb(doc_id: int):
     three linear planes (max value 198 — never clamps), so the original
     pixel sum and aHash have closed forms the oracles evaluate in SQL.
     Changing this formula requires changing BOTH oracles in lockstep."""
-    import numpy as np
-
     d1, d2, d3 = doc_id % 64, (doc_id * 7) % 64, (doc_id * 13) % 64
     xs = np.arange(16).reshape(1, 16)
     ys = np.arange(16).reshape(16, 1)
@@ -3006,37 +2797,23 @@ def m15_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
 
-    def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def roundtrip(doc_id):
+        d = int(doc_id)
+        raw = _ramp_rgb(d).tobytes()
+        payload = build_jpeg(16, 16, raw)
+        info = decode_media(payload)  # magic-sniffed real decode
+        a = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
+        b = np.frombuffer(info["pixels"], dtype=np.uint8).astype(
+            np.int64
+        )
+        max_err = int(np.abs(a - b).max())
+        yield (
+            d, info["width"], info["height"],
+            (info["width"] // 8) * (info["height"] // 8), int(a.sum()),
+            info["kind"] == "jpeg" and max_err <= M15_ERR_BOUND,
+        )
 
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "width": [], "height": [], "n_mcus": [],
-                "orig_pixel_sum": [], "recon_ok": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                raw = _ramp_rgb(d).tobytes()
-                payload = build_jpeg(16, 16, raw)
-                info = decode_media(payload)  # magic-sniffed real decode
-                a = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
-                b = np.frombuffer(info["pixels"], dtype=np.uint8).astype(
-                    np.int64
-                )
-                max_err = int(np.abs(a - b).max())
-                out["doc_id"].append(d)
-                out["width"].append(info["width"])
-                out["height"].append(info["height"])
-                out["n_mcus"].append(
-                    (info["width"] // 8) * (info["height"] // 8)
-                )
-                out["orig_pixel_sum"].append(int(a.sum()))
-                out["recon_ok"].append(
-                    info["kind"] == "jpeg" and max_err <= M15_ERR_BOUND
-                )
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(roundtrip, schema=_JPEG_RT_SCHEMA)
+    return row_map(docs, roundtrip, _JPEG_RT_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -3126,24 +2903,16 @@ def m16_jpeg_ahash_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
 
-    def stability(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def stability(doc_id):
+        d = int(doc_id)
+        rgb = _ramp_rgb(d).tobytes()
+        orig = ahash_rgb(16, 16, rgb)
+        decoded = decode_media(build_jpeg(16, 16, rgb))["pixels"]
+        after = ahash_rgb(16, 16, decoded)
+        hamming = bin(orig ^ after).count("1")
+        yield d, orig, hamming <= M16_HAMMING_BOUND
 
-        for pdf in batches:
-            out: dict[str, list] = {"doc_id": [], "ahash": [], "jpeg_stable": []}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                rgb = _ramp_rgb(d).tobytes()
-                orig = ahash_rgb(16, 16, rgb)
-                decoded = decode_media(build_jpeg(16, 16, rgb))["pixels"]
-                after = ahash_rgb(16, 16, decoded)
-                hamming = bin(orig ^ after).count("1")
-                out["doc_id"].append(d)
-                out["ahash"].append(orig)
-                out["jpeg_stable"].append(hamming <= M16_HAMMING_BOUND)
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(stability, schema=_M16_SCHEMA)
+    return row_map(docs, stability, _M16_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -3215,38 +2984,26 @@ _M17_SCHEMA = (
     """,
 )
 def m17_frame_motion_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    payloads = _with_payload(spark, sf_dir)
+    payloads = _with_payload(spark, sf_dir).select("doc_id", "payload")
 
-    def motion(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def motion(doc_id, payload):
+        raw = bytes(payload)
+        n = len(raw)
+        n_frames = -(-n // WINDOW_BYTES)
+        arr = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
+        deltas = []
+        for k in range(n_frames - 1):
+            a = arr[k * WINDOW_BYTES : (k + 1) * WINDOW_BYTES]
+            b = arr[(k + 1) * WINDOW_BYTES : (k + 2) * WINDOW_BYTES]
+            m = min(len(a), len(b))
+            deltas.append(int(np.abs(a[:m] - b[:m]).sum()))
+        yield (
+            doc_id, n_frames, len(deltas), sum(deltas),
+            max(deltas) if deltas else None,
+            deltas.index(max(deltas)) if deltas else None,
+        )
 
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "n_frames": [], "n_deltas": [],
-                "total_motion": [], "max_motion": [], "peak_pair": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                raw = bytes(payload)
-                n = len(raw)
-                n_frames = -(-n // WINDOW_BYTES)
-                arr = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
-                deltas = []
-                for k in range(n_frames - 1):
-                    a = arr[k * WINDOW_BYTES : (k + 1) * WINDOW_BYTES]
-                    b = arr[(k + 1) * WINDOW_BYTES : (k + 2) * WINDOW_BYTES]
-                    m = min(len(a), len(b))
-                    deltas.append(int(np.abs(a[:m] - b[:m]).sum()))
-                out["doc_id"].append(doc_id)
-                out["n_frames"].append(n_frames)
-                out["n_deltas"].append(len(deltas))
-                out["total_motion"].append(sum(deltas))
-                out["max_motion"].append(max(deltas) if deltas else None)
-                out["peak_pair"].append(
-                    deltas.index(max(deltas)) if deltas else None
-                )
-            yield pd.DataFrame(out)
-
-    return payloads.mapInPandas(motion, schema=_M17_SCHEMA)
+    return row_map(payloads, motion, _M17_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -3300,30 +3057,19 @@ M18_TARGET_PEAK = 29490  # ~0.9 full scale (-0.9 dBFS)
 def m18_wav_peak_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def normalize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "n_samples": [], "peak": [],
-                "headroom_milli": [], "gain_milli": [], "normalized_peak": [],
-            }
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                digest = hashlib.md5(text.encode("utf-8")).digest()
-                n = 32 + digest[3] % 3 * 16
-                samples = [(digest[k % 16] - 128) * 256 for k in range(n)]
-                vals = wav_samples(build_wav(samples, _WAV_RATE))  # real parse
-                peak = max((abs(v) for v in vals), default=0)
-                gain = (M18_TARGET_PEAK * 1000) // peak if peak > 0 else None
-                out["doc_id"].append(doc_id)
-                out["n_samples"].append(len(vals))
-                out["peak"].append(peak)
-                out["headroom_milli"].append((1000 * peak) // 32768)
-                out["gain_milli"].append(gain)
-                out["normalized_peak"].append(
-                    (peak * gain) // 1000 if gain is not None else None
-                )
-            yield pd.DataFrame(out)
+    def normalize(doc_id, text):
+        digest = hashlib.md5(text.encode("utf-8")).digest()
+        n = 32 + digest[3] % 3 * 16
+        samples = [(digest[k % 16] - 128) * 256 for k in range(n)]
+        vals = wav_samples(build_wav(samples, _WAV_RATE))  # real parse
+        peak = max((abs(v) for v in vals), default=0)
+        gain = (M18_TARGET_PEAK * 1000) // peak if peak > 0 else None
+        yield (
+            doc_id, len(vals), peak, (1000 * peak) // 32768, gain,
+            (peak * gain) // 1000 if gain is not None else None,
+        )
 
-    return docs.mapInPandas(normalize, schema=_M18_SCHEMA)
+    return row_map(docs, normalize, _M18_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -3398,35 +3144,27 @@ def _m19_oracle() -> str:
 def m19_clipping_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def clipping_runs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "n_samples": [], "n_clipped": [],
-                "clipped_milli": [], "n_runs": [], "longest_run": [],
-            }
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                digest = hashlib.md5(text.encode("utf-8")).digest()
-                n = 32 + digest[3] % 3 * 16
-                synth = [(digest[k % 16] - 128) * 256 for k in range(n)]
-                samples = wav_samples(build_wav(synth, _WAV_RATE))  # real parse
-                clipped = [abs(s) >= M19_CLIP_ABS for s in samples]
-                runs = []
+    def clipping_runs(doc_id, text):
+        digest = hashlib.md5(text.encode("utf-8")).digest()
+        n = 32 + digest[3] % 3 * 16
+        synth = [(digest[k % 16] - 128) * 256 for k in range(n)]
+        samples = wav_samples(build_wav(synth, _WAV_RATE))  # real parse
+        clipped = [abs(s) >= M19_CLIP_ABS for s in samples]
+        runs = []
+        cur = 0
+        for flag in clipped + [False]:
+            if flag:
+                cur += 1
+            elif cur:
+                runs.append(cur)
                 cur = 0
-                for flag in clipped + [False]:
-                    if flag:
-                        cur += 1
-                    elif cur:
-                        runs.append(cur)
-                        cur = 0
-                out["doc_id"].append(doc_id)
-                out["n_samples"].append(len(samples))
-                out["n_clipped"].append(sum(clipped))
-                out["clipped_milli"].append(1000 * sum(clipped) // len(samples))
-                out["n_runs"].append(len(runs))
-                out["longest_run"].append(max(runs) if runs else 0)
-            yield pd.DataFrame(out)
+        yield (
+            doc_id, len(samples), sum(clipped),
+            1000 * sum(clipped) // len(samples), len(runs),
+            max(runs) if runs else 0,
+        )
 
-    return docs.mapInPandas(clipping_runs, schema=_M19_SCHEMA)
+    return row_map(docs, clipping_runs, _M19_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -3511,21 +3249,16 @@ def _m20_oracle() -> str:
 def _m20_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def hash_images(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {"doc_id": [], "ahash": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                digest = hashlib.md5(text.encode("utf-8")).digest()
-                w, h = 8 + digest[1] % 8, 8 + digest[2] % 8
-                pixels = bytes(digest[i % 16] for i in range(w * h * 3))
-                # real parse; 8×8 grid → 64-bit signed hash
-                _, _, ah = ahash_bmp(build_bmp(w, h, pixels), _M20_GRID)
-                out["doc_id"].append(doc_id)
-                out["ahash"].append(ah)
-            yield pd.DataFrame(out)
+    def hash_images(doc_id, text):
+        digest = hashlib.md5(text.encode("utf-8")).digest()
+        w, h = 8 + digest[1] % 8, 8 + digest[2] % 8
+        pixels = bytes(digest[i % 16] for i in range(w * h * 3))
+        # real parse; 8×8 grid → 64-bit signed hash
+        _, _, ah = ahash_bmp(build_bmp(w, h, pixels), _M20_GRID)
+        yield doc_id, ah
 
-    return docs.mapInPandas(
-        hash_images, schema="doc_id long, ahash long"
+    return row_map(
+        docs, hash_images, "doc_id long, ahash long"
     ).localCheckpoint()  # decode once; blocking + verify read it twice
 
 
@@ -3634,35 +3367,26 @@ def _m21_oracle() -> str:
 def m21_image_flatness(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def flatness(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "n_pixels": [], "n_buckets": [],
-                "modal_milli": [], "conc_ppm": [], "is_flat": [],
-            }
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                digest = hashlib.md5(text.encode("utf-8")).digest()
-                w, h = 8 + digest[1] % 8, 8 + digest[2] % 8
-                pixels = bytes(digest[i % 16] for i in range(w * h * 3))
-                bmp = build_bmp(w, h, pixels)
-                info = decode_bmp(bmp)  # real round-trip
-                px = bmp_pixels(bmp)
-                hist: dict[int, int] = {}
-                for p in range(info["width"] * info["height"]):
-                    gray = (px[3 * p] + px[3 * p + 1] + px[3 * p + 2]) // 3
-                    hist[gray // 32] = hist.get(gray // 32, 0) + 1
-                n = sum(hist.values())
-                sq = sum(c * c for c in hist.values())
-                conc = 1_000_000 * sq // (n * n)
-                out["doc_id"].append(doc_id)
-                out["n_pixels"].append(n)
-                out["n_buckets"].append(len(hist))
-                out["modal_milli"].append(1000 * max(hist.values()) // n)
-                out["conc_ppm"].append(conc)
-                out["is_flat"].append(int(conc >= M21_FLAT_PPM))
-            yield pd.DataFrame(out)
+    def flatness(doc_id, text):
+        digest = hashlib.md5(text.encode("utf-8")).digest()
+        w, h = 8 + digest[1] % 8, 8 + digest[2] % 8
+        pixels = bytes(digest[i % 16] for i in range(w * h * 3))
+        bmp = build_bmp(w, h, pixels)
+        info = decode_bmp(bmp)  # real round-trip
+        px = bmp_pixels(bmp)
+        hist: dict[int, int] = {}
+        for p in range(info["width"] * info["height"]):
+            gray = (px[3 * p] + px[3 * p + 1] + px[3 * p + 2]) // 3
+            hist[gray // 32] = hist.get(gray // 32, 0) + 1
+        n = sum(hist.values())
+        sq = sum(c * c for c in hist.values())
+        conc = 1_000_000 * sq // (n * n)
+        yield (
+            doc_id, n, len(hist), 1000 * max(hist.values()) // n, conc,
+            int(conc >= M21_FLAT_PPM),
+        )
 
-    return docs.mapInPandas(flatness, schema=_M21_SCHEMA)
+    return row_map(docs, flatness, _M21_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -3715,34 +3439,21 @@ def m22_png_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
 
-    def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def roundtrip(doc_id):
+        d = int(doc_id)
+        raw = _ramp_rgb(d).tobytes()
+        payload = build_png(16, 16, raw)
+        info = decode_media(payload)  # magic-sniffed real decode
+        b = np.frombuffer(info["pixels"], dtype=np.uint8).astype(
+            np.int64
+        )
+        yield (
+            d, info["width"], info["height"], int(b.sum()),
+            len(set(info["filters"])),
+            info["kind"] == "png" and len(payload) < len(raw),
+        )
 
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "width": [], "height": [],
-                "decoded_pixel_sum": [], "n_filter_kinds": [],
-                "compressed_smaller": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                raw = _ramp_rgb(d).tobytes()
-                payload = build_png(16, 16, raw)
-                info = decode_media(payload)  # magic-sniffed real decode
-                b = np.frombuffer(info["pixels"], dtype=np.uint8).astype(
-                    np.int64
-                )
-                out["doc_id"].append(d)
-                out["width"].append(info["width"])
-                out["height"].append(info["height"])
-                out["decoded_pixel_sum"].append(int(b.sum()))
-                out["n_filter_kinds"].append(len(set(info["filters"])))
-                out["compressed_smaller"].append(
-                    info["kind"] == "png" and len(payload) < len(raw)
-                )
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(roundtrip, schema=_M22_SCHEMA)
+    return row_map(docs, roundtrip, _M22_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -3793,63 +3504,51 @@ def m23_cross_codec_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
 
-    def audit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def audit(doc_id):
+        d = int(doc_id)
+        rgb = _ramp_rgb(d)
+        raw = rgb.tobytes()
+        # build_bmp/bmp_pixels round-trip the buffer in caller
+        # order (orientation is the caller's concern, the
+        # m06/m09 convention), and gray = (c0+c1+c2)//3 is
+        # channel-order-agnostic — so the same raw buffer feeds
+        # all three codecs directly
+        infos = {
+            "bmp": decode_media(build_bmp(16, 16, raw)),
+            "png": decode_media(build_png(16, 16, raw)),
+            "jpeg": decode_media(build_jpeg(16, 16, raw)),
+        }
+        dims_ok = all(
+            (i["width"], i["height"]) == (16, 16)
+            for i in infos.values()
+        )
+        h = {
+            k: ahash_rgb(16, 16, bmp_pixels(build_bmp(16, 16, raw)))
+            if k == "bmp"
+            else ahash_rgb(16, 16, infos[k]["pixels"])
+            for k in infos
+        }
+        sums = {
+            "bmp": int(
+                np.frombuffer(
+                    bmp_pixels(build_bmp(16, 16, raw)), dtype=np.uint8
+                ).astype(np.int64).sum()
+            ),
+            "png": int(
+                np.frombuffer(
+                    infos["png"]["pixels"], dtype=np.uint8
+                ).astype(np.int64).sum()
+            ),
+        }
+        jham = bin((h["png"] ^ h["jpeg"]) & 0xFFFF).count("1")
+        yield (
+            d, infos["png"]["width"] if dims_ok else -1,
+            infos["png"]["height"] if dims_ok else -1, sums["png"],
+            h["bmp"] == h["png"], sums["bmp"] == sums["png"], jham,
+            jham <= M16_HAMMING_BOUND,
+        )
 
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in (
-                "doc_id", "width", "height", "pixel_sum",
-                "lossless_hashes_equal", "lossless_sums_equal",
-                "jpeg_hamming", "jpeg_within_bound",
-            )}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                rgb = _ramp_rgb(d)
-                raw = rgb.tobytes()
-                # build_bmp/bmp_pixels round-trip the buffer in caller
-                # order (orientation is the caller's concern, the
-                # m06/m09 convention), and gray = (c0+c1+c2)//3 is
-                # channel-order-agnostic — so the same raw buffer feeds
-                # all three codecs directly
-                infos = {
-                    "bmp": decode_media(build_bmp(16, 16, raw)),
-                    "png": decode_media(build_png(16, 16, raw)),
-                    "jpeg": decode_media(build_jpeg(16, 16, raw)),
-                }
-                dims_ok = all(
-                    (i["width"], i["height"]) == (16, 16)
-                    for i in infos.values()
-                )
-                h = {
-                    k: ahash_rgb(16, 16, bmp_pixels(build_bmp(16, 16, raw)))
-                    if k == "bmp"
-                    else ahash_rgb(16, 16, infos[k]["pixels"])
-                    for k in infos
-                }
-                sums = {
-                    "bmp": int(
-                        np.frombuffer(
-                            bmp_pixels(build_bmp(16, 16, raw)), dtype=np.uint8
-                        ).astype(np.int64).sum()
-                    ),
-                    "png": int(
-                        np.frombuffer(
-                            infos["png"]["pixels"], dtype=np.uint8
-                        ).astype(np.int64).sum()
-                    ),
-                }
-                jham = bin((h["png"] ^ h["jpeg"]) & 0xFFFF).count("1")
-                out["doc_id"].append(d)
-                out["width"].append(infos["png"]["width"] if dims_ok else -1)
-                out["height"].append(infos["png"]["height"] if dims_ok else -1)
-                out["pixel_sum"].append(sums["png"])
-                out["lossless_hashes_equal"].append(h["bmp"] == h["png"])
-                out["lossless_sums_equal"].append(sums["bmp"] == sums["png"])
-                out["jpeg_hamming"].append(jham)
-                out["jpeg_within_bound"].append(jham <= M16_HAMMING_BOUND)
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(audit, schema=_M23_SCHEMA)
+    return row_map(docs, audit, _M23_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -3929,37 +3628,26 @@ def m24_ahash_invariance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
 
-    def audit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def audit(doc_id):
+        d = int(doc_id)
+        rgb = _ramp_rgb(d)  # uint8, max 198
+        base = ahash_rgb(16, 16, rgb.tobytes())
+        bright = ahash_rgb(
+            16, 16, (rgb.astype(np.int64) + 40).astype(np.uint8)
+            .tobytes()
+        )
+        permuted = ahash_rgb(16, 16, rgb[:, :, ::-1].tobytes())
+        flipped = ahash_rgb(16, 16, rgb[::-1, :, :].tobytes())
+        pred = 0
+        for cj in range(4):
+            for ci in range(4):
+                if base >> (4 * cj + ci) & 1:
+                    pred |= 1 << (4 * (3 - cj) + ci)
+        yield (
+            d, base, bright == base, permuted == base, flipped == pred,
+        )
 
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in (
-                "doc_id", "ahash", "brightness_invariant",
-                "channel_invariant", "flip_permutes",
-            )}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                rgb = _ramp_rgb(d)  # uint8, max 198
-                base = ahash_rgb(16, 16, rgb.tobytes())
-                bright = ahash_rgb(
-                    16, 16, (rgb.astype(np.int64) + 40).astype(np.uint8)
-                    .tobytes()
-                )
-                permuted = ahash_rgb(16, 16, rgb[:, :, ::-1].tobytes())
-                flipped = ahash_rgb(16, 16, rgb[::-1, :, :].tobytes())
-                pred = 0
-                for cj in range(4):
-                    for ci in range(4):
-                        if base >> (4 * cj + ci) & 1:
-                            pred |= 1 << (4 * (3 - cj) + ci)
-                out["doc_id"].append(d)
-                out["ahash"].append(base)
-                out["brightness_invariant"].append(bright == base)
-                out["channel_invariant"].append(permuted == base)
-                out["flip_permutes"].append(flipped == pred)
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(audit, schema=_M24_SCHEMA)
+    return row_map(docs, audit, _M24_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -4014,35 +3702,21 @@ def m25_gif_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
 
-    def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def roundtrip(doc_id):
+        d = int(doc_id)
+        raw = _ramp_rgb(d).tobytes()
+        payload = build_gif(16, 16, raw)
+        info = decode_media(payload)  # magic-sniffed real decode
+        b = np.frombuffer(info["pixels"], dtype=np.uint8).astype(
+            np.int64
+        )
+        yield (
+            d, info["width"], info["height"], int(b.sum()),
+            info["palette_size"], info["max_code_width"],
+            info["kind"] == "gif" and info["pixels"] == raw,
+        )
 
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "width": [], "height": [],
-                "decoded_pixel_sum": [], "palette_size": [],
-                "max_code_width": [], "lossless": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                raw = _ramp_rgb(d).tobytes()
-                payload = build_gif(16, 16, raw)
-                info = decode_media(payload)  # magic-sniffed real decode
-                b = np.frombuffer(info["pixels"], dtype=np.uint8).astype(
-                    np.int64
-                )
-                out["doc_id"].append(d)
-                out["width"].append(info["width"])
-                out["height"].append(info["height"])
-                out["decoded_pixel_sum"].append(int(b.sum()))
-                out["palette_size"].append(info["palette_size"])
-                out["max_code_width"].append(info["max_code_width"])
-                out["lossless"].append(
-                    info["kind"] == "gif" and info["pixels"] == raw
-                )
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(roundtrip, schema=_M25_SCHEMA)
+    return row_map(docs, roundtrip, _M25_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -4097,38 +3771,24 @@ def m26_gif_frame_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def extract(doc_id):
+        d = int(doc_id)
+        k = 2 + d % 3
+        frames = [_ramp_rgb(d + j).tobytes() for j in range(k)]
+        payload = build_gif_animation(
+            16, 16, frames, [4 + j for j in range(k)]
+        )
+        decoded = decode_gif_frames(payload)  # real container parse
+        for j, f in enumerate(decoded):
+            b = np.frombuffer(f["pixels"], dtype=np.uint8).astype(
+                np.int64
+            )
+            yield (
+                d, j, f["width"], f["height"], int(b.sum()),
+                f["delay_cs"], len(decoded), f["pixels"] == frames[j],
+            )
 
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "frame_idx": [], "width": [], "height": [],
-                "frame_pixel_sum": [], "delay_cs": [], "n_frames": [],
-                "lossless": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                k = 2 + d % 3
-                frames = [_ramp_rgb(d + j).tobytes() for j in range(k)]
-                payload = build_gif_animation(
-                    16, 16, frames, [4 + j for j in range(k)]
-                )
-                decoded = decode_gif_frames(payload)  # real container parse
-                for j, f in enumerate(decoded):
-                    b = np.frombuffer(f["pixels"], dtype=np.uint8).astype(
-                        np.int64
-                    )
-                    out["doc_id"].append(d)
-                    out["frame_idx"].append(j)
-                    out["width"].append(f["width"])
-                    out["height"].append(f["height"])
-                    out["frame_pixel_sum"].append(int(b.sum()))
-                    out["delay_cs"].append(f["delay_cs"])
-                    out["n_frames"].append(len(decoded))
-                    out["lossless"].append(f["pixels"] == frames[j])
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(extract, schema=_M26_SCHEMA)
+    return row_map(docs, extract, _M26_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -4204,104 +3864,106 @@ def build_mp4(
 _MP4_CONTAINERS = {b"moov", b"trak", b"mdia", b"minf", b"stbl"}
 
 
+def _mp4_boxes(payload: bytes, start: int = 0, end: int | None = None):
+    """The one ISO-BMFF box walker: yields (fourcc, body_start, body_end)
+    for every leaf box of payload[start:end], depth first, descending
+    into the ``_MP4_CONTAINERS`` boxes. Reads all three size encodings
+    of ISO/IEC 14496-12 §4.2: the common 32-bit size, ``size == 1`` (an
+    8-byte largesize follows the fourcc — the normal encoding for a
+    >4 GiB mdat, which a large video corpus hits) and ``size == 0``
+    (the box runs to the end of its enclosing range, legal only for
+    the final box). Boxes are located by their headers, never by
+    searching the bytes: mdat holds entropy-coded sample data that can
+    itself contain ``b"mdat"``."""
+    pos, end = start, len(payload) if end is None else end
+    while pos < end:
+        if pos + 8 > end:
+            raise ValueError("truncated MP4 box header")
+        size, btype = struct.unpack_from(">I4s", payload, pos)
+        header = 8
+        if size == 1:
+            if pos + 16 > end:
+                raise ValueError(f"truncated largesize header for {btype!r}")
+            (size,) = struct.unpack_from(">Q", payload, pos + 8)
+            header = 16
+        elif size == 0:
+            size = end - pos
+        if size < header or pos + size > end:
+            raise ValueError(f"bad MP4 box size for {btype!r}")
+        if btype in _MP4_CONTAINERS:
+            yield from _mp4_boxes(payload, pos + header, pos + size)
+        else:
+            yield btype, pos + header, pos + size
+        pos += size
+
+
+def _mp4_table(body: bytes, skip: int, what: str) -> list[int]:
+    """The uint32 entries of an stsz/stss table whose count sits just
+    before them, ``skip`` bytes into the box body."""
+    if len(body) < skip:
+        raise ValueError(f"truncated MP4 {what} header")
+    (n,) = struct.unpack_from(">I", body, skip - 4)
+    if len(body) < skip + 4 * n:
+        raise ValueError(f"{what} table shorter than its count")
+    return list(struct.unpack_from(f">{n}I", body, skip))
+
+
+def _mp4_tables(payload: bytes) -> dict:
+    """One walk of an ISO-BMFF file: brand, movie header, track
+    handler and codec, the stsz sample sizes and stss sync samples
+    (each table parsed once) and the mdat body's (start, end)."""
+    if len(payload) < 12 or payload[4:8] != b"ftyp":
+        raise ValueError("not an ISO-BMFF payload")
+    info: dict = {}
+    for btype, b0, b1 in _mp4_boxes(payload):
+        if btype == b"mdat":
+            info["mdat"] = (b0, b1)
+            continue
+        body = payload[b0:b1]
+        if btype == b"ftyp":
+            info["brand"] = body[:4].decode("ascii", "replace")
+        elif btype == b"mvhd":
+            if len(body) < 20:
+                raise ValueError("truncated MP4 mvhd box")
+            info["timescale"], info["duration"] = struct.unpack(
+                ">II", body[12:20]
+            )
+        elif btype == b"hdlr":
+            info["handler"] = body[8:12].decode("ascii", "replace")
+        elif btype == b"stsd":
+            info["codec"] = body[12:16].decode("ascii", "replace")
+        elif btype == b"stsz":
+            info["sizes"] = _mp4_table(body, 12, "stsz")
+        elif btype == b"stss":
+            info["keyframes"] = _mp4_table(body, 8, "stss")
+    return info
+
+
 def decode_mp4_probe(payload: bytes) -> dict:
     """Parse the ISO-BMFF container for real: box walk, movie header
     (timescale/duration), track handler, sample-size and sync-sample
     tables, mdat payload accounting. Codec FRAME decode (the bytes
     inside mdat) is the documented library boundary and is NOT
     attempted — ``pixels`` is absent from the result by design."""
-    if len(payload) < 12 or payload[4:8] != b"ftyp":
-        raise ValueError("not an ISO-BMFF payload")
-    info: dict = {"kind": "mp4"}
-
-    def walk(start: int, end: int) -> None:
-        pos = start
-        while pos < end:
-            if pos + 8 > end:
-                raise ValueError("truncated MP4 box header")
-            (size,) = struct.unpack(">I", payload[pos : pos + 4])
-            btype = payload[pos + 4 : pos + 8]
-            if size < 8 or pos + size > end:
-                raise ValueError(f"bad MP4 box size for {btype!r}")
-            body = payload[pos + 8 : pos + size]
-            if btype in _MP4_CONTAINERS:
-                walk(pos + 8, pos + size)
-            elif btype == b"ftyp":
-                info["brand"] = body[:4].decode("ascii", "replace")
-            elif btype == b"mvhd":
-                if len(body) < 20:
-                    raise ValueError("truncated MP4 mvhd box")
-                ts, dur = struct.unpack(">II", body[12:20])
-                info["timescale"], info["duration"] = ts, dur
-            elif btype == b"hdlr":
-                info["handler"] = body[8:12].decode("ascii", "replace")
-            elif btype == b"stsd":
-                info["codec"] = body[12:16].decode("ascii", "replace")
-            elif btype == b"stsz":
-                if len(body) < 12:
-                    raise ValueError("truncated MP4 stsz header")
-                _, n = struct.unpack(">II", body[4:12])
-                if len(body) < 12 + 4 * n:
-                    raise ValueError("stsz table shorter than its count")
-                sizes = [
-                    struct.unpack(">I", body[12 + 4 * i : 16 + 4 * i])[0]
-                    for i in range(n)
-                ]
-                info["n_samples"] = n
-                info["sample_bytes"] = sum(sizes)
-            elif btype == b"stss":
-                if len(body) < 8:
-                    raise ValueError("truncated MP4 stss header")
-                (n,) = struct.unpack(">I", body[4:8])
-                if len(body) < 8 + 4 * n:
-                    raise ValueError("stss table shorter than its count")
-                info["keyframes"] = [
-                    struct.unpack(">I", body[8 + 4 * i : 12 + 4 * i])[0]
-                    for i in range(n)
-                ]
-            elif btype == b"mdat":
-                info["mdat_bytes"] = len(body)
-            pos += size
-
-    walk(0, len(payload))
-    if "timescale" not in info or "n_samples" not in info:
+    info = _mp4_tables(payload)
+    if "timescale" not in info or "sizes" not in info:
         raise ValueError("MP4 missing mvhd or stsz")
-    if info.get("mdat_bytes") != info.get("sample_bytes"):
+    sizes = info.pop("sizes")
+    b0, b1 = info.pop("mdat", (0, -1))  # no mdat: a length no table sums to
+    if b1 - b0 != sum(sizes):
         raise ValueError("mdat length != sum of stsz sample sizes")
-    return info
+    return {
+        "kind": "mp4", **info, "n_samples": len(sizes),
+        "sample_bytes": sum(sizes), "mdat_bytes": b1 - b0,
+    }
 
 
 def mp4_mdat_offset(payload: bytes) -> int:
-    """Byte offset of the mdat BODY, found by walking top-level box
-    headers (size + fourcc) exactly as the probe/sample walkers do —
-    never by string-searching the payload: mdat holds concatenated
-    entropy-coded sample data that can itself contain the byte
-    sequence ``b"mdat"``, and a find()/rfind()-based slice base would
-    then land inside a sample and corrupt every frame slice.
-
-    Handles all three ISO-BMFF size encodings (ADVICE r10): the common
-    32-bit size, ``size == 1`` (an 8-byte largesize follows the fourcc
-    — the normal encoding for >4 GiB mdat, exactly the case a 100 TB
-    video corpus hits), and ``size == 0`` (box extends to end of
-    payload, legal only for the final box). The body offset is pos+16
-    for the largesize form."""
-    pos = 0
-    while pos + 8 <= len(payload):
-        (size,) = struct.unpack(">I", payload[pos : pos + 4])
-        btype = payload[pos + 4 : pos + 8]
-        header = 8
-        if size == 1:
-            if pos + 16 > len(payload):
-                raise ValueError(f"truncated largesize header for {btype!r}")
-            (size,) = struct.unpack(">Q", payload[pos + 8 : pos + 16])
-            header = 16
-        elif size == 0:
-            size = len(payload) - pos
-        if size < header or pos + size > len(payload):
-            raise ValueError(f"bad MP4 box size for {btype!r}")
+    """Byte offset of the mdat BODY (past a 16-byte largesize header
+    too), found by the box walker."""
+    for btype, b0, _b1 in _mp4_boxes(payload):
         if btype == b"mdat":
-            return pos + header
-        pos += size
+            return b0
     raise ValueError("MP4 missing mdat box")
 
 
@@ -4314,59 +3976,19 @@ def extract_mp4_samples(payload: bytes) -> list[tuple]:
     (sample_no 1-indexed, offset within mdat, size, is_keyframe,
     byte_sum of the sample's payload). Decoding the sliced bytes AS
     FRAMES remains the documented codec-library boundary."""
-    if len(payload) < 12 or payload[4:8] != b"ftyp":
-        raise ValueError("not an ISO-BMFF payload")
-    sizes: list[int] = []
-    keyframes: set[int] = set()
-    mdat: bytes | None = None
-
-    def walk(start: int, end: int) -> None:
-        nonlocal mdat
-        pos = start
-        while pos < end:
-            if pos + 8 > end:
-                raise ValueError("truncated MP4 box header")
-            (size,) = struct.unpack(">I", payload[pos : pos + 4])
-            btype = payload[pos + 4 : pos + 8]
-            if size < 8 or pos + size > end:
-                raise ValueError(f"bad MP4 box size for {btype!r}")
-            body = payload[pos + 8 : pos + size]
-            if btype in _MP4_CONTAINERS:
-                walk(pos + 8, pos + size)
-            elif btype == b"stsz":
-                if len(body) < 12:
-                    raise ValueError("truncated MP4 stsz header")
-                _, n = struct.unpack(">II", body[4:12])
-                if len(body) < 12 + 4 * n:
-                    raise ValueError("stsz table shorter than its count")
-                sizes.extend(
-                    struct.unpack(">I", body[12 + 4 * i : 16 + 4 * i])[0]
-                    for i in range(n)
-                )
-            elif btype == b"stss":
-                if len(body) < 8:
-                    raise ValueError("truncated MP4 stss header")
-                (n,) = struct.unpack(">I", body[4:8])
-                if len(body) < 8 + 4 * n:
-                    raise ValueError("stss table shorter than its count")
-                keyframes.update(
-                    struct.unpack(">I", body[8 + 4 * i : 12 + 4 * i])[0]
-                    for i in range(n)
-                )
-            elif btype == b"mdat":
-                mdat = body
-            pos += size
-
-    walk(0, len(payload))
-    if mdat is None or not sizes:
+    info = _mp4_tables(payload)
+    sizes = info.get("sizes")
+    if "mdat" not in info or not sizes:
         raise ValueError("MP4 missing mdat or stsz")
-    if len(mdat) != sum(sizes):
+    b0, b1 = info["mdat"]
+    if b1 - b0 != sum(sizes):
         raise ValueError("mdat length != sum of stsz sample sizes")
-    out, off = [], 0
-    for i, s in enumerate(sizes, start=1):
-        chunk = mdat[off : off + s]
-        out.append((i, off, s, i in keyframes, sum(chunk)))
-        off += s
+    keyframes = set(info.get("keyframes", ()))
+    out, off = [], b0
+    for i, size in enumerate(sizes, start=1):
+        chunk = payload[off : off + size]
+        out.append((i, off - b0, size, i in keyframes, sum(chunk)))
+        off += size
     return out
 
 
@@ -4424,39 +4046,24 @@ def m27_mp4_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
 
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "brand": [], "codec": [], "handler": [],
-                "timescale": [], "duration": [], "n_samples": [],
-                "sample_bytes": [], "n_keyframes": [], "last_keyframe": [],
-                "mdat_consistent": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = 5 + d % 8
-                sizes = [100 + (d + 7 * i) % 50 for i in range(n)]
-                keyframes = list(range(1, n + 1, 3))
-                payload = build_mp4(
-                    1000, n * (40 + d % 25), sizes, keyframes
-                )
-                info = decode_media(payload)  # ftyp-sniffed real probe
-                out["doc_id"].append(d)
-                out["brand"].append(info["brand"])
-                out["codec"].append(info["codec"])
-                out["handler"].append(info["handler"])
-                out["timescale"].append(info["timescale"])
-                out["duration"].append(info["duration"])
-                out["n_samples"].append(info["n_samples"])
-                out["sample_bytes"].append(info["sample_bytes"])
-                out["n_keyframes"].append(len(info["keyframes"]))
-                out["last_keyframe"].append(info["keyframes"][-1])
-                out["mdat_consistent"].append(
-                    info["mdat_bytes"] == info["sample_bytes"]
-                )
-            yield pd.DataFrame(out)
+    def probe(doc_id):
+        d = int(doc_id)
+        n = 5 + d % 8
+        sizes = [100 + (d + 7 * i) % 50 for i in range(n)]
+        keyframes = list(range(1, n + 1, 3))
+        payload = build_mp4(
+            1000, n * (40 + d % 25), sizes, keyframes
+        )
+        info = decode_media(payload)  # ftyp-sniffed real probe
+        yield (
+            d, info["brand"], info["codec"], info["handler"],
+            info["timescale"], info["duration"], info["n_samples"],
+            info["sample_bytes"], len(info["keyframes"]),
+            info["keyframes"][-1],
+            info["mdat_bytes"] == info["sample_bytes"],
+        )
 
-    return docs.mapInPandas(probe, schema=_M27_SCHEMA)
+    return row_map(docs, probe, _M27_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -4522,35 +4129,27 @@ def _m28_oracle() -> str:
 def m28_audio_fingerprint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
 
-    def fingerprint(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "fingerprint": [], "n_frames": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                digest = hashlib.md5(str(d % M28_KEYS).encode()).digest()
-                n = 96 + digest[3] % 3 * 48
-                synth = [(digest[k % 16] - 128) * 256 for k in range(n)]
-                samples = wav_samples(build_wav(synth, _WAV_RATE))  # real
-                nf = len(samples) // AUDIO_FRAME
-                energies = [
-                    sum(
-                        s * s
-                        for s in samples[f * AUDIO_FRAME : (f + 1) * AUDIO_FRAME]
-                    )
-                    for f in range(nf)
-                ]
-                fp = 0
-                for f in range(nf - 1):
-                    if energies[f + 1] > energies[f]:
-                        fp |= 1 << f
-                out["doc_id"].append(d)
-                out["fingerprint"].append(fp)
-                out["n_frames"].append(nf)
-            yield pd.DataFrame(out)
+    def fingerprint(doc_id):
+        d = int(doc_id)
+        digest = hashlib.md5(str(d % M28_KEYS).encode()).digest()
+        n = 96 + digest[3] % 3 * 48
+        synth = [(digest[k % 16] - 128) * 256 for k in range(n)]
+        samples = wav_samples(build_wav(synth, _WAV_RATE))  # real
+        nf = len(samples) // AUDIO_FRAME
+        energies = [
+            sum(
+                s * s
+                for s in samples[f * AUDIO_FRAME : (f + 1) * AUDIO_FRAME]
+            )
+            for f in range(nf)
+        ]
+        fp = 0
+        for f in range(nf - 1):
+            if energies[f + 1] > energies[f]:
+                fp |= 1 << f
+        yield d, fp, nf
 
-    fps = docs.mapInPandas(fingerprint, schema=_M28_SCHEMA)
+    fps = row_map(docs, fingerprint, _M28_SCHEMA)
     grp = fps.groupBy("fingerprint").agg(
         F.count("*").alias("group_size"),
         F.min("doc_id").alias("keeper_doc_id"),
@@ -4618,42 +4217,31 @@ def m29_image_patches(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
 
-    def patches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "patch_x": [], "patch_y": [],
-                "sum_r": [], "sum_g": [], "sum_b": [], "patch_bytes": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                rgb = _ramp_rgb(d)
-                # REAL round-trip: encode as BMP (BGR bottom-up) and
-                # decode back before patching — the strides under test
-                bmp = build_bmp(16, 16, rgb[:, :, ::-1].tobytes())
-                info = decode_bmp(bmp)  # validates header/strides
-                assert (info["width"], info["height"]) == (16, 16)
-                px = np.frombuffer(bmp_pixels(bmp), dtype=np.uint8).reshape(
-                    16, 16, 3
+    def patches(doc_id):
+        d = int(doc_id)
+        rgb = _ramp_rgb(d)
+        # REAL round-trip: encode as BMP (BGR bottom-up) and
+        # decode back before patching — the strides under test
+        bmp = build_bmp(16, 16, rgb[:, :, ::-1].tobytes())
+        info = decode_bmp(bmp)  # validates header/strides
+        assert (info["width"], info["height"]) == (16, 16)
+        px = np.frombuffer(bmp_pixels(bmp), dtype=np.uint8).reshape(
+            16, 16, 3
+        )
+        img = px[:, :, ::-1].astype(np.int64)  # BGR -> RGB
+        p = M29_PATCH
+        for py_ in range(16 // p):
+            for px_ in range(16 // p):
+                block = img[
+                    py_ * p : (py_ + 1) * p, px_ * p : (px_ + 1) * p
+                ]
+                yield (
+                    d, px_, py_, int(block[:, :, 0].sum()),
+                    int(block[:, :, 1].sum()),
+                    int(block[:, :, 2].sum()), p * p * 3,
                 )
-                img = px[:, :, ::-1].astype(np.int64)  # BGR -> RGB
-                p = M29_PATCH
-                for py_ in range(16 // p):
-                    for px_ in range(16 // p):
-                        block = img[
-                            py_ * p : (py_ + 1) * p, px_ * p : (px_ + 1) * p
-                        ]
-                        out["doc_id"].append(d)
-                        out["patch_x"].append(px_)
-                        out["patch_y"].append(py_)
-                        out["sum_r"].append(int(block[:, :, 0].sum()))
-                        out["sum_g"].append(int(block[:, :, 1].sum()))
-                        out["sum_b"].append(int(block[:, :, 2].sum()))
-                        out["patch_bytes"].append(p * p * 3)
-            yield pd.DataFrame(out)
 
-    return docs.mapInPandas(patches, schema=_M29_SCHEMA)
+    return row_map(docs, patches, _M29_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -4712,28 +4300,16 @@ def m30_mp4_sample_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "sample_no": [], "offset": [], "nbytes": [],
-                "is_keyframe": [], "byte_sum": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = 5 + d % 8
-                sizes = [100 + (d + 7 * i) % 50 for i in range(n)]
-                keyframes = list(range(1, n + 1, 3))
-                payload = build_mp4(1000, n * (40 + d % 25), sizes, keyframes)
-                for no, off, nb, kf, bs in extract_mp4_samples(payload):
-                    out["doc_id"].append(d)
-                    out["sample_no"].append(no)
-                    out["offset"].append(off)
-                    out["nbytes"].append(nb)
-                    out["is_keyframe"].append(int(kf))
-                    out["byte_sum"].append(bs)
-            yield pd.DataFrame(out)
+    def extract(doc_id):
+        d = int(doc_id)
+        n = 5 + d % 8
+        sizes = [100 + (d + 7 * i) % 50 for i in range(n)]
+        keyframes = list(range(1, n + 1, 3))
+        payload = build_mp4(1000, n * (40 + d % 25), sizes, keyframes)
+        for no, off, nb, kf, bs in extract_mp4_samples(payload):
+            yield d, no, off, nb, int(kf), bs
 
-    return docs.mapInPandas(extract, schema=_M30_SCHEMA)
+    return row_map(docs, extract, _M30_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -4787,32 +4363,19 @@ def m31_progressive_jpeg_consistency(
         .select("doc_id")
     )
 
-    def audit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def audit(doc_id):
+        d = int(doc_id)
+        raw = _ramp_rgb(d).tobytes()
+        base = decode_media(build_jpeg(16, 16, raw))
+        prog = decode_media(build_jpeg_progressive(16, 16, raw))
+        src = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
+        yield (
+            d, prog["width"], prog["height"], prog.get("n_scans", 0),
+            int(src.sum()), prog["pixels"] == base["pixels"],
+            prog["pixel_sum"] - base["pixel_sum"],
+        )
 
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "width": [], "height": [], "n_scans": [],
-                "src_pixel_sum": [], "pixels_equal": [], "sum_delta": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                raw = _ramp_rgb(d).tobytes()
-                base = decode_media(build_jpeg(16, 16, raw))
-                prog = decode_media(build_jpeg_progressive(16, 16, raw))
-                src = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
-                out["doc_id"].append(d)
-                out["width"].append(prog["width"])
-                out["height"].append(prog["height"])
-                out["n_scans"].append(prog.get("n_scans", 0))
-                out["src_pixel_sum"].append(int(src.sum()))
-                out["pixels_equal"].append(prog["pixels"] == base["pixels"])
-                out["sum_delta"].append(
-                    prog["pixel_sum"] - base["pixel_sum"]
-                )
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(audit, schema=_M31_SCHEMA)
+    return row_map(docs, audit, _M31_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -4861,42 +4424,27 @@ def m32_jpeg_420_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
 
-    def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def roundtrip(doc_id):
+        d = int(doc_id)
+        raw = _ramp_rgb(d).tobytes()
+        payload = build_jpeg_420(16, 16, raw)
+        info = decode_media(payload)  # magic-sniffed real decode
+        a = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
+        b = np.frombuffer(info["pixels"], dtype=np.uint8).astype(
+            np.int64
+        )
+        max_err = int(np.abs(a - b).max())
+        yield (
+            d, info["width"], info["height"],
+            (info["width"] // 16) * (info["height"] // 16),
+            int(a.sum()),
+            info["kind"] == "jpeg"
+            and info.get("subsampling") == "4:2:0"
+            and max_err <= M32_ERR_BOUND,
+            len(payload) < len(build_jpeg(16, 16, raw)),
+        )
 
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "width": [], "height": [], "n_mcus": [],
-                "orig_pixel_sum": [], "recon_ok": [], "smaller_than_444": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                raw = _ramp_rgb(d).tobytes()
-                payload = build_jpeg_420(16, 16, raw)
-                info = decode_media(payload)  # magic-sniffed real decode
-                a = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
-                b = np.frombuffer(info["pixels"], dtype=np.uint8).astype(
-                    np.int64
-                )
-                max_err = int(np.abs(a - b).max())
-                out["doc_id"].append(d)
-                out["width"].append(info["width"])
-                out["height"].append(info["height"])
-                out["n_mcus"].append(
-                    (info["width"] // 16) * (info["height"] // 16)
-                )
-                out["orig_pixel_sum"].append(int(a.sum()))
-                out["recon_ok"].append(
-                    info["kind"] == "jpeg"
-                    and info.get("subsampling") == "4:2:0"
-                    and max_err <= M32_ERR_BOUND
-                )
-                out["smaller_than_444"].append(
-                    len(payload) < len(build_jpeg(16, 16, raw))
-                )
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(roundtrip, schema=_M32_SCHEMA)
+    return row_map(docs, roundtrip, _M32_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -4988,58 +4536,40 @@ _M33_SCHEMA = (
     """,
 )
 def m33_keyframe_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
     docs = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % M27_SAMPLE_MOD == 6)
         .select("doc_id")
     )
 
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def score(doc_id):
+        d = int(doc_id)
+        n = 5 + d % 8
+        sizes = [100 + (d + 7 * i) % 50 for i in range(n)]
+        keyframes = list(range(1, n + 1, 3))
+        payload = build_mp4(1000, n * (40 + d % 25), sizes, keyframes)
+        samples = extract_mp4_samples(payload)
+        # the ACTUAL mdat bytes (box body follows the 'mdat'
+        # fourcc), as int64 for the vectorized deltas — motion
+        # is measured on real sliced payloads, not the formula
+        total = sum(s[2] for s in samples)
+        mstart = mp4_mdat_offset(payload)
+        mdat = np.frombuffer(
+            payload[mstart : mstart + total], dtype=np.uint8
+        ).astype(np.int64)
+        prev_off = prev_nb = None
+        for no, off, nb, kf, _bs in samples:
+            if prev_off is None:
+                motion = None
+            else:
+                mlen = min(prev_nb, nb)
+                a = mdat[off : off + mlen]
+                b = mdat[prev_off : prev_off + mlen]
+                motion = int(np.abs(a - b).sum())
+            yield d, no, (no - 1) // 3, int(kf), motion
+            prev_off, prev_nb = off, nb
 
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "sample_no": [], "gop_no": [], "is_sync": [],
-                "motion": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = 5 + d % 8
-                sizes = [100 + (d + 7 * i) % 50 for i in range(n)]
-                keyframes = list(range(1, n + 1, 3))
-                payload = build_mp4(1000, n * (40 + d % 25), sizes, keyframes)
-                samples = extract_mp4_samples(payload)
-                # the ACTUAL mdat bytes (box body follows the 'mdat'
-                # fourcc), as int64 for the vectorized deltas — motion
-                # is measured on real sliced payloads, not the formula
-                total = sum(s[2] for s in samples)
-                mstart = mp4_mdat_offset(payload)
-                mdat = np.frombuffer(
-                    payload[mstart : mstart + total], dtype=np.uint8
-                ).astype(np.int64)
-                prev_off = prev_nb = None
-                for no, off, nb, kf, _bs in samples:
-                    if prev_off is None:
-                        motion = None
-                    else:
-                        mlen = min(prev_nb, nb)
-                        a = mdat[off : off + mlen]
-                        b = mdat[prev_off : prev_off + mlen]
-                        motion = int(np.abs(a - b).sum())
-                    out["doc_id"].append(d)
-                    out["sample_no"].append(no)
-                    out["gop_no"].append((no - 1) // 3)
-                    out["is_sync"].append(int(kf))
-                    out["motion"].append(motion)
-                    prev_off, prev_nb = off, nb
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "sample_no", "gop_no", "is_sync", "motion"],
-            )
-
-    samples = docs.mapInPandas(score, schema=_M33_SCHEMA)
+    samples = row_map(docs, score, _M33_SCHEMA)
     # per-GOP peak-motion argmax: NULL motion sorts last, ties break to
     # the smallest sample number — declarative over the tiny sample
     # table, never over the payloads
@@ -5318,47 +4848,35 @@ def m34_exif_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
 
-    def audit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "byte_order": [], "n_entries": [],
-                "orientation": [], "needs_rotation": [], "make": [],
-                "res_num": [], "res_den": [], "capture_year": [],
-                "pixels_intact": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                raw = _ramp_rgb(d).tobytes()
-                year = 2020 + d % 6
-                # Variety source is d // 8: the sample filter keeps only
-                # d % 8 == 0, so d % 8 / d % 2 would pin orientation=1 and
-                # little-endian for EVERY gated row; d // 8 cycles all 8
-                # orientations AND both byte orders across the sample.
-                app1 = build_exif_app1(
-                    orientation=1 + (d // 8) % 8,
-                    make=f"CAM-{d % 5}",
-                    model=f"MODEL-{d % 3}",
-                    datetime_str=f"{year}:01:01 00:00:00",
-                    x_resolution=(72, 1),
-                    big_endian=bool((d // 8) % 2),
-                )
-                payload = build_jpeg_with_exif(16, 16, raw, app1)
-                meta = parse_exif(payload)
-                pix = decode_media(payload)  # APPn-transparent decode
-                plain = decode_media(build_jpeg(16, 16, raw))
-                out["doc_id"].append(d)
-                out["byte_order"].append(meta["byte_order"])
-                out["n_entries"].append(meta["n_entries"])
-                out["orientation"].append(meta["orientation"])
-                out["needs_rotation"].append(meta["orientation"] > 1)
-                out["make"].append(meta["make"])
-                out["res_num"].append(meta["x_resolution"][0])
-                out["res_den"].append(meta["x_resolution"][1])
-                out["capture_year"].append(int(meta["datetime"][:4]))
-                out["pixels_intact"].append(pix["pixels"] == plain["pixels"])
-            yield pd.DataFrame(out)
+    def audit(doc_id):
+        d = int(doc_id)
+        raw = _ramp_rgb(d).tobytes()
+        year = 2020 + d % 6
+        # Variety source is d // 8: the sample filter keeps only
+        # d % 8 == 0, so d % 8 / d % 2 would pin orientation=1 and
+        # little-endian for EVERY gated row; d // 8 cycles all 8
+        # orientations AND both byte orders across the sample.
+        app1 = build_exif_app1(
+            orientation=1 + (d // 8) % 8,
+            make=f"CAM-{d % 5}",
+            model=f"MODEL-{d % 3}",
+            datetime_str=f"{year}:01:01 00:00:00",
+            x_resolution=(72, 1),
+            big_endian=bool((d // 8) % 2),
+        )
+        payload = build_jpeg_with_exif(16, 16, raw, app1)
+        meta = parse_exif(payload)
+        pix = decode_media(payload)  # APPn-transparent decode
+        plain = decode_media(build_jpeg(16, 16, raw))
+        yield (
+            d, meta["byte_order"], meta["n_entries"],
+            meta["orientation"], meta["orientation"] > 1, meta["make"],
+            meta["x_resolution"][0], meta["x_resolution"][1],
+            int(meta["datetime"][:4]),
+            pix["pixels"] == plain["pixels"],
+        )
 
-    return docs.mapInPandas(audit, schema=_M34_SCHEMA)
+    return row_map(docs, audit, _M34_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -5441,36 +4959,24 @@ _M35_SCHEMA = "doc_id long, frame_no long, incoming long"
     """,
 )
 def m35_scene_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
+    payloads = _with_payload(spark, sf_dir).select("doc_id", "payload")
 
-    payloads = _with_payload(spark, sf_dir)
+    def frame_deltas(doc_id, payload):
+        raw = bytes(payload)
+        n = len(raw)
+        n_frames = -(-n // WINDOW_BYTES)
+        arr = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
+        for j in range(n_frames):
+            if j == 0:
+                inc = None
+            else:
+                a = arr[(j - 1) * WINDOW_BYTES : j * WINDOW_BYTES]
+                b = arr[j * WINDOW_BYTES : (j + 1) * WINDOW_BYTES]
+                m = min(len(a), len(b))
+                inc = int(np.abs(a[:m] - b[:m]).sum())
+            yield doc_id, j, inc
 
-    def frame_deltas(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out: dict[str, list] = {"doc_id": [], "frame_no": [], "incoming": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                raw = bytes(payload)
-                n = len(raw)
-                n_frames = -(-n // WINDOW_BYTES)
-                arr = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
-                for j in range(n_frames):
-                    if j == 0:
-                        inc = None
-                    else:
-                        a = arr[(j - 1) * WINDOW_BYTES : j * WINDOW_BYTES]
-                        b = arr[j * WINDOW_BYTES : (j + 1) * WINDOW_BYTES]
-                        m = min(len(a), len(b))
-                        inc = int(np.abs(a[:m] - b[:m]).sum())
-                    out["doc_id"].append(doc_id)
-                    out["frame_no"].append(j)
-                    out["incoming"].append(inc)
-            yield pd.DataFrame(
-                out, columns=["doc_id", "frame_no", "incoming"]
-            )
-
-    frames = payloads.mapInPandas(frame_deltas, schema=_M35_SCHEMA)
+    frames = row_map(payloads, frame_deltas, _M35_SCHEMA)
     boundary = F.when(
         F.col("incoming") > M35_CUT_THRESHOLD, F.lit(1)
     ).otherwise(F.lit(0))
@@ -5525,8 +5031,6 @@ _M36_SCHEMA = (
 def orient_normalize(arr, orientation: int):
     """Apply the stored→display transform for a TIFF orientation tag
     to an (H, W, C) array; returns a new array (display-upright)."""
-    import numpy as np
-
     if orientation == 1:
         return arr.copy()
     if orientation == 2:
@@ -5594,39 +5098,24 @@ def m36_orientation_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
 
-    def normalize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def normalize(doc_id):
+        d = int(doc_id)
+        # d // 8, not d % 8: the sample keeps d % 8 == 0 rows
+        # only, so o must derive from a source that still varies
+        # (cycles all 8 orientations across the gated sample).
+        o = 1 + (d // 8) % 8
+        stored = _ramp_rgb(d)
+        disp = orient_normalize(stored, o)
+        undo = orient_normalize(disp, _ORIENT_INVERSE[o])
+        yield (
+            d, o, disp.shape[1], disp.shape[0],
+            int(disp.astype(np.int64).sum()), int(disp[0, 0, 0]),
+            int(disp[0, 0, 1]), int(disp[0, 0, 2]),
+            int(disp[0, :, 0].astype(np.int64).sum()),
+            bool((undo == stored).all()),
+        )
 
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "orientation": [], "out_width": [],
-                "out_height": [], "pixel_sum": [], "tl_r": [], "tl_g": [],
-                "tl_b": [], "row0_sum_r": [], "undo_ok": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                # d // 8, not d % 8: the sample keeps d % 8 == 0 rows
-                # only, so o must derive from a source that still varies
-                # (cycles all 8 orientations across the gated sample).
-                o = 1 + (d // 8) % 8
-                stored = _ramp_rgb(d)
-                disp = orient_normalize(stored, o)
-                undo = orient_normalize(disp, _ORIENT_INVERSE[o])
-                out["doc_id"].append(d)
-                out["orientation"].append(o)
-                out["out_width"].append(disp.shape[1])
-                out["out_height"].append(disp.shape[0])
-                out["pixel_sum"].append(int(disp.astype(np.int64).sum()))
-                out["tl_r"].append(int(disp[0, 0, 0]))
-                out["tl_g"].append(int(disp[0, 0, 1]))
-                out["tl_b"].append(int(disp[0, 0, 2]))
-                out["row0_sum_r"].append(
-                    int(disp[0, :, 0].astype(np.int64).sum())
-                )
-                out["undo_ok"].append(bool((undo == stored).all()))
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(normalize, schema=_M36_SCHEMA)
+    return row_map(docs, normalize, _M36_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -5676,38 +5165,27 @@ def m37_pitch_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
 
-    def detect(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    n = np.arange(M37_FFT_N)
 
-        n = np.arange(M37_FFT_N)
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "n_samples": [], "sample_rate": [],
-                "synth_bin": [], "detected_bin": [], "freq_milli_hz": [],
-                "is_tonal": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                k = 5 + d % 120
-                tone = np.rint(
-                    12000.0 * np.sin(2.0 * np.pi * k * n / M37_FFT_N)
-                ).astype(int)
-                payload = build_wav([int(v) for v in tone], M37_SR)
-                samples = np.array(wav_samples(payload), dtype=np.float64)
-                spec = np.abs(np.fft.rfft(samples))
-                peak = int(np.argmax(spec[1:]) + 1)  # skip DC
-                top2 = np.sort(spec)[::-1][:2]
-                out["doc_id"].append(d)
-                out["n_samples"].append(len(samples))
-                out["sample_rate"].append(M37_SR)
-                out["synth_bin"].append(k)
-                out["detected_bin"].append(peak)
-                # exact: sr * 1000 / N = 31250 exactly for 16000/512
-                out["freq_milli_hz"].append(peak * (M37_SR * 1000 // M37_FFT_N))
-                out["is_tonal"].append(bool(top2[0] > 2.0 * top2[1]))
-            yield pd.DataFrame(out)
+    def detect(doc_id):
+        d = int(doc_id)
+        k = 5 + d % 120
+        tone = np.rint(
+            12000.0 * np.sin(2.0 * np.pi * k * n / M37_FFT_N)
+        ).astype(int)
+        payload = build_wav([int(v) for v in tone], M37_SR)
+        samples = np.array(wav_samples(payload), dtype=np.float64)
+        spec = np.abs(np.fft.rfft(samples))
+        peak = int(np.argmax(spec[1:]) + 1)  # skip DC
+        top2 = np.sort(spec)[::-1][:2]
+        yield (
+            d, len(samples), M37_SR, k, peak,
+            # exact: sr * 1000 / N = 31250 exactly for 16000/512
+            peak * (M37_SR * 1000 // M37_FFT_N),
+            bool(top2[0] > 2.0 * top2[1]),
+        )
 
-    return docs.mapInPandas(detect, schema=_M37_SCHEMA)
+    return row_map(docs, detect, _M37_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -5755,32 +5233,19 @@ def m38_png_adam7_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
 
-    def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def roundtrip(doc_id):
+        d = int(doc_id)
+        raw = _ramp_rgb(d).tobytes()
+        lace = decode_media(build_png(16, 16, raw, interlace=1))
+        seq = decode_media(build_png(16, 16, raw))
+        src = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
+        yield (
+            d, lace["width"], lace["height"], bool(lace["interlaced"]),
+            len(lace["filters"]), int(src.sum()),
+            lace["pixels"] == seq["pixels"] == raw,
+        )
 
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "width": [], "height": [], "interlaced": [],
-                "n_filter_rows": [], "src_pixel_sum": [], "pixels_equal": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                raw = _ramp_rgb(d).tobytes()
-                lace = decode_media(build_png(16, 16, raw, interlace=1))
-                seq = decode_media(build_png(16, 16, raw))
-                src = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
-                out["doc_id"].append(d)
-                out["width"].append(lace["width"])
-                out["height"].append(lace["height"])
-                out["interlaced"].append(bool(lace["interlaced"]))
-                out["n_filter_rows"].append(len(lace["filters"]))
-                out["src_pixel_sum"].append(int(src.sum()))
-                out["pixels_equal"].append(
-                    lace["pixels"] == seq["pixels"] == raw
-                )
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(roundtrip, schema=_M38_SCHEMA)
+    return row_map(docs, roundtrip, _M38_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -5826,36 +5291,22 @@ def m39_gif_interlaced_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
 
-    def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def roundtrip(doc_id):
+        d = int(doc_id)
+        raw = _ramp_rgb(d).tobytes()
+        seq_payload = build_gif(16, 16, raw)
+        lace_payload = build_gif(16, 16, raw, interlaced=True)
+        lace = decode_media(lace_payload)
+        seq = decode_media(seq_payload)
+        src = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
+        yield (
+            d, lace["width"], lace["height"],
+            bool(decode_gif_frames(lace_payload)[0]["interlaced"]),
+            int(src.sum()), lace["pixels"] == seq["pixels"] == raw,
+            lace_payload != seq_payload,
+        )
 
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "width": [], "height": [], "interlaced": [],
-                "src_pixel_sum": [], "pixels_equal": [], "payload_differs": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                raw = _ramp_rgb(d).tobytes()
-                seq_payload = build_gif(16, 16, raw)
-                lace_payload = build_gif(16, 16, raw, interlaced=True)
-                lace = decode_media(lace_payload)
-                seq = decode_media(seq_payload)
-                src = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
-                out["doc_id"].append(d)
-                out["width"].append(lace["width"])
-                out["height"].append(lace["height"])
-                out["interlaced"].append(
-                    bool(decode_gif_frames(lace_payload)[0]["interlaced"])
-                )
-                out["src_pixel_sum"].append(int(src.sum()))
-                out["pixels_equal"].append(
-                    lace["pixels"] == seq["pixels"] == raw
-                )
-                out["payload_differs"].append(lace_payload != seq_payload)
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(roundtrip, schema=_M39_SCHEMA)
+    return row_map(docs, roundtrip, _M39_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -5915,53 +5366,44 @@ def m40_exif_gps_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def mas(triple, ref, neg_refs):
-            (d, dd), (m, md), (s, sd) = triple
-            if (dd, md, sd) != (1, 1, 1000):
-                raise ValueError("unexpected GPS rational denominators")
-            v = d * 3_600_000 + m * 60_000 + s
-            return -v if ref in neg_refs else v
+    def mas(triple, ref, neg_refs):
+        (d, dd), (m, md), (s, sd) = triple
+        if (dd, md, sd) != (1, 1, 1000):
+            raise ValueError("unexpected GPS rational denominators")
+        v = d * 3_600_000 + m * 60_000 + s
+        return -v if ref in neg_refs else v
 
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "byte_order": [], "n_gps_entries": [],
-                "lat_ref": [], "lon_ref": [], "lat_mas": [], "lon_mas": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                lat = (d % 90, (3 * d) % 60, (7 * d) % 60000)
-                lon = (d % 180, (5 * d) % 60, (11 * d) % 60000)
-                # Variety sources must survive the d % 8 == 0 sample
-                # filter: d // 8 cycles orientation/byte order, d // 16
-                # flips the latitude hemisphere (decorrelated from the
-                # endian cycle so S-hemisphere rows hit BOTH byte orders).
-                lat_ref = "N" if (d // 16) % 2 == 0 else "S"
-                lon_ref = "E" if d % 3 == 0 else "W"
-                app1 = build_exif_app1(
-                    orientation=1 + (d // 8) % 8,
-                    make=f"CAM-{d % 5}",
-                    model=f"MODEL-{d % 3}",
-                    datetime_str=f"{2020 + d % 6}:01:01 00:00:00",
-                    x_resolution=(72, 1),
-                    big_endian=bool((d // 8) % 2),
-                    gps=(lat_ref, lat, lon_ref, lon),
-                )
-                payload = build_jpeg_with_exif(
-                    16, 16, _ramp_rgb(d).tobytes(), app1
-                )
-                meta = parse_exif(payload)
-                g = meta["gps"]
-                out["doc_id"].append(d)
-                out["byte_order"].append(meta["byte_order"])
-                out["n_gps_entries"].append(g["n_gps_entries"])
-                out["lat_ref"].append(g["lat_ref"])
-                out["lon_ref"].append(g["lon_ref"])
-                out["lat_mas"].append(mas(g["lat"], g["lat_ref"], ("S",)))
-                out["lon_mas"].append(mas(g["lon"], g["lon_ref"], ("W",)))
-            yield pd.DataFrame(out)
+    def extract(doc_id):
+        d = int(doc_id)
+        lat = (d % 90, (3 * d) % 60, (7 * d) % 60000)
+        lon = (d % 180, (5 * d) % 60, (11 * d) % 60000)
+        # Variety sources must survive the d % 8 == 0 sample
+        # filter: d // 8 cycles orientation/byte order, d // 16
+        # flips the latitude hemisphere (decorrelated from the
+        # endian cycle so S-hemisphere rows hit BOTH byte orders).
+        lat_ref = "N" if (d // 16) % 2 == 0 else "S"
+        lon_ref = "E" if d % 3 == 0 else "W"
+        app1 = build_exif_app1(
+            orientation=1 + (d // 8) % 8,
+            make=f"CAM-{d % 5}",
+            model=f"MODEL-{d % 3}",
+            datetime_str=f"{2020 + d % 6}:01:01 00:00:00",
+            x_resolution=(72, 1),
+            big_endian=bool((d // 8) % 2),
+            gps=(lat_ref, lat, lon_ref, lon),
+        )
+        payload = build_jpeg_with_exif(
+            16, 16, _ramp_rgb(d).tobytes(), app1
+        )
+        meta = parse_exif(payload)
+        g = meta["gps"]
+        yield (
+            d, meta["byte_order"], g["n_gps_entries"], g["lat_ref"],
+            g["lon_ref"], mas(g["lat"], g["lat_ref"], ("S")),
+            mas(g["lon"], g["lon_ref"], ("W")),
+        )
 
-    return docs.mapInPandas(extract, schema=_M40_SCHEMA)
+    return row_map(docs, extract, _M40_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -6024,78 +5466,54 @@ M41_SCENE_LEN = 3
     """,
 )
 def m41_mjpeg_scene_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
     docs = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % M41_SAMPLE_MOD == 14)
         .select("doc_id")
     )
 
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "frame_idx": [], "scene_no": [],
-                "is_sync": [], "valid_jpeg": [], "slice_intact": [],
-                "motion": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                k = 4 + d % 5
-                # one encode per SCENE, reused by its frames: identical
-                # bytes make within-scene motion exactly zero, which is
-                # what pins the oracle's closed-form cut structure
-                n_scenes = (k + M41_SCENE_LEN - 1) // M41_SCENE_LEN
-                scene_jpegs = [
-                    build_jpeg(16, 16, _ramp_rgb(d + 17 * s).tobytes())
-                    for s in range(n_scenes)
-                ]
-                frames = [
-                    scene_jpegs[j // M41_SCENE_LEN] for j in range(k)
-                ]
-                payload = build_mp4(
-                    1000, k * 40, [len(fb) for fb in frames],
-                    list(range(1, k + 1)),  # MJPEG: all samples sync
-                    fourcc=b"jpeg", samples=frames,
-                )
-                mstart = mp4_mdat_offset(payload)
-                mdat = payload[mstart:]
-                prev = None
-                for no, off, nb, kf, _bs in extract_mp4_samples(payload):
-                    chunk = mdat[off : off + nb]
-                    dec = decode_jpeg(chunk)  # REAL pixels, per sample
-                    pix = np.frombuffer(
-                        dec["pixels"], dtype=np.uint8
-                    ).astype(np.int64)
-                    motion = (
-                        None if prev is None
-                        else int(np.abs(pix - prev).sum())
-                    )
-                    out["doc_id"].append(d)
-                    out["frame_idx"].append(no)
-                    out["scene_no"].append((no - 1) // M41_SCENE_LEN)
-                    out["is_sync"].append(bool(kf))
-                    out["valid_jpeg"].append(
-                        chunk[:2] == b"\xff\xd8" and chunk[-2:] == b"\xff\xd9"
-                    )
-                    out["slice_intact"].append(chunk == frames[no - 1])
-                    out["motion"].append(motion)
-                    prev = pix
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id", "frame_idx", "scene_no", "is_sync",
-                    "valid_jpeg", "slice_intact", "motion",
-                ],
+    def score(doc_id):
+        d = int(doc_id)
+        k = 4 + d % 5
+        # one encode per SCENE, reused by its frames: identical
+        # bytes make within-scene motion exactly zero, which is
+        # what pins the oracle's closed-form cut structure
+        n_scenes = (k + M41_SCENE_LEN - 1) // M41_SCENE_LEN
+        scene_jpegs = [
+            build_jpeg(16, 16, _ramp_rgb(d + 17 * s).tobytes())
+            for s in range(n_scenes)
+        ]
+        frames = [
+            scene_jpegs[j // M41_SCENE_LEN] for j in range(k)
+        ]
+        payload = build_mp4(
+            1000, k * 40, [len(fb) for fb in frames],
+            list(range(1, k + 1)),  # MJPEG: all samples sync
+            fourcc=b"jpeg", samples=frames,
+        )
+        mstart = mp4_mdat_offset(payload)
+        mdat = payload[mstart:]
+        prev = None
+        for no, off, nb, kf, _bs in extract_mp4_samples(payload):
+            chunk = mdat[off : off + nb]
+            dec = decode_jpeg(chunk)  # REAL pixels, per sample
+            pix = np.frombuffer(
+                dec["pixels"], dtype=np.uint8
+            ).astype(np.int64)
+            motion = (
+                None if prev is None
+                else int(np.abs(pix - prev).sum())
             )
+            yield (
+                d, no, (no - 1) // M41_SCENE_LEN, bool(kf),
+                chunk[:2] == b"\xff\xd8" and chunk[-2:] == b"\xff\xd9",
+                chunk == frames[no - 1], motion,
+            )
+            prev = pix
 
-    frames = docs.mapInPandas(
-        score, schema=_M41_SCHEMA.replace(
-            " is_cut boolean, selected boolean", " motion long"
-        ),
-    )
+    frames = row_map(docs, score, _M41_SCHEMA.replace(
+        " is_cut boolean, selected boolean", " motion long"
+    ))
     # scene representative = peak DECODED motion (NULL last, ties to
     # the earliest frame) — m33's declarative argmax over the tiny
     # frame table; the payloads never leave the mapInPandas stage
@@ -6171,54 +5589,38 @@ def m42_audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
 
-    def resample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def resample(doc_id):
+        d = int(doc_id)
+        c = d % 100
+        orig = [c + 3 * i for i in range(M42_N)]
+        # stage 1: the source as real 16 kHz PCM bytes
+        src = np.array(
+            wav_samples(build_wav(orig, M42_SR)), dtype=np.int64
+        )
+        # stage 2: 2:1 decimation, re-encoded as a REAL 8 kHz WAV
+        down_payload = build_wav(
+            [int(v) for v in src[::2]], M42_SR // 2
+        )
+        down_meta = decode_wav(down_payload)
+        down = np.array(wav_samples(down_payload), dtype=np.int64)
+        # stage 3: 1:2 linear-midpoint upsample of the decimated
+        # signal (the exact-integer interpolation kernel),
+        # re-encoded and re-parsed once more
+        mids = (down[:-1] + down[1:]) // 2
+        up = np.empty(2 * len(down) - 1, dtype=np.int64)
+        up[0::2] = down
+        up[1::2] = mids
+        up = np.array(
+            wav_samples(build_wav([int(v) for v in up], M42_SR)),
+            dtype=np.int64,
+        )
+        yield (
+            d, len(src), M42_SR, len(down), down_meta["sample_rate"],
+            int(np.abs(down).sum()), len(up), int(np.abs(up).sum()),
+            bool((up == src[: len(up)]).all()),
+        )
 
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "n_in": [], "rate_in": [], "n_down": [],
-                "rate_down": [], "down_abs_sum": [], "n_up": [],
-                "up_abs_sum": [], "up_reconstructs": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                c = d % 100
-                orig = [c + 3 * i for i in range(M42_N)]
-                # stage 1: the source as real 16 kHz PCM bytes
-                src = np.array(
-                    wav_samples(build_wav(orig, M42_SR)), dtype=np.int64
-                )
-                # stage 2: 2:1 decimation, re-encoded as a REAL 8 kHz WAV
-                down_payload = build_wav(
-                    [int(v) for v in src[::2]], M42_SR // 2
-                )
-                down_meta = decode_wav(down_payload)
-                down = np.array(wav_samples(down_payload), dtype=np.int64)
-                # stage 3: 1:2 linear-midpoint upsample of the decimated
-                # signal (the exact-integer interpolation kernel),
-                # re-encoded and re-parsed once more
-                mids = (down[:-1] + down[1:]) // 2
-                up = np.empty(2 * len(down) - 1, dtype=np.int64)
-                up[0::2] = down
-                up[1::2] = mids
-                up = np.array(
-                    wav_samples(build_wav([int(v) for v in up], M42_SR)),
-                    dtype=np.int64,
-                )
-                out["doc_id"].append(d)
-                out["n_in"].append(len(src))
-                out["rate_in"].append(M42_SR)
-                out["n_down"].append(len(down))
-                out["rate_down"].append(down_meta["sample_rate"])
-                out["down_abs_sum"].append(int(np.abs(down).sum()))
-                out["n_up"].append(len(up))
-                out["up_abs_sum"].append(int(np.abs(up).sum()))
-                out["up_reconstructs"].append(
-                    bool((up == src[: len(up)]).all())
-                )
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(resample, schema=_M42_SCHEMA)
+    return row_map(docs, resample, _M42_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -6272,33 +5674,20 @@ def m43_png_palette_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
 
-    def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "width": [], "height": [], "color_type": [],
-                "palette_size": [], "lossless": [], "interlace_match": [],
-                "seq_filter_rows": [], "adam7_filter_rows": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                rgb = _ramp_rgb(d).tobytes()
-                seq = decode_png(build_png_palette(16, 16, rgb, 0))
-                ada = decode_png(build_png_palette(16, 16, rgb, 1))
-                out["doc_id"].append(d)
-                out["width"].append(seq["width"])
-                out["height"].append(seq["height"])
-                out["color_type"].append(seq["color_type"])
-                out["palette_size"].append(seq["palette_size"])
-                out["lossless"].append(seq["pixels"] == rgb)
-                out["interlace_match"].append(
-                    ada["pixels"] == seq["pixels"]
-                    and ada["palette_size"] == seq["palette_size"]
-                )
-                out["seq_filter_rows"].append(len(seq["filters"]))
-                out["adam7_filter_rows"].append(len(ada["filters"]))
-            yield pd.DataFrame(out)
+    def roundtrip(doc_id):
+        d = int(doc_id)
+        rgb = _ramp_rgb(d).tobytes()
+        seq = decode_png(build_png_palette(16, 16, rgb, 0))
+        ada = decode_png(build_png_palette(16, 16, rgb, 1))
+        yield (
+            d, seq["width"], seq["height"], seq["color_type"],
+            seq["palette_size"], seq["pixels"] == rgb,
+            ada["pixels"] == seq["pixels"]
+            and ada["palette_size"] == seq["palette_size"],
+            len(seq["filters"]), len(ada["filters"]),
+        )
 
-    return docs.mapInPandas(roundtrip, schema=_M43_SCHEMA)
+    return row_map(docs, roundtrip, _M43_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -6352,38 +5741,24 @@ def m44_png_grayscale_roundtrip(
         .select("doc_id")
     )
 
-    def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def roundtrip(doc_id):
+        d = int(doc_id)
+        gray = _ramp_rgb(d)[:, :, 1].copy().tobytes()  # green plane
+        expected = bytes(b for g in gray for b in (g, g, g))
+        seq = decode_png(build_png_gray(16, 16, gray, 0))
+        ada = decode_png(build_png_gray(16, 16, gray, 1))
+        psum = int(
+            np.frombuffer(seq["pixels"], dtype=np.uint8)
+            .astype(np.int64)
+            .sum()
+        )
+        yield (
+            d, seq["width"], seq["height"], seq["color_type"], psum,
+            seq["pixels"] == expected, ada["pixels"] == seq["pixels"],
+            len(seq["filters"]), len(ada["filters"]),
+        )
 
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "width": [], "height": [], "color_type": [],
-                "pixel_sum": [], "lossless": [], "interlace_match": [],
-                "seq_filter_rows": [], "adam7_filter_rows": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                gray = _ramp_rgb(d)[:, :, 1].copy().tobytes()  # green plane
-                expected = bytes(b for g in gray for b in (g, g, g))
-                seq = decode_png(build_png_gray(16, 16, gray, 0))
-                ada = decode_png(build_png_gray(16, 16, gray, 1))
-                psum = int(
-                    np.frombuffer(seq["pixels"], dtype=np.uint8)
-                    .astype(np.int64)
-                    .sum()
-                )
-                out["doc_id"].append(d)
-                out["width"].append(seq["width"])
-                out["height"].append(seq["height"])
-                out["color_type"].append(seq["color_type"])
-                out["pixel_sum"].append(psum)
-                out["lossless"].append(seq["pixels"] == expected)
-                out["interlace_match"].append(ada["pixels"] == seq["pixels"])
-                out["seq_filter_rows"].append(len(seq["filters"]))
-                out["adam7_filter_rows"].append(len(ada["filters"]))
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(roundtrip, schema=_M44_SCHEMA)
+    return row_map(docs, roundtrip, _M44_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -6460,65 +5835,42 @@ M45_FRAME_STEP = 3
     """,
 )
 def m45_raw_video_temporal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
     docs = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % M45_SAMPLE_MOD == 15)
         .select("doc_id")
     )
 
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "frame_idx": [], "is_sync": [],
-                "slice_intact": [], "motion": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                k = 5 + d % 4
-                frames = [
-                    _ramp_rgb(d + 11 * f).tobytes() for f in range(1, k + 1)
-                ]
-                payload = build_mp4(
-                    1000, k * 40, [len(fb) for fb in frames],
-                    list(range(1, k + 1)),  # raw: every frame sync
-                    fourcc=b"v308", samples=frames,
-                )
-                mdat = payload[mp4_mdat_offset(payload):]
-                prev = None
-                for no, off, nb, kf, _bs in extract_mp4_samples(payload):
-                    chunk = mdat[off : off + nb]
-                    # "decode" = reshape; raw pixels are bit-exact
-                    pix = np.frombuffer(chunk, dtype=np.uint8).astype(
-                        np.int64
-                    )
-                    motion = (
-                        None if prev is None
-                        else int(np.abs(pix - prev).sum())
-                    )
-                    out["doc_id"].append(d)
-                    out["frame_idx"].append(no)
-                    out["is_sync"].append(bool(kf))
-                    out["slice_intact"].append(chunk == frames[no - 1])
-                    out["motion"].append(motion)
-                    prev = pix
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id", "frame_idx", "is_sync", "slice_intact",
-                    "motion",
-                ],
+    def score(doc_id):
+        d = int(doc_id)
+        k = 5 + d % 4
+        frames = [
+            _ramp_rgb(d + 11 * f).tobytes() for f in range(1, k + 1)
+        ]
+        payload = build_mp4(
+            1000, k * 40, [len(fb) for fb in frames],
+            list(range(1, k + 1)),  # raw: every frame sync
+            fourcc=b"v308", samples=frames,
+        )
+        mdat = payload[mp4_mdat_offset(payload):]
+        prev = None
+        for no, off, nb, kf, _bs in extract_mp4_samples(payload):
+            chunk = mdat[off : off + nb]
+            # "decode" = reshape; raw pixels are bit-exact
+            pix = np.frombuffer(chunk, dtype=np.uint8).astype(
+                np.int64
             )
+            motion = (
+                None if prev is None
+                else int(np.abs(pix - prev).sum())
+            )
+            yield d, no, bool(kf), chunk == frames[no - 1], motion
+            prev = pix
 
-    frames = docs.mapInPandas(
-        score,
-        schema=(
-            "doc_id long, frame_idx long, is_sync boolean,"
-            " slice_intact boolean, motion long"
-        ),
+    frames = row_map(
+        docs, score,
+        "doc_id long, frame_idx long, is_sync boolean,"
+        " slice_intact boolean, motion long",
     )
     w = Window.partitionBy("doc_id").orderBy(
         F.col("motion").desc_nulls_last(), F.col("frame_idx").asc()

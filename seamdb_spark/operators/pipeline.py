@@ -26,6 +26,7 @@ from .dedup import _cc_clusters, _cc_ctes
 from .materialize import fresh_external_dir, materialized_value, session_tag
 from .registry import register
 from .rounding import dround
+from .rowmap import row_map
 from .text import QUALITY_SQL, quality_frame, t02_quality_score
 
 QUALITY_MIN = 0.10
@@ -1454,9 +1455,7 @@ P13_UPRIGHT_AHASH = 65152
     """,
 )
 def p13_orientation_robust_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
+    import numpy as np
 
     from ..sources import load_table
     from .multimodal import (
@@ -1475,42 +1474,29 @@ def p13_orientation_robust_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
 
-    def audit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def decoded(arr):
+        # the real pipeline step: lossless container round-trip
+        raw = bmp_pixels(build_bmp(16, 16, arr.tobytes()))
+        return np.frombuffer(raw, dtype=np.uint8).reshape(16, 16, 3)
 
-        def decoded(arr):
-            # the real pipeline step: lossless container round-trip
-            raw = bmp_pixels(build_bmp(16, 16, arr.tobytes()))
-            return np.frombuffer(raw, dtype=np.uint8).reshape(16, 16, 3)
+    def audit(doc_id):
+        d = int(doc_id)
+        o = 1 + (d // 8) % 8
+        upright = _ramp_rgb(d)
+        stored = orient_normalize(upright, _ORIENT_INVERSE[o])
+        pix_a = decoded(upright)   # variant A: tag 1
+        pix_b = decoded(stored)    # variant B: tag o
+        naive_a = ahash_rgb(16, 16, pix_a.tobytes())
+        naive_b = ahash_rgb(16, 16, pix_b.tobytes())
+        norm_a = ahash_rgb(
+            16, 16, orient_normalize(pix_a, 1).tobytes()
+        )
+        norm_b = ahash_rgb(
+            16, 16, orient_normalize(pix_b, o).tobytes()
+        )
+        yield d, o, naive_a == naive_b, norm_a == norm_b, norm_b
 
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "orientation": [], "naive_match": [],
-                "normalized_match": [], "norm_hash": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                o = 1 + (d // 8) % 8
-                upright = _ramp_rgb(d)
-                stored = orient_normalize(upright, _ORIENT_INVERSE[o])
-                pix_a = decoded(upright)   # variant A: tag 1
-                pix_b = decoded(stored)    # variant B: tag o
-                naive_a = ahash_rgb(16, 16, pix_a.tobytes())
-                naive_b = ahash_rgb(16, 16, pix_b.tobytes())
-                norm_a = ahash_rgb(
-                    16, 16, orient_normalize(pix_a, 1).tobytes()
-                )
-                norm_b = ahash_rgb(
-                    16, 16, orient_normalize(pix_b, o).tobytes()
-                )
-                out["doc_id"].append(d)
-                out["orientation"].append(o)
-                out["naive_match"].append(naive_a == naive_b)
-                out["normalized_match"].append(norm_a == norm_b)
-                out["norm_hash"].append(norm_b)
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(audit, schema=_P13_SCHEMA)
+    return row_map(docs, audit, _P13_SCHEMA)
 
 
 # --------------------------------------------------------------------------

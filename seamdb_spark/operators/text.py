@@ -17,6 +17,7 @@ from .hashing import md5_prefix_long, md5_prefix_long_sql, word_windows
 from .ranks import global_rank
 from .registry import register
 from .rounding import dround
+from .rowmap import row_map
 
 # Marker-word lists for the n-gram language heuristic. The fixture text
 # is synthetic English-ish vocabulary, so the heuristic's *output* is
@@ -3561,39 +3562,24 @@ _T48_SCHEMA = (
     """,
 )
 def t48_nfc_normalization_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
+    import hashlib
+    import unicodedata
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def normalize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-        import unicodedata
+    def normalize(doc_id, text):
+        k = 1 + int(doc_id) % 4
+        dec_var = text + " " + ("e\u0301" * k)  # decomposed
+        pre_var = text + " " + ("\u00e9" * k)  # precomposed
+        norm_dec = unicodedata.normalize("NFC", dec_var)
+        norm_pre = unicodedata.normalize("NFC", pre_var)
+        yield (
+            doc_id, len(dec_var), len(norm_dec), norm_dec != dec_var,
+            dec_var == pre_var, norm_dec == norm_pre,
+            hashlib.md5(norm_dec.encode("utf-8")).hexdigest(),
+        )
 
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "raw_cp": [], "norm_cp": [], "changed": [],
-                "match_before": [], "match_after": [], "norm_md5": [],
-            }
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                k = 1 + int(doc_id) % 4
-                dec_var = text + " " + ("e\u0301" * k)  # decomposed
-                pre_var = text + " " + ("\u00e9" * k)  # precomposed
-                norm_dec = unicodedata.normalize("NFC", dec_var)
-                norm_pre = unicodedata.normalize("NFC", pre_var)
-                out["doc_id"].append(doc_id)
-                out["raw_cp"].append(len(dec_var))
-                out["norm_cp"].append(len(norm_dec))
-                out["changed"].append(norm_dec != dec_var)
-                out["match_before"].append(dec_var == pre_var)
-                out["match_after"].append(norm_dec == norm_pre)
-                out["norm_md5"].append(
-                    hashlib.md5(norm_dec.encode("utf-8")).hexdigest()
-                )
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(normalize, schema=_T48_SCHEMA)
+    return row_map(docs, normalize, _T48_SCHEMA)
 
 
 # --------------------------------------------------------------------------

@@ -194,7 +194,12 @@ def test_bmp_decode_handcrafted():
     # padding in pixel_sum and honor the data offset field.
     import struct
 
-    from seamdb_spark.operators.multimodal import build_bmp, decode_bmp, decode_media
+    from seamdb_spark.operators.multimodal import (
+        bmp_pixels,
+        build_bmp,
+        decode_bmp,
+        decode_media,
+    )
 
     row0 = bytes([10, 20, 30, 40, 50, 60, 70, 80, 90]) + b"\x00\x00\x00"
     row1 = bytes([1, 2, 3, 4, 5, 6, 7, 8, 9]) + b"\xff\xff\xff"  # junk padding
@@ -213,6 +218,11 @@ def test_bmp_decode_handcrafted():
     assert (rt["width"], rt["height"], rt["pixel_sum"]) == (3, 2, 495)
     with pytest.raises(ValueError):
         decode_bmp(b"BM" + b"\x00" * 60)  # bpp=0: unsupported variant
+    # a 12-byte BITMAPCOREHEADER size: both readers share one header check
+    core = payload[:14] + struct.pack("<I", 12) + payload[18:]
+    for read in (decode_bmp, bmp_pixels):
+        with pytest.raises(ValueError):
+            read(core)
 
 
 def test_wav_decode_handcrafted():
@@ -220,7 +230,12 @@ def test_wav_decode_handcrafted():
     # odd-size chunk (forces even-offset padding in the walker).
     import struct
 
-    from seamdb_spark.operators.multimodal import build_wav, decode_media, decode_wav
+    from seamdb_spark.operators.multimodal import (
+        build_wav,
+        decode_media,
+        decode_wav,
+        wav_samples,
+    )
 
     samples = [0, 1000, -1000, 32767, -32768, 256]
     data = struct.pack("<6h", *samples)
@@ -241,6 +256,14 @@ def test_wav_decode_handcrafted():
     )
     with pytest.raises(ValueError):
         decode_wav(b"RIFF" + struct.pack("<I", 4) + b"WAVE")  # no fmt/data
+    # block_align 0, or any value other than channels * bits / 8, is
+    # rejected by both readers (one fmt check)
+    at = payload.index(b"fmt ") + 8 + 12
+    for align in (0, 4):
+        bad = payload[:at] + struct.pack("<H", align) + payload[at + 2:]
+        for read in (decode_wav, wav_samples):
+            with pytest.raises(ValueError):
+                read(bad)
 
 
 def test_minhash_lsh_finds_planted_neardups(spark, registry):

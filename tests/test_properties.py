@@ -294,11 +294,14 @@ def test_jpeg_decoder_rejects_unsupported_variants():
 
 
 # Per builder: sha256 of its bytes, and of the sorted items of each
-# decode_media() result, over test_jpeg_codec_output_is_pinned's matrix.
-# Recorded from the codec before it was rebuilt around one segment
-# walker and one encoder front end. A codec change must reproduce them;
-# they are not regenerated to make a test pass.
-_JPEG_GOLDEN = {
+# decode_media() result (plus the sample/pixel readers' output for the
+# formats that have one), over test_codec_output_is_pinned's matrix.
+# The JPEG rows were recorded from the codec before it was rebuilt
+# around one segment walker and one encoder front end; the other rows
+# before the PNG encoder front end and the one BMP, RIFF and ISO-BMFF
+# walkers. A codec change must reproduce them; they are not
+# regenerated to make a test pass.
+_CODEC_GOLDEN = {
     "build_jpeg": (
         "26da72ef7e2cb0bd2ed81d03f20926b54e4072b84b6f2c105b0d8d9980359000",
         "97b29bbbf53f5c10e70547094ded541daf115b0df8917bab184836ef14ad6008",
@@ -311,50 +314,120 @@ _JPEG_GOLDEN = {
         "ef861bb59eeac2e222b1e2dffb6a007fd5d9df262eff19bdfb06ae6289970931",
         "1066a43dcd6ee95741c9807db161b5612805db5b86742e9f0c021910db765f0e",
     ),
+    "build_png": (
+        "b92906f2bab60a68f73b155ccbdab7231f50dd74348cab52780cd66480a60d61",
+        "94fe529f4b29dfb1cd473877572192c51a6361eef4353ff0e910a88f3bd00fc9",
+    ),
+    "build_png_palette": (
+        "455071f09f2008a36030e042f6e0727bac588e1e8de78a61531608a9e152f571",
+        "d7d550fb505a57cc147ff8abd3a1af47352018993a4186850577556438f56584",
+    ),
+    "build_png_gray": (
+        "076cb7f9287c0bc7dc7359a5234c2596e13d9cd13d51d4176679be07ec1488a0",
+        "982b41f38b336758aade49bac8a33e5f77164be224965dcfdd29e79327b60f8c",
+    ),
+    "build_bmp": (
+        "c1c19578fa12eadcf0b260f82e0112720709b217c1bbc208a225ed562c7e111c",
+        "5f4768b25023ac43922f55c0f9e73e12f7ff39fbbcb84cdc6b00b6bcd3ba52ac",
+    ),
+    "build_wav": (
+        "093a2762ada23b84b620de12acefb3e1678dc4009013eb773ed6745e49efc0d0",
+        "d86a1780e8af37825e5999362746d34715c040ae405a708068dc07fe78ea3be5",
+    ),
+    "build_mp4": (
+        "ed0d0a37e5fa488ea31414e4563fac9d6c4be112f96bddd1dc89dcb0262b25f2",
+        "751845806043e08894e2c3ca00b13d1b4aff45be3f3dc179818ea2611b76d07d",
+    ),
 }
 
 
-def test_jpeg_codec_output_is_pinned():
-    """Absolute pin of every JPEG builder and of the decoder: for each
-    builder, a ramp and a seeded-noise image at 16x16 and 32x32, each
-    with restart interval 0, 1 and 3, hash to the recorded digests —
-    both the encoded bytes and the full decoded dict (pixels included).
-    The round-trip tests only compare the codec with itself; this one
-    catches a change that shifts encoder and decoder together."""
-    import hashlib
-
+def _pinned_payloads(mm, name):
+    """The builder matrix behind _CODEC_GOLDEN: a ramp and a
+    seeded-noise image (or signal) per size, over each builder's
+    variants."""
     import numpy as np
 
-    from seamdb_spark.operators import multimodal as mm
-
-    def ramp(side):
-        ys, xs = np.mgrid[0:side, 0:side]
+    def ramp(w, h):
+        ys, xs = np.mgrid[0:h, 0:w]
         return np.stack(
             [(6 * xs + 3 * ys) % 256, (4 * xs + 5 * ys) % 256,
              (2 * xs + 7 * ys) % 256],
             axis=2,
         ).astype(np.uint8).tobytes()
 
-    def noise(side):
+    def noise(w, h):
         return np.random.default_rng(8).integers(
-            0, 256, size=side * side * 3, dtype=np.uint8
+            0, 256, size=w * h * 3, dtype=np.uint8
         ).tobytes()
 
-    got = {}
-    for name in _JPEG_GOLDEN:
-        hb, hd = hashlib.sha256(), hashlib.sha256()
+    build = getattr(mm, name)
+    if name.startswith("build_jpeg"):
         for side in (16, 32):
             for image in (ramp, noise):
-                rgb = image(side)
+                rgb = image(side, side)
                 for ri in (0, 1, 3):
-                    payload = getattr(mm, name)(
-                        side, side, rgb, restart_interval=ri
-                    )
-                    hb.update(payload)
-                    out = mm.decode_media(payload)
-                    hd.update(repr(sorted(out.items())).encode())
+                    yield build(side, side, rgb, restart_interval=ri)
+        return
+    if name == "build_wav":
+        for n, channels in ((0, 1), (1, 1), (48, 1), (48, 2), (33, 3)):
+            signal = np.random.default_rng(n).integers(
+                -32768, 32768, size=n * channels
+            )
+            for rate in (8000, 44100):
+                yield build(signal.tolist(), rate, channels)
+        return
+    if name == "build_mp4":
+        for sizes, keys in (([1], [1]), ([10, 20], [1]),
+                            ([5, 9, 300, 2], [1, 3])):
+            yield build(1000, 40 * len(sizes), sizes, keys)
+            frames = [noise(s, 1)[:s] for s in sizes]
+            yield build(
+                600, 90, sizes, list(range(1, len(sizes) + 1)),
+                fourcc=b"jpeg", samples=frames,
+            )
+        return
+    for w, h in ((1, 1), (2, 3), (7, 5), (16, 16), (23, 9)):
+        for image in (ramp, noise):
+            rgb = image(w, h)
+            if name == "build_bmp":
+                yield build(w, h, rgb)
+                continue
+            if name == "build_png_palette":
+                rgb = bytes(v & 0xC0 for v in rgb)  # <= 64 colors
+            elif name == "build_png_gray":
+                rgb = rgb[::3]
+            for interlace in (0, 1):
+                yield build(w, h, rgb, interlace=interlace)
+
+
+def test_codec_output_is_pinned():
+    """Absolute pin of every media builder and decoder: each builder's
+    matrix (_pinned_payloads) hashes to the recorded digests — both the
+    encoded bytes and the full decoded dict (pixels included), plus
+    bmp_pixels / wav_samples / extract_mp4_samples and mp4_mdat_offset
+    for the formats they read. The round-trip tests only compare a
+    codec with itself; this one catches a change that shifts encoder
+    and decoder together."""
+    import hashlib
+
+    from seamdb_spark.operators import multimodal as mm
+
+    readers = {
+        b"BM": (mm.bmp_pixels,),
+        b"RI": (mm.wav_samples,),
+        b"\x00\x00": (mm.extract_mp4_samples, mm.mp4_mdat_offset),
+    }
+    got = {}
+    for name in _CODEC_GOLDEN:
+        hb, hd = hashlib.sha256(), hashlib.sha256()
+        for payload in _pinned_payloads(mm, name):
+            hb.update(payload)
+            out = mm.decode_media(payload)
+            hd.update(repr(sorted(out.items())).encode())
+            for read in readers.get(payload[:2], ()):
+                hd.update(repr(read(payload)).encode())
         got[name] = (hb.hexdigest(), hd.hexdigest())
-    assert got == _JPEG_GOLDEN
+    assert got == _CODEC_GOLDEN
 
 
 @given(
@@ -957,16 +1030,25 @@ def test_mp4_mdat_offset_largesize_and_size_zero():
     normal encoding for >4GiB mdat — what a real video corpus hits),
     and size==0 means the box runs to end of payload (legal for the
     final box). mp4_mdat_offset must resolve the same mdat body for
-    all three encodings, and reject a truncated largesize header."""
+    all three encodings, extract_mp4_samples and decode_mp4_probe must
+    read the same samples and probe from each, and a truncated
+    largesize header must be rejected."""
     import struct
 
     import pytest
 
-    from seamdb_spark.operators.multimodal import build_mp4, mp4_mdat_offset
+    from seamdb_spark.operators.multimodal import (
+        build_mp4,
+        decode_mp4_probe,
+        extract_mp4_samples,
+        mp4_mdat_offset,
+    )
 
     payload = build_mp4(1000, 120, [10, 20], [1])
     base = mp4_mdat_offset(payload)
     body = payload[base:]
+    samples = extract_mp4_samples(payload)
+    probe = decode_mp4_probe(payload)
 
     # rewrite the (final) mdat box into largesize form
     head = payload[: base - 8]
@@ -979,6 +1061,10 @@ def test_mp4_mdat_offset_largesize_and_size_zero():
     z_payload = head + struct.pack(">I", 0) + b"mdat" + body
     off0 = mp4_mdat_offset(z_payload)
     assert z_payload[off0:] == body
+
+    for other in (ls_payload, z_payload):
+        assert extract_mp4_samples(other) == samples
+        assert decode_mp4_probe(other) == probe
 
     # largesize header cut off mid-field
     with pytest.raises(ValueError):
