@@ -15,6 +15,14 @@ import os
 import sys
 
 
+def _disk_bytes(entry) -> int:
+    path = entry if isinstance(entry, str) else entry["path"]
+    try:
+        return os.path.getsize(path)
+    except OSError:
+        return -1
+
+
 def survey(root: str) -> list[dict]:
     out = []
     for dirpath, dirs, files in os.walk(root):
@@ -27,12 +35,13 @@ def survey(root: str) -> list[dict]:
             continue
         entries = m.get("files", [])
         paths = [e if isinstance(e, str) else e["path"] for e in entries]
-        sizes = []
-        for p in paths:
-            try:
-                sizes.append(os.path.getsize(p))
-            except OSError:
-                sizes.append(-1)
+        # the manifest records each file's bytes; only a legacy
+        # plain-path entry has none, and is measured on disk
+        sizes = [
+            _disk_bytes(e) if isinstance(e, str) or e.get("bytes") is None
+            else e["bytes"]
+            for e in entries
+        ]
         segs = {os.path.dirname(p) for p in paths}
         out.append(
             {

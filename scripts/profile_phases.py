@@ -37,9 +37,11 @@ def main() -> None:
     import __spark_entry__ as entrymod
     from seamdb_spark import dedup_index, ivf_index, snapshots
 
-    # shim the primitives
+    # shim the primitives; a name that no longer exists raises, so a
+    # rename cannot silently drop its rows from the table
     for cls, meths in (
         (snapshots.TableSnapshots, ["commit", "commit_once"]),
+        (snapshots.Incremental, ["delta", "read_source"]),
         (dedup_index._IncrementalTextIndex, ["refresh", "_derive_of"]),
         (dedup_index.IncrementalLSHIndex, ["new_candidate_pairs"]),
         (dedup_index.IncrementalSimHashIndex, ["new_candidate_pairs"]),
@@ -48,11 +50,12 @@ def main() -> None:
           "_train_commit"]),
     ):
         for m in meths:
-            if hasattr(cls, m):
-                wrapped = timed(f"{cls.__name__}.{m}", getattr(cls, m))
-                if isinstance(cls.__dict__.get(m), staticmethod):
-                    wrapped = staticmethod(wrapped)
-                setattr(cls, m, wrapped)
+            if m not in cls.__dict__:
+                raise AttributeError(f"{cls.__name__} defines no {m!r}")
+            wrapped = timed(f"{cls.__name__}.{m}", getattr(cls, m))
+            if isinstance(cls.__dict__[m], staticmethod):
+                wrapped = staticmethod(wrapped)
+            setattr(cls, m, wrapped)
 
     queries = entrymod.queries()
     spark = build_session("seamdb_phase_profile")

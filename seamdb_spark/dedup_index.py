@@ -1,24 +1,26 @@
 """Incremental text-index maintenance over engine tables — the
 operational form of the dedup/decontamination operators for a growing
-corpus: instead of re-deriving 100 TB per run, ``refresh()`` diffs the
-source table's snapshot manifest against the segments already indexed
-(the ContinuousRollup pattern, rollups.py) and derives ONLY the newly
-appended files, appending their rows to a persisted index snapshot.
-Work per refresh is O(new documents). Two indexes share the machinery:
+corpus: instead of re-deriving 100 TB per run, ``refresh()`` takes the
+source's manifest diff (``snapshots.source_delta``, the one diff the
+rollup and the IVF index use too) and derives ONLY the newly appended
+files, appending their rows to a persisted index snapshot. Work per
+refresh is O(new documents). Three indexes share the machinery
+(``_IncrementalTextIndex``):
 
 - ``IncrementalLSHIndex`` (the d02 kernel): near-dup candidate pairs
   from an equi-join on maintained band rows;
+- ``IncrementalSimHashIndex`` (the d03 kernel): one 32-bit signature
+  per document, blocked into candidates at read time;
 - ``IncrementalEvalIndex`` (the d10/d15 kernel): a maintained eval
   shingle-hash universe whose 8 KiB Bloom bitmap decontaminates any
   training DataFrame without re-deriving the eval side.
 
-Correctness stance: the index after any refresh equals full re-banding
-of the current snapshot (band rows are per-document and the banding is
+Correctness stance: the index after any refresh equals full
+re-derivation of the current snapshot (rows are per-document and
 deterministic, so append order cannot change the set — tested in
-tests/test_dedup_index.py). If indexed segments DISAPPEAR from the
-source manifest (compaction / overwrite rewrote history), refresh
-detects it and rebuilds from the current snapshot — incrementality is
-an optimization, never a correctness assumption.
+tests/test_dedup_index.py). When the diff says rebuild (lineage lost,
+or compaction / overwrite rewrote history), the index is re-derived
+from the current snapshot.
 
 Scale notes (100 TB): per-refresh banding scans new segments only; the
 index table holds N_BANDS rows per document (tiny vs the corpus) and is
@@ -29,8 +31,6 @@ while the batch is, shuffle-on-band-key beyond.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -47,7 +47,7 @@ from .operators.hashing import (
     word_windows,
 )
 from .session import local_frame
-from .snapshots import TableSnapshots, recorded_bytes, segment_files
+from .snapshots import Incremental, segment_files
 
 # _derive_of only force-broadcasts a new segment set's id list while
 # the SOURCE input stays under this constant — the id projection of
@@ -129,87 +129,55 @@ def shingle_hash_rows(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-class _IncrementalTextIndex:
-    """Shared manifest-diff machinery for persisted, incrementally-
-    maintained per-document derivations of an Engine table: subclasses
-    define ``_derive(df)`` (rows keyed by ``doc_id``); ``refresh()``
-    derives ONLY newly appended segments and appends to the index
-    snapshot, rebuilding from scratch when indexed segments disappear
-    from the source manifest (compaction rewrote history)."""
+class _IncrementalTextIndex(Incremental):
+    """A persisted, incrementally maintained per-document derivation of
+    a text table: subclasses define ``_derive(df)`` (rows keyed by
+    ``doc_id``); ``refresh()`` derives the files the source's manifest
+    diff names (``snapshots.source_delta``) and appends them to the
+    index snapshot, or overwrites it on a rebuild.
 
-    def __init__(self, engine, name: str, source: str,
-                 id_col: str, text_col: str) -> None:
-        self.engine = engine
-        self.name = name
-        self.source = source
+    ``derive_hint``: optional zero-arg callable returning a DataFrame
+    holding THIS index's derivation for a superset of every row the
+    source table will ever hold (e.g. the session-memoized banding of
+    the full fixture corpus that several gate layouts slice). When set,
+    ``refresh()`` computes a new segment's rows by semi-joining the hint
+    on the segment's ids instead of re-deriving text — identical rows
+    (the derivation is per-document and deterministic), a fraction of
+    the cost. The CALLER owns the superset guarantee; leave unset for
+    arbitrary sources."""
+
+    def __init__(self, spark, source_path: str, source_schema,
+                 state_path: str, id_col: str, text_col: str,
+                 derive_hint=None) -> None:
+        super().__init__(spark, source_path, source_schema, state_path)
         self.id_col = id_col
         self.text_col = text_col
-        self._spark = engine.spark
-        self._source_path = None
-        self._schema = None
-        self._derive_hint = None
-        base = os.path.join(
-            engine.store.warehouse_dir, "_dedup_index", engine.database, name
+        self._derive_hint = derive_hint
+
+    @classmethod
+    def on_table(cls, engine, name: str, source: str,
+                 id_col: str, text_col: str):
+        """Index ``name`` over the Engine table ``source``."""
+        return cls(
+            *cls.engine_table(engine, source, "_dedup_index", name),
+            id_col, text_col,
         )
-        self.state = TableSnapshots(os.path.join(base, "state"))
 
     @classmethod
     def over_snapshots(cls, spark, source_path: str, source_schema,
                        id_col: str, text_col: str, state_path: str,
                        derive_hint=None):
-        """Index a raw :class:`TableSnapshots` directory instead of an
-        Engine table — the same manifest-diff refresh over any
-        snapshot-backed parquet layout (p16 drives this path through
-        the oracle gate; Engine tables route through ``__init__``).
-
-        ``derive_hint``: optional zero-arg callable returning a
-        DataFrame holding THIS index's derivation for a superset of
-        every row the source table will ever hold (e.g. the session-
-        memoized banding of the full fixture corpus that several gate
-        layouts slice). When set, ``refresh()`` computes a new
-        segment's rows by semi-joining the hint on the segment's ids
-        instead of re-deriving text — identical rows (the derivation
-        is per-document and deterministic), a fraction of the cost.
-        The CALLER owns the superset guarantee; leave unset for
-        arbitrary sources."""
-        self = cls.__new__(cls)
-        self.engine = None
-        self.name = os.path.basename(state_path)
-        self.source = source_path
-        self.id_col = id_col
-        self.text_col = text_col
-        self._spark = spark
-        self._source_path = source_path
-        self._schema = source_schema
-        self._derive_hint = derive_hint
-        self.state = TableSnapshots(state_path)
-        return self
+        """Index a raw :class:`TableSnapshots` directory (p16 drives
+        this path through the oracle gate)."""
+        return cls(spark, source_path, source_schema, state_path,
+                   id_col, text_col, derive_hint)
 
     # --------------------------------------------------------- helpers
     def _derive(self, df: DataFrame) -> DataFrame:
         raise NotImplementedError
 
-    def _source_snaps(self) -> TableSnapshots:
-        if self.engine is None:
-            return TableSnapshots(self._source_path)
-        store = self.engine.store
-        return TableSnapshots(store.table_dir(self.engine.database, self.source))
-
-    def _source_schema(self):
-        if self.engine is None:
-            return self._schema
-        return self.engine.store.get_table(
-            self.engine.database, self.source
-        ).spark_schema()
-
-    def _processed(self) -> list[str] | None:
-        extra = self.state.current_extra()
-        if "processed" in extra:
-            return extra["processed"]
-        return None if self.state.current_version() > 0 else []
-
     def _state_schema(self):
-        return self._derive(local_frame(self._spark, [], self._source_schema())).schema
+        return self._derive(local_frame(self._spark, [], self.source_schema())).schema
 
     def _derive_of(self, files: list[str], in_bytes: int | None) -> DataFrame:
         """This index's rows for the given source segments, whose
@@ -220,10 +188,11 @@ class _IncrementalTextIndex:
         32 files / ~5-231 KiB per state segment at sf0.1), so the rows
         are repartitioned to ``segment_files(in_bytes)``; a coalesce
         would fold the derivation itself into that many tasks."""
-        spark = self._spark
-        if not files:
-            return self._derive(local_frame(spark, [], self._source_schema()))
-        if self._derive_hint is not None:
+        if self._derive_hint is None or not files:
+            # spread before the shingle explode + md5 + minhash, which
+            # sit upstream of the derivation's first shuffle
+            derived = self._derive(self.read_source(files, spread_by=self.id_col))
+        else:
             # The caller provided the derivation of a superset corpus
             # (session-memoized, localCheckpointed): slice it by the new
             # segments' ids instead of re-deriving their text — an
@@ -232,8 +201,7 @@ class _IncrementalTextIndex:
             # ~1.5-3 s -> ~0.3 s per refresh at sf0.1, and the e52
             # compaction rebuild re-derives the whole table).
             seg_ids = (
-                spark.read.schema(self._source_schema())
-                .parquet(*files)
+                self.read_source(files)
                 .select(F.col(self.id_col).alias("doc_id"))
                 .distinct()
             )
@@ -247,21 +215,6 @@ class _IncrementalTextIndex:
             # of the CONSTANT input-byte bound, so the broadcast is
             # scale-safe and keeps the hint side exchange-free.
             derived = self._derive_hint().join(F.broadcast(seg_ids), "doc_id")
-        else:
-            # Spread the new segments across cores BEFORE deriving: a
-            # small append batch is often one parquet file = one scan
-            # partition, and the expensive per-row work (shingle explode
-            # + md5 + minhash) sits UPSTREAM of the derivation's first
-            # shuffle, so without this it runs single-threaded (measured
-            # 5.5s -> ~1s per p16 refresh at sf0.1). The count tracks
-            # the session's core budget.
-            from .session import default_parallelism
-
-            derived = self._derive(
-                spark.read.schema(self._source_schema())
-                .parquet(*files)
-                .repartition(default_parallelism(), self.id_col)
-            )
         if in_bytes is not None:
             derived = derived.repartition(segment_files(in_bytes))
         return derived
@@ -287,34 +240,15 @@ class _IncrementalTextIndex:
         scan of exactly the new segments. (Only the variable-fan-out
         indexes take this path; see _rows_per_doc.)
         """
-        added = [f for f in self.state.current_files() if f not in before]
+        added = [(f, None) for f in self.state.current_files() if f not in before]
         if not added:
             return 0
         return (
-            self._spark.read.schema(self._state_schema())
-            .parquet(*added)
+            self.state.read(self._spark, self._state_schema(), entries=added)
             .select("doc_id")
             .distinct()
             .count()
         )
-
-    def _commit_counted(
-        self, files: list[str], in_bytes: int | None, mode: str, extra: dict
-    ) -> int:
-        """Derive ``files`` (``in_bytes`` recorded, see _derive_of),
-        commit the result, and return the number of documents the
-        commit indexed — via the observe metric when the fan-out is
-        fixed (no extra job), else via the post-write scan."""
-        rows_per_doc = self._rows_per_doc()
-        derived = self._derive_of(files, in_bytes)
-        if rows_per_doc:
-            obs = Observation()
-            derived = derived.observe(obs, F.count(F.lit(1)).alias("rows"))
-            self.state.commit(derived, mode=mode, extra=extra)
-            return int(obs.get["rows"]) // rows_per_doc
-        before = set(self.state.current_files()) if mode == "append" else set()
-        self.state.commit(derived, mode=mode, extra=extra)
-        return self._committed_doc_count(before)
 
     # ------------------------------------------------------------- api
     def refresh(self) -> dict:
@@ -323,30 +257,26 @@ class _IncrementalTextIndex:
         Returns {"mode": "incremental"|"rebuild"|"noop",
                  "files_read": <segments derived this refresh>,
                  "n_new_docs": <documents indexed this refresh>}.
+        Documents are counted via the observe metric when the fan-out
+        is fixed (no extra job), else via the post-write scan.
         """
-        sizes = self._source_snaps().current_file_bytes()
-        current = list(sizes)
-        processed_list = self._processed()
-        processed = set(processed_list or [])
-        unsound = processed_list is None
-        vanished = processed - set(current)
-        new_files = [f for f in current if f not in processed]
-
-        if vanished or unsound:
-            n = self._commit_counted(
-                current, recorded_bytes(sizes.values()),
-                mode="overwrite", extra={"processed": current},
-            )
-            return {"mode": "rebuild", "files_read": len(current), "n_new_docs": n}
-
-        if not new_files:
+        delta = self.delta()
+        if delta.mode == "noop":
             return {"mode": "noop", "files_read": 0, "n_new_docs": 0}
-
-        n = self._commit_counted(
-            new_files, recorded_bytes(sizes[f] for f in new_files),
-            mode="append", extra={"processed": current},
-        )
-        return {"mode": "incremental", "files_read": len(new_files), "n_new_docs": n}
+        mode = "overwrite" if delta.mode == "rebuild" else "append"
+        extra = {"processed": delta.processed}
+        derived = self._derive_of(delta.files, delta.in_bytes)
+        rows_per_doc = self._rows_per_doc()
+        if rows_per_doc:
+            obs = Observation()
+            derived = derived.observe(obs, F.count(F.lit(1)).alias("rows"))
+            self.state.commit(derived, mode=mode, extra=extra)
+            n = int(obs.get["rows"]) // rows_per_doc
+        else:
+            before = set(self.state.current_files()) if mode == "append" else set()
+            self.state.commit(derived, mode=mode, extra=extra)
+            n = self._committed_doc_count(before)
+        return {"mode": delta.mode, "files_read": len(delta.files), "n_new_docs": n}
 
     def index(self) -> DataFrame:
         """The current index rows."""
@@ -505,8 +435,8 @@ class IncrementalEvalIndex(_IncrementalTextIndex):
     operational form of d10/d15 decontamination for a growing eval
     suite: instead of re-deriving the eval shingle universe per
     decontamination run, ``refresh()`` shingle-hashes only newly
-    appended eval segments (manifest diff, compaction-safe rebuild —
-    the ``_IncrementalTextIndex`` contract), and ``contaminated()``
+    appended eval segments (``snapshots.source_delta``: manifest diff,
+    compaction-safe rebuild), and ``contaminated()``
     runs the d15 plan against the MAINTAINED index: the 8 KiB Bloom
     bitmap is re-packed from index rows (a 1024-row bit_or agg, never
     a corpus scan) and broadcast as a plan literal so non-candidate

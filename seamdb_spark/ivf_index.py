@@ -36,10 +36,11 @@ Maintenance contract (the p20 oracle identity):
   threshold, so the oracle replay pins the NOT-retrained state with
   per-cell move counts as checked columns; the retrain path is pinned
   in tests/test_dedup_index.py with retrain_permille=0.
-- **rebuild**: if indexed source segments vanish from the manifest
-  (compaction rewrote history), retrain from the current snapshot —
-  incrementality is an optimization, never a correctness assumption
-  (the _IncrementalTextIndex contract).
+- **rebuild** / **noop**: what to read is the source's manifest diff
+  (``snapshots.source_delta``, the one diff the rollup and the text
+  indexes use too). When it says rebuild (lineage lost, or compaction
+  rewrote history), retrain from the current snapshot; with no new
+  segment, nothing is read or committed.
 
 Scale notes (100 TB): per-refresh assignment scans new segments only
 (K×64 int64 centroids broadcast as a plan literal); index rows carry
@@ -63,7 +64,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .session import local_frame
-from .snapshots import TableSnapshots, recorded_bytes, segment_files
+from .snapshots import Incremental, SourceDelta, recorded_bytes, segment_files
 
 # Re-center when >50% of indexed vectors would change cells under the
 # one-step re-centered centroids. Deliberately high: appends drawn from
@@ -89,7 +90,7 @@ _CELL_STATS_SCHEMA = T.StructType(
 )
 
 
-class IncrementalIVFIndex:
+class IncrementalIVFIndex(Incremental):
     """Snapshot-backed IVF index over a TableSnapshots source of
     (vec_id, embedding array<float>) rows."""
 
@@ -101,31 +102,20 @@ class IncrementalIVFIndex:
         state_path: str,
         retrain_permille: int = IVF_RETRAIN_PERMILLE,
     ) -> None:
-        self._spark = spark
-        self.source = TableSnapshots(source_path)
-        self._source_schema = source_schema
-        self.state = TableSnapshots(state_path)
+        super().__init__(spark, source_path, source_schema, state_path)
         self.retrain_permille = retrain_permille
 
     # --------------------------------------------------------- helpers
     def _quant_of(self, files: list[str]) -> DataFrame:
         """(vec_id, q) fixed-point vectors of the given source segments
         (similarity._qemb — one quantization definition), spread across
-        cores first: an append batch is often ONE parquet file = one
-        scan partition, and the per-row quantize+assign work sits
-        upstream of the first shuffle (the dedup_index._derive_of
-        lesson). Each state commit then coalesces its pinned batch to
-        ``segment_files`` of the input's manifest-recorded bytes (no
-        shuffle, no recompute); unmeasured input keeps the spread."""
+        cores first (``read_source``). Each state commit then coalesces
+        its pinned batch to ``segment_files`` of the input's
+        manifest-recorded bytes (no shuffle, no recompute); unmeasured
+        input keeps the spread."""
         from .operators.similarity import _qemb
-        from .session import default_parallelism
 
-        df = (
-            self._spark.read.schema(self._source_schema)
-            .parquet(*files)
-            .repartition(default_parallelism(), "vec_id")
-        )
-        return _qemb(df)
+        return _qemb(self.read_source(files, spread_by="vec_id"))
 
     def _cdf(self, centroids: list) -> DataFrame:
         """The K×64 centroid table (similarity.centroid_frame);
@@ -233,29 +223,26 @@ class IncrementalIVFIndex:
                 merged_s[cid] = sums[cid]
         return {"cell_counts": merged_c, "cell_sums": merged_s}
 
-    def _train_commit(self, sizes: dict[str, int | None]) -> int:
-        """Train Lloyd on the given source segments (path -> recorded
-        bytes), assign them, overwrite the index state with them as the
-        processed list (one derivation: the assigned batch is pinned,
-        then both the stats aggregate and the commit read the pin).
-        Returns the number of indexed vectors."""
+    def _train_commit(self, delta: SourceDelta) -> int:
+        """Train Lloyd on the delta's source files, assign them, and
+        overwrite the index state with them (one derivation: the
+        assigned batch is pinned, then both the stats aggregate and the
+        commit read the pin). Returns the number of indexed vectors."""
         from .operators.similarity import _centroid_rows, assign_cells
 
-        files = list(sizes)
-        quant = self._quant_of(files).localCheckpoint(eager=True)
+        quant = self._quant_of(delta.files).localCheckpoint(eager=True)
         centroids = _centroid_rows(quant)
         assigned = assign_cells(quant, self._cdf(centroids)).localCheckpoint(
             eager=True
         )
         n, counts, sums = self._stats_of(assigned)
-        in_bytes = recorded_bytes(sizes.values())
-        if in_bytes is not None:
-            assigned = assigned.coalesce(segment_files(in_bytes))
+        if delta.in_bytes is not None:
+            assigned = assigned.coalesce(segment_files(delta.in_bytes))
         self.state.commit(
             assigned,
             mode="overwrite",
             extra={
-                "processed": files,
+                "processed": delta.processed,
                 "centroids": centroids,
                 **self._merge_stats({}, counts, sums),
             },
@@ -271,54 +258,39 @@ class IncrementalIVFIndex:
         """
         from .operators.similarity import assign_cells
 
-        sizes = self.source.current_file_bytes()
-        current = list(sizes)
-        extra = self.state.current_extra()
-        processed_list = extra.get("processed")
-        unsound = processed_list is None and self.state.current_version() > 0
-        processed = set(processed_list or [])
-        vanished = processed - set(current)
-        new_files = [f for f in current if f not in processed]
-
-        if unsound or vanished:
-            n = self._train_commit(sizes)
-            return {
-                "mode": "rebuild", "files_read": len(current),
-                "n_new_vecs": n, "n_indexed": n, "n_moved": 0,
-            }
-        if not extra.get("centroids"):
-            n = self._train_commit(sizes)
-            return {
-                "mode": "train", "files_read": len(current),
-                "n_new_vecs": n, "n_indexed": n, "n_moved": 0,
-            }
-        if not new_files:
-            n_indexed = sum(int(v) for v in extra["cell_counts"].values())
+        delta = self.delta()
+        extra = delta.extra
+        if delta.mode == "noop":
+            n_indexed = sum(int(v) for v in extra.get("cell_counts", {}).values())
             return {
                 "mode": "noop", "files_read": 0,
                 "n_new_vecs": 0, "n_indexed": n_indexed, "n_moved": 0,
+            }
+        if delta.mode == "rebuild" or not extra.get("centroids"):
+            # no centroids yet: the files processed so far held no
+            # vector, so training on the new files trains on them all
+            n = self._train_commit(delta)
+            return {
+                "mode": "rebuild" if delta.mode == "rebuild" else "train",
+                "files_read": len(delta.files),
+                "n_new_vecs": n, "n_indexed": n, "n_moved": 0,
             }
 
         # incremental: assign ONLY the new batch against the stored
         # centroids (O(batch × K)), append, fold the batch's per-cell
         # stats into the running monoids (one derivation via the pin).
         assigned = assign_cells(
-            self._quant_of(new_files), self._cdf(self.centroids())
+            self._quant_of(delta.files), self._cdf(self.centroids())
         ).localCheckpoint(eager=True)
         n_new, counts, sums = self._stats_of(assigned)
-        in_bytes = recorded_bytes(sizes[f] for f in new_files)
-        if in_bytes is not None:
-            assigned = assigned.coalesce(segment_files(in_bytes))
+        if delta.in_bytes is not None:
+            assigned = assigned.coalesce(segment_files(delta.in_bytes))
         new_extra = {
-            "processed": current,
+            "processed": delta.processed,
             "centroids": extra["centroids"],
             **self._merge_stats(extra, counts, sums),
         }
-        self.state.commit(
-            assigned,
-            mode="append",
-            extra=new_extra,
-        )
+        self.state.commit(assigned, mode="append", extra=new_extra)
 
         # drift check: exact integer compare, no float thresholds
         n_indexed = sum(int(v) for v in new_extra["cell_counts"].values())
@@ -326,6 +298,10 @@ class IncrementalIVFIndex:
             self.drift_report().agg(F.sum("n_moved").alias("m")).collect()[0]
         )
         n_moved = int(moved_row.m or 0)
+        out = {
+            "mode": "incremental", "files_read": len(delta.files),
+            "n_new_vecs": n_new, "n_indexed": n_indexed, "n_moved": n_moved,
+        }
         if 1000 * n_moved > self.retrain_permille * n_indexed:
             cand = self.candidate_centroids().collect()
             centroids = sorted(
@@ -342,17 +318,10 @@ class IncrementalIVFIndex:
                 reassigned,
                 mode="overwrite",
                 extra={
-                    "processed": current,
+                    "processed": delta.processed,
                     "centroids": centroids,
                     **self._merge_stats({}, counts, sums),
                 },
             )
-            return {
-                "mode": "retrain", "files_read": len(new_files),
-                "n_new_vecs": n_new, "n_indexed": n_indexed,
-                "n_moved": n_moved,
-            }
-        return {
-            "mode": "incremental", "files_read": len(new_files),
-            "n_new_vecs": n_new, "n_indexed": n_indexed, "n_moved": n_moved,
-        }
+            out["mode"] = "retrain"
+        return out

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..session import run_concurrently
 from .dedup import _cc_clusters, _cc_ctes
@@ -30,6 +31,11 @@ from .rowmap import row_map
 from .text import QUALITY_SQL, quality_frame, t02_quality_score
 
 QUALITY_MIN = 0.10
+
+# (doc_id, text): the source rows of every text-index gate layout
+_DOC_SCHEMA = T.StructType(
+    [T.StructField("doc_id", T.LongType()), T.StructField("text", T.StringType())]
+)
 
 
 def _pipeline_oracle() -> str:
@@ -1529,8 +1535,6 @@ _P14_SCHEMA_SPLIT = 13
     """,
 )
 def p14_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from ..snapshots import TableSnapshots
     from ..sources import load_table
 
@@ -1615,8 +1619,10 @@ def p15_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tag = session_tag(spark, sf_dir)
 
-    def rollup_for(warehouse: str) -> ContinuousRollup:
-        eng = Engine(spark, warehouse, database="p15db", user="pipeline")
+    def engine_at(warehouse: str) -> Engine:
+        return Engine(spark, warehouse, database="p15db", user="pipeline")
+
+    def rollup_of(eng: Engine) -> ContinuousRollup:
         return ContinuousRollup(
             eng, "nation_by_bucket", "metrics",
             keys=[("bucket", "bucket")], sum_cols=["value"],
@@ -1624,7 +1630,7 @@ def p15_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> tuple[str, bool]:
         warehouse = fresh_external_dir("/tmp/seamdb_rollup", tag) + "/wh"
-        eng = Engine(spark, warehouse, database="p15db", user="pipeline")
+        eng = engine_at(warehouse)
         eng.sql(
             "CREATE TABLE metrics (id serial PRIMARY KEY,"
             " bucket bigint, value double precision)"
@@ -1638,26 +1644,19 @@ def p15_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .collect()
         )
 
-        def insert(batch):
-            vals = ", ".join(f"({b}, {v})" for b, v in batch)
-            eng.sql(f"INSERT INTO metrics (bucket, value) VALUES {vals}")
+        def insert(first: bool):
+            vals = ", ".join(
+                f"({b}, {v})" for b, v in rows if (v < _P15_SPLIT * 1.5) == first
+            )
+            return lambda: eng.sql(f"INSERT INTO metrics (bucket, value) VALUES {vals}")
 
-        rollup = ContinuousRollup(
-            eng, "nation_by_bucket", "metrics",
-            keys=[("bucket", "bucket")], sum_cols=["value"],
-        )
-        insert([r for r in rows if r[1] < _P15_SPLIT * 1.5])
-        first = rollup.refresh()
-        insert([r for r in rows if r[1] >= _P15_SPLIT * 1.5])
-        second = rollup.refresh()
-        return warehouse, (
-            first["mode"] == "incremental" and second["mode"] == "incremental"
-        )
+        modes = rollup_of(eng).refresh_after([insert(True), insert(False)])
+        return warehouse, modes == ["incremental", "incremental", "noop"]
 
     warehouse, incremental = materialized_value(
         spark, sf_dir, "p15_rollup", build
     )
-    out = rollup_for(warehouse).read()
+    out = rollup_of(engine_at(warehouse)).read()
     return out.select(
         F.col("bucket").cast("long").alias("bucket"),
         F.col("n_rows").cast("long").alias("n_rows"),
@@ -1715,29 +1714,13 @@ def _stream_gate_layout(spark: SparkSession, sf_dir: str, base: str):
     """(snaps, lsh, sh) handles over a gate layout rooted at ``base`` —
     the one layout shape all four streaming ingest gates use
     (/docs + /lsh_state + /sh_state, hint-backed indexes)."""
-    from pyspark.sql import types as T
-
-    from ..dedup_index import IncrementalLSHIndex, IncrementalSimHashIndex
-    from ..snapshots import TableSnapshots
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
+    lsh = _doc_index(
+        spark, base, "LSH", _docs_band_rows_hint(spark, sf_dir), "/lsh_state"
     )
-    snaps = TableSnapshots(base + "/docs")
-    lsh = IncrementalLSHIndex.over_snapshots(
-        spark, base + "/docs", schema, "doc_id", "text",
-        base + "/lsh_state",
-        derive_hint=_docs_band_rows_hint(spark, sf_dir),
+    sh = _doc_index(
+        spark, base, "SimHash", _docs_simhash_hint(spark, sf_dir), "/sh_state"
     )
-    sh = IncrementalSimHashIndex.over_snapshots(
-        spark, base + "/docs", schema, "doc_id", "text",
-        base + "/sh_state",
-        derive_hint=_docs_simhash_hint(spark, sf_dir),
-    )
-    return snaps, lsh, sh
+    return lsh.source, lsh, sh
 
 
 def _stream_gate_base(spark: SparkSession, sf_dir: str) -> str:
@@ -1783,19 +1766,16 @@ def _clone_stream_gate_base(
     return base, snaps, lsh, sh
 
 
-def _p16_index_at(spark: SparkSession, base: str, derive_hint=None):
-    from pyspark.sql import types as T
+def _doc_index(
+    spark: SparkSession, base: str, kind: str, derive_hint=None,
+    state: str = "/state",
+):
+    """The ``kind`` ("LSH", "SimHash" or "Eval") text index over a gate
+    layout: _DOC_SCHEMA rows in ``<base>/docs``, state in ``<base><state>``."""
+    from .. import dedup_index
 
-    from ..dedup_index import IncrementalLSHIndex
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    return IncrementalLSHIndex.over_snapshots(
-        spark, base + "/docs", schema, "doc_id", "text", base + "/state",
+    return getattr(dedup_index, f"Incremental{kind}Index").over_snapshots(
+        spark, base + "/docs", _DOC_SCHEMA, "doc_id", "text", base + state,
         derive_hint=derive_hint,
     )
 
@@ -1808,25 +1788,17 @@ def _p16_build_index(spark: SparkSession, sf_dir: str) -> tuple[str, bool]:
     tag = session_tag(spark, sf_dir)
 
     def build() -> tuple[str, bool]:
-        from ..snapshots import TableSnapshots
-
         base = fresh_external_dir("/tmp/seamdb_lshindex", tag)
-        snaps = TableSnapshots(base + "/docs")
         docs = load_table(spark, sf_dir, "documents").select(
             F.col("doc_id").cast("long"), "text"
         )
-        idx = _p16_index_at(
-            spark, base, derive_hint=_docs_band_rows_hint(spark, sf_dir)
-        )
-        snaps.commit(docs.filter(F.col("doc_id") % 2 == 0), mode="overwrite")
-        first = idx.refresh()
-        snaps.commit(docs.filter(F.col("doc_id") % 2 == 1))
-        second = idx.refresh()
-        return base, (
-            first["mode"] == "incremental"
-            and second["mode"] == "incremental"
-            and idx.refresh()["mode"] == "noop"
-        )
+        idx = _doc_index(spark, base, "LSH", _docs_band_rows_hint(spark, sf_dir))
+        src = idx.source
+        modes = idx.refresh_after([
+            lambda: src.commit(docs.filter(F.col("doc_id") % 2 == 0), mode="overwrite"),
+            lambda: src.commit(docs.filter(F.col("doc_id") % 2 == 1)),
+        ])
+        return base, modes == ["incremental", "incremental", "noop"]
 
     return materialized_value(spark, sf_dir, "p16_lsh_index", build)
 
@@ -1834,7 +1806,7 @@ def _p16_build_index(spark: SparkSession, sf_dir: str) -> tuple[str, bool]:
 @register("p16_incremental_lsh_index", oracle=_p16_oracle())
 def p16_incremental_lsh_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     base, incremental = _p16_build_index(spark, sf_dir)
-    return _p16_index_at(spark, base).candidate_pairs().select(
+    return _doc_index(spark, base, "LSH").candidate_pairs().select(
         "doc_a",
         "doc_b",
         F.lit(bool(incremental)).alias("second_refresh_incremental"),
@@ -1885,7 +1857,7 @@ def p17_incremental_batch_candidates(
         .filter(F.col("doc_id") % 2 == 1)
         .select(F.col("doc_id").cast("long"))
     )
-    idx = _p16_index_at(spark, base)
+    idx = _doc_index(spark, base, "LSH")
     return idx.new_candidate_pairs(batch).select(
         "doc_a",
         "doc_b",
@@ -2013,7 +1985,6 @@ def p18_compaction_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def p19_retention_gc(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
-    from pyspark.sql import types as T
 
     from ..snapshots import TableSnapshots
     from ..sources import load_table
@@ -2135,7 +2106,7 @@ def p21_incremental_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 2 == 1)
         .select(F.col("doc_id").cast("long"))
     )
-    idx = _p16_index_at(spark, base)
+    idx = _doc_index(spark, base, "LSH")
     # first-come-wins: a batch doc is a duplicate iff it collides with
     # any SMALLER doc_id — i.e. it appears as the pair's larger side
     # (new_candidate_pairs emits doc_a < doc_b)
@@ -2193,47 +2164,25 @@ def p21_incremental_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
 P24_EVAL_MOD = 10
 
 
-def _p24_index_at(spark: SparkSession, base: str):
-    from pyspark.sql import types as T
-
-    from ..dedup_index import IncrementalEvalIndex
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    return IncrementalEvalIndex.over_snapshots(
-        spark, base + "/docs", schema, "doc_id", "text", base + "/state"
-    )
-
-
 def _p24_build_index(spark: SparkSession, sf_dir: str) -> tuple:
     from ..sources import load_table
 
     tag = session_tag(spark, sf_dir)
 
     def build() -> tuple:
-        from ..snapshots import TableSnapshots
-
         base = fresh_external_dir("/tmp/seamdb_evalindex", tag)
-        snaps = TableSnapshots(base + "/docs")
         ev = (
             load_table(spark, sf_dir, "documents")
             .filter(F.col("doc_id") % P24_EVAL_MOD == 0)
             .select(F.col("doc_id").cast("long"), "text")
         )
-        idx = _p24_index_at(spark, base)
-        snaps.commit(ev.filter(F.col("doc_id") % 20 == 0), mode="overwrite")
-        first = idx.refresh()
-        snaps.commit(ev.filter(F.col("doc_id") % 20 != 0))
-        second = idx.refresh()
-        return base, (
-            first["mode"] == "incremental"
-            and second["mode"] == "incremental"
-            and idx.refresh()["mode"] == "noop"
-        )
+        idx = _doc_index(spark, base, "Eval")
+        src = idx.source
+        modes = idx.refresh_after([
+            lambda: src.commit(ev.filter(F.col("doc_id") % 20 == 0), mode="overwrite"),
+            lambda: src.commit(ev.filter(F.col("doc_id") % 20 != 0)),
+        ])
+        return base, modes == ["incremental", "incremental", "noop"]
 
     return materialized_value(spark, sf_dir, "p24_eval_index", build)
 
@@ -2253,7 +2202,7 @@ def p24_incremental_eval_decontam(
     from ..sources import load_table
 
     base, incremental = _p24_build_index(spark, sf_dir)
-    idx = _p24_index_at(spark, base)
+    idx = _doc_index(spark, base, "Eval")
     train = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % P24_EVAL_MOD != 0)
@@ -2306,51 +2255,34 @@ def _p25_oracle() -> str:
 def p25_index_compaction_rebuild(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from pyspark.sql import types as T
-
-    from ..snapshots import TableSnapshots
     from ..sources import load_table
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
 
     tag = session_tag(spark, sf_dir)
 
     def build() -> tuple[str, bool, int]:
         base = fresh_external_dir("/tmp/seamdb_lshrebuild", tag)
-        snaps = TableSnapshots(base + "/docs")
         docs = load_table(spark, sf_dir, "documents").select(
             F.col("doc_id").cast("long"), "text"
         )
-        idx = _p16_index_at(
-            spark, base, derive_hint=_docs_band_rows_hint(spark, sf_dir)
-        )
-        snaps.commit(docs.filter(F.col("doc_id") % 2 == 0), mode="overwrite")
-        first = idx.refresh()
-        snaps.commit(docs.filter(F.col("doc_id") % 2 == 1))
-        second = idx.refresh()
-        # compaction: the table's full content rewritten as ONE segment
-        # (snapshot reads stay safe — the old segments survive under
-        # manifest retention while the new segment is written)
-        snaps.commit(snaps.read(spark, schema).coalesce(1), mode="overwrite")
-        n_segments = len(snaps.current_files())
-        third = idx.refresh()
-        modes_ok = (
-            first["mode"] == "incremental"
-            and second["mode"] == "incremental"
-            and third["mode"] == "rebuild"
-            and idx.refresh()["mode"] == "noop"
-        )
-        return base, modes_ok, n_segments
+        idx = _doc_index(spark, base, "LSH", _docs_band_rows_hint(spark, sf_dir))
+        src = idx.source
+        modes = idx.refresh_after([
+            lambda: src.commit(docs.filter(F.col("doc_id") % 2 == 0), mode="overwrite"),
+            lambda: src.commit(docs.filter(F.col("doc_id") % 2 == 1)),
+            # compaction: the table's full content rewritten as ONE
+            # segment (snapshot reads stay safe — the old segments
+            # survive under manifest retention while it is written)
+            lambda: src.commit(
+                src.read(spark, _DOC_SCHEMA).coalesce(1), mode="overwrite"
+            ),
+        ])
+        modes_ok = modes == ["incremental", "incremental", "rebuild", "noop"]
+        return base, modes_ok, len(src.current_files())
 
     base, modes_ok, n_segments = materialized_value(
         spark, sf_dir, "p25_lsh_rebuild", build
     )
-    return _p16_index_at(spark, base).candidate_pairs().select(
+    return _doc_index(spark, base, "LSH").candidate_pairs().select(
         "doc_a",
         "doc_b",
         F.lit(bool(modes_ok)).alias("rebuild_triggered"),
@@ -2395,48 +2327,23 @@ def _p26_oracle() -> str:
     """
 
 
-def _p26_index_at(spark: SparkSession, base: str, derive_hint=None):
-    from pyspark.sql import types as T
-
-    from ..dedup_index import IncrementalSimHashIndex
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    return IncrementalSimHashIndex.over_snapshots(
-        spark, base + "/docs", schema, "doc_id", "text", base + "/state",
-        derive_hint=derive_hint,
-    )
-
-
 def _p26_build_index(spark: SparkSession, sf_dir: str) -> tuple[str, bool]:
     from ..sources import load_table
 
     tag = session_tag(spark, sf_dir)
 
     def build() -> tuple[str, bool]:
-        from ..snapshots import TableSnapshots
-
         base = fresh_external_dir("/tmp/seamdb_simhashindex", tag)
-        snaps = TableSnapshots(base + "/docs")
         docs = load_table(spark, sf_dir, "documents").select(
             F.col("doc_id").cast("long"), "text"
         )
-        idx = _p26_index_at(
-            spark, base, derive_hint=_docs_simhash_hint(spark, sf_dir)
-        )
-        snaps.commit(docs.filter(F.col("doc_id") % 2 == 0), mode="overwrite")
-        first = idx.refresh()
-        snaps.commit(docs.filter(F.col("doc_id") % 2 == 1))
-        second = idx.refresh()
-        return base, (
-            first["mode"] == "incremental"
-            and second["mode"] == "incremental"
-            and idx.refresh()["mode"] == "noop"
-        )
+        idx = _doc_index(spark, base, "SimHash", _docs_simhash_hint(spark, sf_dir))
+        src = idx.source
+        modes = idx.refresh_after([
+            lambda: src.commit(docs.filter(F.col("doc_id") % 2 == 0), mode="overwrite"),
+            lambda: src.commit(docs.filter(F.col("doc_id") % 2 == 1)),
+        ])
+        return base, modes == ["incremental", "incremental", "noop"]
 
     return materialized_value(spark, sf_dir, "p26_simhash_index", build)
 
@@ -2446,7 +2353,7 @@ def p26_incremental_simhash_index(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     base, incremental = _p26_build_index(spark, sf_dir)
-    return _p26_index_at(spark, base).candidate_pairs().select(
+    return _doc_index(spark, base, "SimHash").candidate_pairs().select(
         "doc_a",
         "doc_b",
         "hamming",
@@ -2495,7 +2402,7 @@ def p27_simhash_batch_candidates(
         .filter(F.col("doc_id") % 2 == 1)
         .select(F.col("doc_id").cast("long"))
     )
-    return _p26_index_at(spark, base).new_candidate_pairs(batch).select(
+    return _doc_index(spark, base, "SimHash").new_candidate_pairs(batch).select(
         "doc_a",
         "doc_b",
         "hamming",
@@ -2625,8 +2532,8 @@ def p29_dual_detector_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     earlier_lex, earlier_sh = (
         idx.new_candidate_pairs(batch).filter(F.col("doc_b") % 2 == 1)
         for idx in (
-            _p16_index_at(spark, lsh_base),
-            _p26_index_at(spark, sh_base),
+            _doc_index(spark, lsh_base, "LSH"),
+            _doc_index(spark, sh_base, "SimHash"),
         )
     )
     quality = t02_quality_score(spark, sf_dir).filter(F.col("doc_id") % 2 == 1)

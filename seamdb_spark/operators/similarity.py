@@ -3911,16 +3911,21 @@ def s26_hybrid_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 _EVEN_TRAIN = "(SELECT * FROM quant WHERE vec_id % 2 = 0)"
 
 
-def _p20_index_at(spark: SparkSession, sf_dir: str, base: str):
+def _ivf_vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id bigint, embedding): the source rows of the IVF gates."""
+    return _emb(spark, sf_dir).select(
+        F.col("vec_id").cast("long").alias("vec_id"), "embedding"
+    )
+
+
+def _ivf_index_at(spark: SparkSession, sf_dir: str, base: str, **kw):
+    """The IVF index over a gate layout: ``<base>/vecs`` source rows,
+    state in ``<base>/state``; ``kw`` as IncrementalIVFIndex's."""
     from ..ivf_index import IncrementalIVFIndex
 
-    schema = (
-        _emb(spark, sf_dir)
-        .select(F.col("vec_id").cast("long").alias("vec_id"), "embedding")
-        .schema
-    )
     return IncrementalIVFIndex(
-        spark, base + "/vecs", schema, base + "/state"
+        spark, base + "/vecs", _ivf_vecs(spark, sf_dir).schema, base + "/state",
+        **kw,
     )
 
 
@@ -3932,24 +3937,17 @@ def _p20_build_index(spark: SparkSession, sf_dir: str) -> tuple:
     tag = session_tag(spark, sf_dir)
 
     def build() -> tuple:
-        from ..snapshots import TableSnapshots
-
         base = fresh_external_dir("/tmp/seamdb_ivfindex", tag)
-        snaps = TableSnapshots(base + "/vecs")
-        emb = _emb(spark, sf_dir).select(
-            F.col("vec_id").cast("long").alias("vec_id"), "embedding"
-        )
-        idx = _p20_index_at(spark, sf_dir, base)
-        snaps.commit(emb.filter(F.col("vec_id") % 2 == 0), mode="overwrite")
-        first = idx.refresh()
-        snaps.commit(emb.filter(F.col("vec_id") % 2 == 1))
-        second = idx.refresh()
-        modes_ok = (
-            first["mode"] == "train"
-            and second["mode"] in ("incremental", "retrain")
-            and idx.refresh()["mode"] == "noop"
-        )
-        return base, modes_ok, second["mode"] == "retrain"
+        emb = _ivf_vecs(spark, sf_dir)
+        idx = _ivf_index_at(spark, sf_dir, base)
+        src = idx.source
+        modes = idx.refresh_after([
+            lambda: src.commit(emb.filter(F.col("vec_id") % 2 == 0), mode="overwrite"),
+            lambda: src.commit(emb.filter(F.col("vec_id") % 2 == 1)),
+        ])
+        retrained = modes == ["train", "retrain", "noop"]
+        modes_ok = retrained or modes == ["train", "incremental", "noop"]
+        return base, modes_ok, retrained
 
     return materialized_value(spark, sf_dir, "p20_ivf_index", build)
 
@@ -3977,7 +3975,7 @@ def _p20_oracle() -> str:
 @register("p20_incremental_ivf_index", oracle=_p20_oracle())
 def p20_incremental_ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     base, modes_ok, retrained = _p20_build_index(spark, sf_dir)
-    idx = _p20_index_at(spark, sf_dir, base)
+    idx = _ivf_index_at(spark, sf_dir, base)
     new_counts = (
         idx.index()
         .groupBy("cid")
@@ -4013,7 +4011,7 @@ def s27_ann_incremental_index_topk(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     base, _modes_ok, _retrained = _p20_build_index(spark, sf_dir)
-    idx = _p20_index_at(spark, sf_dir, base)
+    idx = _ivf_index_at(spark, sf_dir, base)
     cells = idx.index()
     cdf = centroid_frame(spark, idx.centroids())
     # probes read from the index rows too — the whole query path is
@@ -4048,36 +4046,17 @@ def s27_ann_incremental_index_topk(
 P22_RETRAIN_PERMILLE = 100
 
 
-def _p22_index_at(spark: SparkSession, sf_dir: str, base: str):
-    from ..ivf_index import IncrementalIVFIndex
-
-    schema = (
-        _emb(spark, sf_dir)
-        .select(F.col("vec_id").cast("long").alias("vec_id"), "embedding")
-        .schema
-    )
-    return IncrementalIVFIndex(
-        spark, base + "/vecs", schema, base + "/state",
-        retrain_permille=P22_RETRAIN_PERMILLE,
-    )
-
-
 def _p22_build_index(spark: SparkSession, sf_dir: str) -> tuple:
     from .materialize import fresh_external_dir, materialized_value
 
     tag = session_tag(spark, sf_dir)
 
     def build() -> tuple:
-        from ..snapshots import TableSnapshots
-
         base = fresh_external_dir("/tmp/seamdb_ivfdrift", tag)
-        snaps = TableSnapshots(base + "/vecs")
-        emb = _emb(spark, sf_dir).select(
-            F.col("vec_id").cast("long").alias("vec_id"), "embedding"
+        emb = _ivf_vecs(spark, sf_dir)
+        idx = _ivf_index_at(
+            spark, sf_dir, base, retrain_permille=P22_RETRAIN_PERMILLE
         )
-        idx = _p22_index_at(spark, sf_dir, base)
-        snaps.commit(emb, mode="overwrite")
-        first = idx.refresh()
         shifted = emb.select(
             (F.col("vec_id") + 10_000_000).alias("vec_id"),
             # CAST back to float: ×64 is an exponent shift (exact in binary
@@ -4087,14 +4066,11 @@ def _p22_build_index(spark: SparkSession, sf_dir: str) -> tuple:
                 "transform(embedding, x -> CAST(x * 64 AS FLOAT))"
             ).alias("embedding"),
         )
-        snaps.commit(shifted)
-        second = idx.refresh()
-        modes_ok = (
-            first["mode"] == "train"
-            and second["mode"] == "retrain"
-            and idx.refresh()["mode"] == "noop"
-        )
-        return base, modes_ok
+        modes = idx.refresh_after([
+            lambda: idx.source.commit(emb, mode="overwrite"),
+            lambda: idx.source.commit(shifted),
+        ])
+        return base, modes == ["train", "retrain", "noop"]
 
     return materialized_value(spark, sf_dir, "p22_ivf_drift", build)
 
@@ -4144,7 +4120,9 @@ def _p22_oracle() -> str:
 @register("p22_ivf_drift_retrain", oracle=_p22_oracle())
 def p22_ivf_drift_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     base, modes_ok = _p22_build_index(spark, sf_dir)
-    idx = _p22_index_at(spark, sf_dir, base)
+    idx = _ivf_index_at(
+        spark, sf_dir, base, retrain_permille=P22_RETRAIN_PERMILLE
+    )
     return (
         idx.index()
         .groupBy("cid")
@@ -4205,7 +4183,7 @@ def p23_incremental_vector_neardup(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     base, _modes_ok, _retrained = _p20_build_index(spark, sf_dir)
-    idx = _p20_index_at(spark, sf_dir, base)
+    idx = _ivf_index_at(spark, sf_dir, base)
     rows = idx.index()
     batch = rows.filter(F.col("vec_id") % 2 == 1).select(
         F.col("vec_id").alias("bid"), "cid", F.col("q").alias("bq")
@@ -4277,37 +4255,26 @@ def p28_ivf_compaction_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
     tag = session_tag(spark, sf_dir)
 
     def build() -> tuple[str, bool, int]:
-        from ..snapshots import TableSnapshots
-
         base = fresh_external_dir("/tmp/seamdb_ivfrebuild", tag)
-        snaps = TableSnapshots(base + "/vecs")
-        emb = _emb(spark, sf_dir).select(
-            F.col("vec_id").cast("long").alias("vec_id"), "embedding"
-        )
-        idx = _p20_index_at(spark, sf_dir, base)
-        snaps.commit(emb.filter(F.col("vec_id") % 2 == 0), mode="overwrite")
-        first = idx.refresh()
-        snaps.commit(emb.filter(F.col("vec_id") % 2 == 1))
-        second = idx.refresh()
-        # compaction: full content rewritten as ONE segment (old
-        # segments survive under manifest retention while it writes)
-        snaps.commit(
-            snaps.read(spark, emb.schema).coalesce(1), mode="overwrite"
-        )
-        n_segments = len(snaps.current_files())
-        third = idx.refresh()
-        modes_ok = (
-            first["mode"] == "train"
-            and second["mode"] == "incremental"
-            and third["mode"] == "rebuild"
-            and idx.refresh()["mode"] == "noop"
-        )
-        return base, modes_ok, n_segments
+        emb = _ivf_vecs(spark, sf_dir)
+        idx = _ivf_index_at(spark, sf_dir, base)
+        src = idx.source
+        modes = idx.refresh_after([
+            lambda: src.commit(emb.filter(F.col("vec_id") % 2 == 0), mode="overwrite"),
+            lambda: src.commit(emb.filter(F.col("vec_id") % 2 == 1)),
+            # compaction: full content rewritten as ONE segment (old
+            # segments survive under manifest retention while it writes)
+            lambda: src.commit(
+                src.read(spark, emb.schema).coalesce(1), mode="overwrite"
+            ),
+        ])
+        modes_ok = modes == ["train", "incremental", "rebuild", "noop"]
+        return base, modes_ok, len(src.current_files())
 
     base, modes_ok, n_segments = materialized_value(
         spark, sf_dir, "p28_ivf_rebuild", build
     )
-    idx = _p20_index_at(spark, sf_dir, base)
+    idx = _ivf_index_at(spark, sf_dir, base)
     return (
         idx.index()
         .groupBy("cid")

@@ -24,6 +24,15 @@ input from the manifest they already read, never by a filesystem call.
 compaction commit's file count. Legacy plain-path entries have no size:
 a file set holding one is unmeasured and keeps its layout.
 
+Incremental maintenance rests on these snapshot reads: a structure
+derived from a source table (a rollup, a text or IVF index) records in
+its own state manifest the source files it has folded in, and
+``source_delta`` diffs that list against the source manifest — the one
+decision between folding in only the new files, rebuilding (lineage
+lost, or history rewritten so processed files vanished) and doing
+nothing. ``Incremental`` holds a consumer's source, schema and state
+and reads the files a delta names.
+
 Scale notes (100 TB): appends add files, never rewrite; the commit
 point is one rename regardless of table size. Old manifests are kept
 for KEEP_MANIFESTS versions (time travel / debugging); segment files
@@ -35,13 +44,14 @@ from __future__ import annotations
 import json
 import os
 import shutil
-from collections.abc import Iterable
+from collections.abc import Callable, Iterable
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .session import local_frame
+from .session import default_parallelism, local_frame
 
 MANIFEST = "manifest.json"
 KEEP_MANIFESTS = 3
@@ -350,6 +360,106 @@ class TableSnapshots:
 
     def drop(self) -> None:
         shutil.rmtree(self.table_dir, ignore_errors=True)
+
+
+class SourceDelta(NamedTuple):
+    """What one refresh of an incrementally maintained structure does,
+    from one read of its source manifest (``source_delta``)."""
+
+    mode: str  # "rebuild" | "incremental" | "noop"
+    files: list[str]  # the source files to read
+    in_bytes: int | None  # their recorded bytes (recorded_bytes)
+    processed: list[str]  # every current source file: the next "processed"
+    extra: dict  # the state manifest's extra the diff was taken against
+
+
+def source_delta(source: TableSnapshots, state: TableSnapshots) -> SourceDelta:
+    """Diff ``source``'s manifest against the ``processed`` file list in
+    ``state``'s manifest extra (published in the same os.replace as the
+    state data, so the list and the data it describes never disagree).
+
+    - A committed state without ``processed`` (lineage lost), or a
+      processed file gone from the source (compaction or an overwrite
+      rewrote history): ``rebuild`` from every current file. An empty
+      source still rebuilds, so the state stops serving removed rows.
+    - Otherwise ``incremental`` over the new files, ``noop`` if none.
+
+    Incrementality is an optimization, never a correctness assumption."""
+    sizes = source.current_file_bytes()
+    manifest = state._read_manifest()
+    extra = manifest.get("extra", {})
+    processed = extra.get("processed", None if manifest["version"] else [])
+    current = list(sizes)
+    if processed is None or not sizes.keys() >= set(processed):
+        mode, files = "rebuild", current
+    else:
+        done = set(processed)
+        files = [f for f in current if f not in done]
+        mode = "incremental" if files else "noop"
+    return SourceDelta(
+        mode, files, recorded_bytes(sizes[f] for f in files), current, extra
+    )
+
+
+class Incremental:
+    """A structure maintained incrementally from a snapshot source: its
+    source snapshots, the source schema (a StructType, or a zero-arg
+    callable resolved at each use, as an Engine table's columns come
+    from the catalog) and its own state snapshots. Subclasses keep only
+    their derivation and commit; ``delta()`` decides what to read."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        source_path: str,
+        source_schema: T.StructType | Callable[[], T.StructType],
+        state_path: str,
+    ) -> None:
+        self._spark = spark
+        self.source = TableSnapshots(source_path)
+        self._schema = source_schema
+        self.state = TableSnapshots(state_path)
+
+    @staticmethod
+    def engine_table(engine, table: str, kind: str, name: str) -> tuple:
+        """Constructor arguments for structure ``name`` over the Engine
+        table ``table``, its state under ``<warehouse>/<kind>/<db>/<name>``."""
+        store, db = engine.store, engine.database
+        return (
+            engine.spark,
+            store.table_dir(db, table),
+            lambda: store.get_table(db, table).spark_schema(),
+            os.path.join(store.warehouse_dir, kind, db, name, "state"),
+        )
+
+    def source_schema(self) -> T.StructType:
+        return self._schema() if callable(self._schema) else self._schema
+
+    def delta(self) -> SourceDelta:
+        return source_delta(self.source, self.state)
+
+    def refresh_after(self, commits: Iterable[Callable[[], object]]) -> list[str]:
+        """Run each source commit and ``refresh()`` after it, then
+        refresh once more: the mode of every refresh. The refresh gates
+        compare this one list, whose last entry should read "noop"."""
+        modes = []
+        for commit in commits:
+            commit()
+            modes.append(self.refresh()["mode"])
+        return modes + [self.refresh()["mode"]]
+
+    def read_source(self, files: list[str], spread_by: str | None = None) -> DataFrame:
+        """The given source files as one scan. ``spread_by``: hash-spread
+        the rows across the session's cores first, for per-row work
+        upstream of the first shuffle: an append batch is often one
+        parquet file, one scan partition, and would run single-threaded
+        (measured 5.5 s -> ~1 s per p16 refresh at sf0.1)."""
+        df = self.source.read(
+            self._spark, self.source_schema(), entries=[(f, None) for f in files]
+        )
+        if spread_by is not None:
+            df = df.repartition(default_parallelism(), spread_by)
+        return df
 
 
 def _listed_parquet(directory: str) -> list[dict]:

@@ -30,7 +30,7 @@ def _setup(engine):
     engine.sql(
         "CREATE TABLE docs (id serial PRIMARY KEY, body text)"
     )
-    return IncrementalLSHIndex(engine, "docs_lsh", "docs", "id", "body")
+    return IncrementalLSHIndex.on_table(engine, "docs_lsh", "docs", "id", "body")
 
 
 _BATCH1 = [
@@ -149,8 +149,8 @@ def test_only_bounded_batches_force_broadcast(engine):
     _setup(engine)
     _insert(engine, _BATCH1)
     ids = engine.table("docs").filter("id = 1")
-    lsh = IncrementalLSHIndex(engine, "docs_lsh", "docs", "id", "body")
-    sim = IncrementalSimHashIndex(engine, "docs_sim", "docs", "id", "body")
+    lsh = IncrementalLSHIndex.on_table(engine, "docs_lsh", "docs", "id", "body")
+    sim = IncrementalSimHashIndex.on_table(engine, "docs_sim", "docs", "id", "body")
     for index in (lsh, sim):
         index.refresh()
         qe = index.new_candidate_pairs(ids)._jdf.queryExecution()
@@ -172,9 +172,9 @@ def test_incremental_index_equals_full_rebanding(engine):
     got = {(r.doc_id, r.band_id, r.band_key) for r in idx.index().collect()}
     assert got == _full_bands(engine)
 
-    snaps_before = set(idx._source_snaps().current_files())
+    snaps_before = set(idx.source.current_files())
     _insert(engine, _BATCH2)
-    snaps_after = set(idx._source_snaps().current_files())
+    snaps_after = set(idx.source.current_files())
     out = idx.refresh()
     assert out["mode"] == "incremental"
     assert out["files_read"] == len(snaps_after - snaps_before)
@@ -280,7 +280,7 @@ def test_over_snapshots_matches_engine_path(engine, spark, tmp_path):
 
 def _setup_eval(engine):
     engine.sql("CREATE TABLE evals (id serial PRIMARY KEY, body text)")
-    return IncrementalEvalIndex(engine, "evals_decon", "evals", "id", "body")
+    return IncrementalEvalIndex.on_table(engine, "evals_decon", "evals", "id", "body")
 
 
 _EVAL1 = [
@@ -532,6 +532,19 @@ def test_ivf_vanished_segments_force_rebuild(spark, tmp_path):
     assert idx.refresh()["mode"] == "noop"
 
 
+def test_ivf_refresh_over_empty_source_is_noop(spark, tmp_path):
+    """An empty source gives nothing to train on: every refresh is a
+    noop and commits no state version, like the LSH index's and the
+    rollup's."""
+    snaps, idx, schema, b1, b2 = _ivf_fixture(spark, tmp_path, 1000)
+    for _ in range(3):
+        out = idx.refresh()
+        assert out["mode"] == "noop" and out["n_indexed"] == 0
+    assert idx.state.current_version() == 0
+    snaps.commit(spark.createDataFrame(b1, schema), mode="overwrite")
+    assert idx.refresh()["mode"] == "train"
+
+
 def test_ivf_three_uneven_batches_equal_one_shot(spark, tmp_path):
     """Batch-split invariance beyond the 2-batch gate shape: three
     UNEVEN appends (sizes 4/11/1 plus the 16-vector seed) must leave
@@ -566,7 +579,7 @@ def test_ivf_three_uneven_batches_equal_one_shot(spark, tmp_path):
 # ---------------------------------------------------------------------------
 def _setup_simhash(engine):
     engine.sql("CREATE TABLE sdocs (id serial PRIMARY KEY, body text)")
-    return IncrementalSimHashIndex(engine, "sdocs_sh", "sdocs", "id", "body")
+    return IncrementalSimHashIndex.on_table(engine, "sdocs_sh", "sdocs", "id", "body")
 
 
 def _insert_sdocs(engine, texts):

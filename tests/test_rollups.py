@@ -49,9 +49,9 @@ def test_incremental_refresh_equals_full_recompute(engine):
         assert abs(got[b][2] - s / n) < 1e-9
 
     # Second batch: refresh must scan ONLY the new segment's files.
-    snaps_before = set(rollup._source_snaps().current_files())
+    snaps_before = set(rollup.source.current_files())
     engine.sql("INSERT INTO metrics (bucket, value) VALUES (2, 7.0), (3, 1.5)")
-    snaps_after = set(rollup._source_snaps().current_files())
+    snaps_after = set(rollup.source.current_files())
     out = rollup.refresh()
     assert out["mode"] == "incremental"
     assert out["files_read"] == len(snaps_after - snaps_before)
@@ -77,7 +77,7 @@ def test_processed_list_commits_atomically_with_state(engine):
     engine.sql("INSERT INTO metrics (bucket, value) VALUES (1, 3.0), (2, 4.0)")
     rollup.refresh()
     assert sorted(rollup.state.current_extra()["processed"]) == sorted(
-        rollup._source_snaps().current_files()
+        rollup.source.current_files()
     )
 
 
@@ -114,7 +114,7 @@ def test_source_emptied_by_rewrite_empties_rollup(engine):
     engine.sql("INSERT INTO metrics (bucket, value) VALUES (1, 2.0)")
     rollup.refresh()
     assert _state(rollup)
-    snaps = rollup._source_snaps()
+    snaps = rollup.source
     snaps._publish({"version": snaps.current_version() + 1, "files": []})
     out = rollup.refresh()
     assert out["mode"] == "rebuild"
